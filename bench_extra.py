@@ -97,9 +97,8 @@ def run_pipeline(sf_dir: str, reps: int = 2) -> None:
         stage["TOTAL"] = round(time.time() - t_all0, 3)
         results.append(stage)
         # unpersist so next rep re-runs from scratch (no cross-run caching)
-        tiers["_slim"].unpersist(True)
-        if "_tagged" in tiers:
-            tiers["_tagged"].unpersist(True)
+        for k in ("_tagged", "_dims", "_sorted"):
+            tiers[k].unpersist(True)
     print(json.dumps({"sf": sf_dir, "n_turns": n_turns, "runs": results}, indent=1))
     spark.stop()
 
@@ -138,8 +137,6 @@ def run_pipeline_sub(sf_dir: str) -> None:
     timed("b_slim(qc windows)", slim)
     tagged = rollup_tiers_fused(slim, fail_flag_col="flag_dip")
     timed("c_tagged(full fused kernel)", tagged)
-    tagged_nosplit = rollup_tiers_fused(slim, fail_flag_col="flag_dip", max_chunk_rows=None)
-    timed("d_tagged_no_skewguard", tagged_nosplit)
     print(json.dumps({"sf": sf_dir, "stages": stage}, indent=1))
     spark.stop()
 

@@ -1,4 +1,4 @@
-"""Rollup tier cascade: 1m -> 1h -> 1d continuous aggregates.
+"""Rollup tiers: 1m / 1h / 1d continuous aggregates, plus calendar grains.
 
 Semantics (SURVEY §2.9, north star):
 
@@ -10,22 +10,25 @@ Semantics (SURVEY §2.9, north star):
   from measures but counted in n_qc_fail (Warn rows are retained — the
   reference treats Warn as "inside warning threshold", not rejection);
 - every tier carries a Gorilla block of its member (ts, turn_gap, text_len)
-  points, so each coarser tier is refreshed *from the finer tier alone*:
-  decomposable measures add up partial sums (float64 accumulate -> f32,
-  deterministic at f32 precision), p95 re-computes from decoded blocks.
+  points, and a coarse tier's sum_gap is F32 of the f64 sum of the finer
+  tier's f32 partials, so a coarser tier can be refreshed *from the finer
+  tier alone*: p95, mean_text_len and the block recompute from the member
+  rows (decoded blocks), sum_text_len is an exact integer sum.
 
 Execution shape (the scale story):
 
-- Arrow kernels are **chunked**: one group = one (conv_id, chunk) where the
-  chunk is a coarse calendar unit (default week), and the kernel emits one
-  row per member bucket. This amortizes Spark's per-group and pandas'
-  per-DataFrame overhead over hundreds of buckets — the difference between
-  18k kernel calls and 300 at sf-small, and between 10^9 and 10^7 calls at
-  10^12 turns.
-- a hot conversation splits across chunks, so kernel groups stay bounded
-  (one conv-week); the pure-relational dimension rollups absorb skew via
-  map-side partial aggregation, and :func:`salted_agg` provides two-stage
-  aggregation for demonstrably-equivalent skew handling on arbitrary keys.
+- :func:`rollup_tiers_fused` emits all three grains from one shuffle and
+  one whole-partition ``mapInArrow`` stream. Rows are hash-partitioned on
+  (conv_id, day) and sorted by (conv_id, day, turn_idx); the kernel handles
+  every complete (conv, day) segment of an Arrow batch at once. A day
+  segment is the finest split that keeps every output bucket whole, so a
+  hot conversation spreads across partitions by day with no hot-key
+  pre-pass, and worker memory is bounded by one segment plus one batch.
+- :func:`rollup_coarser` rolls tier_1d up to calendar weeks and months,
+  whose periods are irregular, with one kernel group per output bucket.
+- dimension rollups are pure relational and absorb skew via map-side
+  partial aggregation; :func:`salted_agg` provides two-stage aggregation
+  for demonstrably-equivalent skew handling on arbitrary keys.
 """
 
 from __future__ import annotations
@@ -36,13 +39,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from olympian_spark.flags import Flag
-from olympian_spark.functions.gorilla import (
-    decode_block,
-    encode_block,
-    encode_blocks,
-    encode_singleton_blocks,
-)
-from olympian_spark.oracle.quantile import compute_quantile, compute_quantile_segmented
+from olympian_spark.functions.gorilla import decode_block, encode_blocks
+from olympian_spark.oracle.quantile import compute_quantile_segmented
 
 F32 = np.float32
 
@@ -92,70 +90,13 @@ def _restore_bucket(df: DataFrame) -> DataFrame:
 
 _GRAIN = {"minute": "minute", "hour": "hour", "day": "day", "week": "week", "month": "month"}
 
-# Skew guard for the grouped Arrow kernels: one (conv, chunk_grain) group is
-# one task, so a pathological conversation holding tens of millions of turns
-# in a single week would otherwise become the stage's straggler (or OOM it).
-# Groups above this row count are re-chunked at DAY boundaries (SURVEY §4).
-# 2M rows ≈ 60-130 MB of kernel input per group — bounded task memory while
-# keeping the count far above anything a real conversation produces
-# (2M turns/week = 3.3 turns/s sustained for 7 days).
-_DEFAULT_MAX_CHUNK_ROWS = 2_000_000
+# grains with no fixed µs period (week is Monday-anchored, month is
+# irregular): rolled up from tier_1d by rollup_coarser
+_CALENDAR_GRAINS = ("week", "month")
 
-# output grains that nest inside a calendar day: for these, splitting a
-# chunk at UTC day boundaries never splits an output bucket, so the split
-# output is bit-identical to the unsplit output
-_DAY_NESTED_GRAINS = {"minute", "hour", "day"}
-
-# Fixed-µs grain periods (UTC session): date_trunc of these grains equals
-# ts_us - ts_us % period, so the kernel derives the bucket from _ts_us
-# instead of shipping a second 8-byte column across the kernel exchange
-# (~15% of that exchange's row width). week/month stay column-based
-# (week is Monday-anchored, month is irregular).
-_FIXED_GRAIN_US = {
-    "minute": 60_000_000,
-    "hour": 3_600_000_000,
-    "day": 86_400_000_000,
-}
-
-
-def _skew_split_chunk(base: DataFrame, max_chunk_rows: int | None) -> DataFrame:
-    """Re-chunk pathological (conv_id, _chunk) groups at UTC day boundaries.
-
-    ``base`` must carry ``conv_id``, ``_chunk`` (chunk-grain-truncated µs)
-    and ``_ts_us`` (event time µs). Groups with more than ``max_chunk_rows``
-    rows get ``_chunk`` replaced by the row's day truncation, bounding every
-    kernel group by the conversation's single-day volume (the finest split
-    that keeps all day-nested output buckets whole — a hotter single DAY is
-    irreducible without splitting output buckets).
-
-    Scale shape: the hot-key detection is a map-side-combined count on
-    (conv_id, _chunk) — the shuffle moves one row per conversation-chunk —
-    and the hot set is bounded by total_rows / max_chunk_rows keys (at 10^12
-    turns and the 2M default, ≤ 500k keys), so it broadcasts. Day keys from
-    a hot week cannot collide with other weeks' keys (weeks are disjoint and
-    a week key IS its Monday's day key, which only re-appears if that very
-    week was split — consistently, for every row of the group).
-    """
-    if not max_chunk_rows:
-        return base
-    hot = (
-        base.groupBy("conv_id", "_chunk")
-        .agg(F.count(F.lit(1)).alias("_n"))
-        .filter(F.col("_n") > max_chunk_rows)
-        .select("conv_id", "_chunk", F.lit(True).alias("_hot"))
-    )
-    # pmod (floor-mod) — NOT `%` (sign-of-dividend): for pre-epoch
-    # timestamps the split boundary must match the kernel's numpy floor-mod
-    # day truncation, or one UTC day's rows straddle two split keys and a
-    # day-nested bucket is emitted from two kernel groups (duplicate rows).
-    day_of_row = F.col("_ts_us") - F.pmod(F.col("_ts_us"), F.lit(_DAY_US))
-    return (
-        base.join(F.broadcast(hot), ["conv_id", "_chunk"], "left")
-        .withColumn(
-            "_chunk", F.when(F.col("_hot").isNotNull(), day_of_row).otherwise(F.col("_chunk"))
-        )
-        .drop("_hot")
-    )
+_MINUTE_US = 60_000_000
+_HOUR_US = 3_600_000_000
+_DAY_US = 86_400_000_000
 
 
 def _npcol(tbl: "pa.Table", name: str) -> np.ndarray:
@@ -169,86 +110,83 @@ def _f32col(tbl: "pa.Table", name: str) -> np.ndarray:
     return col.to_numpy(zero_copy_only=False).astype(np.float32, copy=False)
 
 
-def _tier_table(conv, buckets, starts, ts_us, gaps, tl, ok) -> "pa.Table":
-    """Columnar tier construction: one row per bucket boundary in `starts`.
+def _tier_table(conv, buckets, starts, ts_us, gaps, tl, ok, partials=None) -> "pa.Table":
+    """One tier row per segment ``starts[k]:starts[k+1]`` of the sorted rows.
 
-    Cheap fields (counts, fails, bucket keys) are fully vectorized; the
-    per-bucket loop carries only the f32 oracle math (sum/mean/quantile,
-    faithful to the oracle) and the Gorilla block encode. NaN doubles as the
-    NULL marker for the f32 measure columns (legit values are always finite).
+    ``conv`` (pyarrow array) and ``buckets`` hold one key per segment.
+    Counts, the text-length sum, the blocks and the exact p95 are vectorized
+    over all segments; the loop keeps only the order-sensitive float sums.
+    NaN doubles as the NULL marker for the f32 measure columns (legit values
+    are always finite).
 
-    ``conv`` is either a scalar conversation key (single-group kernels) or a
-    pre-taken pyarrow array with one entry per bucket (the multi-group
-    streaming kernel) — the arithmetic is identical either way.
+    ``partials`` says where a multi-row segment's ``sum_gap`` comes from:
+    None (finest grain) -> the f32 pairwise sum of its finite passing gaps;
+    ``(fine_sum_gap, fstarts)`` -> F32 of the f64 nansum of the finer tier's
+    f32 partials ``fine_sum_gap[fstarts[k]:fstarts[k+1]]`` (the partial+final
+    decomposition; np.sum's summation order is part of the bit-exactness
+    contract, so a segmented sequential reduction would not do).
     """
     nb = starts.size - 1
     counts = np.diff(starts).astype(np.int64)
-    csum_ok = np.concatenate(([0], np.cumsum(ok.astype(np.int64))))
-    n_ok_arr = csum_ok[starts[1:]] - csum_ok[starts[:-1]]
-    n_fail_arr = counts - n_ok_arr
-    bucket_out = buckets[starts[:-1]]
+    csum_ok = np.concatenate(([0], np.cumsum(ok, dtype=np.int64)))
+    n_ok = csum_ok[starts[1:]] - csum_ok[starts[:-1]]
+    # exact int64 sum of the passing rows' text lengths (an f32 sum drops
+    # integers above 2**24)
+    csum_tl = np.concatenate(([0], np.cumsum(np.where(ok, tl, 0).astype(np.int64))))
+    sum_tl = csum_tl[starts[1:]] - csum_tl[starts[:-1]]
 
     # blocks for ALL buckets in one vectorized pass (bit-identical to the
     # per-bucket encode_block; property-tested): the block holds the
     # bucket's passing rows, so boundaries map through the ok-cumsum
-    blocks = encode_blocks(
-        ts_us[ok], [gaps[ok], tl[ok]], csum_ok[starts]
-    )
+    blocks = encode_blocks(ts_us[ok], [gaps[ok], tl[ok]], csum_ok[starts])
     # valid (= passing AND finite-gap) boundaries drive n_valid/n_gap_obs
     # and the segmented exact-p95 — no per-bucket quantile calls
     vmask = ok & np.isfinite(gaps)
-    csum_v = np.concatenate(([0], np.cumsum(vmask.astype(np.int64))))
+    csum_v = np.concatenate(([0], np.cumsum(vmask, dtype=np.int64)))
     v_starts = csum_v[starts]
-    n_valid = (v_starts[1:] - v_starts[:-1]).astype(np.int64)
-    n_gap_obs = n_ok_arr - n_valid
+    n_valid = v_starts[1:] - v_starts[:-1]
     p95_gap = compute_quantile_segmented(0.95, gaps[vmask], v_starts)
 
     sum_gap = np.full(nb, np.nan, F32)
     mean_gap = np.full(nb, np.nan, F32)
-    sum_tl = np.zeros(nb, np.int64)
     mean_tl = np.full(nb, np.nan, F32)
 
     # singleton buckets (the common case at 1m grain over sparse convs):
-    # sum == mean == the value, wholly vectorized
-    single = n_ok_arr == 1
-    if single.any():
-        sidx = np.flatnonzero(single)
-        okpos = np.flatnonzero(ok)
-        row = okpos[csum_ok[starts[sidx]]]  # the single passing row per bucket
+    # sum == mean == the value, wholly vectorized. At coarse grains exactly
+    # one finer partial is finite and IS the row's f32 gap, so the f64
+    # nansum reproduces it without rounding.
+    sidx = np.flatnonzero(n_ok == 1)
+    if sidx.size:
+        row = np.flatnonzero(ok)[csum_ok[starts[sidx]]]  # the single passing row
         g0 = gaps[row]
-        t0 = tl[row]
         fin = np.isfinite(g0)
         sum_gap[sidx[fin]] = g0[fin]
         mean_gap[sidx[fin]] = g0[fin]
-        sum_tl[sidx] = t0.astype(np.int64)
-        mean_tl[sidx] = t0
+        mean_tl[sidx] = tl[row]
 
-    # the loop keeps ONLY the f32 pairwise sums (np.sum's summation order is
-    # part of the bit-exactness contract with the cascade; a segmented
-    # sequential reduction would round differently)
-    for k in np.flatnonzero(n_ok_arr > 1):
+    for k in np.flatnonzero(n_ok > 1):
         lo, hi = starts[k], starts[k + 1]
         m = ok[lo:hi]
-        g = gaps[lo:hi][m]
-        t_ = tl[lo:hi][m]
-        n_ok = t_.size
-        nv = n_valid[k]
-        if nv:
-            sg = F32(np.sum(g[np.isfinite(g)], dtype=F32))
+        if n_valid[k]:
+            if partials is None:
+                g = gaps[lo:hi][m]
+                sg = F32(np.sum(g[np.isfinite(g)], dtype=F32))
+            else:
+                fine_sum_gap, fstarts = partials
+                sg = F32(np.nansum(fine_sum_gap[fstarts[k] : fstarts[k + 1]]))
             sum_gap[k] = sg
-            mean_gap[k] = F32(sg / F32(nv))
-        sum_tl[k] = int(t_.sum())
-        mean_tl[k] = F32(F32(np.sum(t_, dtype=F32)) / F32(n_ok))
+            mean_gap[k] = F32(sg / F32(n_valid[k]))
+        mean_tl[k] = F32(F32(np.sum(tl[lo:hi][m], dtype=F32)) / F32(n_ok[k]))
 
     return pa.table(
         {
             # conv key passes through as-is: string conv_id, or int64 when
             # the caller dictionary-encoded conversation keys upstream
-            "conv_id": conv if isinstance(conv, pa.Array) else pa.array([conv] * nb),
-            "bucket_us": pa.array(bucket_out),
+            "conv_id": conv,
+            "bucket_us": pa.array(buckets),
             "n_turns": pa.array(counts),
-            "n_qc_fail": pa.array(n_fail_arr),
-            "n_gap_obs": pa.array(n_gap_obs),
+            "n_qc_fail": pa.array(counts - n_ok),
+            "n_gap_obs": pa.array(n_ok - n_valid),
             "n_valid_gap": pa.array(n_valid),
             "sum_gap": pa.array(sum_gap, from_pandas=True),
             "mean_gap": pa.array(mean_gap, from_pandas=True),
@@ -260,296 +198,53 @@ def _tier_table(conv, buckets, starts, ts_us, gaps, tl, ok) -> "pa.Table":
     )
 
 
-def rollup_1m(
-    df: DataFrame,
-    fail_flag_col: str | None = "flag_dip",
-    grain: str = "minute",
-    chunk_grain: str = "week",
-    max_chunk_rows: int | None = _DEFAULT_MAX_CHUNK_ROWS,
-) -> DataFrame:
-    """Finest tier from raw turns.
+def rollup_coarser(tier_1d: DataFrame, grain: str) -> DataFrame:
+    """Calendar-week or calendar-month tier from the day tier.
 
-    Input: transcripts with turn metrics (turn_gap_s, text_len) and QC flag
-    columns. One shuffle on (conv_id, chunk); the Arrow-native kernel
-    (applyInArrow: no pandas materialization, numpy views over Arrow
-    buffers) walks the chunk's member buckets in turn order and emits one
-    tier row per bucket. NULL gap (first turn) is carried as NaN so the
-    turn's text_len still lands in the block; the quantile kernel drops
-    non-finite exactly like the reference (sct.rs:71-75).
-
-    ``max_chunk_rows`` bounds kernel group size under conversation skew via
-    day-aligned re-chunking (:func:`_skew_split_chunk`) — bit-identical
-    output for day-nested ``grain``s; pass None to disable.
+    Calendar-aware buckets (chronoutil RelativeDuration parity: a month
+    bucket anchors at the 1st) have no fixed µs period, so the fused kernel
+    does not emit them. One Arrow kernel group per output (conv_id, bucket)
+    feeds the member days' decoded blocks to the same tier builder as the
+    fused kernel: counts add up the day counts, sum_gap is F32 of the f64
+    nansum of the day partials, and p95 / sum_text_len / mean_text_len /
+    block recompute from the decoded passing rows.
     """
-    ts = F.col("ts").cast("timestamp")
-    fail = (
-        (F.col(fail_flag_col) == int(Flag.FAIL)).cast("int")
-        if fail_flag_col
-        else F.lit(0)
-    )
-    grain_us = _FIXED_GRAIN_US.get(_GRAIN[grain])
-    base = df.select(
-        "conv_id",
-        *(
-            []
-            if grain_us
-            else [F.unix_micros(F.date_trunc(_GRAIN[grain], ts)).alias("bucket_us")]
-        ),
-        F.unix_micros(F.date_trunc(_GRAIN[chunk_grain], ts)).alias("_chunk"),
-        F.col("turn_idx"),
-        F.unix_micros(ts).alias("_ts_us"),
-        F.col("turn_gap_s"),
-        F.col("text_len"),
-        fail.alias("_is_fail"),
-    )
-
-    def kernel(tbl: "pa.Table") -> "pa.Table":
-        # ts is monotone in turn_idx per conversation, so sorting by turn_idx
-        # also orders buckets; bucket boundaries come from one vectorized diff
-        conv = tbl.column("conv_id")[0].as_py()
-        order = np.argsort(_npcol(tbl, "turn_idx"), kind="stable")
-        ts_us = _npcol(tbl, "_ts_us").astype(np.int64, copy=False)[order]
-        # fixed-µs grains derive the bucket in-kernel (== date_trunc in a
-        # UTC session; numpy % is floor-mod so pre-1970 stays correct) —
-        # the 8-byte bucket column never crosses the exchange
-        buckets = (
-            ts_us - ts_us % grain_us
-            if grain_us
-            else _npcol(tbl, "bucket_us").astype(np.int64, copy=False)[order]
-        )
-        gaps = _f32col(tbl, "turn_gap_s")[order]  # NULL -> NaN
-        tl = _f32col(tbl, "text_len")[order]
-        ok = (_npcol(tbl, "_is_fail") != 1)[order]
-        n = buckets.size
-        starts = np.concatenate(
-            ([0], np.flatnonzero(buckets[1:] != buckets[:-1]) + 1, [n])
-        )
-        return _tier_table(conv, buckets, starts, ts_us, gaps, tl, ok)
-
-    if _GRAIN[grain] in _DAY_NESTED_GRAINS:
-        base = _skew_split_chunk(base, max_chunk_rows)
-    return _restore_bucket(
-        _kernel_input(base, "conv_id", "_chunk")
-        .groupBy("conv_id", "_chunk")
-        .applyInArrow(kernel, _tier_schema_us(df))
-    )
-
-
-def rollup_coarser(tier: DataFrame, grain: str, chunk_grain: str | None = None) -> DataFrame:
-    """Coarser tier from a finer tier (1m -> 1h, 1h -> 1d).
-
-    Decomposable measures combine the finer tier's partial sums/counts
-    (float64 accumulate, cast to f32 — order differences vanish below f32
-    precision); exact p95 and the tier's own Gorilla block come from
-    decoding + concatenating member blocks in bucket order. One shuffle on
-    (conv_id, chunk); the Arrow-native kernel emits one row per coarse
-    bucket.
-    """
-    chunk_grain = chunk_grain or "week"
+    if grain not in _CALENDAR_GRAINS:
+        raise ValueError(f"rollup_coarser grain must be one of {_CALENDAR_GRAINS}, not {grain!r}")
     bs = F.col("bucket_start")
-    base = tier.select(
+    base = tier_1d.select(
         "conv_id",
-        F.unix_micros(bs).alias("bucket_us"),
+        F.unix_micros(F.date_trunc(grain, bs)).alias("bucket_us"),
+        F.unix_micros(bs).alias("_day_us"),
         "n_turns",
         "n_qc_fail",
-        "n_gap_obs",
-        "n_valid_gap",
         "sum_gap",
-        "sum_text_len",
         "block",
-        F.unix_micros(F.date_trunc(_GRAIN[grain], bs)).alias("_coarse"),
-        F.unix_micros(F.date_trunc(_GRAIN[chunk_grain], bs)).alias("_chunk"),
     )
 
     def kernel(tbl: "pa.Table") -> "pa.Table":
-        conv = tbl.column("conv_id")[0].as_py()
-        order = np.argsort(_npcol(tbl, "bucket_us"), kind="stable")
-        coarse = _npcol(tbl, "_coarse").astype(np.int64, copy=False)[order]
-        n_turns_a = _npcol(tbl, "n_turns").astype(np.int64, copy=False)[order]
-        n_fail_a = _npcol(tbl, "n_qc_fail").astype(np.int64, copy=False)[order]
-        n_valid_a = _npcol(tbl, "n_valid_gap").astype(np.int64, copy=False)[order]
-        sum_gap_col = tbl.column("sum_gap")
-        if sum_gap_col.null_count:
-            sum_gap_col = sum_gap_col.fill_null(float("nan"))
-        sum_gap_a = sum_gap_col.to_numpy(zero_copy_only=False).astype(np.float64)[order]
-        sum_tl_a = _npcol(tbl, "sum_text_len").astype(np.int64, copy=False)[order]
-        blocks_in = tbl.column("block").to_pylist()
-        blocks_in = [blocks_in[i] for i in order]
-        n = coarse.size
-        starts = np.concatenate(
-            ([0], np.flatnonzero(coarse[1:] != coarse[:-1]) + 1, [n])
+        tbl = tbl.take(np.argsort(_npcol(tbl, "_day_us"), kind="stable"))
+        decoded = [decode_block(b) for b in tbl.column("block").to_pylist()]
+        ts_us = np.concatenate([d[0] for d in decoded])
+        gaps = np.concatenate([d[1][0] for d in decoded])
+        tl = np.concatenate([d[1][1] for d in decoded])
+        out = _tier_table(
+            tbl.column("conv_id").combine_chunks()[:1],
+            _npcol(tbl, "bucket_us")[:1],
+            np.array([0, ts_us.size]),
+            ts_us, gaps, tl, np.ones(ts_us.size, bool),
+            partials=(_f32col(tbl, "sum_gap").astype(np.float64), np.array([0, tbl.num_rows])),
         )
-        nb = starts.size - 1
-
-        out_bucket = coarse[starts[:-1]]
-        out_turns = np.add.reduceat(n_turns_a, starts[:-1]).astype(np.int64)
-        out_fail = np.add.reduceat(n_fail_a, starts[:-1]).astype(np.int64)
-        out_valid = np.add.reduceat(n_valid_a, starts[:-1]).astype(np.int64)
-        out_sum_tl = np.add.reduceat(sum_tl_a, starts[:-1]).astype(np.int64)
-        out_sum_gap = np.full(nb, np.nan, F32)
-        out_mean_gap = np.full(nb, np.nan, F32)
-        out_p95 = np.full(nb, np.nan, F32)
-        out_gap_obs = np.zeros(nb, np.int64)
-        out_mean_tl = np.full(nb, np.nan, F32)
-        out_blocks = []
-        for k in range(nb):
-            lo, hi = starts[k], starts[k + 1]
-            decoded = [decode_block(bytes(b)) for b in blocks_in[lo:hi]]
-            ts_us = np.concatenate([d[0] for d in decoded])
-            gaps = np.concatenate([d[1][0] for d in decoded])
-            tl = np.concatenate([d[1][1] for d in decoded])
-            out_blocks.append(encode_block(ts_us, [gaps, tl]))
-            n_ok = tl.size
-            finite = np.isfinite(gaps)
-            out_gap_obs[k] = int(n_ok - finite.sum())
-            nv = int(out_valid[k])
-            if nv:
-                # partial+final decomposition: f64 accumulate of f32 partials
-                sg = F32(np.nansum(sum_gap_a[lo:hi]))
-                out_sum_gap[k] = sg
-                out_mean_gap[k] = F32(sg / F32(nv))
-                out_p95[k] = compute_quantile(0.95, gaps[finite])
-            if n_ok:
-                out_mean_tl[k] = F32(F32(np.sum(tl, dtype=F32)) / F32(n_ok))
-
-        return pa.table(
-            {
-                "conv_id": pa.array([conv] * nb),
-                "bucket_us": pa.array(out_bucket),
-                "n_turns": pa.array(out_turns),
-                "n_qc_fail": pa.array(out_fail),
-                "n_gap_obs": pa.array(out_gap_obs),
-                "n_valid_gap": pa.array(out_valid),
-                "sum_gap": pa.array(out_sum_gap, from_pandas=True),
-                "mean_gap": pa.array(out_mean_gap, from_pandas=True),
-                "p95_gap": pa.array(out_p95, from_pandas=True),
-                "sum_text_len": pa.array(out_sum_tl),
-                "mean_text_len": pa.array(out_mean_tl, from_pandas=True),
-                "block": pa.array(out_blocks, pa.binary()),
-            }
-        )
+        # blocks hold passing rows only: the turn counts come from the days
+        for name in ("n_turns", "n_qc_fail"):
+            total = pa.array([int(_npcol(tbl, name).sum())], pa.int64())
+            out = out.set_column(out.schema.get_field_index(name), name, total)
+        return out
 
     return _restore_bucket(
-        _kernel_input(base, "conv_id", "_chunk")
-        .groupBy("conv_id", "_chunk")
-        .applyInArrow(kernel, _tier_schema_us(tier))
-    )
-
-
-_HOUR_US = 3_600_000_000
-_DAY_US = 86_400_000_000
-
-
-def _coarse_tier_from_rows(
-    conv,
-    row_cb: np.ndarray,
-    ts_us: np.ndarray,
-    gaps: np.ndarray,
-    tl: np.ndarray,
-    ok: np.ndarray,
-    fine_cb: np.ndarray,
-    fine_sum_gap: np.ndarray,
-    fine_sum_tl: np.ndarray,
-    starts: np.ndarray | None = None,
-    fstarts: np.ndarray | None = None,
-) -> "pa.Table":
-    """Coarse tier rows computed from raw member rows + finer-tier partials,
-    bit-identical to ``rollup_coarser`` over the materialized finer tier:
-    sum_gap/mean_gap use the f64-accumulate-of-f32-partials decomposition
-    (NOT a direct f32 row sum), sum_text_len sums the finer integer
-    partials, while p95 / blocks / mean_text_len recompute from the rows —
-    exactly the arithmetic rollup_coarser performs on decoded blocks.
-
-    ``row_cb``: per-row coarse bucket (sorted, contiguous groups);
-    ``fine_cb``: per-finer-bucket coarse bucket (same grouping order).
-    ``conv`` is a scalar key or a per-coarse-bucket pyarrow array; ``starts``
-    / ``fstarts`` override the value-change boundary detection for
-    multi-conversation inputs (where equal adjacent bucket values can belong
-    to different conversations and boundaries must include the key change).
-    """
-    n = row_cb.size
-    if starts is None:
-        starts = np.concatenate(
-            ([0], np.flatnonzero(row_cb[1:] != row_cb[:-1]) + 1, [n])
-        )
-    nb = starts.size - 1
-    counts = np.diff(starts).astype(np.int64)
-    csum_ok = np.concatenate(([0], np.cumsum(ok.astype(np.int64))))
-    n_ok_arr = csum_ok[starts[1:]] - csum_ok[starts[:-1]]
-    n_fail_arr = counts - n_ok_arr
-    bucket_out = row_cb[starts[:-1]]
-
-    if fstarts is None:
-        fstarts = np.concatenate(
-            ([0], np.flatnonzero(fine_cb[1:] != fine_cb[:-1]) + 1, [fine_cb.size])
-        )
-    sum_gap64 = fine_sum_gap.astype(np.float64)
-    out_sum_tl = np.add.reduceat(fine_sum_tl, fstarts[:-1]).astype(np.int64)
-
-    out_sum_gap = np.full(nb, np.nan, F32)
-    out_mean_gap = np.full(nb, np.nan, F32)
-    out_mean_tl = np.full(nb, np.nan, F32)
-
-    # blocks for ALL buckets in one vectorized pass (bit-identical to the
-    # per-bucket encode_block; property-tested)
-    out_blocks = encode_blocks(
-        ts_us[ok], [gaps[ok], tl[ok]], csum_ok[starts]
-    )
-    # valid counts + segmented exact-p95, vectorized
-    vmask = ok & np.isfinite(gaps)
-    csum_v = np.concatenate(([0], np.cumsum(vmask.astype(np.int64))))
-    v_starts = csum_v[starts]
-    out_valid = (v_starts[1:] - v_starts[:-1]).astype(np.int64)
-    out_gap_obs = (n_ok_arr - out_valid).astype(np.int64)
-    out_p95 = compute_quantile_segmented(0.95, gaps[vmask], v_starts)
-
-    # Vectorized singleton fast path (the dominant shape of sparse series):
-    # n_ok == 1 -> exactly one fine partial in the slice is finite (the
-    # passing row's own bucket, whose partial IS the row's f32 gap), so
-    # F32(nansum(f64 slice)) == that gap with no rounding, mean = sg/f32(1)
-    # == sg, mean_tl = F32(F32(tl)/f32(1)) == tl.
-    n_ok_arr2 = n_ok_arr.astype(np.int64, copy=False)
-    single = n_ok_arr2 == 1
-    if single.any():
-        sidx = np.flatnonzero(single)
-        okpos = np.flatnonzero(ok)
-        row = okpos[csum_ok[starts[sidx]]]  # the single passing row per bucket
-        g0 = gaps[row]
-        t0 = tl[row]
-        fin = np.isfinite(g0)
-        out_sum_gap[sidx[fin]] = g0[fin]
-        out_mean_gap[sidx[fin]] = g0[fin]
-        out_mean_tl[sidx] = t0
-
-    # the loop keeps ONLY the order-sensitive reductions: the f64 nansum of
-    # fine partials (pairwise summation is part of the bit-exactness
-    # contract with rollup_coarser) and the f32 pairwise mean_tl sum
-    for k in np.flatnonzero(n_ok_arr2 > 1):
-        lo, hi = starts[k], starts[k + 1]
-        m = ok[lo:hi]
-        t_ = tl[lo:hi][m]
-        nv = out_valid[k]
-        if nv:
-            sg = F32(np.nansum(sum_gap64[fstarts[k] : fstarts[k + 1]]))
-            out_sum_gap[k] = sg
-            out_mean_gap[k] = F32(sg / F32(nv))
-        out_mean_tl[k] = F32(F32(np.sum(t_, dtype=F32)) / F32(t_.size))
-
-    return pa.table(
-        {
-            "conv_id": conv if isinstance(conv, pa.Array) else pa.array([conv] * nb),
-            "bucket_us": pa.array(bucket_out),
-            "n_turns": pa.array(counts),
-            "n_qc_fail": pa.array(n_fail_arr),
-            "n_gap_obs": pa.array(out_gap_obs),
-            "n_valid_gap": pa.array(out_valid),
-            "sum_gap": pa.array(out_sum_gap, from_pandas=True),
-            "mean_gap": pa.array(out_mean_gap, from_pandas=True),
-            "p95_gap": pa.array(out_p95, from_pandas=True),
-            "sum_text_len": pa.array(out_sum_tl),
-            "mean_text_len": pa.array(out_mean_tl, from_pandas=True),
-            "block": out_blocks,
-        }
+        _kernel_input(base, "conv_id", "bucket_us")
+        .groupBy("conv_id", "bucket_us")
+        .applyInArrow(kernel, _tier_schema_us(tier_1d))
     )
 
 
@@ -557,11 +252,9 @@ def _fused_process(tbl: "pa.Table") -> "pa.Table":
     """All three tier grains for a sorted multi-conversation Arrow table.
 
     Input rows are sorted by (conv_id, day, turn_idx) and contain only
-    COMPLETE (conv_id, day) segments. Per-bucket arithmetic is identical to
-    the old single-group fused kernel (slices of the same arrays fed to the
-    same numpy ops), so output is bit-identical — segment membership only
-    decides which rows are visible to one call, and every output bucket
-    (minute/hour/day) nests inside a single day.
+    COMPLETE (conv_id, day) segments; every output bucket (minute/hour/day)
+    nests inside one segment. The hour and day tiers take their multi-row
+    sum_gap from the finer tier's partials, the rest from the rows.
     """
     import pyarrow.compute as pc
 
@@ -575,100 +268,42 @@ def _fused_process(tbl: "pa.Table") -> "pa.Table":
     ok = _npcol(tbl, "_is_fail") != 1
     day = ts_us - ts_us % _DAY_US  # numpy floor-mod: pre-epoch safe
     seg_change = (codes[1:] != codes[:-1]) | (day[1:] != day[:-1])
+    seg_id = np.concatenate(([0], np.cumsum(seg_change)))
 
     def bounds(change: np.ndarray, size: int) -> np.ndarray:
         return np.concatenate(([0], np.flatnonzero(change) + 1, [size]))
 
-    # minute tier
-    b_m = ts_us - ts_us % 60_000_000
-    starts_m = bounds(seg_change | (b_m[1:] != b_m[:-1]), n)
-    conv_m = conv_flat.take(pa.array(starts_m[:-1]))
-    t_m = _tier_table(conv_m, b_m, starts_m, ts_us, gaps, tl, ok)
-
-    seg_id = np.concatenate(([0], np.cumsum(seg_change)))
-
-    # hour tier from minute partials
-    row_h = b_m - b_m % _HOUR_US
-    starts_h = bounds(seg_change | (row_h[1:] != row_h[:-1]), n)
-    fine_b_m = b_m[starts_m[:-1]]
-    seg_m = seg_id[starts_m[:-1]]
-    hb_m = fine_b_m - fine_b_m % _HOUR_US
-    fstarts_h = bounds((seg_m[1:] != seg_m[:-1]) | (hb_m[1:] != hb_m[:-1]), hb_m.size)
-    conv_h = conv_flat.take(pa.array(starts_h[:-1]))
-    t_h = _coarse_tier_from_rows(
-        conv_h, row_h, ts_us, gaps, tl, ok, hb_m,
-        _f32col(t_m, "sum_gap"),
-        _npcol(t_m, "sum_text_len").astype(np.int64, copy=False),
-        starts=starts_h, fstarts=fstarts_h,
-    )
-
-    # day tier from hour partials
-    starts_d = bounds(seg_change | (day[1:] != day[:-1]), n)
-    fine_b_h = row_h[starts_h[:-1]]
-    seg_h = seg_id[starts_h[:-1]]
-    db_h = fine_b_h - fine_b_h % _DAY_US
-    fstarts_d = bounds((seg_h[1:] != seg_h[:-1]) | (db_h[1:] != db_h[:-1]), db_h.size)
-    conv_d = conv_flat.take(pa.array(starts_d[:-1]))
-    t_d = _coarse_tier_from_rows(
-        conv_d, day, ts_us, gaps, tl, ok, db_h,
-        _f32col(t_h, "sum_gap"),
-        _npcol(t_h, "sum_text_len").astype(np.int64, copy=False),
-        starts=starts_d, fstarts=fstarts_d,
-    )
-
-    def tag(t: "pa.Table", g: int) -> "pa.Table":
-        return t.append_column(
-            "_grain", pa.array(np.full(t.num_rows, g, np.int8), pa.int8())
+    tiers = []
+    fine = None  # (segment starts, tier table) of the previous, finer grain
+    for grain, period in enumerate((_MINUTE_US, _HOUR_US, _DAY_US)):
+        bucket = ts_us - ts_us % period
+        starts = bounds(seg_change | (bucket[1:] != bucket[:-1]), n)
+        partials = None
+        if fine is not None:
+            # the finer tier's buckets, grouped by this grain's (conv, bucket)
+            fine_starts, fine_tbl = fine
+            fb = bucket[fine_starts[:-1]]
+            fseg = seg_id[fine_starts[:-1]]
+            fstarts = bounds((fseg[1:] != fseg[:-1]) | (fb[1:] != fb[:-1]), fb.size)
+            partials = (_f32col(fine_tbl, "sum_gap").astype(np.float64), fstarts)
+        t = _tier_table(
+            conv_flat.take(pa.array(starts[:-1])), bucket[starts[:-1]], starts,
+            ts_us, gaps, tl, ok, partials,
         )
+        tiers.append(t.append_column("_grain", pa.array(np.full(t.num_rows, grain, np.int8))))
+        fine = (starts, t)
+    return pa.concat_tables(tiers)
 
-    return pa.concat_tables([tag(t_m, 0), tag(t_h, 1), tag(t_d, 2)])
 
-
-def rollup_tiers_fused(
-    df: DataFrame,
-    fail_flag_col: str | None = "flag_dip",
-    chunk_grain: str = "week",
-    max_chunk_rows: int | None = _DEFAULT_MAX_CHUNK_ROWS,
-    assume_clustered: bool = False,
-) -> DataFrame:
+def rollup_tiers_fused(df: DataFrame, fail_flag_col: str | None = "flag_dip") -> DataFrame:
     """All three tiers (1m/1h/1d) in ONE shuffle + ONE streaming kernel pass.
 
-    The cascade (rollup_1m -> rollup_coarser x2) costs three shuffles and
-    two materialization barriers; one pass over day-segmented turns can emit
-    all three grains. Output is the tier schema plus a ``_grain`` tag
-    (0=minute, 1=hour, 2=day); rows are bit-identical to the cascade's
-    (tested), because the coarse levels reuse the finer level's f32
-    partial sums exactly as rollup_coarser does.
-
-    Execution (round 6): a whole-partition ``mapInArrow`` stream replaces the
-    per-group ``applyInArrow`` channel. Rows are hash-partitioned AND sorted
-    by (conv_id, day, turn_idx); the kernel processes every complete
+    Output is the tier schema plus a ``_grain`` tag (0=minute, 1=hour,
+    2=day). Rows are hash-partitioned AND sorted by (conv_id, day, turn_idx);
+    a whole-partition ``mapInArrow`` stream processes every complete
     (conv, day) segment of each Arrow batch vectorized across segments,
-    holding back only the trailing incomplete segment. This removes
-
-    - the per-group Python channel overhead (one kernel invocation per
-      (conv, week) group -> one per ~64k-row batch),
-    - the in-kernel per-group argsort (rows arrive sorted), and
-    - the skew-guard pre-pass entirely (``_skew_split_chunk``'s extra
-      aggregation + broadcast join): day segments are already the finest
-      output-preserving split, so worker memory is bounded by one
-      (conv, day) + one batch with no hot-key detection needed.
-
-    ``chunk_grain`` / ``max_chunk_rows`` are retained for API compatibility;
-    the streaming kernel always processes day-aligned segments (output for
-    any day-aligned chunking is bit-identical), so they no longer affect
-    the result or the execution shape.
-
-    ``assume_clustered=True`` (guide §2.4: remove shuffles outright) skips
-    the kernel's own repartition+sort when the CALLER guarantees the input
-    is already hash-partitioned by conv_id with each partition sorted by
-    (conv_id, turn_idx) — exactly what the stage-1 QC window stage emits.
-    The whole QC+tier path then runs on ONE exchange. This is an
-    order-dependent contract the planner cannot check: passing an
-    arbitrarily-ordered frame with it set yields duplicate bucket rows, so
-    it stays opt-in (``build_tiers`` sets it for its own pinned lineage;
-    AQE partition COALESCING is safe — merged partitions concatenate whole
-    hash partitions, keeping conversations contiguous and sorted).
+    holding back only the trailing incomplete segment for the next batch.
+    One kernel invocation per ~64k-row batch, no in-kernel sort.
     """
     ts = F.col("ts").cast("timestamp")
     fail = (
@@ -682,7 +317,7 @@ def rollup_tiers_fused(
         # day key via pmod — explicitly the kernel's numpy floor-mod rule,
         # so partition routing and in-kernel segmentation can never disagree
         # (date_trunc agrees too in a UTC session; pmod makes it structural)
-        (ts_us_col - F.pmod(ts_us_col, F.lit(_DAY_US))).alias("_chunk"),
+        (ts_us_col - F.pmod(ts_us_col, F.lit(_DAY_US))).alias("_day"),
         F.col("turn_idx"),
         ts_us_col.alias("_ts_us"),
         F.col("turn_gap_s"),
@@ -723,24 +358,15 @@ def rollup_tiers_fused(
         if pending is not None and pending.num_rows:
             yield from _fused_process(pending.combine_chunks()).to_batches()
 
-    schema = _tier_schema_us(df) + ", _grain tinyint"
-    if assume_clustered:
-        # ride the caller's existing (conv_id-partitioned, turn-ordered)
-        # layout: no exchange, no sort — the kernel's day segmentation works
-        # on any conversation-contiguous, time-ordered stream
-        out = base.select(
-            "conv_id", "_ts_us", "turn_gap_s", "text_len", "_is_fail"
-        ).mapInArrow(stream_kernel, schema)
-        return _restore_bucket(out)
     n_part = 2 * df.sparkSession.sparkContext.defaultParallelism
     out = (
-        base.repartition(n_part, "conv_id", "_chunk")
-        .sortWithinPartitions("conv_id", "_chunk", "turn_idx")
-        # project AFTER the sort: the sort keys _chunk/turn_idx never cross
+        base.repartition(n_part, "conv_id", "_day")
+        .sortWithinPartitions("conv_id", "_day", "turn_idx")
+        # project AFTER the sort: the sort keys _day/turn_idx never cross
         # the JVM->Python Arrow channel (the kernel re-derives the day from
         # _ts_us and rows already arrive ordered)
         .select("conv_id", "_ts_us", "turn_gap_s", "text_len", "_is_fail")
-        .mapInArrow(stream_kernel, schema)
+        .mapInArrow(stream_kernel, _tier_schema_us(df) + ", _grain tinyint")
     )
     return _restore_bucket(out)
 
@@ -774,12 +400,13 @@ def rollup_dims_fused(
     Output: (dim_kind, bucket_start, dim_value, n_turns, mean_text_len);
     per-kind slices equal :func:`rollup_by_dimension` exactly (tested).
 
-    MEASURED DECISION (round 2, 16M turns / 32 cores): when the input is
-    already persisted, this LOSES to one groupBy per dimension by ~3x —
-    the explode doubles the rows entering partial aggregation, while the
-    saved input scan is just a cache read. Use only when the input is not
-    materialized (straight off an expensive scan) and the dimension list
-    is long; ``build_tiers`` deliberately does NOT use it.
+    ``build_tiers`` uses it on its un-persisted scan-side frame: one pass
+    over the input instead of one re-scan and text decode per dimension,
+    with only the small (bucket x kind x value) output materialized.
+    Measured (round 2, 16M turns / 32 cores): over an input that is
+    already persisted it LOSES to one groupBy per dimension by ~3x — the
+    explode doubles the rows entering partial aggregation, while the saved
+    input scan is just a cache read.
     """
     bucket = F.date_trunc(_GRAIN[grain], F.col("ts").cast("timestamp"))
     pairs = F.array(

@@ -1,17 +1,19 @@
 """End-to-end rollup pipeline (SURVEY §3.4).
 
 transcripts
-  -> scan-side narrow projection (cached): text replaced by text_len;
+  -> scan-side narrow projection (not cached): text replaced by text_len;
      role/tool kept here ONLY for the dimension rollups
-  -> stage 1 (shuffle on conv_id, moving just conv_id/turn_idx/ts/text_len):
-     turn_gap_s + step/dip/flatline QC flags — all in ONE window stage:
-     every window uses the same (conv_id | turn_idx) spec, so Catalyst
-     plans a single Exchange + Sort and evaluates the flags in one pass
-  -> stage 2 (shuffle on (conv_id, chunk)): fused tier Arrow kernel —
+  -> stage 1 (range shuffle on (conv_id, turn_idx), moving just
+     conv_id/turn_idx/ts/text_len): turn_gap_s + flag_dip from a parallel
+     sort plus a 2-row edge stitch (with_gap_and_dip_parallel)
+  -> stage 2 (shuffle on (conv_id, day)): fused tier Arrow kernel —
      f32 measures + exact p95 + Gorilla block for 1m/1h/1d in one pass
-  -> dimension rollups (role/tool) from the PRE-window cache: they need no
-     window output, so the dimension strings never cross the stage-1
-     exchange; map-side partials make their own shuffles tiny.
+  -> dimension rollups (role/tool) in one fused pass over the scan-side
+     projection: they need no stage-1 output, so the dimension strings
+     never cross the stage-1 exchange.
+
+``turns_flagged`` keeps the full window formulation (step/dip/flatline
+flags over every turn) for consumers that want every flag.
 
 QC policy: dip_check FAIL excludes a turn from measures (spike = bad
 latency sample); step/flatline flags are carried for flag-distribution
@@ -31,14 +33,7 @@ from olympian_spark.operators.qc_series import (
     with_flatline_flag,
     with_gap_and_dip_parallel,
 )
-from olympian_spark.operators.rollup import (
-    _DEFAULT_MAX_CHUNK_ROWS,
-    rollup_1m,
-    rollup_by_dimension,
-    rollup_coarser,
-    rollup_dims_fused,
-    rollup_tiers_fused,
-)
+from olympian_spark.operators.rollup import rollup_dims_fused, rollup_tiers_fused
 from olympian_spark.sources.transcripts import with_turn_metrics
 
 
@@ -67,160 +62,72 @@ def qc_flags(df: DataFrame, params: QcParams = QcParams()) -> DataFrame:
 
 
 def build_tiers(
-    df: DataFrame,
-    params: QcParams = QcParams(),
-    persist: bool | str = True,
-    fused: bool = True,
-    max_chunk_rows: int | None = _DEFAULT_MAX_CHUNK_ROWS,
-    chunk_grain: str = "week",
+    df: DataFrame, params: QcParams = QcParams(), persist: bool = True
 ) -> dict[str, DataFrame]:
     """All tier tables from a transcripts DataFrame.
 
-    ``persist`` materializes each tier before the next consumes it — the
-    cascade (and the dimension rollups) would otherwise recompute the whole
-    upstream DAG per output. Values: True -> ``.persist()`` (lineage kept:
-    an executor loss recomputes, the right default on clusters);
-    ``"checkpoint"`` -> ``localCheckpoint(eager)`` (~30% faster
-    materialization, no lineage — fine in local mode / with job-level
-    resume via the catalog); False -> rely on the caller's write barriers.
-
-    ``fused`` (default): compute all three tiers in ONE shuffle + kernel
-    pass (rollup_tiers_fused) and split the tagged result — bit-identical
-    to the cascade (tested) with two fewer wide stages and two fewer
-    materialization barriers. ``fused=False`` keeps the explicit
-    1m -> 1h -> 1d cascade (the partial+final decomposition path, still
-    what incremental per-tier refresh of ONLY a coarse tier would use).
-
-    ``chunk_grain`` / ``max_chunk_rows`` tune the kernel skew guard without
-    dropping to rollup.py internals: ``chunk_grain`` sets the per-kernel
-    group span (default "week" — one (conv, week) group per kernel call;
-    "day" for chatty-conversation corpora where even a week is hot), and
-    ``max_chunk_rows`` bounds group size before day-aligned re-chunking
-    kicks in (None disables the guard — only for bounded test inputs).
+    ``persist`` caches the fused kernel's tagged output and the dimension
+    rollups, so the three tier slices and the two dimension slices do not
+    each recompute the upstream DAG; False leaves materialization to the
+    caller's write barriers. ``_sorted`` is stage 1's persisted range sort;
+    the caller unpersists ``_tagged``, ``_dims`` and ``_sorted`` when done.
     """
     flagged = qc_flags(df, params)
 
-    def mat(d):
-        if persist == "checkpoint":
-            return d.localCheckpoint(eager=True)
-        return d.persist() if persist else d
-
     # The narrow frame sits BELOW the stage-1 exchange and carries ONLY what
-    # downstream consumes: text replaced by its 4-byte length (caching
-    # megabytes of strings costs more than recomputing the codegen'd
-    # length — and the string must never cross the shuffle). role/tool live
-    # here for the dimension rollups, which need NO window output (ts + dim
-    # + text_len only) — feeding them scan-side means the dimension strings
-    # never cross the stage-1 exchange either: the exchange moves exactly
-    # (conv_id, turn_idx, ts, text_len) per row.
+    # downstream consumes: text replaced by its 4-byte length (the string
+    # must never cross the shuffle). role/tool live here for the dimension
+    # rollups, which need NO stage-1 output (ts + dim + text_len only), so
+    # the exchange moves exactly (conv_id, turn_idx, ts, text_len) per row.
     #
-    # Fused path: NOT persisted (round 6). Its consumers are the QC/kernel
-    # chain (exactly once) and the dimension rollups — and the latter never
-    # reference turn_idx, so Catalyst prunes the ordering window from their
-    # lineage and they recompute from a pruned scan + aggregate, which is
-    # cheaper than paying a row-cache materialization barrier + memory for
-    # the whole turn stream (and at 10^12 turns a cache of the raw stream
-    # would spill anyway). The cascade path keeps the cache: its three
-    # per-tier materializations genuinely re-read the frame.
+    # Not persisted: its consumers are the QC/kernel chain (exactly once)
+    # and the dimension rollups, which never reference turn_idx, so they
+    # recompute from a pruned scan + aggregate — cheaper than a row-cache
+    # materialization barrier over the whole turn stream.
     pre = df.select(
         "conv_id", "turn_idx", "ts", "role", "tool",
         F.length(F.coalesce(F.col("text"), F.lit(""))).cast("float").alias("text_len"),
     )
-    sorted_handle = None
-    if fused:
-        # Stage 1 (round 6): turn_gap_s + flag_dip come from a RANGE-
-        # partitioned parallel sort + 2-row boundary stitch
-        # (with_gap_and_dip_parallel) instead of per-conversation windows.
-        # Window semantics require a whole conversation per partition, so a
-        # pathologically hot conversation serializes stage 1 behind one
-        # task (measured: 146s of a 223s 64M-turn pipeline, two
-        # conversations holding 91% of rows); the range sort spreads the
-        # sort across every partition and the dip flag is a 5-row stencil
-        # that only needs each partition's edge rows stitched with its
-        # neighbours'. Flag/gap parity with the window path is tested
-        # directly; tier output stays bit-identical to the cascade. The
-        # explicit n_part also sidesteps AQE's byte-based coalescing
-        # (sorted narrow rows compress to ~1 byte/row, which once starved
-        # this stage to 10 partitions on 32 cores). turns_flagged (below)
-        # and the cascade path keep the window formulation.
-        slim, sorted_handle = with_gap_and_dip_parallel(
-            pre.drop("role", "tool"), params.dip_high, params.dip_max
-        )
-    else:
-        pre = mat(pre)
-        # QC flags over the narrow frame. No flag_step/flag_flatline in the
-        # projection — tier measures filter on flag_dip alone, and column
-        # pruning then lets Catalyst drop the flatline check's second window
-        # (cumsum run-ids + a per-run count needs an extra sort pass over
-        # every turn). Consumers that want the full flag set read
-        # `turns_flagged`, which keeps all three (and text) lazily over the
-        # original input.
-        slim = qc_flags(pre, params).select(
-            "conv_id", "turn_idx", "ts", "turn_gap_s", "text_len", "flag_dip"
-        )
-    if fused:
-        # slim has a single consumer (the fused kernel) -> no cache for it.
-        # The kernel does NOT ride the window exchange (assume_clustered
-        # stays False): window semantics force conv-level clustering, and a
-        # single pathological conversation then concentrates the ~25µs/row
-        # Python kernel in ONE task — measured 220s for a 16M-turn input
-        # whose largest conversation holds 53% of all rows, vs ~40s with
-        # the kernel's own (conv, day) repartition spreading that
-        # conversation's 67k day segments across every partition. The
-        # second exchange is the skew guard now (guide §2.5); the JVM-side
-        # window straggler that remains is sort-rate bound, not
-        # Python-rate bound.
-        tagged = mat(
-            rollup_tiers_fused(
-                slim, fail_flag_col="flag_dip", max_chunk_rows=max_chunk_rows,
-                chunk_grain=chunk_grain,
-            )
-        )
-        t1m = tagged.filter("_grain = 0").drop("_grain")
-        t1h = tagged.filter("_grain = 1").drop("_grain")
-        t1d = tagged.filter("_grain = 2").drop("_grain")
-    else:
-        t1m = mat(
-            rollup_1m(
-                slim, fail_flag_col="flag_dip", max_chunk_rows=max_chunk_rows,
-                chunk_grain=chunk_grain,
-            )
-        )
-        t1h = mat(rollup_coarser(t1m, "hour", chunk_grain=chunk_grain))
-        t1d = rollup_coarser(t1h, "day", chunk_grain=chunk_grain)
-    # Dimension rollups. The round-2 measured decision (one groupBy per
-    # dimension beats the fused explode by ~3x) assumed `pre` was CACHED —
-    # the saved second pass was just a cache read. On the fused path `pre`
-    # is no longer persisted (see above), so each per-dimension rollup would
-    # re-scan parquet and re-decode the wide text column serially; fusing
-    # both dimensions into one pass (rollup_dims_fused) halves the scans and
-    # the small (bucket x kind x value) OUTPUT is what gets materialized.
-    # Slices are exactly rollup_by_dimension's schema (tested). The cascade
-    # path keeps per-dimension rollups over its cached frame.
-    if fused:
-        dims = mat(rollup_dims_fused(pre, ("role", "tool"), "hour"))
-        role_1h = (
-            dims.filter("dim_kind = 'role'").drop("dim_kind")
-            .withColumnRenamed("dim_value", "role")
-        )
-        tool_1h = (
-            dims.filter("dim_kind = 'tool'").drop("dim_kind")
-            .withColumnRenamed("dim_value", "tool")
-        )
-    else:
-        role_1h = rollup_by_dimension(pre, "role", "hour")
-        tool_1h = rollup_by_dimension(pre, "tool", "hour")
+    # Stage 1: turn_gap_s + flag_dip from a RANGE-partitioned parallel sort
+    # + 2-row boundary stitch instead of per-conversation windows. Window
+    # semantics require a whole conversation per partition, so a
+    # pathologically hot conversation serializes stage 1 behind one task
+    # (measured: 146s of a 223s 64M-turn pipeline, two conversations holding
+    # 91% of rows); the range sort spreads it across every partition.
+    # Flag/gap parity with the window path is tested directly. The explicit
+    # n_part also sidesteps AQE's byte-based coalescing (sorted narrow rows
+    # compress to ~1 byte/row, which once starved this stage to 10
+    # partitions on 32 cores).
+    slim, sorted_handle = with_gap_and_dip_parallel(
+        pre.drop("role", "tool"), params.dip_high, params.dip_max
+    )
+    # Stage 2 repartitions on (conv_id, day) rather than riding stage 1's
+    # layout: a single pathological conversation would otherwise concentrate
+    # the ~25µs/row Python kernel in ONE task — measured 220s for a 16M-turn
+    # input whose largest conversation holds 53% of all rows, vs ~40s with
+    # that conversation's 67k day segments spread across every partition.
+    tagged = rollup_tiers_fused(slim, fail_flag_col="flag_dip")
+    # Both dimensions in one pass over the un-persisted scan (one re-scan
+    # and text decode instead of one per dimension); slices are exactly
+    # rollup_by_dimension's schema (tested).
+    dims = rollup_dims_fused(pre, ("role", "tool"), "hour")
+    if persist:
+        tagged, dims = tagged.persist(), dims.persist()
     return {
         "turns_flagged": flagged,  # full width (text kept), not cached
         "_slim": pre,
-        **(
-            {"_tagged": tagged, "_dims": dims, "_sorted": sorted_handle}
-            if fused
-            else {}
+        "_tagged": tagged,
+        "_dims": dims,
+        "_sorted": sorted_handle,
+        "tier_1m": tagged.filter("_grain = 0").drop("_grain"),
+        "tier_1h": tagged.filter("_grain = 1").drop("_grain"),
+        "tier_1d": tagged.filter("_grain = 2").drop("_grain"),
+        "rollup_role_1h": (
+            dims.filter("dim_kind = 'role'").drop("dim_kind")
+            .withColumnRenamed("dim_value", "role")
         ),
-        "tier_1m": t1m,
-        "tier_1h": t1h,
-        "tier_1d": t1d,
-        "rollup_role_1h": role_1h,
-        "rollup_tool_1h": tool_1h,
+        "rollup_tool_1h": (
+            dims.filter("dim_kind = 'tool'").drop("dim_kind")
+            .withColumnRenamed("dim_value", "tool")
+        ),
     }

@@ -148,13 +148,8 @@ def refresh_tiers(
     for table in DIM_TABLES:
         commit(table, tiers[table], new_days, [])  # flag-independent: no boundary
 
-    for t in ("_slim", "_tagged", "_dims", "_sorted", "tier_1m", "tier_1h"):
-        try:
-            tiers[t].unpersist()
-        except KeyError:
-            pass  # cascade path has no _tagged frame
-        except Exception:
-            pass  # checkpoint-materialized frames have nothing to unpersist
+    for t in ("_tagged", "_dims", "_sorted"):
+        tiers[t].unpersist()
     convs.unpersist()
     return results
 

@@ -92,7 +92,10 @@ def get_spark(
         # round-trips per group; ~3MB per in-flight batch keeps worker
         # memory flat even for hot groups
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_mem(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.int96RebaseModeInRead", "CORRECTED")
         # modern timestamp encoding: INT96 is legacy, 12 bytes/value and
@@ -110,6 +113,25 @@ def get_spark(
     if os.environ.get("SPARK_GRAFT_PREWARM", "1") != "0":
         _prewarm_python_workers(spark)
     return spark
+
+
+def _default_driver_mem() -> str:
+    """Driver heap default: 24g, capped at half of the host's MemTotal.
+
+    In local mode the driver JVM is every executor too, and Python workers,
+    tmpfs shuffle files and the OS share the rest of the host; a 24g heap on
+    a 16 GB host lets the JVM grow until the kernel OOM-kills it.
+    """
+    cap_mb = 24 * 1024
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    cap_mb = min(cap_mb, int(line.split()[1]) // 2048)  # kB -> MB / 2
+                    break
+    except OSError:
+        pass  # no /proc (non-Linux): keep the 24g default
+    return f"{cap_mb}m"
 
 
 def _prewarm_python_workers(spark: SparkSession) -> None:

@@ -53,8 +53,8 @@ def streaming_rollup_1m(
 
     Watermark bounds state: buckets older than max(event time) - watermark
     finalize and evict. Output mode 'append' emits each bucket exactly once
-    (after finalization) — the streaming partials that the batch
-    rollup_coarser path can fold upward.
+    (after finalization) — the streaming partials that
+    :func:`stream_rollup_to_catalog`'s ``coarser`` ride-along folds upward.
     """
     return (
         stream.withWatermark("ts", watermark)

@@ -1,12 +1,15 @@
 """Partitioning/shuffle behaviours the engine relies on at scale:
 bucketed co-located joins (no exchange) and calendar-month tiers."""
 
+import numpy as np
 import pytest
-from pyspark.sql import functions as F
+from tier_oracle import oracle_turns, us
 
 from olympian_spark.datagen import gen_transcripts
-from olympian_spark.operators.rollup import rollup_1m, rollup_coarser
-from olympian_spark.plans.pipeline import QcParams, qc_flags
+from olympian_spark.flags import Flag
+from olympian_spark.operators.rollup import rollup_coarser
+from olympian_spark.oracle.quantile import compute_quantile
+from olympian_spark.plans.pipeline import QcParams, build_tiers
 
 
 def test_bucketed_join_eliminates_exchange(spark, tmp_path):
@@ -44,15 +47,41 @@ def test_bucketed_join_eliminates_exchange(spark, tmp_path):
 
 
 def test_month_grain_tier(spark):
-    """Calendar-month rollup from the day tier (chronoutil RelativeDuration
-    parity: month buckets are calendar-aware, not fixed seconds)."""
-    df = spark.createDataFrame(gen_transcripts(5_000, 20, seed=4).to_pandas())
-    flagged = qc_flags(df, QcParams(dip_high=300, dip_max=1200))
-    t1d = rollup_1m(flagged, grain="day", chunk_grain="month")
-    t1mo = rollup_coarser(t1d, "month", chunk_grain="month")
-    rows = t1mo.collect()
-    assert rows
-    for r in rows:
-        assert r.bucket_start.day == 1  # month buckets anchor at the 1st
-    # totals conserved through the cascade
-    assert sum(r.n_turns for r in rows) == 5_000
+    """Calendar-month rollup of the fused day tier (chronoutil
+    RelativeDuration parity: month buckets are calendar-aware, not fixed
+    seconds): exactly one row per (conv_id, month), anchored at the 1st,
+    whose counts, sum_text_len and exact p95 match a per-month oracle."""
+    params = QcParams(dip_high=300, dip_max=1200)
+    pdf = gen_transcripts(5_000, 20, seed=4).to_pandas()
+    tiers = build_tiers(spark.createDataFrame(pdf), params)
+    got = rollup_coarser(tiers["tier_1d"], "month").toPandas()
+    for k in ("_tagged", "_dims", "_sorted"):
+        tiers[k].unpersist()
+
+    turns = oracle_turns(pdf, params)
+    turns["month"] = (
+        turns["ts_us"].to_numpy().astype("datetime64[us]").astype("datetime64[M]")
+        .astype("datetime64[us]").astype(np.int64)
+    )
+    turns["ok"] = turns["flag_dip"] != int(Flag.FAIL)
+    got["month"] = us(got["bucket_start"])
+    assert not got.duplicated(["conv_id", "month"]).any(), "duplicate (conv_id, month) rows"
+    assert (got["bucket_start"].dt.day == 1).all()  # month buckets anchor at the 1st
+    exp = turns.groupby(["conv_id", "month"])
+    assert len(got) == exp.ngroups
+    for r in got.itertuples():
+        g = exp.get_group((r.conv_id, r.month))
+        ok = g[g["ok"]]
+        assert r.n_turns == len(g)
+        assert r.n_qc_fail == int((~g["ok"]).sum())
+        assert r.sum_text_len == int(ok["tl"].astype(np.int64).sum())
+        valid = ok["gap"].to_numpy(np.float32)
+        valid = valid[np.isfinite(valid)]
+        if len(valid):
+            p95 = compute_quantile(0.95, valid)
+            assert np.float32(r.p95_gap).view(np.uint32) == p95.view(np.uint32)
+        else:
+            assert np.isnan(r.p95_gap)
+    assert got["n_turns"].sum() == 5_000
+    with pytest.raises(ValueError):
+        rollup_coarser(tiers["tier_1d"], "hour")  # fixed grains come from the fused kernel

@@ -1,25 +1,30 @@
-"""Tier cascade correctness (Tier B/C):
+"""Tier correctness (Tier B/C):
 
-- tier_1m bit-matches an independent pandas/numpy oracle (f32 mean/p95)
+- every column of tier_1m / tier_1h / tier_1d bit-matches the independent
+  per-bucket numpy oracle in tier_oracle.py (f32 by uint32 view, blocks
+  byte-equal) on the default fixture, a hot conversation, int64
+  conversation keys, pre-epoch timestamps and forced Arrow batch seams
 - 1h sums == sum of member 1m sums; 1d == sum of member 1h sums
-- 1h/1d p95 bit-match the oracle quantile over the raw passing gaps
 - QC-before-rollup: FAIL rows excluded from measures, counted in n_qc_fail
 - salted two-stage agg == plain groupBy
 """
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
+from tier_oracle import assert_tiers_match_oracle, oracle_turns, us
 
 from olympian_spark.datagen import gen_transcripts
 from olympian_spark.flags import Flag
-from olympian_spark.operators.rollup import salted_agg
+from olympian_spark.operators.rollup import _fused_process, rollup_tiers_fused, salted_agg
 from olympian_spark.oracle.quantile import compute_quantile
-from olympian_spark.plans.pipeline import QcParams, build_tiers
+from olympian_spark.plans.pipeline import QcParams, build_tiers, qc_flags
 
 F32 = np.float32
 PARAMS = QcParams(dip_high=300.0, dip_max=1200.0)
+TIERS = ("tier_1m", "tier_1h", "tier_1d")
 
 
 @pytest.fixture(scope="module")
@@ -27,48 +32,30 @@ def tiers(spark):
     pdf = gen_transcripts(n_turns=20_000, n_convs=60, seed=42).to_pandas()
     df = spark.createDataFrame(pdf)
     out = build_tiers(df, PARAMS)
-    collected = {
-        k: out[k].toPandas()
-        for k in ("turns_flagged", "tier_1m", "tier_1h", "tier_1d")
-    }
+    collected = {k: out[k].toPandas() for k in ("turns_flagged", *TIERS)}
     return pdf, collected
 
 
-def _us(series):
-    """Timestamps -> int64 microseconds regardless of pandas storage unit."""
-    s = series.dt.tz_localize(None) if series.dt.tz is not None else series
-    return s.astype("datetime64[us]").astype("int64")
+def _collect(tiers):
+    """The three tier frames of a build_tiers run as pandas; releases the
+    run's persisted frames."""
+    got = {t: tiers[t].toPandas() for t in TIERS}
+    for k in ("_tagged", "_dims", "_sorted"):
+        tiers[k].unpersist()
+    return got
 
 
-def _oracle_turns(pdf):
-    """Independent pandas recomputation of stage 1 + dip-fail policy."""
-    rows = []
-    for conv, g in pdf.groupby("conv_id"):
-        g = g.sort_values("turn_idx")
-        ts = _us(g["ts"]).to_numpy()
-        gap = np.full(len(g), np.nan, dtype=F32)
-        gap[1:] = ((ts[1:] - ts[:-1]) / 1e6).astype(F32)
-        from olympian_spark.oracle import dip_check
-
-        vals = [None if np.isnan(x) else float(x) for x in gap]
-        # dip needs 1 lead + 1 trail context; edges are DATA_MISSING here
-        flags = [int(Flag.DATA_MISSING)] * len(vals)
-        if len(vals) >= 3:
-            inner = dip_check(vals, 1, 1, PARAMS.dip_high, PARAMS.dip_max)
-            flags[1:-1] = inner
-        tl = g["text"].fillna("").str.len().to_numpy(F32)
-        for i in range(len(g)):
-            rows.append(
-                (conv, int(g["turn_idx"].iloc[i]), ts[i], gap[i], tl[i], flags[i])
-            )
-    return pd.DataFrame(
-        rows, columns=["conv_id", "turn_idx", "ts_us", "gap", "tl", "flag_dip"]
-    )
+def _split_grains(tagged_pdf):
+    """rollup_tiers_fused's tagged output (as pandas) -> {tier: frame}."""
+    return {
+        t: tagged_pdf[tagged_pdf["_grain"] == g].drop(columns="_grain")
+        for g, t in enumerate(TIERS)
+    }
 
 
 def test_stage1_flags_match_oracle(tiers):
     pdf, got = tiers
-    oracle = _oracle_turns(pdf)
+    oracle = oracle_turns(pdf, PARAMS)
     sf = got["turns_flagged"][["conv_id", "turn_idx", "flag_dip"]]
     merged = oracle.merge(sf, on=["conv_id", "turn_idx"], suffixes=("_o", "_s"))
     assert len(merged) == len(oracle)
@@ -77,10 +64,10 @@ def test_stage1_flags_match_oracle(tiers):
 
 def test_tier_1m_matches_oracle(tiers):
     pdf, got = tiers
-    oracle = _oracle_turns(pdf)
+    oracle = oracle_turns(pdf, PARAMS)
     oracle["bucket"] = (oracle["ts_us"] // 60_000_000) * 60_000_000
     t1m = got["tier_1m"].copy()
-    t1m["bucket"] = _us(t1m["bucket_start"])
+    t1m["bucket"] = us(t1m["bucket_start"])
 
     exp = {}
     for (conv, bucket), g in oracle.groupby(["conv_id", "bucket"]):
@@ -141,10 +128,10 @@ def test_tier_cascade_consistency(tiers):
 
 def test_coarse_p95_exact_from_blocks(tiers):
     pdf, got = tiers
-    oracle = _oracle_turns(pdf)
+    oracle = oracle_turns(pdf, PARAMS)
     oracle["hb"] = (oracle["ts_us"] // 3_600_000_000) * 3_600_000_000
     t1h = got["tier_1h"].copy()
-    t1h["hb"] = _us(t1h["bucket_start"])
+    t1h["hb"] = us(t1h["bucket_start"])
     checked = 0
     for (conv, hb), g in oracle.groupby(["conv_id", "hb"]):
         ok = g[g["flag_dip"] != int(Flag.FAIL)]
@@ -158,6 +145,95 @@ def test_coarse_p95_exact_from_blocks(tiers):
         assert got_p95.view(np.uint32) == compute_quantile(0.95, valid).view(np.uint32)
         checked += 1
     assert checked > 50
+
+
+def test_tiers_match_oracle_default(tiers):
+    pdf, got = tiers
+    assert_tiers_match_oracle(got, oracle_turns(pdf, PARAMS))
+
+
+def test_tiers_match_oracle_hot_conversation(spark):
+    """One conversation holds ~20% of all turns inside one calendar week:
+    its (conv, day) segments spread over kernel partitions, and every tier
+    row still matches the oracle."""
+    pdf = gen_transcripts(30_000, 40, seed=17, hot_conv_share=0.20, span_days=5.0).to_pandas()
+    got = _collect(build_tiers(spark.createDataFrame(pdf), PARAMS))
+    assert_tiers_match_oracle(got, oracle_turns(pdf, PARAMS))
+
+
+def test_tiers_match_oracle_forced_batch_seams(spark):
+    """Arrow batches of 7 rows (a prime, so batch edges drift across
+    buckets) make nearly every (conv, day) segment straddle a batch seam:
+    the stage-1 stencil stitches its context rows across seams and the
+    tier kernel holds each trailing incomplete segment back until the next
+    batch completes it."""
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key, None)
+    spark.conf.set(key, "7")
+    try:
+        pdf = gen_transcripts(6_000, 20, seed=29).to_pandas()
+        df = spark.createDataFrame(pdf)
+        sizes = df.mapInArrow(
+            lambda bs: (pa.RecordBatch.from_pydict({"n": [b.num_rows]}) for b in bs),
+            "n long",
+        ).collect()
+        assert max(r.n for r in sizes) <= 7, "batch size conf not in effect"
+        got = _collect(build_tiers(df, PARAMS))
+    finally:
+        if old is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, old)
+    assert_tiers_match_oracle(got, oracle_turns(pdf, PARAMS))
+
+
+def test_tiers_match_oracle_pre_epoch(spark):
+    """Turns before 1970 straddling the epoch, some exactly on a midnight:
+    the kernel's (conv, day) routing key (Spark pmod) and its in-kernel
+    day / hour / minute buckets (numpy floor-mod) must agree. With
+    sign-of-dividend modulo a pre-epoch midnight row would be routed apart
+    from the rest of its day, which would then be emitted twice."""
+    day = 86_400_000_000
+    rng = np.random.default_rng(5)
+    rows = []
+    for c in range(4):
+        ts = -3 * day + np.cumsum(rng.integers(1, 3_000_000_000, 400))
+        ts = np.union1d(ts, [-2 * day, -day, 0])
+        gap = np.concatenate(([np.nan], np.diff(ts) / 1e6)).astype(F32)
+        fail = rng.random(ts.size) < 0.1
+        tl = rng.integers(0, 500, ts.size).astype(F32)
+        rows += [
+            (f"c{c}", i, int(ts[i]), gap[i], tl[i],
+             int(Flag.FAIL) if fail[i] else int(Flag.PASS))
+            for i in range(ts.size)
+        ]
+    turns = pd.DataFrame(rows, columns=["conv_id", "turn_idx", "ts_us", "gap", "tl", "flag_dip"])
+    assert turns["ts_us"].min() < 0 < turns["ts_us"].max()
+    slim = spark.createDataFrame(
+        turns.assign(gap=turns["gap"].astype(float), tl=turns["tl"].astype(float))
+    ).select(
+        "conv_id", "turn_idx", F.timestamp_micros("ts_us").alias("ts"),
+        F.col("gap").cast("float").alias("turn_gap_s"),
+        F.col("tl").cast("float").alias("text_len"), "flag_dip",
+    )
+    got = _split_grains(rollup_tiers_fused(slim).toPandas())
+    assert_tiers_match_oracle(got, turns)
+
+
+def test_sum_text_len_exact_above_f32_integers():
+    """sum_text_len is an exact integer sum on every grain: 2**24 + 1 has no
+    float32 representation, so an f32 accumulation of these two passing
+    turns would report 2**24."""
+    tbl = pa.table({
+        "conv_id": ["c0", "c0"],
+        "_ts_us": pa.array([0, 1_000_000], pa.int64()),
+        "turn_gap_s": pa.array([None, 1.0], pa.float32()),
+        "text_len": pa.array([2.0**24, 1.0], pa.float32()),
+        "_is_fail": pa.array([0, 0], pa.int32()),
+    })
+    out = _fused_process(tbl)
+    assert out.column("_grain").to_pylist() == [0, 1, 2]
+    assert out.column("sum_text_len").to_pylist() == [2**24 + 1] * 3
 
 
 def test_salted_agg_equivalence(spark):
@@ -179,56 +255,6 @@ def test_salted_agg_equivalence(spark):
     )
     assert (plain["n"] == salted["n"]).all()
     assert np.allclose(plain["s"], salted["s"], rtol=1e-12)
-
-
-def test_fused_tiers_bit_identical_to_cascade(spark):
-    """rollup_tiers_fused must reproduce the explicit 1m->1h->1d cascade
-    bit-for-bit on every column including f32 measures and block bytes:
-    the fused kernel reuses the finer tier's f32 partial sums exactly as
-    rollup_coarser does (f64 accumulate of f32 partials)."""
-    from olympian_spark.operators.rollup import (
-        rollup_1m,
-        rollup_coarser,
-        rollup_tiers_fused,
-    )
-    from olympian_spark.plans.pipeline import qc_flags
-
-    df = spark.createDataFrame(gen_transcripts(30_000, 60, seed=11).to_pandas())
-    flagged = qc_flags(df, QcParams(dip_high=300.0, dip_max=1200.0))
-    slim = flagged.select(
-        "conv_id", "turn_idx", "ts", "turn_gap_s", "text_len", "flag_dip"
-    )
-
-    tagged = rollup_tiers_fused(slim).persist()
-    t1m_c = rollup_1m(slim).persist()
-    cascade = {
-        0: t1m_c,
-        1: rollup_coarser(t1m_c, "hour").persist(),
-    }
-    cascade[2] = rollup_coarser(cascade[1], "day")
-
-    import numpy as np
-
-    for g, casc in cascade.items():
-        a = (
-            tagged.filter(f"_grain = {g}").drop("_grain")
-            .orderBy("conv_id", "bucket_start").toPandas()
-        )
-        b = casc.orderBy("conv_id", "bucket_start").toPandas()
-        assert len(a) == len(b) and len(a) > 0, f"grain {g}: row count"
-        for col in a.columns:
-            av, bv = a[col].to_numpy(), b[col].to_numpy()
-            if av.dtype == np.float32:
-                assert (av.view(np.uint32) == bv.view(np.uint32)).all(), (
-                    f"grain {g} col {col} not bit-equal"
-                )
-            else:
-                assert (
-                    (a[col].isna() & b[col].isna()) | (a[col] == b[col])
-                ).all(), f"grain {g} col {col} mismatch"
-    tagged.unpersist()
-    t1m_c.unpersist()
-    cascade[1].unpersist()
 
 
 def test_fused_dims_equal_per_dimension_rollups(spark):
@@ -254,191 +280,34 @@ def test_fused_dims_equal_per_dimension_rollups(spark):
 
 
 def test_int64_key_cascade_matches_string_key(spark):
-    """rollup_coarser must honour int64 conv keys (the dictionary-encoded
-    path COVERAGE.md advertises): the explicit 1m->1h->1d cascade run with
-    int64 keys bit-matches the string-key cascade after key remap. Guards
-    the kernels' conv_id output arrays against a hard-coded string type —
-    round-2's rollup_coarser regression was exactly that."""
-    from olympian_spark.operators.rollup import rollup_1m, rollup_coarser
-    from olympian_spark.plans.pipeline import qc_flags
-
-    df = spark.createDataFrame(gen_transcripts(8_000, 24, seed=7).to_pandas())
-    flagged = qc_flags(df, PARAMS)
-    slim = flagged.select(
-        "conv_id", "turn_idx", "ts", "turn_gap_s", "text_len", "flag_dip"
-    ).persist()
-    # deterministic string -> int64 dictionary encoding
-    mapping = slim.select("conv_id").distinct().withColumn(
-        "conv_int", F.xxhash64("conv_id")
-    ).persist()
-    slim_int = (
-        slim.join(F.broadcast(mapping), "conv_id")
-        .drop("conv_id")
-        .withColumnRenamed("conv_int", "conv_id")
-    )
-
-    def cascade(src):
-        t1m = rollup_1m(src).persist()
-        t1h = rollup_coarser(t1m, "hour").persist()
-        t1d = rollup_coarser(t1h, "day")
-        return t1m, t1h, t1d
-
-    str_tiers = cascade(slim)
-    int_tiers = cascade(slim_int)
-    for grain, (ts_df, ti_df) in enumerate(zip(str_tiers, int_tiers)):
-        assert dict(ti_df.dtypes)["conv_id"] == "bigint", f"grain {grain} key type"
-        a = (
-            ts_df.join(F.broadcast(mapping), "conv_id")
-            .drop("conv_id")
-            .withColumnRenamed("conv_int", "conv_id")
-            .orderBy("conv_id", "bucket_start")
-            .toPandas()
-        )
-        b = ti_df.orderBy("conv_id", "bucket_start").toPandas()[a.columns]
-        assert len(a) == len(b) > 0, f"grain {grain}: rows"
-        for col in a.columns:
-            av, bv = a[col].to_numpy(), b[col].to_numpy()
-            if av.dtype == np.float32:
-                assert (av.view(np.uint32) == bv.view(np.uint32)).all(), (
-                    f"grain {grain} col {col} not bit-equal"
-                )
-            else:
-                assert (
-                    (a[col].isna() & b[col].isna()) | (a[col] == b[col])
-                ).all(), f"grain {grain} col {col} mismatch"
-    for d in (*str_tiers[:2], *int_tiers[:2], slim, mapping):
-        d.unpersist()
-
-
-def test_skew_split_bounds_groups_and_is_bit_identical(spark):
-    """Day-aligned sub-chunking of hot (conv, week) kernel groups (SURVEY §4,
-    the 100x-scale straggler/OOM guard): with one conversation holding ~20%
-    of all turns inside a single week, a tiny max_chunk_rows must (a) split
-    that conversation's week into multiple bounded kernel groups and (b)
-    leave every tier output row bit-identical to the unsplit run — all three
-    emitted grains nest in a day, so day-aligned splits never cut an output
-    bucket."""
-    from olympian_spark.operators.rollup import (
-        _DAY_US,
-        _skew_split_chunk,
-        rollup_tiers_fused,
-    )
-    from olympian_spark.plans.pipeline import qc_flags
-
-    # span_days=5 -> the hot conv's turns land inside one calendar week
-    pdf = gen_transcripts(30_000, 40, seed=17, hot_conv_share=0.20, span_days=5.0)
-    df = spark.createDataFrame(pdf.to_pandas())
-    slim = qc_flags(df, PARAMS).select(
-        "conv_id", "turn_idx", "ts", "turn_gap_s", "text_len", "flag_dip"
-    )
-
-    # (a) the split itself: hot conv -> several day chunks, each bounded
-    ts = F.col("ts").cast("timestamp")
-    base = slim.select(
-        "conv_id",
-        F.unix_micros(F.date_trunc("week", ts)).alias("_chunk"),
-        F.unix_micros(ts).alias("_ts_us"),
-    )
-    split = _skew_split_chunk(base, max_chunk_rows=500)
-    per_group = split.groupBy("conv_id", "_chunk").count().collect()
-    hot_conv = "conv_000000"  # gen_transcripts makes conv 0 the hot one
-    hot_groups = [r for r in per_group if r.conv_id == hot_conv]
-    assert len(hot_groups) > 1, "hot conv-week was not split"
-    # day-aligned: every split chunk key is a UTC day boundary
-    assert all(r._chunk % _DAY_US == 0 for r in hot_groups)
-    # bounded by the conv's single-day volume (5 days of data -> each day
-    # well under the unsplit 6000-row week)
-    assert max(r["count"] for r in hot_groups) < 6000
-    # convs below the threshold keep their week chunks untouched
-    orig_counts = base.groupBy("conv_id", "_chunk").count().collect()
-    cold = {
-        r.conv_id
-        for r in orig_counts
-        if all(c["count"] <= 500 for c in orig_counts if c.conv_id == r.conv_id)
-    }
-    assert cold, "fixture needs some sub-threshold convs"
-    n_cold_split = split.filter(F.col("conv_id").isin(list(cold))).select(
-        "conv_id", "_chunk"
-    ).distinct().count()
-    n_cold_orig = sum(1 for r in orig_counts if r.conv_id in cold)
-    assert n_cold_split == n_cold_orig
-
-    # (b) bit-identical tiers
-    a = (
-        rollup_tiers_fused(slim, max_chunk_rows=500)
-        .orderBy("conv_id", "bucket_start", "_grain")
-        .toPandas()
-    )
-    b = (
-        rollup_tiers_fused(slim, max_chunk_rows=None)
-        .orderBy("conv_id", "bucket_start", "_grain")
-        .toPandas()
-    )
-    assert len(a) == len(b) > 0
-    for col in a.columns:
-        av, bv = a[col].to_numpy(), b[col].to_numpy()
-        if av.dtype == np.float32:
-            assert (av.view(np.uint32) == bv.view(np.uint32)).all(), (
-                f"col {col} not bit-equal under skew split"
-            )
-        else:
-            assert (
-                (a[col].isna() & b[col].isna()) | (a[col] == b[col])
-            ).all(), f"col {col} mismatch under skew split"
-
-
-def test_skew_split_pre_epoch_uses_floor_mod_day_keys(spark):
-    """Pre-1970 timestamps in a hot chunk must split at FLOOR day
-    boundaries (numpy floor-mod, the kernel's rule — see rollup kernel's
-    pre-1970 bucket fix): with Spark's sign-of-dividend `%`, a negative
-    _ts_us maps to the NEXT day's key unless it sits exactly on midnight,
-    so one UTC day's rows would land in two kernel groups and a day-nested
-    output bucket would be emitted twice."""
-    from olympian_spark.operators.rollup import _DAY_US, _skew_split_chunk
-
-    # one hot (conv, chunk) group spanning pre-epoch days -2 and -1
-    start = -(3 * _DAY_US) // 2  # -1.5 days
-    rows = [("c0", -2 * _DAY_US, start + i * (_DAY_US // 10)) for i in range(10)]
-    base = spark.createDataFrame(rows, "conv_id string, _chunk long, _ts_us long")
-    got = _skew_split_chunk(base, max_chunk_rows=5).collect()
-    assert len(got) == 10
-    for r in got:
-        assert r._chunk == r._ts_us - r._ts_us % _DAY_US, (  # Python % IS floor-mod
-            f"ts {r._ts_us}: got day key {r._chunk}"
-        )
-    assert {r._chunk for r in got} == {-2 * _DAY_US, -1 * _DAY_US}
-
-
-def test_build_tiers_chunk_grain_passthrough_bit_identical(spark):
-    """build_tiers(chunk_grain="day") must produce bit-identical tiers to
-    the default week chunking (day-nested output buckets never straddle a
-    chunk boundary in either grain) — the pipeline-level knob the skew
-    guard exposes for chatty-conversation corpora."""
-    pdf = gen_transcripts(n_turns=8_000, n_convs=30, seed=9).to_pandas()
-    df = spark.createDataFrame(pdf)
-    a = build_tiers(df, PARAMS, persist=False)
-    b = build_tiers(df, PARAMS, persist=False, chunk_grain="day", max_chunk_rows=500)
-    for tier in ("tier_1m", "tier_1h", "tier_1d"):
-        pa_ = a[tier].orderBy("conv_id", "bucket_start").toPandas()
-        pb_ = b[tier].orderBy("conv_id", "bucket_start").toPandas()
-        assert len(pa_) == len(pb_) > 0, tier
-        for col in pa_.columns:
-            av, bv = pa_[col].to_numpy(), pb_[col].to_numpy()
-            if av.dtype == np.float32:
-                assert (av.view(np.uint32) == bv.view(np.uint32)).all(), (tier, col)
-            else:
-                assert (
-                    (pa_[col].isna() & pb_[col].isna()) | (pa_[col] == pb_[col])
-                ).all(), (tier, col)
+    """rollup_tiers_fused must honour int64 conv keys (the dictionary-encoded
+    path COVERAGE.md advertises): with conversation keys remapped to bigint,
+    the output keeps the bigint key type and every tier row still matches
+    the oracle after mapping keys back. Guards the kernel's conv_id output
+    against a hard-coded string type — round-2's coarse-tier regression was
+    exactly that."""
+    pdf = gen_transcripts(8_000, 24, seed=7).to_pandas()
+    # deterministic string -> int64 dictionary encoding, full 64-bit range
+    codes = {c: (i + 1) * 2**40 for i, c in enumerate(sorted(pdf["conv_id"].unique()))}
+    slim = qc_flags(
+        spark.createDataFrame(pdf.assign(conv_id=pdf["conv_id"].map(codes))), PARAMS
+    ).select("conv_id", "turn_idx", "ts", "turn_gap_s", "text_len", "flag_dip")
+    tagged = rollup_tiers_fused(slim)
+    assert dict(tagged.dtypes)["conv_id"] == "bigint"
+    got = tagged.toPandas()
+    names = {v: k for k, v in codes.items()}
+    got["conv_id"] = got["conv_id"].map(names)
+    assert_tiers_match_oracle(_split_grains(got), oracle_turns(pdf, PARAMS))
 
 
 def test_tier_plan_exchange_budget(spark):
-    """Plan-budget regression pin: a full tier plan (QC windows + fused
-    kernel, persist=False so the WHOLE lineage shows) runs on EXACTLY TWO
-    Exchanges — the pinned stage-1 window shuffle (REPARTITION_BY_NUM, so
-    AQE byte-coalescing cannot starve it) and the kernel's (conv, day)
-    repartition (the conversation-skew spreader). A new shuffle sneaking
-    into the hot path fails this before it costs a benchmark."""
+    """Plan-budget regression pin: a full tier plan (stage 1 + fused
+    kernel, persist=False so the WHOLE lineage shows) runs on at most TWO
+    Exchanges — stage 1's range sort on (conv_id, turn_idx) (an explicit
+    partition count, so AQE byte-coalescing cannot starve it) and the
+    kernel's (conv, day) repartition (the conversation-skew spreader). A
+    new shuffle sneaking into the hot path fails this before it costs a
+    benchmark."""
     from olympian_spark.datagen import gen_transcripts
     from olympian_spark.plans.pipeline import QcParams, build_tiers
 
@@ -457,31 +326,3 @@ def test_tier_plan_exchange_budget(spark):
             if "Exchange " in line
         })
         assert n <= 2, f"{name}: {n} exchanges (budget 2)\n{plan[:1500]}"
-
-
-def test_build_tiers_fused_bit_identical_to_cascade(spark):
-    """build_tiers(fused=True) — the assume_clustered streaming path riding
-    the stage-1 window exchange — must be bit-identical to the explicit
-    cascade (fused=False), which repartitions independently and never
-    relies on input order. Guards the order-dependent contract between
-    qc_flags' window layout and the fused kernel."""
-    from olympian_spark.datagen import gen_transcripts
-    from olympian_spark.plans.pipeline import QcParams, build_tiers
-
-    pdf = gen_transcripts(n_turns=15_000, n_convs=40, seed=23).to_pandas()
-    df = spark.createDataFrame(pdf)
-    params = QcParams(dip_high=300.0, dip_max=1200.0)
-    a = build_tiers(df, params, persist=False, fused=True)
-    b = build_tiers(df, params, persist=False, fused=False)
-    for tier in ("tier_1m", "tier_1h", "tier_1d"):
-        pa_ = a[tier].orderBy("conv_id", "bucket_start").toPandas()
-        pb_ = b[tier].orderBy("conv_id", "bucket_start").toPandas()
-        assert len(pa_) == len(pb_) > 0, tier
-        for col in pa_.columns:
-            av, bv = pa_[col].to_numpy(), pb_[col].to_numpy()
-            if av.dtype == np.float32:
-                assert (av.view(np.uint32) == bv.view(np.uint32)).all(), (tier, col)
-            else:
-                assert (
-                    (pa_[col].isna() & pb_[col].isna()) | (pa_[col] == pb_[col])
-                ).all(), (tier, col)
