@@ -108,8 +108,9 @@ def run_pipeline_sub(sf_dir: str) -> None:
     noop sinks (guide §1.4) so each transformation is measured alone."""
     from pyspark.sql import functions as F
 
+    from olympian_spark.operators.qc_series import with_gap_and_dip_parallel
     from olympian_spark.operators.rollup import rollup_tiers_fused
-    from olympian_spark.plans.pipeline import QcParams, qc_flags
+    from olympian_spark.plans.pipeline import QcParams
     from olympian_spark.sources.transcripts import transcripts_from_events
 
     cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -127,16 +128,18 @@ def run_pipeline_sub(sf_dir: str) -> None:
     t = transcripts_from_events(spark, sf_dir)
     t.count()
     pre = t.select(
-        "conv_id", "turn_idx", "ts", "role", "tool",
+        "conv_id", "turn_idx", "ts",
         F.length(F.coalesce(F.col("text"), F.lit(""))).cast("float").alias("text_len"),
     )
     timed("a_pre(scan+turnidx window)", pre)
-    slim = qc_flags(pre, params).select(
-        "conv_id", "turn_idx", "ts", "turn_gap_s", "text_len", "flag_dip"
-    )
-    timed("b_slim(qc windows)", slim)
-    tagged = rollup_tiers_fused(slim, fail_flag_col="flag_dip")
-    timed("c_tagged(full fused kernel)", tagged)
+    # stage 1 exactly as build_tiers runs it: the range sort + edge pass run
+    # inside the call, the stencil in the timed write
+    t0 = time.time()
+    slim, sorted_handle = with_gap_and_dip_parallel(pre, params.dip_high, params.dip_max)
+    stage["b_sort(stage-1 range sort + edge pass)"] = round(time.time() - t0, 3)
+    timed("c_slim(stage-1 stencil)", slim)
+    timed("d_tagged(stencil + fused kernel)", rollup_tiers_fused(slim))
+    sorted_handle.unpersist()
     print(json.dumps({"sf": sf_dir, "stages": stage}, indent=1))
     spark.stop()
 

@@ -21,10 +21,16 @@ series where every turn is an observation.
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from olympian_spark.flags import Flag
+
+F32 = np.float32
+DAY_US = 86_400_000_000
 
 def PASS() -> Column:
     return F.lit(int(Flag.PASS))
@@ -144,6 +150,68 @@ def with_flatline_flag(
     return run.withColumn(out_col, flag).drop("_run_id")
 
 
+class TurnOrderError(ValueError):
+    """Turns break the stream order the stage-1 stencil and the tier kernel
+    rely on: a NULL ``ts``, rows not sorted by conversation, or ``ts`` /
+    ``turn_idx`` going backwards within a conversation (the transcripts
+    contract is that turn_idx is monotone in ts)."""
+
+
+def segment_stream(batches, order=("_ts_us",), before=None):
+    """Whole (conv_id, day) segments of a sorted Arrow batch stream.
+
+    Yields ``(done, held)``: ``done`` holds complete segments only, ``held``
+    the rows held back behind them (the trailing, possibly incomplete
+    segment), or None after the last segment. Memory is bounded by one
+    segment plus one batch. The day is the floor-mod day of ``_ts_us``.
+
+    Checks, along the stream and across batch seams, the order every kernel
+    on it relies on: ``_ts_us`` is never NULL, conv_id never decreases, and
+    within a conversation no ``order`` column decreases. ``before`` is the
+    row preceding the stream (a table of ``("conv_id", *order)``), so a
+    partition seam is checked too. Raises :class:`TurnOrderError`.
+    """
+    cols = ["conv_id", *order]
+    held: list = []
+    last = before
+    for rb in batches:
+        if rb.num_rows == 0:
+            continue
+        t = pa.Table.from_batches([rb])
+        keys = t.select(cols)
+        lag = 0
+        if last is not None and last.num_rows:
+            # promote: edge rows collected through Spark are always nullable
+            keys, lag = pa.concat_tables([last, keys], promote_options="default"), 1
+        if keys.column("_ts_us").null_count:
+            raise TurnOrderError("NULL ts")
+        conv = keys.column("conv_id").combine_chunks()
+        if pc.any(pc.less(conv[1:], conv[:-1])).as_py():
+            raise TurnOrderError("rows are not sorted by conv_id")
+        same = pc.equal(conv[1:], conv[:-1]).to_numpy(zero_copy_only=False)
+        for c in order:
+            v = keys.column(c).to_numpy()
+            back = np.flatnonzero(same & (v[1:] < v[:-1]))
+            if back.size:
+                raise TurnOrderError(
+                    f"{c} goes backwards in conversation {conv[int(back[0])].as_py()!r}"
+                )
+        ts = keys.column("_ts_us").to_numpy()
+        day = ts - ts % DAY_US  # numpy floor-mod: pre-epoch safe
+        breaks = np.flatnonzero(~same | (day[1:] != day[:-1]))
+        last = keys.slice(keys.num_rows - 1)
+        if breaks.size == 0:
+            held.append(t)  # t continues the held segment
+            continue
+        start = int(breaks[-1]) + 1 - lag  # first row of t's trailing segment
+        done = pa.concat_tables([*held, t.slice(0, start)])
+        held = [t.slice(start)]
+        if done.num_rows:
+            yield done, held[0]
+    if held:
+        yield pa.concat_tables(held), None
+
+
 def with_gap_and_dip_parallel(
     df: DataFrame,
     dip_high: float,
@@ -161,16 +229,27 @@ def with_gap_and_dip_parallel(
     turn order — they need only each row's ±2 neighbours, not the whole
     conversation. So:
 
-    1. ``repartitionByRange(conv_id, turn_idx)`` + local sort: the global
-       sort parallelizes across ALL partitions (a hot conversation spreads);
-       persisted, because range boundaries are sampled per execution and
-       both following passes must see identical partitions.
+    1. ``repartitionByRange(conv_id, day)`` + a local sort by (conv_id, day,
+       turn_idx, ts), the day by floor-mod (``pmod``) like the tier kernel.
+       Equal range keys land in one partition, so every (conv, day) segment
+       is whole within one partition and already in tier-kernel order, while
+       a hot conversation still spreads across partitions by day. Persisted,
+       because range boundaries are sampled per execution and both following
+       passes must see identical partitions.
     2. A boundary pass collects each partition's first/last two rows
        (bounded driver collect: 4 rows x n_part).
     3. A whole-partition ``mapInArrow`` computes gaps and dip flags
-       vectorized, stitching each partition's edge rows with its
-       neighbours' context rows; conversation changes mask the stencil
-       exactly like the window's partition bound.
+       vectorized over each run of complete segments from
+       :func:`segment_stream`: two rows of lead context from the previous
+       run or the preceding partitions' edge rows, one row of lookahead from
+       the held segment or the following partitions' edge rows.
+       Conversation changes mask the stencil exactly like the window's
+       partition bound.
+
+    One sort order serves both kernels only if ``ts`` is non-decreasing in
+    ``turn_idx`` order within a conversation; the stencil checks that along
+    the stream and across partition seams, and raises
+    :class:`TurnOrderError` (also on a NULL ``ts``).
 
     Flag parity contract: gap series derived from timestamps carry no
     genuine NaNs, so SQL NULL (no neighbour) and NaN coincide and the
@@ -180,19 +259,14 @@ def with_gap_and_dip_parallel(
 
     Returns ``(flagged, sorted_handle)`` — unpersist the handle when done.
     """
-    import numpy as np
-    import pyarrow as pa
-
-    spark = df.sparkSession
     if n_part is None:
-        n_part = 2 * spark.sparkContext.defaultParallelism
-    cols = df.columns
-    F32 = np.float32
-
+        n_part = 2 * df.sparkSession.sparkContext.defaultParallelism
+    keys = ("conv_id", "_ts_us", "turn_idx")  # stencil context columns
+    day = F.col("_ts_us") - F.pmod(F.col("_ts_us"), F.lit(DAY_US))
     srt = (
         df.withColumn("_ts_us", F.unix_micros(F.col("ts").cast("timestamp")))
-        .repartitionByRange(n_part, "conv_id", "turn_idx")
-        .sortWithinPartitions("conv_id", "turn_idx")
+        .repartitionByRange(n_part, "conv_id", day)
+        .sortWithinPartitions("conv_id", day, "turn_idx", "_ts_us")
         .persist()
     )
 
@@ -200,66 +274,41 @@ def with_gap_and_dip_parallel(
     def edge_fn(batches):
         from pyspark import TaskContext
 
-        pid = TaskContext.get().partitionId()
-        first: list = []
-        last: list = []
+        head = tail = None
         for rb in batches:
-            if rb.num_rows == 0:
-                continue
             t = pa.Table.from_batches([rb])
-            conv = t.column("conv_id").to_pylist()
-            ts = t.column("_ts_us").to_pylist()
-            rows = list(zip(conv, ts))
-            if len(first) < 2:
-                first.extend(rows[: 2 - len(first)])
-            last = (last + rows)[-2:]
-        if first:
-            out = pa.table(
-                {
-                    "pid": pa.array([pid] * (len(first) + len(last)), pa.int32()),
-                    "kind": pa.array(["f"] * len(first) + ["l"] * len(last)),
-                    "idx": pa.array(
-                        list(range(len(first))) + list(range(len(last))), pa.int32()
-                    ),
-                    "conv_id": pa.array([r[0] for r in first + last]),
-                    "ts_us": pa.array([r[1] for r in first + last], pa.int64()),
-                }
-            )
-            yield from out.to_batches()
+            head = (t if head is None else pa.concat_tables([head, t])).slice(0, 2)
+            tail = t if tail is None else pa.concat_tables([tail, t])
+            tail = tail.slice(max(0, tail.num_rows - 2))
+        if head is not None and head.num_rows:
+            pid = TaskContext.get().partitionId()
+            for is_head, part in ((True, head), (False, tail)):
+                n = part.num_rows
+                yield from (
+                    part.append_column("pid", pa.array(np.full(n, pid, np.int32)))
+                    .append_column("is_head", pa.array(np.full(n, is_head)))
+                    .to_batches()
+                )
 
-    edge_schema = (
-        "pid int, kind string, idx int, "
-        f"conv_id {dict(srt.dtypes)['conv_id']}, ts_us long"
-    )
-    edges = srt.select("conv_id", "_ts_us").mapInArrow(edge_fn, edge_schema).collect()
-    firsts: dict[int, list] = {}
-    lasts: dict[int, list] = {}
-    for r in edges:
-        d = firsts if r["kind"] == "f" else lasts
-        d.setdefault(r["pid"], []).append((r["idx"], r["conv_id"], r["ts_us"]))
-    for d in (firsts, lasts):
-        for p in d:
-            d[p] = [(c, t) for _, c, t in sorted(d[p])]
+    edge_in = srt.select(*keys)
+    edge_schema = ", ".join(f"{k} {t}" for k, t in edge_in.dtypes) + ", pid int, is_head boolean"
+    edges = edge_in.mapInArrow(edge_fn, edge_schema).toArrow()
+    heads, tails = {}, {}
+    for p in np.unique(edges.column("pid").to_numpy()).tolist():
+        part = edges.filter(pc.equal(edges.column("pid"), p))
+        heads[p] = part.filter(part.column("is_head")).select(keys)
+        tails[p] = part.filter(pc.invert(part.column("is_head"))).select(keys)
 
     # leading context = the 2 rows globally preceding each partition's first
-    # row; trailing = the 2 rows following its last (walk over neighbours,
-    # skipping empty partitions)
-    ctx: dict[int, tuple[list, list]] = {}
-    pids = sorted(set(firsts))
-    for p in pids:
-        lead: list = []
-        for q in range(p - 1, -1, -1):
-            if q in lasts:
-                lead = (lasts[q] + lead)[-2:] if lead else lasts[q][-2:]
-                if len(lead) >= 2:
-                    break
-        trail: list = []
-        for q in range(p + 1, n_part):
-            if q in firsts:
-                trail = (trail + firsts[q])[:2]
-                if len(trail) >= 2:
-                    break
-        ctx[p] = (lead, trail)
+    # row; trailing = the 2 rows following its last. Every listed partition
+    # holds a row, so two neighbours on each side always suffice.
+    empty = edges.select(keys).slice(0, 0)
+    pids = sorted(heads)
+    ctx: dict[int, tuple] = {}
+    for i, p in enumerate(pids):
+        lead = pa.concat_tables([empty, *(tails[q] for q in pids[max(0, i - 2) : i])])
+        trail = pa.concat_tables([empty, *(heads[q] for q in pids[i + 1 : i + 3])])
+        ctx[p] = (lead.slice(max(0, lead.num_rows - 2)), trail.slice(0, 2))
 
     # ---- pass 2: vectorized stencil over the sorted partitions ------------
     high_f = F32(dip_high)
@@ -305,72 +354,27 @@ def with_gap_and_dip_parallel(
         return gap, flag
 
     def stencil_fn(batches):
-        import pyarrow.compute as pc
         from pyspark import TaskContext
 
-        pid = TaskContext.get().partitionId()
-        lead, trail = ctx.get(pid, ([], []))
-
-        def emit(tbl: "pa.Table", lctx_rows: list, trail_rows: list,
-                 hold_back: bool):
-            """Flags for tbl's rows using lctx/trail context; returns
-            (emitted_table, new_lctx, held_table)."""
-            n_l = len(lctx_rows)
-            ctype = tbl.column("conv_id").type
-            conv_ext = pa.chunked_array(
-                [pa.array([c for c, _ in lctx_rows], ctype)]
-                + list(tbl.column("conv_id").chunks)
-                + [pa.array([c for c, _ in trail_rows], ctype)]
-            )
-            ts_ext = np.concatenate(
-                (
-                    np.array([t for _, t in lctx_rows], np.int64),
-                    tbl.column("_ts_us").combine_chunks()
-                    .to_numpy(zero_copy_only=False).astype(np.int64, copy=False),
-                    np.array([t for _, t in trail_rows], np.int64),
-                )
-            )
+        edge = ctx.get(TaskContext.get().partitionId())
+        if edge is None:  # an empty partition
+            return
+        lead, trail = edge
+        for done, held in segment_stream(batches, keys[1:], lead[-1:]):
+            look = (trail if held is None else held.select(keys)).slice(0, 1)
+            ext = pa.concat_tables([lead, done.select(keys), look], promote_options="default")
             codes = (
-                pc.dictionary_encode(conv_ext).combine_chunks().indices
-                .to_numpy(zero_copy_only=False)
+                pc.dictionary_encode(ext.column("conv_id").combine_chunks())
+                .indices.to_numpy(zero_copy_only=False)
             )
-            gap, flag = _flags(codes, ts_ext)
-            n_own = tbl.num_rows
-            cut = n_own - 2 if hold_back else n_own
-            if cut <= 0:
-                return None, lctx_rows, tbl
-            own_gap = gap[n_l : n_l + cut]
-            own_flag = flag[n_l : n_l + cut]
-            out = tbl.slice(0, cut).append_column(
-                "turn_gap_s", pa.array(own_gap, pa.float32())
-            ).append_column("flag_dip", pa.array(own_flag, pa.int8()))
-            held = tbl.slice(cut)
-            conv_own = tbl.column("conv_id").to_pylist()[:cut]
-            ts_own = (
-                tbl.column("_ts_us").combine_chunks()
-                .to_numpy(zero_copy_only=False)[:cut]
+            gap, flag = _flags(codes, ext.column("_ts_us").to_numpy())
+            own = slice(lead.num_rows, lead.num_rows + done.num_rows)
+            yield from (
+                done.append_column("turn_gap_s", pa.array(gap[own], pa.float32()))
+                .append_column("flag_dip", pa.array(flag[own], pa.int8()))
+                .to_batches()
             )
-            new_lctx = (
-                lctx_rows + [(c, int(t)) for c, t in zip(conv_own, ts_own)]
-            )[-2:]
-            return out, new_lctx, held
-
-        lctx = list(lead)
-        held: "pa.Table | None" = None
-        for rb in batches:
-            if rb.num_rows == 0:
-                continue
-            tbl = pa.Table.from_batches([rb])
-            if held is not None:
-                tbl = pa.concat_tables([held, tbl]).combine_chunks()
-            out, lctx, held = emit(tbl, lctx, [], hold_back=True)
-            if out is not None:
-                yield from out.to_batches()
-        if held is not None and held.num_rows:
-            out, _, _ = emit(held.combine_chunks(), lctx, list(trail),
-                             hold_back=False)
-            if out is not None:
-                yield from out.to_batches()
+            lead = ext.slice(max(0, own.stop - 2), min(2, own.stop))
 
     out_schema = ", ".join(
         f"{name} {dtype}" for name, dtype in srt.dtypes

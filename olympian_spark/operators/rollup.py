@@ -6,7 +6,7 @@ Semantics (SURVEY §2.9, north star):
 - measures: n_turns, n_qc_fail, counts/sums/means of turn_gap_s and
   text_len, **exact p95** of turn_gap_s via the reference quantile kernel
   (f32 linear interpolation, sct.rs:70-103) — never percentile_approx;
-- QC-before-rollup: rows whose fail_flag column == Flag.FAIL are excluded
+- QC-before-rollup: rows whose ``flag_dip`` == Flag.FAIL are excluded
   from measures but counted in n_qc_fail (Warn rows are retained — the
   reference treats Warn as "inside warning threshold", not rejection);
 - every tier carries a Gorilla block of its member (ts, turn_gap, text_len)
@@ -17,13 +17,15 @@ Semantics (SURVEY §2.9, north star):
 
 Execution shape (the scale story):
 
-- :func:`rollup_tiers_fused` emits all three grains from one shuffle and
-  one whole-partition ``mapInArrow`` stream. Rows are hash-partitioned on
-  (conv_id, day) and sorted by (conv_id, day, turn_idx); the kernel handles
-  every complete (conv, day) segment of an Arrow batch at once. A day
-  segment is the finest split that keeps every output bucket whole, so a
-  hot conversation spreads across partitions by day with no hot-key
-  pre-pass, and worker memory is bounded by one segment plus one batch.
+- :func:`rollup_tiers_fused` emits all three grains from one
+  whole-partition ``mapInArrow`` stream over stage 1's partitions, with no
+  shuffle of its own. Stage 1 range-partitions on (conv_id, day) and sorts
+  by (conv_id, day, turn_idx), so every (conv, day) segment is whole within
+  one partition and already in kernel order; the kernel handles every
+  complete segment of an Arrow batch at once. A day segment is the finest
+  split that keeps every output bucket whole, so a hot conversation spreads
+  across partitions by day with no hot-key pre-pass, and worker memory is
+  bounded by one segment plus one batch.
 - :func:`rollup_coarser` rolls tier_1d up to calendar weeks and months,
   whose periods are irregular, with one kernel group per output bucket.
 - dimension rollups are pure relational and absorb skew via map-side
@@ -40,6 +42,7 @@ from pyspark.sql import functions as F
 
 from olympian_spark.flags import Flag
 from olympian_spark.functions.gorilla import decode_block, encode_blocks
+from olympian_spark.operators.qc_series import DAY_US, segment_stream
 from olympian_spark.oracle.quantile import compute_quantile_segmented
 
 F32 = np.float32
@@ -96,7 +99,6 @@ _CALENDAR_GRAINS = ("week", "month")
 
 _MINUTE_US = 60_000_000
 _HOUR_US = 3_600_000_000
-_DAY_US = 86_400_000_000
 
 
 def _npcol(tbl: "pa.Table", name: str) -> np.ndarray:
@@ -266,7 +268,7 @@ def _fused_process(tbl: "pa.Table") -> "pa.Table":
     gaps = _f32col(tbl, "turn_gap_s")
     tl = _f32col(tbl, "text_len")
     ok = _npcol(tbl, "_is_fail") != 1
-    day = ts_us - ts_us % _DAY_US  # numpy floor-mod: pre-epoch safe
+    day = ts_us - ts_us % DAY_US  # numpy floor-mod: pre-epoch safe
     seg_change = (codes[1:] != codes[:-1]) | (day[1:] != day[:-1])
     seg_id = np.concatenate(([0], np.cumsum(seg_change)))
 
@@ -275,7 +277,7 @@ def _fused_process(tbl: "pa.Table") -> "pa.Table":
 
     tiers = []
     fine = None  # (segment starts, tier table) of the previous, finer grain
-    for grain, period in enumerate((_MINUTE_US, _HOUR_US, _DAY_US)):
+    for grain, period in enumerate((_MINUTE_US, _HOUR_US, DAY_US)):
         bucket = ts_us - ts_us % period
         starts = bounds(seg_change | (bucket[1:] != bucket[:-1]), n)
         partials = None
@@ -295,79 +297,34 @@ def _fused_process(tbl: "pa.Table") -> "pa.Table":
     return pa.concat_tables(tiers)
 
 
-def rollup_tiers_fused(df: DataFrame, fail_flag_col: str | None = "flag_dip") -> DataFrame:
-    """All three tiers (1m/1h/1d) in ONE shuffle + ONE streaming kernel pass.
+def rollup_tiers_fused(df: DataFrame) -> DataFrame:
+    """All three tiers (1m/1h/1d) in ONE streaming kernel pass, no shuffle.
 
-    Output is the tier schema plus a ``_grain`` tag (0=minute, 1=hour,
-    2=day). Rows are hash-partitioned AND sorted by (conv_id, day, turn_idx);
-    a whole-partition ``mapInArrow`` stream processes every complete
-    (conv, day) segment of each Arrow batch vectorized across segments,
-    holding back only the trailing incomplete segment for the next batch.
-    One kernel invocation per ~64k-row batch, no in-kernel sort.
+    ``df`` is stage 1's output (:func:`with_gap_and_dip_parallel`): every
+    (conv_id, day) segment whole within one partition, rows sorted by
+    (conv_id, day, turn_idx). Rows whose ``flag_dip`` is FAIL are excluded
+    from the measures. Output is the tier schema plus a ``_grain`` tag
+    (0=minute, 1=hour, 2=day). A whole-partition ``mapInArrow`` stream
+    processes every complete segment of each Arrow batch vectorized across
+    segments, holding back only the trailing one (:func:`segment_stream`),
+    which raises :class:`TurnOrderError` when conv_id or ts goes backwards
+    within a partition — that input would otherwise split a bucket into
+    duplicate rows.
     """
-    ts = F.col("ts").cast("timestamp")
-    fail = (
-        (F.col(fail_flag_col) == int(Flag.FAIL)).cast("int")
-        if fail_flag_col
-        else F.lit(0)
-    )
-    ts_us_col = F.unix_micros(ts)
+    ts_us = F.unix_micros(F.col("ts").cast("timestamp"))
     base = df.select(
         "conv_id",
-        # day key via pmod — explicitly the kernel's numpy floor-mod rule,
-        # so partition routing and in-kernel segmentation can never disagree
-        # (date_trunc agrees too in a UTC session; pmod makes it structural)
-        (ts_us_col - F.pmod(ts_us_col, F.lit(_DAY_US))).alias("_day"),
-        F.col("turn_idx"),
-        ts_us_col.alias("_ts_us"),
+        ts_us.alias("_ts_us"),
         F.col("turn_gap_s"),
         F.col("text_len"),
-        fail.alias("_is_fail"),
+        (F.col("flag_dip") == int(Flag.FAIL)).cast("int").alias("_is_fail"),
     )
 
     def stream_kernel(batches):
-        import pyarrow.compute as pc
+        for done, _ in segment_stream(batches):
+            yield from _fused_process(done).to_batches()
 
-        pending: "pa.Table | None" = None
-        for rb in batches:
-            if rb.num_rows == 0:
-                continue
-            tbl = pa.Table.from_batches([rb])
-            if pending is not None:
-                tbl = pa.concat_tables([pending, tbl]).combine_chunks()
-            nr = tbl.num_rows
-            conv = tbl.column("conv_id").combine_chunks()
-            ts_np = (
-                tbl.column("_ts_us").combine_chunks()
-                .to_numpy(zero_copy_only=False).astype(np.int64, copy=False)
-            )
-            day_np = ts_np - ts_np % _DAY_US  # numpy floor-mod: pre-epoch safe
-            # rows belonging to the same (conv, day) segment as the LAST row;
-            # the table is sorted, so that segment is the maximal True suffix
-            same = (
-                pc.equal(conv, conv[nr - 1]).to_numpy(zero_copy_only=False)
-                & (day_np == day_np[-1])
-            )
-            not_same = np.flatnonzero(~same)
-            if not_same.size == 0:
-                pending = tbl  # the whole table is one (possibly continuing) segment
-                continue
-            start = int(not_same[-1]) + 1  # first row of the trailing segment
-            yield from _fused_process(tbl.slice(0, start).combine_chunks()).to_batches()
-            pending = tbl.slice(start)
-        if pending is not None and pending.num_rows:
-            yield from _fused_process(pending.combine_chunks()).to_batches()
-
-    n_part = 2 * df.sparkSession.sparkContext.defaultParallelism
-    out = (
-        base.repartition(n_part, "conv_id", "_day")
-        .sortWithinPartitions("conv_id", "_day", "turn_idx")
-        # project AFTER the sort: the sort keys _day/turn_idx never cross
-        # the JVM->Python Arrow channel (the kernel re-derives the day from
-        # _ts_us and rows already arrive ordered)
-        .select("conv_id", "_ts_us", "turn_gap_s", "text_len", "_is_fail")
-        .mapInArrow(stream_kernel, _tier_schema_us(df) + ", _grain tinyint")
-    )
+    out = base.mapInArrow(stream_kernel, _tier_schema_us(df) + ", _grain tinyint")
     return _restore_bucket(out)
 
 

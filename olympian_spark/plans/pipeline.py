@@ -3,10 +3,11 @@
 transcripts
   -> scan-side narrow projection (not cached): text replaced by text_len;
      role/tool kept here ONLY for the dimension rollups
-  -> stage 1 (range shuffle on (conv_id, turn_idx), moving just
-     conv_id/turn_idx/ts/text_len): turn_gap_s + flag_dip from a parallel
-     sort plus a 2-row edge stitch (with_gap_and_dip_parallel)
-  -> stage 2 (shuffle on (conv_id, day)): fused tier Arrow kernel —
+  -> stage 1 (range shuffle on (conv_id, day), moving just
+     conv_id/turn_idx/ts/text_len; sorted by (conv_id, day, turn_idx)):
+     turn_gap_s + flag_dip from a parallel sort plus a 2-row edge stitch
+     (with_gap_and_dip_parallel)
+  -> fused tier Arrow kernel on stage 1's partitions, no second shuffle —
      f32 measures + exact p95 + Gorilla block for 1m/1h/1d in one pass
   -> dimension rollups (role/tool) in one fused pass over the scan-side
      projection: they need no stage-1 output, so the dimension strings
@@ -71,6 +72,10 @@ def build_tiers(
     each recompute the upstream DAG; False leaves materialization to the
     caller's write barriers. ``_sorted`` is stage 1's persisted range sort;
     the caller unpersists ``_tagged``, ``_dims`` and ``_sorted`` when done.
+
+    A NULL ``ts``, or ``ts`` going backwards in ``turn_idx`` order within a
+    conversation, makes the first action on a tier raise
+    :class:`~olympian_spark.operators.qc_series.TurnOrderError`.
     """
     flagged = qc_flags(df, params)
 
@@ -93,20 +98,19 @@ def build_tiers(
     # semantics require a whole conversation per partition, so a
     # pathologically hot conversation serializes stage 1 behind one task
     # (measured: 146s of a 223s 64M-turn pipeline, two conversations holding
-    # 91% of rows); the range sort spreads it across every partition.
-    # Flag/gap parity with the window path is tested directly. The explicit
-    # n_part also sidesteps AQE's byte-based coalescing (sorted narrow rows
-    # compress to ~1 byte/row, which once starved this stage to 10
-    # partitions on 32 cores).
+    # 91% of rows); the range key (conv_id, day) spreads it across every
+    # partition by day. Flag/gap parity with the window path is tested
+    # directly. The explicit n_part also sidesteps AQE's byte-based
+    # coalescing (sorted narrow rows compress to ~1 byte/row, which once
+    # starved this stage to 10 partitions on 32 cores).
     slim, sorted_handle = with_gap_and_dip_parallel(
         pre.drop("role", "tool"), params.dip_high, params.dip_max
     )
-    # Stage 2 repartitions on (conv_id, day) rather than riding stage 1's
-    # layout: a single pathological conversation would otherwise concentrate
-    # the ~25µs/row Python kernel in ONE task — measured 220s for a 16M-turn
-    # input whose largest conversation holds 53% of all rows, vs ~40s with
-    # that conversation's 67k day segments spread across every partition.
-    tagged = rollup_tiers_fused(slim, fail_flag_col="flag_dip")
+    # The tier kernel rides stage 1's layout: every (conv, day) segment is
+    # whole within one partition and already in kernel order, so the ~25µs/row
+    # Python kernel of a hot conversation is spread by day (its 67k day
+    # segments in the 16M-turn input) without a second shuffle.
+    tagged = rollup_tiers_fused(slim)
     # Both dimensions in one pass over the un-persisted scan (one re-scan
     # and text decode instead of one per dimension); slices are exactly
     # rollup_by_dimension's schema (tested).

@@ -28,10 +28,9 @@ Resume: every step is idempotent, and a table whose latest committed
 watermark equals the current one is skipped — killing the job after any
 step and rerunning converges to the same final state (tested).
 
-Flatline caveat (documented contract): flatline FAIL can retroactively
-extend arbitrarily far back, so it is not a supported fail-filter for
-*incremental* refresh — use step/dip (bounded 1-turn lookahead). Full
-refresh supports any flag.
+Fail filter: tiers exclude dip_check FAIL turns (``flag_dip``), whose
+one-turn lookahead is what bounds the boundary-day rewrite above. Flatline
+FAIL could extend arbitrarily far back, so it is not a fail filter.
 """
 
 from __future__ import annotations

@@ -401,10 +401,22 @@ class ParquetManifestCatalog:
             df = df.repartition(n_out, partition_col)
             if sort_by:
                 df = df.sortWithinPartitions(partition_col, *sort_by)
-        # distribute=False: the target-size repartition above IS the layout
-        return self.overwrite_partitions(
-            table, df, partition_col=partition_col, _op="compact", distribute=False
-        )
+        # Range bounds are quantiles of a key sample (Spark default: 100 keys
+        # per output partition, seeded by the RDD id). A sampled bound spills
+        # rows of the next Morton slab into a file and stretches that file's
+        # box across a whole column range, so sample up to 100k keys: exact
+        # quantiles for rewrites up to that size, close to them beyond.
+        sample_key = "spark.sql.execution.rangeExchange.sampleSizePerPartition"
+        sample_old = self.spark.conf.get(sample_key)
+        if zorder_by:
+            self.spark.conf.set(sample_key, str(max(100, -(-100_000 // n_out))))
+        try:
+            # distribute=False: the target-size repartition above IS the layout
+            return self.overwrite_partitions(
+                table, df, partition_col=partition_col, _op="compact", distribute=False
+            )
+        finally:
+            self.spark.conf.set(sample_key, sample_old)
 
     def checkpoint_manifest(self, table: str) -> dict:
         """Squash manifest history into one base snapshot (Iceberg

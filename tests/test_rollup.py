@@ -3,7 +3,10 @@
 - every column of tier_1m / tier_1h / tier_1d bit-matches the independent
   per-bucket numpy oracle in tier_oracle.py (f32 by uint32 view, blocks
   byte-equal) on the default fixture, a hot conversation, int64
-  conversation keys, pre-epoch timestamps and forced Arrow batch seams
+  conversation keys, pre-epoch timestamps, forced Arrow batch seams and
+  forced stage-1 partition seams
+- turns out of order (NULL ts, ts going backwards in turn order, unsorted
+  kernel input) raise TurnOrderError
 - 1h sums == sum of member 1m sums; 1d == sum of member 1h sums
 - QC-before-rollup: FAIL rows excluded from measures, counted in n_qc_fail
 - salted two-stage agg == plain groupBy
@@ -18,9 +21,10 @@ from tier_oracle import assert_tiers_match_oracle, oracle_turns, us
 
 from olympian_spark.datagen import gen_transcripts
 from olympian_spark.flags import Flag
+from olympian_spark.operators.qc_series import with_gap_and_dip_parallel
 from olympian_spark.operators.rollup import _fused_process, rollup_tiers_fused, salted_agg
 from olympian_spark.oracle.quantile import compute_quantile
-from olympian_spark.plans.pipeline import QcParams, build_tiers, qc_flags
+from olympian_spark.plans.pipeline import QcParams, build_tiers
 
 F32 = np.float32
 PARAMS = QcParams(dip_high=300.0, dip_max=1200.0)
@@ -43,6 +47,14 @@ def _collect(tiers):
     for k in ("_tagged", "_dims", "_sorted"):
         tiers[k].unpersist()
     return got
+
+
+def _stage1_input(spark, pdf):
+    """The narrow frame build_tiers feeds stage 1."""
+    return spark.createDataFrame(pdf).select(
+        "conv_id", "turn_idx", "ts",
+        F.length(F.coalesce(F.col("text"), F.lit(""))).cast("float").alias("text_len"),
+    )
 
 
 def _split_grains(tagged_pdf):
@@ -187,37 +199,59 @@ def test_tiers_match_oracle_forced_batch_seams(spark):
     assert_tiers_match_oracle(got, oracle_turns(pdf, PARAMS))
 
 
+def test_tiers_match_oracle_forced_partition_seams(spark):
+    """Stage 1 on 11 range partitions of the hot-conversation fixture: the
+    hot conversation's day segments land in several partitions, so the
+    stencil's day-boundary context crosses partition seams, and the kernel
+    runs on those partitions as they are."""
+    pdf = gen_transcripts(30_000, 40, seed=17, hot_conv_share=0.20, span_days=5.0).to_pandas()
+    hot = pdf["conv_id"].value_counts().idxmax()
+    slim, handle = with_gap_and_dip_parallel(_stage1_input(spark, pdf), 300.0, 1200.0, n_part=11)
+    try:
+        n_hot_parts = (
+            handle.filter(F.col("conv_id") == hot)
+            .select(F.spark_partition_id()).distinct().count()
+        )
+        got = _split_grains(rollup_tiers_fused(slim).toPandas())
+    finally:
+        handle.unpersist()
+    assert n_hot_parts >= 2, n_hot_parts
+    assert_tiers_match_oracle(got, oracle_turns(pdf, PARAMS))
+
+
 def test_tiers_match_oracle_pre_epoch(spark):
-    """Turns before 1970 straddling the epoch, some exactly on a midnight:
-    the kernel's (conv, day) routing key (Spark pmod) and its in-kernel
-    day / hour / minute buckets (numpy floor-mod) must agree. With
-    sign-of-dividend modulo a pre-epoch midnight row would be routed apart
-    from the rest of its day, which would then be emitted twice."""
+    """Turns before 1970 straddling the epoch, some exactly on a midnight,
+    through stage 1 on more range partitions than there are (conv, day)
+    keys: stage 1's range key (Spark pmod) and the kernel's day / hour /
+    minute buckets (numpy floor-mod) must agree. With sign-of-dividend
+    modulo a pre-epoch day would be split across two range keys, hence two
+    partitions, and emitted twice."""
     day = 86_400_000_000
     rng = np.random.default_rng(5)
-    rows = []
+    parts = []
     for c in range(4):
         ts = -3 * day + np.cumsum(rng.integers(1, 3_000_000_000, 400))
         ts = np.union1d(ts, [-2 * day, -day, 0])
-        gap = np.concatenate(([np.nan], np.diff(ts) / 1e6)).astype(F32)
-        fail = rng.random(ts.size) < 0.1
-        tl = rng.integers(0, 500, ts.size).astype(F32)
-        rows += [
-            (f"c{c}", i, int(ts[i]), gap[i], tl[i],
-             int(Flag.FAIL) if fail[i] else int(Flag.PASS))
-            for i in range(ts.size)
-        ]
-    turns = pd.DataFrame(rows, columns=["conv_id", "turn_idx", "ts_us", "gap", "tl", "flag_dip"])
+        parts.append(pd.DataFrame({
+            "conv_id": f"c{c}",
+            "turn_idx": np.arange(ts.size),
+            "ts_us": ts,
+            "text": ["x" * k for k in rng.integers(0, 500, ts.size)],
+        }))
+    turns = pd.concat(parts, ignore_index=True)
     assert turns["ts_us"].min() < 0 < turns["ts_us"].max()
-    slim = spark.createDataFrame(
-        turns.assign(gap=turns["gap"].astype(float), tl=turns["tl"].astype(float))
-    ).select(
+    df = spark.createDataFrame(turns).select(
         "conv_id", "turn_idx", F.timestamp_micros("ts_us").alias("ts"),
-        F.col("gap").cast("float").alias("turn_gap_s"),
-        F.col("tl").cast("float").alias("text_len"), "flag_dip",
+        F.length("text").cast("float").alias("text_len"),
     )
-    got = _split_grains(rollup_tiers_fused(slim).toPandas())
-    assert_tiers_match_oracle(got, turns)
+    slim, handle = with_gap_and_dip_parallel(df, 300.0, 1200.0, n_part=64)
+    try:
+        got = _split_grains(rollup_tiers_fused(slim).toPandas())
+    finally:
+        handle.unpersist()
+    oracle = oracle_turns(turns.assign(ts=pd.to_datetime(turns["ts_us"], unit="us")), PARAMS)
+    assert (oracle["flag_dip"] == int(Flag.FAIL)).any()
+    assert_tiers_match_oracle(got, oracle)
 
 
 def test_sum_text_len_exact_above_f32_integers():
@@ -282,47 +316,118 @@ def test_fused_dims_equal_per_dimension_rollups(spark):
 def test_int64_key_cascade_matches_string_key(spark):
     """rollup_tiers_fused must honour int64 conv keys (the dictionary-encoded
     path COVERAGE.md advertises): with conversation keys remapped to bigint,
-    the output keeps the bigint key type and every tier row still matches
-    the oracle after mapping keys back. Guards the kernel's conv_id output
-    against a hard-coded string type — round-2's coarse-tier regression was
-    exactly that."""
+    stage 1 and the kernel keep the bigint key type and every tier row still
+    matches the oracle after mapping keys back. Guards the kernel's conv_id
+    output against a hard-coded string type — round-2's coarse-tier
+    regression was exactly that."""
     pdf = gen_transcripts(8_000, 24, seed=7).to_pandas()
     # deterministic string -> int64 dictionary encoding, full 64-bit range
     codes = {c: (i + 1) * 2**40 for i, c in enumerate(sorted(pdf["conv_id"].unique()))}
-    slim = qc_flags(
-        spark.createDataFrame(pdf.assign(conv_id=pdf["conv_id"].map(codes))), PARAMS
-    ).select("conv_id", "turn_idx", "ts", "turn_gap_s", "text_len", "flag_dip")
-    tagged = rollup_tiers_fused(slim)
-    assert dict(tagged.dtypes)["conv_id"] == "bigint"
-    got = tagged.toPandas()
+    slim, handle = with_gap_and_dip_parallel(
+        _stage1_input(spark, pdf.assign(conv_id=pdf["conv_id"].map(codes))),
+        PARAMS.dip_high, PARAMS.dip_max,
+    )
+    try:
+        tagged = rollup_tiers_fused(slim)
+        assert dict(tagged.dtypes)["conv_id"] == "bigint"
+        got = tagged.toPandas()
+    finally:
+        handle.unpersist()
     names = {v: k for k, v in codes.items()}
     got["conv_id"] = got["conv_id"].map(names)
     assert_tiers_match_oracle(_split_grains(got), oracle_turns(pdf, PARAMS))
 
 
+def _transcripts(spark, turns):
+    """A transcripts frame from (conv_id, turn_idx, "HH:MM:SS" on a day of
+    January 2024, or None for a NULL ts)."""
+    rows = [
+        (c, i, None if ts is None else f"2024-01-{ts}", "user", None, "hi")
+        for c, i, ts in turns
+    ]
+    return spark.createDataFrame(
+        rows, "conv_id string, turn_idx int, ts string, role string, tool string, text string"
+    ).withColumn("ts", F.to_timestamp("ts"))
+
+
+def _first_tier_action(tiers):
+    try:
+        tiers["tier_1m"].collect()
+    finally:
+        for k in ("_tagged", "_dims", "_sorted"):
+            tiers[k].unpersist()
+
+
+@pytest.mark.parametrize("stamps", [
+    # turn 2 stamped before turn 1 within one day: two tier_1m rows for
+    # (c1, 10:00) if the kernel cut buckets in turn order
+    ["01 10:00:30", "01 10:01:10", "01 10:00:40", "01 10:02:10"],
+    # turn 2 stamped on the day before turn 1: sorted by day it would run
+    # ahead of turn 1, so the stencil would see turns out of turn order
+    ["01 23:59:00", "02 00:00:30", "01 23:59:40", "02 00:01:10"],
+], ids=["within_day", "across_days"])
+def test_backwards_ts_raises_turn_order_error(spark, stamps):
+    """ts going backwards in turn_idx order breaks the one sort order both
+    kernels share; it raises the named error instead of corrupting tiers."""
+    turns = [("c0", i, f"01 09:0{i}:00") for i in range(3)]
+    turns += [("c1", i, ts) for i, ts in enumerate(stamps)]
+    tiers = build_tiers(_transcripts(spark, turns), PARAMS)
+    with pytest.raises(Exception, match="TurnOrderError.*goes backwards in conversation 'c1'"):
+        _first_tier_action(tiers)
+
+
+def test_null_ts_raises_turn_order_error(spark):
+    """A NULL ts has no bucket and no gap: it raises the named error rather
+    than a bare worker TypeError or a garbage int64 timestamp."""
+    turns = [("c1", i, f"01 10:0{i}:00") for i in range(6)]
+    turns[3] = ("c1", 3, None)
+    tiers = build_tiers(_transcripts(spark, turns), PARAMS)
+    with pytest.raises(Exception, match="TurnOrderError.*NULL ts"):
+        _first_tier_action(tiers)
+
+
+def test_tier_kernel_rejects_unsorted_input(spark):
+    """rollup_tiers_fused no longer sorts its input: a (conv_id, day) key
+    going backwards within a partition raises the named error instead of
+    emitting a second, partial row for the same buckets."""
+    rows = [
+        ("c1", 0, "2024-01-01 10:00:00"),
+        ("c1", 1, "2024-01-02 10:00:00"),
+        ("c1", 2, "2024-01-01 10:00:30"),
+    ]
+    df = (
+        spark.createDataFrame(rows, "conv_id string, turn_idx int, ts string")
+        .coalesce(1)
+        .select(
+            "conv_id", "turn_idx", F.to_timestamp("ts").alias("ts"),
+            F.lit(1.0).cast("float").alias("turn_gap_s"),
+            F.lit(2.0).cast("float").alias("text_len"),
+            F.lit(int(Flag.PASS)).cast("tinyint").alias("flag_dip"),
+        )
+    )
+    with pytest.raises(Exception, match="TurnOrderError.*_ts_us goes backwards"):
+        rollup_tiers_fused(df).collect()
+
+
 def test_tier_plan_exchange_budget(spark):
     """Plan-budget regression pin: a full tier plan (stage 1 + fused
-    kernel, persist=False so the WHOLE lineage shows) runs on at most TWO
-    Exchanges — stage 1's range sort on (conv_id, turn_idx) (an explicit
-    partition count, so AQE byte-coalescing cannot starve it) and the
-    kernel's (conv, day) repartition (the conversation-skew spreader). A
-    new shuffle sneaking into the hot path fails this before it costs a
-    benchmark."""
-    from olympian_spark.datagen import gen_transcripts
-    from olympian_spark.plans.pipeline import QcParams, build_tiers
-
+    kernel, persist=False so the WHOLE lineage shows) runs on ONE Exchange —
+    stage 1's range sort on (conv_id, day) (an explicit partition count, so
+    AQE byte-coalescing cannot starve it). The tier kernel runs on those
+    partitions as they are. A new shuffle sneaking into the hot path fails
+    this before it costs a benchmark."""
     pdf = gen_transcripts(n_turns=4000, n_convs=20, seed=3).to_pandas()
-    df = spark.createDataFrame(pdf)
-    tiers = build_tiers(
-        df, QcParams(dip_high=300.0, dip_max=1200.0), persist=False
-    )
-    for name in ("tier_1m", "tier_1h", "tier_1d"):
-        plan = tiers[name]._jdf.queryExecution().executedPlan().toString()
-        # InMemoryRelation prints its cached child plan twice; count each
-        # distinct Exchange node once
-        n = len({
-            line.strip().lstrip("+-: ")
-            for line in plan.splitlines()
-            if "Exchange " in line
-        })
-        assert n <= 2, f"{name}: {n} exchanges (budget 2)\n{plan[:1500]}"
+    tiers = build_tiers(spark.createDataFrame(pdf), PARAMS, persist=False)
+    try:
+        for name in TIERS:
+            plan = tiers[name]._jdf.queryExecution().executedPlan().toString()
+            # InMemoryRelation prints its cached child plan twice; count each
+            # distinct Exchange node once
+            n = len({
+                line.strip().lstrip("+-: ")
+                for line in plan.splitlines()
+                if "Exchange " in line
+            })
+            assert n <= 1, f"{name}: {n} exchanges (budget 1)\n{plan[:1500]}"
+    finally:
+        tiers["_sorted"].unpersist()
