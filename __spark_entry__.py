@@ -244,7 +244,8 @@ _reg("q05_flatline_flags", _FLAT.format(T=_T_SPARK), _FLAT.format(T=_T_DUCK))
 #    n_obs = count(ts) (ts bounds the spine, so every non-null-ts row joins
 #    a slot). ONE scan + ONE aggregate replace the 2 scans + exploded-spine
 #    LEFT JOIN; the DuckDB oracle keeps the literal spine construction and
-#    the driver hash-checks equivalence.
+#    the driver hash-checks equivalence. A conversation with no non-NULL ts
+#    has an empty spine, hence no row (the HAVING).
 _SPINE_SPARK = """
 SELECT conv_id,
        CAST((unix_seconds(date_trunc('hour', max(ts)))
@@ -260,6 +261,7 @@ FROM (SELECT conv_id, ts
             FROM events)
       DISTRIBUTE BY conv_id)
 GROUP BY conv_id
+HAVING count(ts) > 0
 """
 _SPINE_DUCK = f"""
 WITH b AS (

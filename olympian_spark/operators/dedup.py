@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from olympian_spark.operators.textstats import with_fingerprint
+from olympian_spark.sources.catalog import IdenticalSnapshotsError
 
 
 def _tokens(col="text"):
@@ -427,9 +428,7 @@ def incremental_exact_dedup(
     """
     try:
         diff = cat.diff_snapshots(table, from_snapshot, to_snapshot)
-    except ValueError as e:
-        if "identical" not in str(e):
-            raise
+    except IdenticalSnapshotsError:
         # no partitions changed (the daily job's no-op day): zero new
         # keepers, not a crash — emit an empty frame in the result schema
         return cat.spark.createDataFrame(

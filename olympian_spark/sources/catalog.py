@@ -65,6 +65,11 @@ def _json_stat(v):
     return v
 
 
+class IdenticalSnapshotsError(ValueError):
+    """:meth:`ParquetManifestCatalog.diff_snapshots` found no changed
+    partition between the two snapshots: there is nothing to diff."""
+
+
 class ParquetManifestCatalog:
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
@@ -573,6 +578,8 @@ class ParquetManifestCatalog:
         snapshots that share 99% of a 100 TB table reads only the
         differing partitions; the anti-joins then shuffle only that
         pruned slice on the key columns.
+
+        Raises :class:`IdenticalSnapshotsError` when no partition differs.
         """
         changed = self.changed_partitions(table, from_snapshot, to_snapshot)
         old_live = {
@@ -588,7 +595,7 @@ class ParquetManifestCatalog:
         old = self._read_live(table, old_live) if old_live else None
         new = self._read_live(table, new_live) if new_live else None
         if old is None and new is None:
-            raise ValueError(f"{table}: snapshots identical, nothing to diff")
+            raise IdenticalSnapshotsError(f"{table}: snapshots identical, nothing to diff")
         if key_cols is None:
             key_cols = (
                 [c for c in new.columns if old is None or c in old.columns]

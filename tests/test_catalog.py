@@ -555,6 +555,29 @@ def test_incremental_exact_dedup_cdc(spark, tmp_path):
     assert quiet.columns == ["fingerprint", "keep_doc_id", "n_docs"]
 
 
+def test_incremental_exact_dedup_noop_day_by_type(spark):
+    """The no-op day is recognised by exception type, not message: an
+    ``IdenticalSnapshotsError`` gives the empty keeper frame, and any other
+    ``ValueError`` from ``diff_snapshots`` propagates — even one whose
+    message says "identical"."""
+    from olympian_spark.operators.dedup import incremental_exact_dedup
+    from olympian_spark.sources.catalog import IdenticalSnapshotsError
+
+    class _Cat:
+        def __init__(self, err):
+            self.spark, self.err = spark, err
+
+        def diff_snapshots(self, table, from_snapshot, to_snapshot=None):
+            raise self.err
+
+    quiet = incremental_exact_dedup(_Cat(IdenticalSnapshotsError("t: same")), "t", 1)
+    assert quiet.columns == ["fingerprint", "keep_doc_id", "n_docs"]
+    assert quiet.count() == 0
+    with pytest.raises(ValueError, match="identical") as info:
+        incremental_exact_dedup(_Cat(ValueError("t: not identical, corrupt")), "t", 1)
+    assert not isinstance(info.value, IdenticalSnapshotsError)
+
+
 def test_diff_snapshots_across_rollback(spark, tmp_path):
     """CDC folds rollback records: diffing from a pre-rollback snapshot to
     head (post-rollback) reports exactly the overwrite being undone."""

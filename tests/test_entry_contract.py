@@ -136,3 +136,52 @@ def test_engine_native_queries_run(spark):
     assert bc and all(r.flag_valid for r in bc)
     sc = qs["q22_sct_kernel"](spark, SF_DIR).collect()
     assert sc and all(r.flag_valid for r in sc)
+
+
+def test_q06_null_ts_conversation_matches_oracle(spark, tmp_path):
+    """A conversation whose ts values are all NULL has an empty spine: the
+    DuckDB spine oracle emits no row for it, and neither may q06's closed
+    form. Mixed NULL/non-NULL ts and a multi-hour gap ride along."""
+    from datetime import datetime
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    name = "q06_spine_gapfill_hourly"
+    src = pq.read_schema(f"{SF_DIR}/events.parquet")
+    t = lambda h, m: datetime(2024, 1, 1, h, m)
+    rows = [  # (user_id, ts)
+        (1, t(0, 5)), (1, t(0, 40)), (1, t(3, 10)),  # plain, 2 gap slots
+        (2, None), (2, None),                          # all-NULL ts
+        (3, None), (3, t(5, 0)), (3, t(6, 59)),        # some NULL ts
+    ]
+    events = pa.table(
+        {
+            "event_id": pa.array(range(len(rows)), pa.int64()),
+            "ts": pa.array([ts for _, ts in rows], pa.timestamp("us")),
+            "user_id": pa.array([u for u, _ in rows], pa.int64()),
+            "event_type": pa.array(["view"] * len(rows)),
+            "value": pa.array([1.0] * len(rows)),
+            "props": pa.array(["{}"] * len(rows)),
+        }
+    ).cast(src.remove_metadata())
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    pq.write_table(events, sf / "events.parquet")
+    for other in TABLES:
+        if other != "events":
+            os.symlink(f"{SF_DIR}/{other}.parquet", sf / f"{other}.parquet")
+
+    sdf = entrymod.queries()[name](spark, str(sf))
+    scols = sdf.columns
+    srows = [tuple(r) for r in sdf.collect()]
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW events AS SELECT * FROM read_parquet('{sf}/events.parquet')")
+    cur = con.execute(entrymod.oracle_sql()[name])
+    dcols = [d[0].lower() for d in cur.description]
+    drows = [tuple(r[dcols.index(c.lower())] for c in scols) for r in cur.fetchall()]
+
+    assert sorted(c.lower() for c in scols) == sorted(dcols)
+    assert sorted(r[scols.index("conv_id")] for r in srows) == ["c1", "c3"]
+    assert len(srows) == len(drows)
+    assert _value_hash(scols, srows) == _value_hash(scols, drows)
