@@ -50,8 +50,8 @@ def main() -> None:
         tiers = build_tiers(t, QcParams(dip_high=60.0, dip_max=1800.0), persist=True)
         for k in ("tier_1m", "tier_1h", "tier_1d", "rollup_role_1h", "rollup_tool_1h"):
             tiers[k].count()
-        tiers["_slim"].unpersist()
-        tiers["_tagged"].unpersist()
+        for k in ("_tagged", "_dims", "_sorted"):
+            tiers[k].unpersist()
 
     def run_q24() -> None:
         qs["q24_gorilla_roundtrip"](spark, args.sf_dir).count()

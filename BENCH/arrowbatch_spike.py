@@ -30,9 +30,11 @@ def main() -> None:
     ap.add_argument("--reps", type=int, default=3)
     args = ap.parse_args()
 
+    from pyspark.sql import functions as F
+
     from olympian_spark.datagen import write_transcripts
+    from olympian_spark.operators.qc_series import with_gap_and_dip_parallel
     from olympian_spark.operators.rollup import rollup_tiers_fused
-    from olympian_spark.plans.pipeline import QcParams, qc_flags
     from olympian_spark.session import get_spark
 
     path = os.path.join(
@@ -47,9 +49,13 @@ def main() -> None:
     spark.range(1000).selectExpr("sum(id)").collect()
 
     t = spark.read.parquet(path)
-    slim = qc_flags(t, QcParams(dip_high=300.0, dip_max=1200.0)).select(
-        "conv_id", "turn_idx", "ts", "turn_gap_s", "text_len", "flag_dip"
-    ).persist()
+    # stage 1 as build_tiers runs it; the kernel runs on its sorted partitions
+    pre = t.select(
+        "conv_id", "turn_idx", "ts",
+        F.length(F.coalesce(F.col("text"), F.lit(""))).cast("float").alias("text_len"),
+    )
+    slim, sorted_handle = with_gap_and_dip_parallel(pre, 300.0, 1200.0)
+    slim = slim.persist()
     slim.count()
 
     best: dict[str, float] = {}
@@ -62,6 +68,8 @@ def main() -> None:
             if label not in best or w < best[label]:
                 best[label] = w
     spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
+    slim.unpersist()
+    sorted_handle.unpersist()
 
     print(json.dumps({
         "turns": args.turns,

@@ -35,8 +35,8 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     from olympian_spark.datagen import write_transcripts
+    from olympian_spark.operators.qc_series import with_gap_and_dip_parallel
     from olympian_spark.operators.rollup import rollup_tiers_fused
-    from olympian_spark.plans.pipeline import QcParams, qc_flags
     from olympian_spark.session import get_spark
 
     path = os.path.join(
@@ -54,10 +54,16 @@ def main() -> None:
     wdf.groupBy("k").applyInPandas(lambda p: p.head(1), "k string, v long").count()
 
     t = spark.read.parquet(path)
-    flagged = qc_flags(t, QcParams(dip_high=300.0, dip_max=1200.0))
-    slim_str = flagged.select(
-        "conv_id", "turn_idx", "ts", "turn_gap_s", "text_len", "flag_dip"
-    ).localCheckpoint(eager=True)
+    # stage 1 as build_tiers runs it; the kernel runs on its sorted
+    # partitions. The zero-padded 'conv_<int>' keys sort the same as strings
+    # and as integers, so the int-key frame keeps the kernel's input order.
+    pre = t.select(
+        "conv_id", "turn_idx", "ts",
+        F.length(F.coalesce(F.col("text"), F.lit(""))).cast("float").alias("text_len"),
+    )
+    flagged, sorted_handle = with_gap_and_dip_parallel(pre, 300.0, 1200.0)
+    slim_str = flagged.localCheckpoint(eager=True)
+    sorted_handle.unpersist()
     slim_int = slim_str.withColumn(
         "conv_id", F.substring("conv_id", 6, 100).cast("long")
     ).localCheckpoint(eager=True)

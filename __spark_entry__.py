@@ -145,7 +145,10 @@ _DIP_DUCK = _DIP_SPARK.replace(_G_SPARK, _G_DUCK)
 # unchanged — re-registering on a dir switch keeps multi-SF harnesses
 # correct, and the WeakKeyDictionary drops entries with their session (no
 # stale-id reuse). Results are untouched: this caches catalog state, never
-# data or query output.
+# data or query output. Invalidation assumes the inputs are immutable:
+# parquet files rewritten in place under the same sf_dir are served stale
+# (the file listing and schema resolved at registration) for the life of
+# the session; use a new session or another sf_dir to pick them up.
 import weakref as _weakref
 
 _VIEWS_FOR: "_weakref.WeakKeyDictionary[SparkSession, str]" = (

@@ -1,9 +1,15 @@
-"""Timeseries QC as pure window-function CASE expressions.
+"""Timeseries QC: window-function CASE operators and the stage-1 stencil.
 
 step_check / dip_check / flatline_check re-expressed relationally: the
 reference's width-2/3 sliding windows (step_check.rs:24-26,
 dip_check.rs:33-35) become ``lag``/``lead`` over a per-series ordered window
-— JVM-side, whole-stage-codegen'd, zero Python in the hot path.
+— JVM-side and whole-stage-codegen'd. These window forms are library
+operators and the reference the tests hold the stencil to.
+
+The tier pipeline's hot path is :func:`with_gap_and_dip_parallel`: a range
+sort plus a vectorized Arrow stencil (``mapInArrow``) computing
+``turn_gap_s`` and ``flag_dip`` without per-conversation windows, so a hot
+conversation does not serialize behind one task.
 
 f32 parity: value columns stay FloatType and every literal is cast to float,
 so Spark's float arithmetic reproduces the reference's f32 ops bit-for-bit

@@ -13,12 +13,10 @@ transcripts
      projection: they need no stage-1 output, so the dimension strings
      never cross the stage-1 exchange.
 
-``turns_flagged`` keeps the full window formulation (step/dip/flatline
-flags over every turn) for consumers that want every flag.
-
 QC policy: dip_check FAIL excludes a turn from measures (spike = bad
-latency sample); step/flatline flags are carried for flag-distribution
-reporting. All thresholds are explicit parameters.
+latency sample); its thresholds are explicit parameters. Callers that
+want every flag compose the window operators of ``qc_series``
+(step/dip/flatline).
 """
 
 from __future__ import annotations
@@ -28,57 +26,34 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from olympian_spark.operators.qc_series import (
-    dip_flag,
-    step_flag,
-    with_flatline_flag,
-    with_gap_and_dip_parallel,
-)
+from olympian_spark.operators.qc_series import with_gap_and_dip_parallel
 from olympian_spark.operators.rollup import rollup_dims_fused, rollup_tiers_fused
-from olympian_spark.sources.transcripts import with_turn_metrics
 
 
 @dataclass
 class QcParams:
-    step_high: float = 3600.0  # gap jump [s] flagged Warn (reference bug: Warn first)
-    step_max: float = 21600.0
+    """dip_check thresholds [s] on turn_gap_s (dip_check.rs)."""
+
     dip_high: float = 1800.0
     dip_max: float = 7200.0
-    flatline_min_run: int = 8
-
-
-def qc_flags(df: DataFrame, params: QcParams = QcParams()) -> DataFrame:
-    """Stage-1 output: metrics + all QC flag columns on the turn stream."""
-    m = with_turn_metrics(df)
-    m = m.withColumn(
-        "flag_step",
-        step_flag("turn_gap_s", "conv_id", "turn_idx", params.step_high, params.step_max),
-    ).withColumn(
-        "flag_dip",
-        dip_flag("turn_gap_s", "conv_id", "turn_idx", params.dip_high, params.dip_max),
-    )
-    return with_flatline_flag(
-        m, "turn_gap_s", "conv_id", "turn_idx", params.flatline_min_run
-    )
 
 
 def build_tiers(
     df: DataFrame, params: QcParams = QcParams(), persist: bool = True
 ) -> dict[str, DataFrame]:
-    """All tier tables from a transcripts DataFrame.
+    """The five tier tables from a transcripts DataFrame, plus three handles.
 
     ``persist`` caches the fused kernel's tagged output and the dimension
     rollups, so the three tier slices and the two dimension slices do not
     each recompute the upstream DAG; False leaves materialization to the
-    caller's write barriers. ``_sorted`` is stage 1's persisted range sort;
-    the caller unpersists ``_tagged``, ``_dims`` and ``_sorted`` when done.
+    caller's write barriers. ``_sorted`` is stage 1's persisted range sort
+    (stage 1 runs jobs when it is built); the caller unpersists ``_tagged``,
+    ``_dims`` and ``_sorted`` when done, and nothing else stays cached.
 
     A NULL ``ts``, or ``ts`` going backwards in ``turn_idx`` order within a
     conversation, makes the first action on a tier raise
     :class:`~olympian_spark.operators.qc_series.TurnOrderError`.
     """
-    flagged = qc_flags(df, params)
-
     # The narrow frame sits BELOW the stage-1 exchange and carries ONLY what
     # downstream consumes: text replaced by its 4-byte length (the string
     # must never cross the shuffle). role/tool live here for the dimension
@@ -118,8 +93,6 @@ def build_tiers(
     if persist:
         tagged, dims = tagged.persist(), dims.persist()
     return {
-        "turns_flagged": flagged,  # full width (text kept), not cached
-        "_slim": pre,
         "_tagged": tagged,
         "_dims": dims,
         "_sorted": sorted_handle,

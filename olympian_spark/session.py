@@ -4,7 +4,8 @@ Local mode is the test/bench proxy for a multi-executor cluster; every knob
 here is chosen so the same code scales on 1000 executors:
 
 - AQE on (runtime coalescing + skew-join splitting),
-- Arrow on (all custom kernels are Arrow-batched pandas UDFs),
+- Arrow on (the custom kernels are ``mapInArrow`` operators over Arrow
+  record batches),
 - shuffle partitions sized to cores locally (on a real cluster this is
   ``max(2 x total-cores, input-partitions)`` — AQE coalesces down),
 - UTC session timezone (spine arithmetic must be tz-stable),
@@ -66,12 +67,8 @@ def get_spark(
         # JVM stage after a shuffle at 8-way. Locally the advisory size is
         # therefore scaled down (bytes/target >= 2x cores for the engine's
         # window stages); on a real cluster shuffles are TBs and the 64MB
-        # default is right — override via SPARK_GRAFT_ADVISORY_MB or
-        # extra_conf there.
-        .config(
-            "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-            os.environ.get("SPARK_GRAFT_ADVISORY_MB", "2") + "m",
-        )
+        # default is right — override it there via extra_conf.
+        .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "2m")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         # shuffle/spill codec: a deployment knob, measured both ways on the
         # 64M-turn pipeline (BENCH/codec_spike.py, interleaved best-of-2):
@@ -79,12 +76,9 @@ def get_spark(
         # at 32) because tmpfs shuffle files are pure memory traffic — but
         # it helps the CPU-headroom level more, so it slightly compresses
         # the N-vs-4N ratio on this one-bus VM. Default stays Spark's lz4;
-        # flip with SPARK_GRAFT_IO_CODEC=zstd (worth it on real clusters
-        # where shuffle crosses disks/network).
-        .config(
-            "spark.io.compression.codec",
-            os.environ.get("SPARK_GRAFT_IO_CODEC", "lz4"),
-        )
+        # pass zstd via extra_conf (worth it on real clusters where shuffle
+        # crosses disks/network).
+        .config("spark.io.compression.codec", "lz4")
         .config("spark.sql.session.timeZone", "UTC")
         # columnar-cache compression is pure overhead for the engine's hot
         # cached frame (the fused tier table): its dominant bytes are
@@ -92,12 +86,9 @@ def get_spark(
         # cache codec cannot shrink (guide: compression on high-entropy
         # payloads). Measured: cold persist+count of the 16M-turn tier
         # frame 64s -> 43s with compression off. Narrow numeric caches
-        # lose a little memory density; flip back per-deployment via
-        # SPARK_GRAFT_CACHE_COMPRESS=true for memory-tight clusters.
-        .config(
-            "spark.sql.inMemoryColumnarStorage.compressed",
-            os.environ.get("SPARK_GRAFT_CACHE_COMPRESS", "false"),
-        )
+        # lose a little memory density; memory-tight clusters flip it back
+        # to true via extra_conf.
+        .config("spark.sql.inMemoryColumnarStorage.compressed", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # grouped kernels stream per-group Arrow batches. 64k rows/batch
         # measured 1.08x (32 cores) / 1.15x (8 cores) over 10k on the fused

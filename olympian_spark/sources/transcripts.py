@@ -12,8 +12,10 @@ Two readers:
 
 Derived per-turn metrics (:func:`with_turn_metrics`): ``turn_gap_s`` =
 seconds since previous turn in the conversation, ``text_len`` = length(text),
-both FloatType (f32) — these are the series the QC checks and rollups run on
-(the image of the reference's SeriesCache values, util/mod.rs:46-49).
+both FloatType (f32) — the series the window QC operators run on (the image
+of the reference's SeriesCache values, util/mod.rs:46-49). The tier
+pipeline computes the same gap in its stage-1 stencil instead
+(``qc_series.with_gap_and_dip_parallel``).
 """
 
 from __future__ import annotations
@@ -88,8 +90,11 @@ def transcripts_from_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 def with_turn_metrics(df: DataFrame) -> DataFrame:
     """Add turn_gap_s (f32 seconds since previous turn) and text_len (f32).
 
-    One window over (conv_id | turn_idx) — the engine's stage-1 shuffle; every
-    downstream per-conversation operator reuses this partitioning.
+    One window over (conv_id | turn_idx): a shuffle by conv_id that later
+    windows partitioned by conv_id can reuse. The tier pipeline does not
+    use it (its stage 1 range-sorts by (conv_id, day)); it is the batch
+    window form of the gap, and the streaming turn gaps are tested
+    against it.
 
     text_len is computed BELOW the window (scan-side projection): consumers
     that drop ``text`` afterwards (the tier pipeline) then shuffle a 4-byte

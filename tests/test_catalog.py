@@ -60,6 +60,27 @@ def test_incremental_refresh_equals_full(spark, tmp_path):
         assert a.equals(b), f"incremental != full for {table}"
 
 
+def _persisted_rdd_ids(spark):
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
+def test_refresh_leaves_nothing_persisted(spark, tmp_path):
+    """A full and an incremental refresh_tiers release every frame they
+    persist (stage 1's sort, the tagged tiers, the dims, the affected
+    conversation set): nothing stays cached across runs of a long-lived
+    session."""
+    full, first, split = _split_by_day(spark, n_turns=3_000, n_convs=10)
+    before = _persisted_rdd_ids(spark)
+    cat = ParquetManifestCatalog(spark, str(tmp_path / "leak"))
+    refresh_tiers(spark, cat, first, watermark="wm1", params=PARAMS)
+    assert _persisted_rdd_ids(spark) == before
+    refresh_tiers(
+        spark, cat, full, watermark="wm2", since_watermark=f"{split} 23:59:59.999999",
+        params=PARAMS,
+    )
+    assert _persisted_rdd_ids(spark) == before
+
+
 def test_incremental_refresh_shuffle_join_path(spark, tmp_path):
     """broadcast_conv_limit=0 forces the scale-safe shuffle semi/anti joins
     (the path taken when a day touches more conv_ids than is broadcastable);

@@ -34,10 +34,7 @@ TIERS = ("tier_1m", "tier_1h", "tier_1d")
 @pytest.fixture(scope="module")
 def tiers(spark):
     pdf = gen_transcripts(n_turns=20_000, n_convs=60, seed=42).to_pandas()
-    df = spark.createDataFrame(pdf)
-    out = build_tiers(df, PARAMS)
-    collected = {k: out[k].toPandas() for k in ("turns_flagged", *TIERS)}
-    return pdf, collected
+    return pdf, _collect(build_tiers(spark.createDataFrame(pdf), PARAMS))
 
 
 def _collect(tiers):
@@ -65,13 +62,32 @@ def _split_grains(tagged_pdf):
     }
 
 
-def test_stage1_flags_match_oracle(tiers):
-    pdf, got = tiers
-    oracle = oracle_turns(pdf, PARAMS)
-    sf = got["turns_flagged"][["conv_id", "turn_idx", "flag_dip"]]
-    merged = oracle.merge(sf, on=["conv_id", "turn_idx"], suffixes=("_o", "_s"))
-    assert len(merged) == len(oracle)
-    assert (merged["flag_dip_o"] == merged["flag_dip_s"]).all()
+def test_stage1_flags_match_oracle(spark, tiers):
+    """The stage-1 stencil output the tier kernel consumes, from the same
+    call build_tiers makes: flag_dip equals the reference dip_check on
+    every turn and turn_gap_s is bit-equal to the oracle's f32 gap (NULL on
+    a conversation's first turn). The fixture's dip sums are mostly short
+    or far above 1200 s, so the tier thresholds see no WARN; the second
+    set puts both thresholds inside the bulk of them (PASS, WARN and FAIL
+    all common), so a shifted threshold changes flags."""
+    pdf, _ = tiers
+    for params in (PARAMS, QcParams(dip_high=60.0, dip_max=120.0)):
+        slim, handle = with_gap_and_dip_parallel(
+            _stage1_input(spark, pdf), params.dip_high, params.dip_max
+        )
+        try:
+            got = slim.select("conv_id", "turn_idx", "turn_gap_s", "flag_dip").toPandas()
+        finally:
+            handle.unpersist()
+        oracle = oracle_turns(pdf, params)
+        merged = oracle.merge(got, on=["conv_id", "turn_idx"], suffixes=("_o", "_s"))
+        assert len(merged) == len(oracle) == len(got)
+        assert (merged["flag_dip_o"] == merged["flag_dip_s"]).all(), params
+        assert (merged["flag_dip_o"] == int(Flag.FAIL)).any(), "fixture too tame: no QC fails"
+        gap_s = merged["turn_gap_s"].to_numpy(F32)
+        gap_o = merged["gap"].to_numpy(F32)
+        assert (np.isnan(gap_s) == np.isnan(gap_o)).all()
+        assert (gap_s.view(np.uint32) == gap_o.view(np.uint32))[~np.isnan(gap_o)].all()
 
 
 def test_tier_1m_matches_oracle(tiers):
@@ -294,11 +310,11 @@ def test_salted_agg_equivalence(spark):
 def test_fused_dims_equal_per_dimension_rollups(spark):
     """rollup_dims_fused slices must equal rollup_by_dimension exactly."""
     from olympian_spark.operators.rollup import rollup_by_dimension, rollup_dims_fused
-    from olympian_spark.plans.pipeline import qc_flags
 
     df = spark.createDataFrame(gen_transcripts(8_000, 30, seed=13).to_pandas())
-    slim = qc_flags(df, QcParams(dip_high=300.0, dip_max=1200.0)).select(
-        "conv_id", "ts", "role", "tool", "text_len"
+    slim = df.select(
+        "conv_id", "ts", "role", "tool",
+        F.length(F.coalesce(F.col("text"), F.lit(""))).cast("float").alias("text_len"),
     )
     dims = rollup_dims_fused(slim, ("role", "tool"), "hour").persist()
     for d in ("role", "tool"):
@@ -407,6 +423,22 @@ def test_tier_kernel_rejects_unsorted_input(spark):
     )
     with pytest.raises(Exception, match="TurnOrderError.*_ts_us goes backwards"):
         rollup_tiers_fused(df).collect()
+
+
+def test_build_tiers_releases_all_persisted_rdds(spark):
+    """Once its tiers are read, build_tiers holds exactly three cached
+    frames — the handles _tagged, _dims and _sorted — and unpersisting
+    them leaves nothing behind."""
+    before = set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+    pdf = gen_transcripts(n_turns=3000, n_convs=10, seed=5).to_pandas()
+    tiers = build_tiers(spark.createDataFrame(pdf), PARAMS)
+    for name in (*TIERS, "rollup_role_1h", "rollup_tool_1h"):
+        tiers[name].count()
+    held = set(spark.sparkContext._jsc.getPersistentRDDs().keySet()) - before
+    for k in ("_tagged", "_dims", "_sorted"):
+        tiers[k].unpersist()
+    assert len(held) == 3, held
+    assert set(spark.sparkContext._jsc.getPersistentRDDs().keySet()) == before
 
 
 def test_tier_plan_exchange_budget(spark):
