@@ -15,17 +15,28 @@ an **input watermark** (the max ingest timestamp of the batch). A run:
    buckets of UNAFFECTED conversations, so they are rewritten as
    (existing rows minus affected convs) UNION (recomputed rows) — a
    broadcast anti-join, never a full-table rewrite.
-3. recomputes tiers over exactly the affected conversations' full turn
-   history (window context), via a broadcast semi-join;
-4. overwrites only (new ∪ boundary) day partitions per tier table and
-   commits a manifest snapshot with per-partition rows/bytes/wall_s + the
-   watermark.
+3. **scope** — a full refresh (no ``since_watermark``) affects every day
+   and every conversation, so it recomputes the input as-is and runs no
+   scoping job. An incremental one recomputes tiers over exactly the
+   affected conversations' full turn history (window context), via a
+   broadcast semi-join;
+4. **write** — the three tier tables go out in ONE Spark write
+   (``ParquetManifestCatalog.overwrite_grouped``): rows tagged with their
+   ``_grain`` are written with ``partitionBy("_grain", "bucket_date")``
+   into a staging directory, then each grain's directory moves into its
+   table's fresh snapshot directory. A full refresh writes every partition
+   present; an incremental one only (new ∪ boundary) day partitions. Each
+   table commits its own manifest snapshot with per-partition
+   rows/bytes/wall_s + the watermark. The two dimension tables are one
+   ``overwrite_partitions`` each: their value columns differ (``role`` vs
+   ``tool``), so they cannot share a parquet schema.
 
 Dimension rollups (role/tool) are flag-independent counts/sums, so their
 boundary days never change — only new-day partitions are written for them.
 
 Resume: every step is idempotent, and a table whose latest committed
-watermark equals the current one is skipped — killing the job after any
+watermark equals the current one is skipped (a tier table is left out of
+the grouped write) — killing the job after any
 step and rerunning converges to the same final state (tested).
 
 Fail filter: tiers exclude dip_check FAIL turns (``flag_dip``), whose
@@ -45,15 +56,34 @@ TIER_TABLES = ("tier_1m", "tier_1h", "tier_1d")
 DIM_TABLES = ("rollup_role_1h", "rollup_tool_1h")
 
 
-def affected_days(transcripts: DataFrame, since_watermark: str | None) -> list[str]:
-    """Day partitions touched by rows newer than the watermark."""
-    df = transcripts
-    if since_watermark:
-        df = df.filter(F.col("ts") > F.lit(since_watermark).cast("timestamp"))
-    return [
-        str(r[0])
-        for r in df.select(F.to_date("ts").alias("d")).distinct().orderBy("d").collect()
-    ]
+def affected_days(transcripts: DataFrame, since_watermark: str) -> list[str]:
+    """Day partitions touched by rows newer than the watermark, sorted.
+
+    The few distinct day strings are sorted on the driver: an ``orderBy``
+    would add a range-sort (sample + exchange) to the collect.
+    """
+    df = transcripts.filter(F.col("ts") > F.lit(since_watermark).cast("timestamp"))
+    return sorted(
+        str(r[0]) for r in df.select(F.to_date("ts").alias("d")).distinct().collect()
+    )
+
+
+def _scope(catalog: ParquetManifestCatalog, table: str, days: list[str] | None):
+    """Row filter on ``bucket_date`` for what this run writes to ``table``:
+    ``days`` (None: every day), minus the days the table's retention cutoff
+    expired. None when no day is left.
+
+    A refresh recomputes from the FULL turn history of the conversations it
+    covers, so without this guard a boundary day (or a full refresh) would
+    silently resurrect partitions that apply_retention already expired.
+    Expiry wins: days before the recorded cutoff are never re-written.
+    """
+    cutoff = catalog.retention_cutoff(table)
+    day = F.col("bucket_date").cast("string")
+    if days is None:
+        return day >= cutoff if cutoff else F.lit(True)
+    days = [d for d in days if not cutoff or d >= cutoff]
+    return day.isin(days) if days else None
 
 
 def refresh_tiers(
@@ -65,33 +95,39 @@ def refresh_tiers(
     params: QcParams = QcParams(),
     broadcast_conv_limit: int = 1_000_000,
 ) -> dict:
-    """One incremental refresh run. Returns {table: snapshot | 'skipped'}.
+    """One refresh run. Returns {table: snapshot | 'skipped'}, or {} when
+    there is nothing to refresh (no new rows, or an empty input).
 
-    The affected-conversation set is joined into every scoping/merge join.
-    Broadcasting it is only safe when it is small: a busy day at 10^12-turn
-    scale has millions of distinct conv_ids, and a forced broadcast OOMs.
-    The set is persisted (it is reused by up to 6 joins), counted once, and
-    broadcast only under ``broadcast_conv_limit``; above the limit the joins
-    fall back to shuffle semi/anti joins, which AQE may still convert.
+    ``since_watermark=None`` is a full refresh: every day and every
+    conversation is affected, so the input is used as-is and no scoping
+    job runs. Otherwise the run is incremental and scoped to the affected
+    conversations. That set is read by the scoping semi-join and by the
+    boundary-day anti-join of each tier table. Broadcasting it is only safe
+    when it is small: a busy day at 10^12-turn scale has millions of
+    distinct conv_ids, and a forced broadcast OOMs. The set is persisted,
+    counted once, and broadcast only under ``broadcast_conv_limit``; above
+    the limit the joins fall back to shuffle semi/anti joins, which AQE may
+    still convert.
     """
-    new_days = affected_days(transcripts, since_watermark)
-    if not new_days:
-        return {}
-
-    convs = (
-        transcripts.filter(F.to_date("ts").isin(new_days))
-        .select("conv_id")
-        .distinct()
-        .persist()
-    )
-    convs_j = F.broadcast(convs) if convs.count() <= broadcast_conv_limit else convs
-    scoped = transcripts.join(convs_j, "conv_id", "left_semi")
-
+    full = not since_watermark
+    convs = convs_j = None
+    new_days: list[str] | None = None  # None: every day (full refresh)
     boundary_days: list[str] = []
-    if since_watermark:
+    if not full:
+        new_days = affected_days(transcripts, since_watermark)
+        if not new_days:
+            return {}
+        convs = (
+            transcripts.filter(F.to_date("ts").isin(new_days))
+            .select("conv_id")
+            .distinct()
+            .persist()
+        )
+        convs_j = F.broadcast(convs) if convs.count() <= broadcast_conv_limit else convs
+        transcripts = transcripts.join(convs_j, "conv_id", "left_semi")
         boundary_days = [
             str(r[0])
-            for r in scoped.filter(
+            for r in transcripts.filter(
                 F.col("ts") <= F.lit(since_watermark).cast("timestamp")
             )
             .groupBy("conv_id")
@@ -102,55 +138,69 @@ def refresh_tiers(
             if str(r[0]) not in set(new_days)
         ]
 
-    tiers = build_tiers(scoped, params)
-    results = {}
-
-    def commit(table: str, recomputed: DataFrame, days: list[str], merge_days: list[str]):
-        if catalog.input_watermark(table) == watermark:
-            results[table] = "skipped"  # already committed for this input
-            return
-        # Retention interaction: a refresh recomputes from FULL turn history
-        # of the affected conversations, so without this guard a boundary day
-        # (or a full refresh) would silently resurrect partitions that
-        # apply_retention already expired. Expiry wins: days at/before the
-        # recorded cutoff are never re-written.
-        cutoff = catalog.retention_cutoff(table)
-        if cutoff:
-            days = [d for d in days if d >= cutoff]
-            merge_days = [d for d in merge_days if d >= cutoff]
-            if not days and not merge_days:
+    # _tagged feeds one write (all three tiers), so it is not persisted;
+    # _dims feeds the two dimension writes, so it is.
+    tiers = build_tiers(transcripts, params, persist=False)
+    tiers["_dims"].persist()
+    try:
+        results = {
+            t: "skipped"  # already committed for this input
+            for t in (*TIER_TABLES, *DIM_TABLES)
+            if catalog.input_watermark(t) == watermark
+        }
+        tier_days = None if full else new_days + boundary_days
+        pending, wanted, merges = {}, None, []
+        for grain, table in enumerate(TIER_TABLES):
+            if table in results:
+                continue
+            scope = _scope(catalog, table, tier_days)
+            if scope is None:
                 results[table] = "skipped"  # everything new is already expired
-                return
-        out = with_bucket_date(recomputed, "bucket_start")
-        parts = out.filter(F.col("bucket_date").cast("string").isin(days))
-        if merge_days:
-            keep = (
-                catalog.read(table)
-                .filter(F.col("bucket_date").cast("string").isin(merge_days))
-                .join(convs_j, "conv_id", "left_anti")
-            )
-            recomputed_bnd = out.filter(
-                F.col("bucket_date").cast("string").isin(merge_days)
-            )
-            parts = parts.unionByName(keep.select(*parts.columns)).unionByName(
-                recomputed_bnd
-            )
-        results[table] = catalog.overwrite_partitions(
-            table, parts, partition_col="bucket_date", input_watermark=watermark,
-            # footer-derived bucket_start bounds -> metadata-only time-range
-            # skipping on every tier (catalog.read_where_between)
-            stats_cols=["bucket_start"],
-        )
+                continue
+            pending[grain] = table
+            cond = (F.col("_grain") == grain) & scope
+            wanted = cond if wanted is None else wanted | cond
+            merge = _scope(catalog, table, boundary_days) if boundary_days else None
+            if merge is not None:
+                # boundary partitions also hold UNAFFECTED conversations'
+                # buckets: keep those, replace the affected ones
+                merges.append(
+                    catalog.read(table).filter(merge)
+                    .join(convs_j, "conv_id", "left_anti")
+                    .withColumn("_grain", F.lit(grain).cast("tinyint"))
+                )
+        written = {}
+        if pending:
+            out = with_bucket_date(tiers["_tagged"], "bucket_start").filter(wanted)
+            for keep in merges:
+                out = out.unionByName(keep.select(*out.columns))
+            written = catalog.overwrite_grouped(pending, out, input_watermark=watermark)
+            for table in pending.values():
+                results[table] = written.get(table, "skipped")
+        # A full refresh that wrote no tier row may have an empty input. Only
+        # then is the one extra job spent to tell it from an input whose
+        # rows all fall before the retention cutoffs.
+        if full and not written and tiers["_dims"].isEmpty():
+            return {}
 
-    for table in TIER_TABLES:
-        commit(table, tiers[table], new_days, boundary_days)
-    for table in DIM_TABLES:
-        commit(table, tiers[table], new_days, [])  # flag-independent: no boundary
-
-    for t in ("_tagged", "_dims", "_sorted"):
-        tiers[t].unpersist()
-    convs.unpersist()
-    return results
+        for table in DIM_TABLES:  # flag-independent: no boundary days
+            if table in results:
+                continue
+            scope = _scope(catalog, table, new_days)
+            if scope is None:
+                results[table] = "skipped"
+                continue
+            results[table] = catalog.overwrite_partitions(
+                table, with_bucket_date(tiers[table], "bucket_start").filter(scope),
+                partition_col="bucket_date", input_watermark=watermark,
+                stats_cols=["bucket_start"],
+            )
+        return results
+    finally:
+        for t in ("_dims", "_sorted"):
+            tiers[t].unpersist()
+        if convs is not None:
+            convs.unpersist()
 
 
 def apply_retention(catalog: ParquetManifestCatalog, cutoffs: dict[str, str]) -> dict:

@@ -14,13 +14,17 @@ atomically-swapped metadata pointer):
   snapshot record to ``root/<name>/_manifest.json`` with per-partition
   lineage + metrics (rows, bytes, wall_s, input_watermark). A crash before
   the swap leaves an orphan directory invisible to every reader (healed by
-  the idempotent rerun, reclaimed by ``expire_snapshots``) — true snapshot
-  isolation, not best-effort
+  the idempotent rerun, reclaimed by ``expire_snapshots``; a grouped
+  write's ``root/_staging`` is cleared by the next grouped write) — true
+  snapshot isolation, not best-effort
 - **overwrite_partitions**: only partitions present in the incoming
   DataFrame advance to the new snapshot; all others keep pointing at their
   prior snapshot's files (Iceberg ``overwritePartitions`` semantics).
   Because the write never touches existing files, read-modify-write
   refreshes need no defensive materialization
+- **overwrite_grouped**: the same commit for several same-schema tables
+  from ONE Spark write — staged under the catalog root, then each table's
+  directory is moved into its fresh snapshot directory and committed
 - **time travel**: ``read(table, as_of=snapshot_id)`` reconstructs any
   historical state by folding the manifest up to that snapshot;
   ``rollback`` appends a snapshot that restores a prior state (the old
@@ -203,25 +207,107 @@ class ParquetManifestCatalog:
         everything else keeps its prior files (Iceberg overwritePartitions
         semantics). Returns the snapshot record.
         """
-        import pyarrow.parquet as pq
-
         t0 = time.time()
-        m = self._load_manifest(table)
-        sid = (m["snapshots"][-1]["snapshot_id"] + 1) if m["snapshots"] else 1
-        sdir = self._snap_dir(table, sid)
-        # A crashed (uncommitted) attempt may have left files at this same
-        # snapshot id. mode=overwrite alone is not enough to clear them when
-        # the session runs with partitionOverwriteMode=dynamic (only the
-        # partitions present in df would be replaced, and the footer scan
-        # below would then commit the stale leftovers) — remove the whole
-        # uncommitted dir first.
-        if os.path.isdir(sdir):
-            shutil.rmtree(sdir, ignore_errors=True)
+        sdir = self._new_snap_dir(table)
         if distribute:
             n = 2 * self.spark.sparkContext.defaultParallelism
             df = df.repartition(n, partition_col)
         df.write.mode("overwrite").partitionBy(partition_col).parquet(sdir)
-        wall = time.time() - t0
+        return self._commit_written(
+            table, sdir, partition_col, time.time() - t0, input_watermark,
+            op=_op, stats_cols=stats_cols, extra_meta=extra_meta,
+        )
+
+    def overwrite_grouped(
+        self,
+        tables: dict,
+        df: DataFrame,
+        input_watermark: str,
+    ) -> dict:
+        """:meth:`overwrite_partitions` for several same-schema tables in ONE
+        Spark write, partitioned by ``bucket_date``. ``df`` carries a
+        ``_grain`` column, and ``tables`` maps each ``_grain`` value to its
+        table.
+
+        The rows are hash-distributed on (``_grain``, ``bucket_date``), so
+        each table's partition lands in one task and one file, and written
+        with ``partitionBy("_grain", "bucket_date")`` into the staging
+        directory ``<root>/_staging``. Each ``_grain=<value>``
+        directory is then renamed (same filesystem: a metadata move) into
+        its table's fresh snapshot directory and committed in ``tables``
+        order. Each table's commit is the same footer-metrics commit as
+        :meth:`overwrite_partitions`, so a crash between two tables leaves
+        the earlier ones committed and the later ones uncommitted, exactly
+        as a sequence of per-table writes would. Every table gets
+        footer-derived ``bucket_start`` bounds (metadata-only time-range
+        skipping, :meth:`read_where_between`). The staging directory is
+        removed on success and on failure; one left by a killed process is
+        invisible to every reader and cleared before the next grouped write,
+        as :meth:`_new_snap_dir` clears a crashed snapshot directory.
+
+        Returns ``{table: snapshot}`` for the tables that received rows; a
+        table with no rows in ``df`` is not committed.
+        """
+        t0 = time.time()
+        stage = os.path.join(self.root, "_staging")
+        shutil.rmtree(stage, ignore_errors=True)
+        try:
+            n = 2 * self.spark.sparkContext.defaultParallelism
+            (
+                df.repartition(n, "_grain", "bucket_date")
+                .write.mode("overwrite")
+                .partitionBy("_grain", "bucket_date")
+                .parquet(stage)
+            )
+            wall = time.time() - t0
+            out = {}
+            for value, table in tables.items():
+                gdir = os.path.join(stage, f"_grain={value}")
+                if not os.path.isdir(gdir):
+                    continue
+                sdir = self._new_snap_dir(table)
+                os.makedirs(os.path.dirname(sdir), exist_ok=True)
+                os.replace(gdir, sdir)
+                out[table] = self._commit_written(
+                    table, sdir, "bucket_date", wall, input_watermark,
+                    stats_cols=["bucket_start"],
+                )
+            return out
+        finally:
+            shutil.rmtree(stage, ignore_errors=True)
+
+    def _new_snap_dir(self, table: str) -> str:
+        """Directory of the table's next snapshot, emptied.
+
+        A crashed (uncommitted) attempt may have left files at this same
+        snapshot id. mode=overwrite alone is not enough to clear them when
+        the session runs with partitionOverwriteMode=dynamic (only the
+        partitions present in the new data would be replaced, and the footer
+        scan of the commit would then commit the stale leftovers) — remove
+        the whole uncommitted dir first.
+        """
+        m = self._load_manifest(table)
+        sid = (m["snapshots"][-1]["snapshot_id"] + 1) if m["snapshots"] else 1
+        sdir = self._snap_dir(table, sid)
+        if os.path.isdir(sdir):
+            shutil.rmtree(sdir, ignore_errors=True)
+        return sdir
+
+    def _commit_written(
+        self,
+        table: str,
+        sdir: str,
+        partition_col: str,
+        wall: float,
+        input_watermark: str | None,
+        op: str = "overwrite_partitions",
+        stats_cols: list | None = None,
+        extra_meta: dict | None = None,
+    ) -> dict:
+        """Commit the ``partition_col=<value>`` directories written under
+        ``sdir`` (the table's next snapshot directory) as one snapshot, with
+        per-partition metrics read from the parquet footers."""
+        import pyarrow.parquet as pq
 
         # Per-partition metrics from parquet footers. The reads are
         # I/O-bound metadata fetches and a commit can touch thousands of
@@ -280,7 +366,7 @@ class ParquetManifestCatalog:
         with ThreadPoolExecutor(max_workers=16) as pool:
             parts = dict(pool.map(_part_metrics, dirs))
         return self._append_snapshot(
-            table, _op, parts, input_watermark=input_watermark,
+            table, op, parts, input_watermark=input_watermark,
             partition_col=partition_col, **(extra_meta or {}),
         )
 

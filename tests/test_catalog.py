@@ -4,6 +4,8 @@
 - retention delete drops old partitions and records a snapshot
 - incremental refresh (new day arrives) == full recompute
 - resume: kill after a partial commit, rerun, final tables identical
+- full refresh: no resurrection after retention, empty input commits nothing
+- grouped tier write: one file per (table, day), no staging dir left
 - manifest carries per-partition lineage + metrics
 """
 
@@ -14,7 +16,12 @@ from pyspark.sql import functions as F
 
 from olympian_spark.datagen import gen_transcripts
 from olympian_spark.plans.pipeline import QcParams
-from olympian_spark.plans.refresh import TIER_TABLES, apply_retention, refresh_tiers
+from olympian_spark.plans.refresh import (
+    DIM_TABLES,
+    TIER_TABLES,
+    apply_retention,
+    refresh_tiers,
+)
 from olympian_spark.sources.catalog import ParquetManifestCatalog
 
 PARAMS = QcParams(dip_high=300.0, dip_max=1200.0)
@@ -104,38 +111,173 @@ def test_incremental_refresh_shuffle_join_path(spark, tmp_path):
 
 
 def test_resume_after_partial_commit(spark, tmp_path):
+    """Kill a full refresh at the per-table commit step after tier_1m
+    committed and before tier_1h did. The rerun skips tier_1m, writes and
+    commits only the tables still pending, and ends equal to a one-shot
+    refresh."""
     full, first, _ = _split_by_day(spark, n_turns=6_000, n_convs=20)
     cat = ParquetManifestCatalog(spark, str(tmp_path / "resume"))
     refresh_tiers(spark, cat, first, watermark="wm1", params=PARAMS)
 
-    # simulated crash: second run commits only tier_1m, then dies
     class Boom(RuntimeError):
         pass
 
-    orig = ParquetManifestCatalog.overwrite_partitions
-    calls = {"n": 0}
+    orig = ParquetManifestCatalog._commit_written
+    committed = []
 
-    def dying(self, table, df, **kw):
-        if calls["n"] >= 1:
+    def dying(self, table, *a, **kw):
+        if table == "tier_1h":
             raise Boom()
-        calls["n"] += 1
-        return orig(self, table, df, **kw)
+        committed.append(table)
+        return orig(self, table, *a, **kw)
 
-    ParquetManifestCatalog.overwrite_partitions = dying
+    ParquetManifestCatalog._commit_written = dying
     try:
         with pytest.raises(Boom):
             refresh_tiers(spark, cat, full, watermark="wm2", params=PARAMS)
     finally:
-        ParquetManifestCatalog.overwrite_partitions = orig
+        ParquetManifestCatalog._commit_written = orig
+    assert committed == ["tier_1m"]
+    assert cat.input_watermark("tier_1m") == "wm2"
+    assert all(cat.input_watermark(t) == "wm1" for t in TIER_TABLES[1:])
 
     # resume: rerun the same refresh; already-committed tier_1m is skipped
-    results = refresh_tiers(spark, cat, full, watermark="wm2", params=PARAMS)
+    # and is neither committed nor written again
+    tier_1m_dirs = sorted(os.listdir(os.path.join(cat.root, "tier_1m", "data")))
+    committed.clear()
+
+    def recording(self, table, *a, **kw):
+        committed.append(table)
+        return orig(self, table, *a, **kw)
+
+    ParquetManifestCatalog._commit_written = recording
+    try:
+        results = refresh_tiers(spark, cat, full, watermark="wm2", params=PARAMS)
+    finally:
+        ParquetManifestCatalog._commit_written = orig
     assert results["tier_1m"] == "skipped"
+    assert committed == ["tier_1h", "tier_1d", "rollup_role_1h", "rollup_tool_1h"]
+    assert sorted(os.listdir(os.path.join(cat.root, "tier_1m", "data"))) == tier_1m_dirs
 
     cat2 = ParquetManifestCatalog(spark, str(tmp_path / "oneshot"))
     refresh_tiers(spark, cat2, full, watermark="wm2", params=PARAMS)
     for table in TIER_TABLES:
         assert _table_state(cat, table).equals(_table_state(cat2, table)), table
+
+
+def test_full_refresh_after_retention_does_not_resurrect(spark, tmp_path):
+    """Expiry wins over a full refresh too: it recomputes every day of the
+    input, yet re-creates no expired partition on any of the five tables,
+    and what it keeps equals a fresh full refresh from the cutoff on."""
+    full, _, _ = _split_by_day(spark, n_turns=6_000, n_convs=20)
+    cat = ParquetManifestCatalog(spark, str(tmp_path / "frr"))
+    refresh_tiers(spark, cat, full, watermark="wm1", params=PARAMS)
+    tables = (*TIER_TABLES, *DIM_TABLES)
+    days = sorted(str(r[0]) for r in full.select(F.to_date("ts")).distinct().collect())
+    cutoff = days[len(days) // 2]
+    apply_retention(cat, {t: cutoff for t in tables})
+
+    results = refresh_tiers(spark, cat, full, watermark="wm2", params=PARAMS)
+    assert all(results[t] != "skipped" for t in tables)
+    cat_full = ParquetManifestCatalog(spark, str(tmp_path / "frr_full"))
+    refresh_tiers(spark, cat_full, full, watermark="wm2", params=PARAMS)
+    for t in tables:
+        assert all(d >= cutoff for d in cat.committed_partitions(t)), t
+        assert all(d >= cutoff for d in results[t]["partitions"]), t
+        stored = {str(r[0]) for r in cat.read(t).select("bucket_date").distinct().collect()}
+        assert stored and all(d >= cutoff for d in stored), f"{t}: expired rows on disk"
+    for t in TIER_TABLES:
+        b = _table_state(cat_full, t)
+        b = b[b.bucket_date.astype(str) >= cutoff].reset_index(drop=True)
+        assert _table_state(cat, t).equals(b), t
+
+
+def test_full_refresh_of_empty_frame_commits_nothing(spark, tmp_path):
+    """An empty full refresh returns {} and commits no snapshot, into a new
+    catalog and into one whose tables have retention cutoffs."""
+    full, _, _ = _split_by_day(spark, n_turns=500, n_convs=5)
+    tables = (*TIER_TABLES, *DIM_TABLES)
+    cat = ParquetManifestCatalog(spark, str(tmp_path / "empty"))
+    assert refresh_tiers(spark, cat, full.limit(0), watermark="wm", params=PARAMS) == {}
+    for t in tables:
+        assert cat.current_snapshot(t) is None, t
+    assert os.listdir(cat.root) == []
+
+    cat = ParquetManifestCatalog(spark, str(tmp_path / "expired"))
+    refresh_tiers(spark, cat, full, watermark="wm1", params=PARAMS)
+    days = sorted(str(r[0]) for r in full.select(F.to_date("ts")).distinct().collect())
+    apply_retention(cat, {t: days[-1] for t in tables})
+    before = {t: cat.current_snapshot(t)["snapshot_id"] for t in tables}
+    assert refresh_tiers(spark, cat, full.limit(0), watermark="wm2", params=PARAMS) == {}
+    for t in tables:
+        assert cat.current_snapshot(t)["snapshot_id"] == before[t], t
+        assert cat.input_watermark(t) == "wm1", t
+
+
+def _staging_dirs(cat):
+    return [d for d in os.listdir(cat.root) if d.startswith("_staging")]
+
+
+def test_refresh_clears_stale_staging_dir(spark, tmp_path):
+    """A process killed during a grouped write leaves ``_staging`` behind;
+    the rerun clears it, so none of its files reach a table. Under dynamic
+    partition overwrite, ``mode("overwrite")`` alone would keep the stale
+    partition, which the commit would then pick up."""
+    full, _, _ = _split_by_day(spark, n_turns=2_000, n_convs=10)
+    cat = ParquetManifestCatalog(spark, str(tmp_path / "stale"))
+    stale = os.path.join(cat.root, "_staging", "_grain=0", "bucket_date=1999-01-01")
+    os.makedirs(stale)
+    full.limit(5).toPandas().to_parquet(os.path.join(stale, "part-stale.parquet"))
+    key = "spark.sql.sources.partitionOverwriteMode"
+    prior = spark.conf.get(key)
+    spark.conf.set(key, "dynamic")
+    try:
+        refresh_tiers(spark, cat, full, watermark="wm", params=PARAMS)
+    finally:
+        spark.conf.set(key, prior)
+    assert _staging_dirs(cat) == []
+    for t in TIER_TABLES:
+        assert "1999-01-01" not in cat.committed_partitions(t), t
+
+
+def test_grouped_write_one_file_per_table_day_and_no_staging_left(spark, tmp_path):
+    """overwrite_grouped writes exactly one parquet file per (table, day)
+    whatever the upstream fan-out, commits each table with footer metrics
+    like overwrite_partitions, and leaves no staging directory behind."""
+    cat = ParquetManifestCatalog(spark, str(tmp_path / "grp"))
+    rows = [
+        ("k%03d" % i, "2024-01-%02d" % (1 + i // 3 % 9), i % 3, i) for i in range(270)
+    ]
+    df = spark.createDataFrame(
+        rows, "k string, bucket_date string, _grain tinyint, v int"
+    ).repartition(16)  # heavy fan-out upstream
+    snaps = cat.overwrite_grouped({0: "a", 1: "b", 2: "c"}, df, input_watermark="wm")
+    assert set(snaps) == {"a", "b", "c"}
+    for table, snap in snaps.items():
+        base = cat._snap_dir(table, snap["snapshot_id"])
+        parts = sorted(d for d in os.listdir(base) if d.startswith("bucket_date="))
+        assert len(parts) == 9, table
+        for d in parts:
+            n = sum(1 for f in os.listdir(os.path.join(base, d)) if f.endswith(".parquet"))
+            assert n == 1, f"{table}/{d}: {n} files"
+        assert sum(r["rows"] for r in snap["partitions"].values()) == 90
+        assert cat.input_watermark(table) == "wm"
+        assert cat.verify_table(table)["ok"], table
+        assert "_grain" not in cat.read(table).columns
+    assert sorted(r.v for r in cat.read("b").collect()) == list(range(1, 270, 3))
+    assert _staging_dirs(cat) == []
+
+
+def test_grouped_write_removes_staging_when_it_raises(spark, tmp_path):
+    cat = ParquetManifestCatalog(spark, str(tmp_path / "grpfail"))
+    df = spark.createDataFrame(
+        [("a", "2024-01-01", 0, 1)], "k string, bucket_date string, _grain tinyint, v int"
+    )
+    boom = df.withColumn("v", F.raise_error(F.lit("boom")))
+    with pytest.raises(Exception, match="boom"):
+        cat.overwrite_grouped({0: "a"}, boom, input_watermark="wm")
+    assert _staging_dirs(cat) == []
+    assert cat.current_snapshot("a") is None
 
 
 def test_overwrite_touches_only_new_partitions(spark, tmp_path):

@@ -463,3 +463,29 @@ def test_tier_plan_exchange_budget(spark):
             assert n <= 1, f"{name}: {n} exchanges (budget 1)\n{plan[:1500]}"
     finally:
         tiers["_sorted"].unpersist()
+
+
+def test_full_refresh_job_budget(spark, tmp_path):
+    """Job-budget regression pin: a warm full refresh_tiers of a small
+    corpus runs at most 12 Spark jobs — no scoping jobs, one write for the
+    three tier tables. Per-refresh jobs are fixed cost that does not
+    shrink with more cores, so a new one fails this before it costs a
+    benchmark."""
+    from olympian_spark.plans.refresh import refresh_tiers
+    from olympian_spark.sources.catalog import ParquetManifestCatalog
+
+    pdf = gen_transcripts(n_turns=4000, n_convs=20, seed=3).to_pandas()
+    df = spark.createDataFrame(pdf)
+    refresh_tiers(spark, ParquetManifestCatalog(spark, str(tmp_path / "warm")), df,
+                  watermark="wm", params=PARAMS)
+    sc = spark.sparkContext
+    group = "full_refresh_job_budget"
+    sc.setJobGroup(group, "full refresh job budget")
+    try:
+        refresh_tiers(spark, ParquetManifestCatalog(spark, str(tmp_path / "counted")), df,
+                      watermark="wm", params=PARAMS)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+    assert len(jobs) <= 12, f"{len(jobs)} jobs (budget 12)"
