@@ -2345,11 +2345,10 @@ FROM events l ASOF LEFT JOIN r
 
 
 def q_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spark's native ``session_window`` (gap-based merging windows — the
-    same operator the streaming path uses) against a relational
-    gaps-and-islands oracle: per user, 30-minute-gap sessions with start,
-    end (last event + gap), and event count. Timestamps exported as epoch
-    micros so Arrow typing is engine-neutral."""
+    """Spark's native ``session_window`` (gap-based merging windows)
+    against a relational gaps-and-islands oracle: per user, 30-minute-gap
+    sessions with start, end (last event + gap), and event count.
+    Timestamps exported as epoch micros so Arrow typing is engine-neutral."""
     from pyspark.sql import functions as F
 
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")

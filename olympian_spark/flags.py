@@ -22,13 +22,3 @@ class Flag(IntEnum):
     DATA_MISSING = 5  # step/dip: a needed point was None
     ISOLATED = 6  # sct only: too few neighbours in radius (sct.rs:348)
 
-
-FLAG_NAMES = {f.value: f.name.lower() for f in Flag}
-
-
-def flag_lookup_df(spark):
-    """Tiny dimension table (code -> name); broadcast-join it when a human
-    readable name is wanted.  Never shuffled."""
-    return spark.createDataFrame(
-        [(int(k), v) for k, v in FLAG_NAMES.items()], "flag tinyint, flag_name string"
-    )

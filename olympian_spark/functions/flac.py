@@ -197,11 +197,6 @@ def _zigzag(v: np.ndarray) -> np.ndarray:
     return ((v << 1) ^ (v >> 63)).astype(np.uint64)
 
 
-def _unzigzag(u: np.ndarray) -> np.ndarray:
-    u = u.astype(np.uint64)
-    return ((u >> np.uint64(1)).astype(np.int64)) ^ -(u & np.uint64(1)).astype(np.int64)
-
-
 def _best_rice_k(u: np.ndarray, kmax: int = 30) -> tuple[int, int]:
     """(k, total_bits) minimizing sum(u >> k) + n*(k+1), exact."""
     ks = np.arange(kmax + 1, dtype=np.uint64)

@@ -1,10 +1,9 @@
 """Deduplication operators over a documents table (doc_id, text, ...).
 
-Four strategies, each a composition of built-in DataFrame ops (Catalyst
-optimizable, shuffle-conscious), scaling from exact to fuzzy:
+Three fuzzy strategies, each a composition of built-in DataFrame ops
+(Catalyst optimizable, shuffle-conscious). Exact dedup needs no operator:
+it is a plain ``GROUP BY`` on the normalized-text fingerprint (q25).
 
-- :func:`exact_dedup` — hash-groupBy on the normalized-text fingerprint;
-  one shuffle, keep-first (min doc_id) semantics.
 - :func:`ngram_jaccard_pairs` — exact n-gram-shingle Jaccard for candidate
   pairs sharing at least one shingle: explode -> self-join on shingle ->
   count distinct common shingles / union. The shingle join is the scale
@@ -23,11 +22,8 @@ shingle/band) -> (bounded join). No driver-side collection, no cross joins.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from olympian_spark.operators.textstats import with_fingerprint
-from olympian_spark.sources.catalog import IdenticalSnapshotsError
 
 
 def _tokens(col="text"):
@@ -41,19 +37,6 @@ def _shingles(n: int = 3):
     idx = F.sequence(F.lit(0), F.greatest(F.size(toks) - n, F.lit(-1)))
     return F.array_distinct(
         F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n)))
-    )
-
-
-def exact_dedup(df: DataFrame) -> DataFrame:
-    """Keep-first exact dedup on normalized text. Returns
-    (fingerprint, keep_doc_id, n_dups)."""
-    return (
-        with_fingerprint(df)
-        .groupBy("fingerprint")
-        .agg(
-            F.min("doc_id").alias("keep_doc_id"),
-            F.count(F.lit(1)).alias("n_docs"),
-        )
     )
 
 
@@ -354,91 +337,3 @@ def connected_components(
         .union(e.select(F.col("v").alias("node"), F.col("v").alias("component")))
         .distinct()
     )
-
-
-def dedup_keep_canonical(
-    df: DataFrame,
-    components: DataFrame,
-    id_col: str = "doc_id",
-    order_col: str | None = None,
-) -> DataFrame:
-    """Keep ONE document per near-dup cluster: the member with the largest
-    ``order_col`` (ties -> smallest id), or the smallest id when no order
-    column is given. Documents absent from ``components`` are singleton
-    clusters and always survive.
-
-    Output: the surviving rows of ``df`` plus ``component`` and
-    ``n_members``. One hash shuffle on component (broadcast-sized
-    components tables join map-side under AQE); the winner per cluster is
-    a ``max_by`` partial aggregate, never a per-cluster sort window.
-    """
-    comp = components.select(
-        F.col("node").alias(id_col), "component"
-    )
-    labeled = df.join(comp, id_col, "left").withColumn(
-        "component", F.coalesce("component", F.col(id_col).cast("long"))
-    )
-    if order_col is None:
-        pick = F.min(id_col).alias("keep_id")
-    else:
-        pick = F.max_by(
-            F.col(id_col),
-            F.struct(F.col(order_col), (-F.col(id_col)).alias("neg_id")),
-        ).alias("keep_id")
-    # winners derives from labeled: rename its key columns so the re-join
-    # is unambiguous (Spark's self-join analyzer rejects labeled.component
-    # == winners.component when both resolve to the same lineage)
-    winners = (
-        labeled.groupBy("component")
-        .agg(pick, F.count(F.lit(1)).alias("n_members"))
-        .withColumnRenamed("component", "_w_component")
-    )
-    return (
-        labeled.join(
-            winners,
-            (F.col("component") == F.col("_w_component"))
-            & (F.col(id_col) == F.col("keep_id")),
-        )
-        .select(*df.columns, "component", "n_members")
-    )
-
-
-def incremental_exact_dedup(
-    cat,
-    table: str,
-    from_snapshot: int,
-    to_snapshot: int | None = None,
-    old_fingerprints: DataFrame | None = None,
-) -> DataFrame:
-    """Keep-first exact dedup over ONLY the documents added since a
-    snapshot — the daily-production shape: yesterday's corpus is already
-    deduped, so today's job must touch today's additions, not the world.
-
-    Composition of the catalog's CDC with :func:`exact_dedup`:
-    ``diff_snapshots`` prunes reads to changed partitions (metadata-only
-    manifest compare), the added rows dedup among themselves, and an
-    anti-join against the prior state's fingerprints drops anything seen
-    before. Returns the genuinely-new keepers
-    ``(fingerprint, keep_doc_id, n_docs)``.
-
-    ``old_fingerprints``: pass a maintained fingerprint index (one column
-    ``fingerprint``) to skip recomputing it from the full prior state —
-    at 100 TB the index table IS the production design; the default
-    recompute is the self-contained fallback.
-    """
-    try:
-        diff = cat.diff_snapshots(table, from_snapshot, to_snapshot)
-    except IdenticalSnapshotsError:
-        # no partitions changed (the daily job's no-op day): zero new
-        # keepers, not a crash — emit an empty frame in the result schema
-        return cat.spark.createDataFrame(
-            [], "fingerprint string, keep_doc_id long, n_docs long"
-        )
-    added = diff.filter(F.col("change") == "added").drop("change")
-    if old_fingerprints is None:
-        old_fingerprints = (
-            with_fingerprint(cat.read(table, as_of=from_snapshot))
-            .select("fingerprint")
-            .distinct()
-        )
-    return exact_dedup(added).join(old_fingerprints, "fingerprint", "left_anti")

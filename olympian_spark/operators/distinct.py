@@ -1,8 +1,8 @@
 """Mergeable distinct-count tiers (HyperLogLog sketches).
 
-The tier cascade (rollup.py) combines decomposable measures — sums,
-counts, min/max — by adding partials, and exact p95 by concatenating
-value blocks. Distinct counts are neither: ``n_distinct_users`` per hour
+The transcript tiers (rollup.py) build a coarse grain from the finer one:
+sums and counts add their partials, and exact p95 is recomputed from the
+member values. Distinct counts allow neither: ``n_distinct_users`` per hour
 cannot be summed into per day, and storing raw member sets defeats the
 tier's whole point. The standard warehouse answer is a MERGEABLE sketch
 column: each finest-tier bucket stores a HyperLogLog sketch of its keys;

@@ -679,20 +679,6 @@ def decode_verify(df: DataFrame) -> DataFrame:
     ).mapInArrow(op, "media_id long, kind string, decode_ok boolean")
 
 
-def frame_sample_plan(df: DataFrame, every_ms: int = 1000) -> DataFrame:
-    """Video frame-sampling schedule: one row per sampled frame timestamp —
-    pure relational (sequence+explode). Demonstrates the fan-out shape
-    (row -> frames) used for video; :func:`sample_frame_features` is the
-    variant that actually decodes the sampled frames."""
-    v = df.filter(F.col("kind") == "video")
-    return v.select(
-        "media_id",
-        F.explode(
-            F.sequence(F.lit(0), F.col("meta.duration_ms"), F.lit(every_ms))
-        ).alias("frame_ms"),
-    )
-
-
 def sample_frame_features(
     df: DataFrame, every_ms: int = 1000, dim: int = FEATURE_DIM
 ) -> DataFrame:

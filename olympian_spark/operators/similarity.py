@@ -762,16 +762,3 @@ def pq_ann_topk(
         .filter(F.col("rank") <= k)
         .select("query_id", "vec_id", "cos_sim", "rank")
     )
-
-
-def save_codebook(path: str, codebook: "np.ndarray") -> None:
-    """Persist an IVF centroid matrix / PQ codebook tensor to ``path``
-    (.npy). Sharing ONE codebook across jobs is what keeps assignments
-    deterministic under retraining — the docstrings above recommend it;
-    this pair makes it a one-liner."""
-    np.save(path, np.asarray(codebook, dtype=np.float64), allow_pickle=False)
-
-
-def load_codebook(path: str) -> "np.ndarray":
-    """Load a codebook saved by :func:`save_codebook`."""
-    return np.load(path, allow_pickle=False)

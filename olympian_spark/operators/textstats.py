@@ -2,10 +2,9 @@
 
 Everything here is pure DataFrame expressions (JVM, codegen, SQL-oracle
 checkable): token counting (whitespace + BPE-ish regex), quality scoring
-(length / punctuation / stopword / alpha ratios), n-gram-free language ID
-heuristic (stopword hits), and content fingerprinting (md5 over normalized
-text). Designed for 100 TB document tables: no UDFs, no shuffles beyond
-what the caller aggregates.
+(length / punctuation / stopword / alpha ratios) and content
+fingerprinting (md5 over normalized text). Designed for 100 TB document
+tables: no UDFs, no shuffles beyond what the caller aggregates.
 """
 
 from __future__ import annotations
@@ -13,13 +12,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-# tiny per-language stopword anchors for the heuristic language ID
-_LANG_MARKERS = {
-    "en": r"\b(the|and|of|to|is)\b",
-    "es": r"\b(el|la|de|que|y)\b",
-    "de": r"\b(der|die|und|das|ist)\b",
-    "fr": r"\b(le|la|les|des|est)\b",
-}
+# English stopword anchors counted by the quality score
+_EN_STOPWORDS = r"\b(the|and|of|to|is)\b"
 
 # BPE-ish token classes: letter runs, single digits, single punctuation
 _BPE_PATTERN = r"[A-Za-z]+|[0-9]|[^A-Za-z0-9\s]"
@@ -52,7 +46,7 @@ def with_quality_score(df: DataFrame) -> DataFrame:
     n_chars = F.length(_txt())
     n_alpha = n_chars - F.length(F.regexp_replace(_txt(), r"[A-Za-z]", ""))
     n_punct = n_chars - F.length(F.regexp_replace(_txt(), r"[^\w\s]", ""))
-    n_stop = F.regexp_count(F.lower(_txt()), F.lit(_LANG_MARKERS["en"]))
+    n_stop = F.regexp_count(F.lower(_txt()), F.lit(_EN_STOPWORDS))
     safe = F.greatest(n_chars.cast("double"), F.lit(1.0))
     score = (
         n_alpha / safe
@@ -67,26 +61,6 @@ def with_quality_score(df: DataFrame) -> DataFrame:
         .withColumn("n_stopword_hits", n_stop.cast("long"))
         .withColumn("quality_x1e6", F.floor(score * 1e6).cast("long"))
     )
-
-
-def with_lang_guess(df: DataFrame) -> DataFrame:
-    """Stopword-anchor language ID: the language with the most marker hits
-    (ties broken by fixed language order), 'unknown' when no marker hits."""
-    lowered = F.lower(_txt())
-    hits = {lang: F.regexp_count(lowered, F.lit(pat)) for lang, pat in _LANG_MARKERS.items()}
-    best = F.lit("unknown")
-    best_hits = F.lit(0)
-    for lang in reversed(list(_LANG_MARKERS)):  # earlier languages win ties
-        h = hits[lang]
-        cond = h >= F.greatest(best_hits, F.lit(1))
-        best = F.when(h > best_hits, F.lit(lang)).when(
-            (h == best_hits) & (h > 0), F.lit(lang)
-        ).otherwise(best)
-        best_hits = F.greatest(h, best_hits)
-    out = df
-    for lang in _LANG_MARKERS:
-        out = out.withColumn(f"hits_{lang}", hits[lang].cast("long"))
-    return out.withColumn("lang_guess", best)
 
 
 def with_fingerprint(df: DataFrame) -> DataFrame:

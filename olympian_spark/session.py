@@ -71,7 +71,8 @@ def get_spark(
         .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "2m")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         # shuffle/spill codec: a deployment knob, measured both ways on the
-        # 64M-turn pipeline (BENCH/codec_spike.py, interleaved best-of-2):
+        # 64M-turn pipeline (BENCH/codec_spike.py@5690513, interleaved
+        # best-of-2):
         # zstd beats lz4 at BOTH levels per-window (1.09x at 8 cores, 1.03x
         # at 32) because tmpfs shuffle files are pure memory traffic — but
         # it helps the CPU-headroom level more, so it slightly compresses
@@ -92,9 +93,9 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # grouped kernels stream per-group Arrow batches. 64k rows/batch
         # measured 1.08x (32 cores) / 1.15x (8 cores) over 10k on the fused
-        # tier kernel at 16M turns (BENCH/arrowbatch_spike.py) — fewer IPC
-        # round-trips per group; ~3MB per in-flight batch keeps worker
-        # memory flat even for hot groups
+        # tier kernel at 16M turns (BENCH/arrowbatch_spike.py@5690513) —
+        # fewer IPC round-trips per group; ~3MB per in-flight batch keeps
+        # worker memory flat even for hot groups
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
         .config(
             "spark.driver.memory",

@@ -433,7 +433,7 @@ class ParquetManifestCatalog:
         snapshot; untouched partitions keep their files, prior snapshots
         stay time-travel-readable until vacuumed.
 
-        Frequent incremental/streaming commits each write their own files
+        Frequent incremental commits each write their own files
         into fresh snapshot directories, so a hot partition accumulates one
         small file per commit — at 100 TB that degrades scan parallelism
         into open-file overhead. A partition qualifies when it holds more
@@ -513,9 +513,9 @@ class ParquetManifestCatalog:
         """Squash manifest history into one base snapshot (Iceberg
         rewrite-manifests + expire).
 
-        Every commit rewrites ``_manifest.json`` in full, and a streaming
-        sink appends one snapshot per epoch — unbounded history makes each
-        commit O(total history). This vacuums files the current state does
+        Every commit rewrites ``_manifest.json`` in full and appends one
+        snapshot, so a daily refresh's unbounded history makes each commit
+        O(total history). This vacuums files the current state does
         not reference, then rewrites the manifest as a single ``base``
         record holding the live partition map (each entry keeping its
         owning data directory via ``data_snapshot_id``), the last input
@@ -918,8 +918,8 @@ class ParquetManifestCatalog:
         return max(cutoffs) if cutoffs else None
 
     def manifest_df(self, table: str) -> DataFrame:
-        """The manifest as a DataFrame (MANIFEST_SCHEMA shape) for SQL over
-        lineage/metrics."""
+        """The manifest as a DataFrame, one row per (snapshot, partition),
+        for SQL over lineage/metrics."""
         recs = []
         for snap in self._load_manifest(table)["snapshots"]:
             for pval, rec in snap["partitions"].items():

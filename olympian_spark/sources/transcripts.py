@@ -10,12 +10,9 @@ Two readers:
   (also in ``TRANSCRIPTS_FROM_EVENTS_SQL``) must stay in lockstep with the
   Spark expression.
 
-Derived per-turn metrics (:func:`with_turn_metrics`): ``turn_gap_s`` =
-seconds since previous turn in the conversation, ``text_len`` = length(text),
-both FloatType (f32) — the series the window QC operators run on (the image
-of the reference's SeriesCache values, util/mod.rs:46-49). The tier
-pipeline computes the same gap in its stage-1 stencil instead
-(``qc_series.with_gap_and_dip_parallel``).
+The per-turn series the tier pipeline checks (``turn_gap_s``, seconds since
+the previous turn in the conversation) is computed by its stage-1 stencil
+(``qc_series.with_gap_and_dip_parallel``), not here.
 """
 
 from __future__ import annotations
@@ -85,32 +82,3 @@ def transcripts_from_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("ts"),
         F.col("value").alias("metric"),
     )
-
-
-def with_turn_metrics(df: DataFrame) -> DataFrame:
-    """Add turn_gap_s (f32 seconds since previous turn) and text_len (f32).
-
-    One window over (conv_id | turn_idx): a shuffle by conv_id that later
-    windows partitioned by conv_id can reuse. The tier pipeline does not
-    use it (its stage 1 range-sorts by (conv_id, day)); it is the batch
-    window form of the gap, and the streaming turn gaps are tested
-    against it.
-
-    text_len is computed BELOW the window (scan-side projection): consumers
-    that drop ``text`` afterwards (the tier pipeline) then shuffle a 4-byte
-    float instead of the document string — Catalyst prunes ``text`` from the
-    exchange. Inputs that already carry text_len / turn_gap_s (a narrow
-    pre-projection) are passed through untouched.
-    """
-    if "text_len" not in df.columns:
-        df = df.withColumn(
-            "text_len", F.length(F.coalesce(F.col("text"), F.lit(""))).cast("float")
-        )
-    if "turn_gap_s" not in df.columns:
-        w = Window.partitionBy("conv_id").orderBy("turn_idx")
-        # normalize TIMESTAMP_NTZ (parquet naive) and TIMESTAMP alike; session
-        # tz is UTC so the instant arithmetic is identical either way
-        t = F.col("ts").cast("timestamp")
-        gap = (F.unix_micros(t) - F.unix_micros(F.lag(t).over(w))).cast("double") / 1e6
-        df = df.withColumn("turn_gap_s", gap.cast("float"))
-    return df

@@ -22,7 +22,10 @@ from olympian_spark.plans.refresh import (
     apply_retention,
     refresh_tiers,
 )
-from olympian_spark.sources.catalog import ParquetManifestCatalog
+from olympian_spark.sources.catalog import (
+    IdenticalSnapshotsError,
+    ParquetManifestCatalog,
+)
 
 PARAMS = QcParams(dip_high=300.0, dip_max=1200.0)
 
@@ -604,7 +607,7 @@ def test_diff_snapshots_metadata_pruned(spark, tmp_path):
     }
     assert got_head == got
     # identical snapshots -> explicit error, not an empty scan
-    with pytest.raises(ValueError):
+    with pytest.raises(IdenticalSnapshotsError):
         cat.diff_snapshots("t", s2["snapshot_id"], s2["snapshot_id"])
 
 
@@ -660,87 +663,6 @@ def test_compact_zorder_bounded_boxes(spark, tmp_path):
         cat.compact_partitions("t", sort_by=["x"], zorder_by=["x"])
 
 
-def test_incremental_exact_dedup_cdc(spark, tmp_path):
-    """Daily incremental dedup: only docs added since the last snapshot are
-    considered, content already present before is dropped, and the union
-    with the prior keepers equals the full-recompute keepers."""
-    from olympian_spark.operators.dedup import exact_dedup, incremental_exact_dedup
-
-    cat = ParquetManifestCatalog(spark, str(tmp_path / "incdd"))
-    mk = lambda rows: spark.createDataFrame(
-        rows, "doc_id BIGINT, text STRING, bucket_date STRING"
-    )
-    day1 = mk([
-        (0, "alpha text", "2024-01-01"),
-        (1, "beta text", "2024-01-01"),
-        (2, "alpha text", "2024-01-01"),   # in-day dup of 0
-    ])
-    s1 = cat.overwrite_partitions("docs", day1)
-    day2 = mk([
-        (10, "gamma text", "2024-01-02"),  # new content
-        (11, "alpha text", "2024-01-02"),  # dups day1 content
-        (12, "gamma text", "2024-01-02"),  # in-day dup of 10
-        (13, "delta text", "2024-01-02"),  # new content
-    ])
-    cat.overwrite_partitions("docs", day1.unionByName(day2).filter("bucket_date = '2024-01-02'"))
-
-    inc = incremental_exact_dedup(cat, "docs", s1["snapshot_id"])
-    got = {(r["keep_doc_id"], r["n_docs"]) for r in inc.collect()}
-    assert got == {(10, 2), (13, 1)}  # gamma kept at 10 (11 dropped: old content)
-
-    # consistency: incremental keepers + prior keepers == full recompute
-    full = {r["keep_doc_id"] for r in exact_dedup(cat.read("docs")).collect()}
-    prior = {
-        r["keep_doc_id"]
-        for r in exact_dedup(cat.read("docs", as_of=s1["snapshot_id"])).collect()
-    }
-    assert prior | {k for k, _ in got} == full
-
-    # maintained-index path gives the same answer
-    from olympian_spark.operators.textstats import with_fingerprint
-    idx = (
-        with_fingerprint(cat.read("docs", as_of=s1["snapshot_id"]))
-        .select("fingerprint").distinct()
-    )
-    got_idx = {
-        (r["keep_doc_id"], r["n_docs"])
-        for r in incremental_exact_dedup(
-            cat, "docs", s1["snapshot_id"], old_fingerprints=idx
-        ).collect()
-    }
-    assert got_idx == got
-
-    # a no-op day (nothing changed since head) returns ZERO rows, not a
-    # crash — the daily incremental job must survive quiet days
-    head = cat.current_snapshot("docs")["snapshot_id"]
-    quiet = incremental_exact_dedup(cat, "docs", head)
-    assert quiet.count() == 0
-    assert quiet.columns == ["fingerprint", "keep_doc_id", "n_docs"]
-
-
-def test_incremental_exact_dedup_noop_day_by_type(spark):
-    """The no-op day is recognised by exception type, not message: an
-    ``IdenticalSnapshotsError`` gives the empty keeper frame, and any other
-    ``ValueError`` from ``diff_snapshots`` propagates — even one whose
-    message says "identical"."""
-    from olympian_spark.operators.dedup import incremental_exact_dedup
-    from olympian_spark.sources.catalog import IdenticalSnapshotsError
-
-    class _Cat:
-        def __init__(self, err):
-            self.spark, self.err = spark, err
-
-        def diff_snapshots(self, table, from_snapshot, to_snapshot=None):
-            raise self.err
-
-    quiet = incremental_exact_dedup(_Cat(IdenticalSnapshotsError("t: same")), "t", 1)
-    assert quiet.columns == ["fingerprint", "keep_doc_id", "n_docs"]
-    assert quiet.count() == 0
-    with pytest.raises(ValueError, match="identical") as info:
-        incremental_exact_dedup(_Cat(ValueError("t: not identical, corrupt")), "t", 1)
-    assert not isinstance(info.value, IdenticalSnapshotsError)
-
-
 def test_diff_snapshots_across_rollback(spark, tmp_path):
     """CDC folds rollback records: diffing from a pre-rollback snapshot to
     head (post-rollback) reports exactly the overwrite being undone."""
@@ -759,7 +681,7 @@ def test_diff_snapshots_across_rollback(spark, tmp_path):
         ("b", "2024-01-02", 2, "added"),
     }
     # and s1 -> head is empty (identical states) -> explicit error
-    with pytest.raises(ValueError):
+    with pytest.raises(IdenticalSnapshotsError):
         cat.diff_snapshots("t", s1["snapshot_id"])
 
 

@@ -3,10 +3,7 @@
 import numpy as np
 import pytest
 
-from olympian_spark.operators.dedup import (
-    connected_components,
-    dedup_keep_canonical,
-)
+from olympian_spark.operators.dedup import connected_components
 
 
 def _union_find(n_edges, nodes):
@@ -69,31 +66,6 @@ def test_components_empty_and_self_pairs(spark):
     assert connected_components(df).count() == 0
 
 
-def test_keep_canonical_min_id_and_quality(spark):
-    docs = spark.createDataFrame(
-        [(1, "a", 0.2), (2, "b", 0.9), (3, "c", 0.9), (4, "d", 0.5),
-         (9, "solo", 0.1)],
-        "doc_id long, text string, quality double",
-    )
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3)], "doc_a long, doc_b long"
-    )
-    comp = connected_components(pairs)
-
-    by_id = dedup_keep_canonical(docs, comp)
-    rows = {r.doc_id: r for r in by_id.collect()}
-    # cluster {1,2,3} -> keeps 1; 4 and 9 are singletons
-    assert set(rows) == {1, 4, 9}
-    assert rows[1].n_members == 3 and rows[4].n_members == 1
-    assert rows[1].component == 1 and rows[9].component == 9
-
-    by_q = dedup_keep_canonical(docs, comp, order_col="quality")
-    rows = {r.doc_id: r for r in by_q.collect()}
-    # quality tie 2 vs 3 at 0.9 -> smaller id 2 wins
-    assert set(rows) == {2, 4, 9}
-    assert rows[2].text == "b" and rows[2].n_members == 3
-
-
 def test_components_cluster_jaccard_pairs_end_to_end(spark):
     """Chained near-dups A~B~C (A and C not a pair themselves) must land
     in ONE cluster — the property pairs alone cannot express."""
@@ -112,6 +84,6 @@ def test_components_cluster_jaccard_pairs_end_to_end(spark):
     pairs = ngram_jaccard_pairs(docs, threshold=0.5, max_doc_freq=None)
     got = {(r.doc_a, r.doc_b) for r in pairs.select("doc_a", "doc_b").collect()}
     assert (0, 1) in got and (1, 2) in got
-    comp = connected_components(pairs)
-    kept = dedup_keep_canonical(docs, comp)
-    assert {r.doc_id for r in kept.collect()} == {0, 3}
+    comp = {r.node: r.component for r in connected_components(pairs).collect()}
+    # one cluster labeled by its smallest id; doc 3 pairs with nothing
+    assert comp[0] == comp[1] == comp[2] == 0 and 3 not in comp

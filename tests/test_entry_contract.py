@@ -1,7 +1,10 @@
 """Local replica of the driver's correctness harness: run every queries()
 entry at sf0.001, compare against oracle_sql() via DuckDB — row count,
-column names, and an order-insensitive value hash."""
+column names, and an order-insensitive value hash. Also: every package
+module is reachable by imports from a contract entry point."""
 
+import ast
+import glob
 import hashlib
 import math
 import os
@@ -10,7 +13,8 @@ import sys
 import duckdb
 import pytest
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 import __spark_entry__ as entrymod
 
 SF_DIR = os.environ.get("ENTRY_TEST_SF_DIR", "/root/testdata/sf0.001")
@@ -185,3 +189,64 @@ def test_q06_null_ts_conversation_matches_oracle(spark, tmp_path):
     assert sorted(r[scols.index("conv_id")] for r in srows) == ["c1", "c3"]
     assert len(srows) == len(drows)
     assert _value_hash(scols, srows) == _value_hash(scols, drows)
+
+
+# The contracts' entry points: the driver queries, the bench scripts, the
+# benchmark, the operational scripts, and the Python worker daemon that
+# session.py names by string (spark.python.daemon.module).
+CONTRACT_ROOTS = ("__spark_entry__.py", "bench*.py", "perfbench/*.py",
+                  "scripts/*.py", "olympian_spark/worker_daemon.py")
+UNREACHED_ALLOWED = {
+    # SeriesCache gap-fill and LOCF (SURVEY #3/#4); q06/q07 use closed forms
+    "olympian_spark.operators.spine",
+    # synthetic transcripts for the test fixtures
+    "olympian_spark.datagen",
+}
+
+
+def _module_file(name):
+    base = os.path.join(REPO, *name.split("."))
+    for path in (base + ".py", os.path.join(base, "__init__.py")):
+        if os.path.isfile(path):
+            return path
+    return None
+
+
+def _module_name(path):
+    name = os.path.relpath(path, REPO)[: -len(".py")].replace(os.sep, ".")
+    return name.removesuffix(".__init__")
+
+
+def _package_imports(path):
+    """Package modules that ``path`` imports, function-local imports and
+    the parent packages of each import included. The package imports by
+    absolute name only; a relative import would show up as unreached."""
+    with open(path) as f:
+        tree = ast.parse(f.read(), path)
+    names = set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            names.update(a.name for a in node.names)
+        elif isinstance(node, ast.ImportFrom) and node.module:
+            names.add(node.module)
+            names.update(f"{node.module}.{a.name}" for a in node.names)
+    out = set()
+    for name in names:
+        parts = name.split(".")
+        out.update(".".join(parts[:i]) for i in range(1, len(parts) + 1))
+    return {n for n in out if n.startswith("olympian_spark") and _module_file(n)}
+
+
+def test_every_module_reachable_from_a_contract():
+    roots = [p for pat in CONTRACT_ROOTS for p in glob.glob(os.path.join(REPO, pat))]
+    seen = set()
+    todo = [_module_name(p) for p in roots]
+    while todo:
+        name = todo.pop()
+        if name not in seen:
+            seen.add(name)
+            todo += _package_imports(_module_file(name))
+    pkg = glob.glob(os.path.join(REPO, "olympian_spark", "**", "*.py"), recursive=True)
+    unreached = {_module_name(p) for p in pkg} - seen
+    assert unreached - UNREACHED_ALLOWED == set(), "no contract imports these"
+    assert UNREACHED_ALLOWED <= unreached, "reachable now: drop from the allowlist"
