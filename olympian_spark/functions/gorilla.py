@@ -278,42 +278,6 @@ def _decode_floats(buf: bytes, n: int) -> np.ndarray:
 # ---------------------------------------------------------------------------
 
 
-def encode_singleton_blocks(
-    ts_us: np.ndarray, stream_a: np.ndarray, stream_b: np.ndarray
-) -> list[bytes]:
-    """Vectorized encoder for n==1 two-stream blocks (the dominant shape of
-    a 1-minute tier over sparse conversations). A singleton block has a
-    fixed 36-byte layout: header(8) | len(4)+ts_le(8) | len(4)+f32_le(4) |
-    len(4)+f32_le(4) — assembled as one numpy byte matrix. Byte-identical
-    to ``encode_block(ts[i:i+1], [a[i:i+1], b[i:i+1]])`` (property-tested).
-    """
-    m = ts_us.size
-    buf = np.empty((m, 36), dtype=np.uint8)
-    buf[:, 0:3] = np.frombuffer(MAGIC, dtype=np.uint8)
-    buf[:, 3] = 2  # n_streams
-    buf[:, 4:8] = np.frombuffer(struct.pack("<I", 1), dtype=np.uint8)  # n=1
-    buf[:, 8:12] = np.frombuffer(struct.pack("<I", 8), dtype=np.uint8)
-    buf[:, 12:20] = (
-        np.ascontiguousarray(ts_us, dtype="<i8").view(np.uint8).reshape(m, 8)
-    )
-    four = np.frombuffer(struct.pack("<I", 4), dtype=np.uint8)
-    buf[:, 20:24] = four
-    buf[:, 24:28] = (
-        np.ascontiguousarray(stream_a, dtype=np.float32)
-        .view("<u4")
-        .view(np.uint8)
-        .reshape(m, 4)
-    )
-    buf[:, 28:32] = four
-    buf[:, 32:36] = (
-        np.ascontiguousarray(stream_b, dtype=np.float32)
-        .view("<u4")
-        .view(np.uint8)
-        .reshape(m, 4)
-    )
-    return [row.tobytes() for row in buf]
-
-
 def _seg_arange(counts: np.ndarray) -> np.ndarray:
     """[0..c0), [0..c1), ... — within-segment positions, fully vectorized
     (zero-length segments contribute nothing)."""

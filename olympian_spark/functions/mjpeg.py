@@ -12,7 +12,7 @@ delegated to the baseline JPEG implementation in functions/jpeg.py:
   inside LIST movi/rec), decodes each frame with decode_jpeg.
 
 This gives the multimodal pipeline a genuinely decodable video codec:
-frame-sampling and feature extraction run real pixel math instead of the
+decode verification and feature extraction run real pixel math instead of the
 keyed-hash fallback (which remains for h264 — an external-library codec).
 """
 

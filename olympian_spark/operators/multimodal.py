@@ -677,69 +677,3 @@ def decode_verify(df: DataFrame) -> DataFrame:
     return df.select(
         "media_id", "kind", "payload", F.col("meta.codec").alias("codec"), "truth"
     ).mapInArrow(op, "media_id long, kind string, decode_ok boolean")
-
-
-def sample_frame_features(
-    df: DataFrame, every_ms: int = 1000, dim: int = FEATURE_DIM
-) -> DataFrame:
-    """video rows -> (media_id, frame_ms, feature): REAL decoded-pixel
-    features of the frame nearest each sampled timestamp (MJPEG-AVI);
-    external-library codecs (h264) fall back to a deterministic keyed-hash
-    feature per sampled timestamp so the dataflow stays total.
-
-    The row -> frames fan-out happens INSIDE mapInArrow (narrow op): no
-    shuffle, no payload duplication per frame — at 100 TB each video's
-    bytes are read once per partition pass and only the small feature rows
-    fan out."""
-
-    def op(batches):
-        for batch in batches:
-            ids = batch.column("media_id").to_pylist()
-            payloads = batch.column("payload").to_pylist()
-            codecs = batch.column("codec").to_pylist()
-            durs = batch.column("duration_ms").to_pylist()
-            out_id: list[int] = []
-            out_ms: list[int] = []
-            out_feat: list[np.ndarray] = []
-            for mid, p, codec, dur in zip(ids, payloads, codecs, durs):
-                stamps = range(0, max(int(dur or 0), 0) + 1, every_ms)
-                try:
-                    frames, fps = decode_video(bytes(p), {"codec": codec})
-                    n = frames.shape[0]
-                    per_frame: dict[int, np.ndarray] = {}
-                    for ms in stamps:
-                        idx = min(int(ms * max(fps, 1e-9) / 1000.0), n - 1)
-                        if idx not in per_frame:
-                            per_frame[idx] = image_features(frames[idx], dim)
-                        out_id.append(mid)
-                        out_ms.append(ms)
-                        out_feat.append(per_frame[idx])
-                except Exception:
-                    # h264 (NotImplementedError) or a corrupt container:
-                    # keyed-hash fallback per sampled timestamp
-                    for ms in stamps:
-                        out_id.append(mid)
-                        out_ms.append(ms)
-                        out_feat.append(
-                            _fake_features([bytes(p) + ms.to_bytes(8, "big")], dim)[0]
-                        )
-            yield pa.record_batch(
-                {
-                    "media_id": pa.array(out_id, pa.int64()),
-                    "frame_ms": pa.array(out_ms, pa.int64()),
-                    "feature": pa.array(
-                        [f.tolist() for f in out_feat], pa.list_(pa.float32())
-                    ),
-                }
-            )
-
-    return (
-        df.filter(F.col("kind") == "video")
-        .select(
-            "media_id",
-            "payload",
-            F.col("meta.codec").alias("codec"),
-            F.col("meta.duration_ms").alias("duration_ms"),
-        )
-        .mapInArrow(op, "media_id long, frame_ms long, feature array<float>")
-    )

@@ -26,9 +26,7 @@ atomically-swapped metadata pointer):
   from ONE Spark write — staged under the catalog root, then each table's
   directory is moved into its fresh snapshot directory and committed
 - **time travel**: ``read(table, as_of=snapshot_id)`` reconstructs any
-  historical state by folding the manifest up to that snapshot;
-  ``rollback`` appends a snapshot that restores a prior state (the old
-  snapshots remain readable — Iceberg rollback semantics)
+  historical state by folding the manifest up to that snapshot
 - **retention**: ``delete_where_older`` is metadata-only (partitions drop
   out of the live set; files stay until vacuumed) — the Iceberg
   ``DELETE WHERE`` partition-predicate fast path
@@ -37,11 +35,15 @@ atomically-swapped metadata pointer):
 - **incremental refresh**: callers compute only changed partitions (from
   the input watermark recorded in the last snapshot) and overwrite those.
 
+The manifest holds three ops: ``overwrite_partitions``,
+``retention_delete`` and ``expire_snapshots``.
+
 Single-writer-per-table is assumed (as with Iceberg's optimistic locking,
 concurrent writers need a coordinating catalog service; at 100 TB that is
 the metastore's job). Readers are always consistent: they see whichever
-manifest version their fold started from. Real Iceberg remains a config
-flip via :class:`IcebergCatalog`.
+manifest version their fold started from. :class:`IcebergCatalog` is not
+a drop-in replacement: it lacks calls that ``refresh_tiers`` makes (see its
+docstring).
 """
 
 from __future__ import annotations
@@ -67,11 +69,6 @@ def _json_stat(v):
     if hasattr(v, "isoformat"):
         return v.isoformat()
     return v
-
-
-class IdenticalSnapshotsError(ValueError):
-    """:meth:`ParquetManifestCatalog.diff_snapshots` found no changed
-    partition between the two snapshots: there is nothing to diff."""
 
 
 class ParquetManifestCatalog:
@@ -125,43 +122,37 @@ class ParquetManifestCatalog:
     def _fold(snaps: list, as_of: int | None = None) -> dict:
         """Partition -> lineage record at snapshot ``as_of`` (None = head).
 
-        ``rollback`` records restore the state at their target snapshot;
-        ``expire_snapshots`` is physical-only and does not change state.
+        ``expire_snapshots`` is physical-only and does not change state. Any
+        other op raises ``ValueError``: an older version of this catalog
+        also wrote ``compact``, ``base``, ``rollback`` and ``tag`` records,
+        and skipping one would fold to a wrong live set.
         """
         live: dict = {}
         for snap in snaps:
             if as_of is not None and snap["snapshot_id"] > as_of:
                 break
             op = snap["op"]
-            if op == "retention_delete":
-                for p in snap["partitions"]:
-                    live.pop(p, None)
-            elif op == "rollback":
-                live = ParquetManifestCatalog._fold(snaps, as_of=snap["target"])
-            elif op in ("overwrite_partitions", "compact", "base"):
-                if op == "base":
-                    # a "base" record (manifest checkpoint) IS the complete
-                    # state at its id — it replaces, never merges. This
-                    # matters when a checkpoint preserves tagged states as
-                    # earlier base records: partitions live in a tag but
-                    # dropped since must not leak into later states.
-                    live = {}
+            if op == "overwrite_partitions":
                 for p, rec in snap["partitions"].items():
                     live[p] = {
                         **rec,
-                        # a "base" record carries each partition's owning
-                        # data directory explicitly; live commits own every
-                        # partition they list
-                        "snapshot_id": rec.get("data_snapshot_id", snap["snapshot_id"]),
-                        "partition_col": rec.get(
-                            "partition_col", snap.get("partition_col", "bucket_date")
-                        ),
+                        "snapshot_id": snap["snapshot_id"],
+                        "partition_col": snap.get("partition_col", "bucket_date"),
                     }
+            elif op == "retention_delete":
+                for p in snap["partitions"]:
+                    live.pop(p, None)
+            elif op != "expire_snapshots":
+                raise ValueError(
+                    f"snapshot {snap['snapshot_id']}: unknown manifest op {op!r}"
+                )
         return live
 
     def committed_partitions(self, table: str, as_of: int | None = None) -> dict:
         """Live partition -> lineage record, folding snapshots up to
-        ``as_of`` (default: current state)."""
+        ``as_of`` (default: current state). A past state stays readable
+        until ``expire_snapshots`` reclaims its files; ``keep_last``
+        protects the last states."""
         return self._fold(self._load_manifest(table)["snapshots"], as_of)
 
     def input_watermark(self, table: str) -> str | None:
@@ -178,25 +169,19 @@ class ParquetManifestCatalog:
         df: DataFrame,
         partition_col: str = "bucket_date",
         input_watermark: str | None = None,
-        _op: str = "overwrite_partitions",
-        distribute: bool = True,
-        extra_meta: dict | None = None,
         stats_cols: list | None = None,
     ) -> dict:
         """Copy-on-write partition overwrite + atomic manifest commit.
 
-        ``distribute`` hash-partitions the write by ``partition_col``
-        (Iceberg's hash distribution-mode): without it, EVERY task writes
-        a file into EVERY partition directory it holds rows for —
-        tasks x days files (measured: 14k files for 8k day-partitions at
-        8 cores), which serializes commits on file-create latency and
-        degrades later scans. With it, each partition value lands in
-        exactly one task -> one file per partition. The trade: a single
-        huge day writes through one task — size-based file splitting (and
-        restoring intra-day write parallelism) is the compaction/Iceberg
-        target-file-size concern, while day-partitioned tier tables are
-        post-aggregation and small per day. Callers that pre-shape their
-        layout (compaction's target-size repartition) pass False.
+        The write is hash-partitioned by ``partition_col`` (Iceberg's hash
+        distribution-mode): without it, EVERY task writes a file into
+        EVERY partition directory it holds rows for — tasks x days files
+        (measured: 14k files for 8k day-partitions at 8 cores), which
+        serializes commits on file-create latency and degrades later scans.
+        With it, each partition value lands in exactly one task -> one file
+        per partition. The trade: a single huge day writes through one
+        task, while day-partitioned tier tables are post-aggregation and
+        small per day.
 
         The incoming partitions are written into a FRESH snapshot directory
         (one Spark job — no defensive checkpoint: existing files are never
@@ -209,13 +194,12 @@ class ParquetManifestCatalog:
         """
         t0 = time.time()
         sdir = self._new_snap_dir(table)
-        if distribute:
-            n = 2 * self.spark.sparkContext.defaultParallelism
-            df = df.repartition(n, partition_col)
+        n = 2 * self.spark.sparkContext.defaultParallelism
+        df = df.repartition(n, partition_col)
         df.write.mode("overwrite").partitionBy(partition_col).parquet(sdir)
         return self._commit_written(
             table, sdir, partition_col, time.time() - t0, input_watermark,
-            op=_op, stats_cols=stats_cols, extra_meta=extra_meta,
+            stats_cols=stats_cols,
         )
 
     def overwrite_grouped(
@@ -300,9 +284,7 @@ class ParquetManifestCatalog:
         partition_col: str,
         wall: float,
         input_watermark: str | None,
-        op: str = "overwrite_partitions",
         stats_cols: list | None = None,
-        extra_meta: dict | None = None,
     ) -> dict:
         """Commit the ``partition_col=<value>`` directories written under
         ``sdir`` (the table's next snapshot directory) as one snapshot, with
@@ -366,236 +348,9 @@ class ParquetManifestCatalog:
         with ThreadPoolExecutor(max_workers=16) as pool:
             parts = dict(pool.map(_part_metrics, dirs))
         return self._append_snapshot(
-            table, op, parts, input_watermark=input_watermark,
-            partition_col=partition_col, **(extra_meta or {}),
+            table, "overwrite_partitions", parts, input_watermark=input_watermark,
+            partition_col=partition_col,
         )
-
-    @staticmethod
-    def _zorder_key(df: DataFrame, cols: list, bits: int = 16):
-        """Morton (Z-order) key over ``cols`` as a pure column expression.
-
-        Numeric/timestamp columns are min-max normalized to ``bits``-bit
-        ints via ONE global aggregate (broadcast back — no per-column
-        sort, unlike rank-based schemes); strings hash into the same
-        domain (the Delta OPTIMIZE ZORDER treatment). Bits are then
-        interleaved round-robin across columns so a range of keys is a
-        hyper-rectangle-ish region of the column space. Returns
-        (df_with_stats, key_column).
-        """
-        aggs = []
-        kinds = {}
-        for c in cols:
-            dt = dict(df.dtypes)[c]
-            if dt in ("string", "binary"):
-                kinds[c] = "hash"
-            else:
-                kinds[c] = "num"
-                aggs += [
-                    F.min(F.col(c).cast("double")).alias(f"_zmn_{c}"),
-                    F.max(F.col(c).cast("double")).alias(f"_zmx_{c}"),
-                ]
-        if aggs:
-            df = df.crossJoin(F.broadcast(df.agg(*aggs)))
-        top = (1 << bits) - 1
-        quant = {}
-        for c in cols:
-            if kinds[c] == "hash":
-                quant[c] = F.pmod(F.xxhash64(F.col(c)), F.lit(1 << bits))
-            else:
-                span = F.col(f"_zmx_{c}") - F.col(f"_zmn_{c}")
-                q = F.floor(
-                    (F.col(c).cast("double") - F.col(f"_zmn_{c}"))
-                    / F.when(span > 0, span).otherwise(F.lit(1.0))
-                    * F.lit(float(top))
-                )
-                quant[c] = F.coalesce(
-                    F.least(F.greatest(q, F.lit(0)), F.lit(top)), F.lit(0)
-                ).cast("long")
-        key = F.lit(0).cast("long")
-        for bit in range(bits):
-            for j, c in enumerate(cols):
-                key = key + F.shiftleft(
-                    F.shiftright(quant[c], bit).bitwiseAND(F.lit(1)),
-                    bit * len(cols) + j,
-                )
-        return df, key
-
-    def compact_partitions(
-        self,
-        table: str,
-        partition_col: str = "bucket_date",
-        target_file_bytes: int = 128 << 20,
-        sort_by: list | None = None,
-        zorder_by: list | None = None,
-    ) -> dict | None:
-        """Small-file compaction (Iceberg ``rewrite_data_files``): rewrite
-        fragmented partitions into ~``target_file_bytes`` files as a NEW
-        snapshot; untouched partitions keep their files, prior snapshots
-        stay time-travel-readable until vacuumed.
-
-        Frequent incremental commits each write their own files
-        into fresh snapshot directories, so a hot partition accumulates one
-        small file per commit — at 100 TB that degrades scan parallelism
-        into open-file overhead. A partition qualifies when it holds more
-        files than ``ceil(bytes / target_file_bytes)``. Returns the commit
-        snapshot, or None if nothing is fragmented. The compaction commit
-        carries no input watermark, so refresh resume logic is unaffected.
-
-        ``sort_by`` clusters rows within the rewritten files (Iceberg
-        write sort-order): parquet row-group min/max stats on the sort
-        columns then let predicate pushdown skip whole row groups, and
-        run-length locality compresses better.
-
-        ``zorder_by`` (mutually exclusive with ``sort_by``) clusters by a
-        Morton key over SEVERAL columns (Delta OPTIMIZE ZORDER / Iceberg
-        z-ordered rewrite): a lexicographic sort gives perfect skipping on
-        the leading column and none on the rest, while Z-order gives every
-        listed column a bounded per-file min/max box — the layout a 100 TB
-        table wants when queries filter on more than one dimension.
-        """
-        if sort_by and zorder_by:
-            raise ValueError("sort_by and zorder_by are mutually exclusive")
-        live = self.committed_partitions(table)
-        to_do, todo_bytes = [], 0
-        for pval, rec in sorted(live.items()):
-            if rec["partition_col"] != partition_col:
-                continue
-            pdir = os.path.join(
-                self._snap_dir(table, rec["snapshot_id"]), f"{partition_col}={pval}"
-            )
-            n_files = sum(1 for f in os.listdir(pdir) if f.endswith(".parquet"))
-            n_needed = max(1, -(-rec["bytes"] // target_file_bytes))
-            if n_files > n_needed:
-                to_do.append(pval)
-                todo_bytes += rec["bytes"]
-        if not to_do:
-            return None
-        # to_do holds dir-escaped values (for path rebuilds above); the data
-        # filter needs the real column values — unescape for the comparison.
-        df = self.read(table).filter(
-            F.col(partition_col).cast("string").isin([unquote(p) for p in to_do])
-        )
-        n_out = max(1, -(-todo_bytes // target_file_bytes))
-        if zorder_by:
-            cols = list(df.columns)
-            df, zkey = self._zorder_key(df, zorder_by)
-            df = (
-                df.withColumn("_zkey", zkey)
-                # range partitions = contiguous Morton-key slabs per
-                # partition value -> each output file owns a compact
-                # multi-column box
-                .repartitionByRange(n_out, partition_col, "_zkey")
-                .sortWithinPartitions(partition_col, "_zkey")
-                .select(*cols)
-            )
-        else:
-            df = df.repartition(n_out, partition_col)
-            if sort_by:
-                df = df.sortWithinPartitions(partition_col, *sort_by)
-        # Range bounds are quantiles of a key sample (Spark default: 100 keys
-        # per output partition, seeded by the RDD id). A sampled bound spills
-        # rows of the next Morton slab into a file and stretches that file's
-        # box across a whole column range, so sample up to 100k keys: exact
-        # quantiles for rewrites up to that size, close to them beyond.
-        sample_key = "spark.sql.execution.rangeExchange.sampleSizePerPartition"
-        sample_old = self.spark.conf.get(sample_key)
-        if zorder_by:
-            self.spark.conf.set(sample_key, str(max(100, -(-100_000 // n_out))))
-        try:
-            # distribute=False: the target-size repartition above IS the layout
-            return self.overwrite_partitions(
-                table, df, partition_col=partition_col, _op="compact", distribute=False
-            )
-        finally:
-            self.spark.conf.set(sample_key, sample_old)
-
-    def checkpoint_manifest(self, table: str) -> dict:
-        """Squash manifest history into one base snapshot (Iceberg
-        rewrite-manifests + expire).
-
-        Every commit rewrites ``_manifest.json`` in full and appends one
-        snapshot, so a daily refresh's unbounded history makes each commit
-        O(total history). This vacuums files the current state does
-        not reference, then rewrites the manifest as a single ``base``
-        record holding the live partition map (each entry keeping its
-        owning data directory via ``data_snapshot_id``), the last input
-        watermark, and the recorded retention cutoffs. Snapshot ids stay
-        monotonic; time travel before the checkpoint is gone (as after
-        ``expire_snapshots``) EXCEPT tagged states, which are preserved as
-        base-style records at their original ids so tag reads and their
-        vacuum protection survive the squash.
-        """
-        snaps0 = self._load_manifest(table)["snapshots"]
-        live = self.committed_partitions(table)
-        wm = self.input_watermark(table)
-        cutoffs = {}
-        for s in snaps0:
-            if s["op"] == "retention_delete":
-                pc = s.get("partition_col", "bucket_date")
-                cutoffs[pc] = max(cutoffs.get(pc, ""), s["cutoff"])
-            elif s["op"] == "base":
-                for pc, c in s.get("retention_cutoffs", {}).items():
-                    cutoffs[pc] = max(cutoffs.get(pc, ""), c)
-        # Tags survive the checkpoint: capture each live tag's target state
-        # WHILE the history can still be folded; it is re-emitted below as a
-        # base-style record at the target's id plus a fresh tag record, so
-        # resolve_tag/read_tag keep working and the next expire_snapshots
-        # still sees the tagged states as reachable (the documented
-        # "protected from vacuuming" guarantee).
-        tags: dict[str, int] = {}
-        for s in snaps0:
-            if s["op"] == "tag":
-                tags[s["tag_name"]] = s["target"]  # latest record wins
-
-        def _base_map(state: dict) -> dict:
-            out = {}
-            for p, rec in state.items():
-                r = dict(rec)
-                r["data_snapshot_id"] = r.pop("snapshot_id")
-                out[p] = r
-            return out
-
-        tag_states = {
-            t: _base_map(self._fold(snaps0, as_of=t)) for t in set(tags.values())
-        }
-        self.expire_snapshots(table, keep_last=0)
-        last_id = self._load_manifest(table)["snapshots"][-1]["snapshot_id"]
-        now = datetime.now(timezone.utc).isoformat()
-        snap = {
-            "snapshot_id": last_id + 1,
-            "op": "base",
-            "committed_at": now,
-            "partitions": _base_map(live),
-            "input_watermark": wm,
-            "retention_cutoffs": cutoffs,
-        }
-        records = [
-            {
-                "snapshot_id": t,
-                "op": "base",
-                "committed_at": now,
-                "partitions": state,
-            }
-            for t, state in sorted(tag_states.items())
-        ]
-        records.append(snap)
-        records += [
-            {
-                "snapshot_id": last_id + 2 + i,
-                "op": "tag",
-                "committed_at": now,
-                "partitions": {},
-                "tag_name": name,
-                "target": target,
-            }
-            for i, (name, target) in enumerate(sorted(tags.items()))
-        ]
-        m = {"table": table, "snapshots": records}
-        tmp = self._manifest_path(table) + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(m, f, indent=1)
-        os.replace(tmp, self._manifest_path(table))
-        return snap
 
     def read(self, table: str, as_of: int | None = None) -> DataFrame:
         """Snapshot-consistent read; ``as_of`` time-travels to a historical
@@ -613,7 +368,7 @@ class ParquetManifestCatalog:
 
     def _read_live(self, table: str, live: dict) -> DataFrame:
         """Read an explicit live-partition map (read()'s grouping logic,
-        reusable for partition-pruned reads like :meth:`diff_snapshots`)."""
+        reusable for partition-pruned reads like :meth:`read_where_between`)."""
         groups: dict[int, list] = {}
         for pval, rec in live.items():
             groups.setdefault(rec["snapshot_id"], []).append((pval, rec["partition_col"]))
@@ -628,78 +383,6 @@ class ParquetManifestCatalog:
                 part, allowMissingColumns=True
             )
         return out
-
-    def changed_partitions(
-        self, table: str, from_snapshot: int, to_snapshot: int | None = None
-    ) -> set:
-        """Partitions whose owning data differs between two snapshots —
-        METADATA-ONLY (manifest fold comparison, no file reads). A
-        partition is unchanged iff both states map it to the same owning
-        snapshot directory (files are immutable, so same owner = same
-        bytes)."""
-        a = self.committed_partitions(table, as_of=from_snapshot)
-        b = self.committed_partitions(table, as_of=to_snapshot)
-        return {
-            p
-            for p in set(a) | set(b)
-            if (p not in a)
-            or (p not in b)
-            or a[p]["snapshot_id"] != b[p]["snapshot_id"]
-        }
-
-    def diff_snapshots(
-        self,
-        table: str,
-        from_snapshot: int,
-        to_snapshot: int | None = None,
-        key_cols: list | None = None,
-    ) -> DataFrame:
-        """Snapshot diff (CDC between two time-travel states): rows added
-        and removed between ``from_snapshot`` and ``to_snapshot`` (None =
-        head), keyed on ``key_cols`` (default: all common columns — exact
-        row diff).
-
-        Scale shape: the read set is pruned to :meth:`changed_partitions`
-        FIRST — a metadata-only manifest comparison, so diffing two
-        snapshots that share 99% of a 100 TB table reads only the
-        differing partitions; the anti-joins then shuffle only that
-        pruned slice on the key columns.
-
-        Raises :class:`IdenticalSnapshotsError` when no partition differs.
-        """
-        changed = self.changed_partitions(table, from_snapshot, to_snapshot)
-        old_live = {
-            p: r
-            for p, r in self.committed_partitions(table, as_of=from_snapshot).items()
-            if p in changed
-        }
-        new_live = {
-            p: r
-            for p, r in self.committed_partitions(table, as_of=to_snapshot).items()
-            if p in changed
-        }
-        old = self._read_live(table, old_live) if old_live else None
-        new = self._read_live(table, new_live) if new_live else None
-        if old is None and new is None:
-            raise IdenticalSnapshotsError(f"{table}: snapshots identical, nothing to diff")
-        if key_cols is None:
-            key_cols = (
-                [c for c in new.columns if old is None or c in old.columns]
-                if new is not None
-                else list(old.columns)
-            )
-        import pyspark.sql.functions as _F
-
-        def _tag(df, change):
-            return df.select(*key_cols).withColumn("change", _F.lit(change))
-
-        if old is None:
-            return _tag(new, "added")
-        if new is None:
-            return _tag(old, "removed")
-        added = _tag(new.join(old.select(*key_cols), key_cols, "left_anti"), "added")
-        removed = _tag(old.join(new.select(*key_cols), key_cols, "left_anti"), "removed")
-        return added.unionByName(removed)
 
     def pruned_partitions(self, table: str, col: str, lo, hi) -> dict:
         """Live partitions whose manifest [min, max] bounds for ``col``
@@ -736,7 +419,7 @@ class ParquetManifestCatalog:
         parquet files, and row-count mismatches vs the manifest. The
         check a 100 TB deployment runs after restores/migrations before
         trusting a table — and the cheap invariant a resume path can
-        assert.
+        assert. The benchmark's rebuild check calls it on every table.
         """
         import pyarrow.parquet as _pq
 
@@ -787,73 +470,6 @@ class ParquetManifestCatalog:
             table, "retention_delete", dropped, cutoff=cutoff, partition_col=partition_col
         )
 
-    def optimize_table(
-        self,
-        table: str,
-        partition_col: str = "bucket_date",
-        target_file_bytes: int = 128 << 20,
-        sort_by: list | None = None,
-        zorder_by: list | None = None,
-        keep_last: int = 2,
-        checkpoint_over: int = 64,
-    ) -> dict:
-        """One-call maintenance (the Iceberg OPTIMIZE shape): compact
-        fragmented partitions, squash the manifest once it exceeds
-        ``checkpoint_over`` snapshots, and vacuum everything unreachable
-        beyond ``keep_last`` states (tags stay pinned). Returns a summary
-        of what each step did — the cron job a deployment schedules."""
-        out: dict = {}
-        snap = self.compact_partitions(
-            table, partition_col=partition_col,
-            target_file_bytes=target_file_bytes,
-            sort_by=sort_by, zorder_by=zorder_by,
-        )
-        out["compacted"] = bool(snap)
-        n_snaps = len(self._load_manifest(table)["snapshots"])
-        if n_snaps > checkpoint_over:
-            self.checkpoint_manifest(table)
-            out["checkpointed"] = True
-        else:
-            out["checkpointed"] = False
-        exp = self.expire_snapshots(table, keep_last=keep_last)
-        out["removed_dirs"] = exp.get("removed_dirs", 0)
-        return out
-
-    def tag_snapshot(self, table: str, name: str, snapshot_id: int | None = None) -> dict:
-        """Named snapshot ref (Iceberg tag): pin a state under a stable
-        name — readable via ``read(table, tag=...)`` and PROTECTED from
-        ``expire_snapshots`` vacuuming however old it gets (release /
-        eval-dataset pinning). Tags are append-only manifest records; the
-        latest record for a name wins, so re-tagging moves the ref."""
-        target = (
-            snapshot_id
-            if snapshot_id is not None
-            else self.current_snapshot(table)["snapshot_id"]
-        )
-        snaps = self._load_manifest(table)["snapshots"]
-        if not any(s["snapshot_id"] == target for s in snaps):
-            raise ValueError(f"{table}: unknown snapshot {target}")
-        return self._append_snapshot(table, "tag", {}, tag_name=name, target=target)
-
-    def resolve_tag(self, table: str, name: str) -> int:
-        for s in reversed(self._load_manifest(table)["snapshots"]):
-            if s["op"] == "tag" and s.get("tag_name") == name:
-                return s["target"]
-        raise ValueError(f"{table}: no tag {name!r}")
-
-    def read_tag(self, table: str, name: str) -> DataFrame:
-        """Snapshot-consistent read of a tagged state."""
-        return self.read(table, as_of=self.resolve_tag(table, name))
-
-    def rollback(self, table: str, to_snapshot: int) -> dict:
-        """Restore the table to a prior snapshot's state by APPENDING a
-        rollback record (history is never rewritten — Iceberg semantics).
-        """
-        snaps = self._load_manifest(table)["snapshots"]
-        if not any(s["snapshot_id"] == to_snapshot for s in snaps):
-            raise ValueError(f"{table}: unknown snapshot {to_snapshot}")
-        return self._append_snapshot(table, "rollback", {}, target=to_snapshot)
-
     def expire_snapshots(self, table: str, keep_last: int = 0) -> dict:
         """Vacuum: physically delete files no reachable state references.
 
@@ -861,16 +477,13 @@ class ParquetManifestCatalog:
         last ``keep_last`` snapshots (kept time-travel-readable). Also
         reclaims orphan directories from crashed, never-committed writes.
         Time travel to anything older stops working — Iceberg
-        ``expireSnapshots`` semantics.
+        ``expireSnapshots`` semantics. This is the only code that frees the
+        files of partitions dropped by :meth:`delete_where_older` or
+        superseded by later commits, and those of crashed commits.
         """
         snaps = self._load_manifest(table)["snapshots"]
         committed_ids = [s["snapshot_id"] for s in snaps]
         keep_states = [None] + (committed_ids[-keep_last:] if keep_last > 0 else [])
-        # tagged snapshots are pinned refs (Iceberg tag semantics): their
-        # states stay reachable however old they are
-        keep_states += [
-            s["target"] for s in snaps if s["op"] == "tag"
-        ]
         referenced = set()
         for as_of in keep_states:
             for pval, rec in self._fold(snaps, as_of).items():
@@ -911,15 +524,12 @@ class ParquetManifestCatalog:
                 and s.get("partition_col", "bucket_date") == partition_col
             ):
                 cutoffs.append(s["cutoff"])
-            elif s["op"] == "base":  # manifest checkpoint preserves cutoffs
-                c = s.get("retention_cutoffs", {}).get(partition_col)
-                if c:
-                    cutoffs.append(c)
         return max(cutoffs) if cutoffs else None
 
     def manifest_df(self, table: str) -> DataFrame:
         """The manifest as a DataFrame, one row per (snapshot, partition),
-        for SQL over lineage/metrics."""
+        for SQL over lineage/metrics: the checkpoint/resume manifest table
+        of (partition, snapshot_id, rows, bytes, wall_s)."""
         recs = []
         for snap in self._load_manifest(table)["snapshots"]:
             for pval, rec in snap["partitions"].items():
@@ -952,20 +562,27 @@ def with_bucket_date(df: DataFrame, src_col: str = "bucket_start") -> DataFrame:
 
 
 class IcebergCatalog:
-    """Production storage backend: the same contract as
-    :class:`ParquetManifestCatalog` implemented with real Iceberg operations.
+    """Production storage backend: part of the :class:`ParquetManifestCatalog`
+    surface implemented with real Iceberg operations.
 
     Requires an Iceberg runtime jar + a configured catalog (not present in
     this sandbox — the constructor verifies and raises with instructions).
-    The method bodies are the exact production translations of the fallback:
+    The methods translate the fallback's:
 
     - overwrite_partitions -> ``df.writeTo(table).overwritePartitions()``
       (snapshot-isolated dynamic overwrite)
     - delete_where_older   -> ``DELETE FROM t WHERE bucket_date < cutoff``
       (metadata-only partition drop for partition-aligned predicates)
-    - committed_partitions / lineage -> the ``.snapshots`` / ``.files``
+    - current_snapshot / manifest_df -> the ``.snapshots`` / ``.files``
       metadata tables; input watermarks ride on snapshot summary properties
-      via ``spark.sql(... SET TBLPROPERTIES ...)`` or write options.
+      via write options
+    - expire_snapshots     -> the ``expire_snapshots`` procedure
+
+    It is NOT a drop-in for ``refresh_tiers``, which also calls
+    ``overwrite_grouped``, ``retention_cutoff`` and
+    ``overwrite_partitions(stats_cols=...)``; none of these exists here.
+    Nor does it have ``read(as_of=...)``, ``committed_partitions``,
+    ``pruned_partitions``, ``read_where_between`` or ``verify_table``.
     """
 
     def __init__(self, spark: SparkSession, catalog_name: str = "iceberg"):
@@ -1020,32 +637,8 @@ class IcebergCatalog:
     def manifest_df(self, table: str) -> DataFrame:
         return self.spark.table(f"{self.catalog}.{table}.files")
 
-    # ---- maintenance (same surface as the fallback; Iceberg procedures) ----
-
-    def compact_partitions(self, table: str, partition_col: str = "bucket_date",
-                           target_file_bytes: int = 128 << 20,
-                           sort_by: list | None = None):
-        sort = f", strategy => 'sort', sort_order => '{', '.join(sort_by)}'" if sort_by else ""
-        return self.spark.sql(
-            f"CALL {self.catalog}.system.rewrite_data_files("
-            f"table => '{table}', "
-            f"options => map('target-file-size-bytes', '{target_file_bytes}')"
-            f"{sort})"
-        ).first()
-
     def expire_snapshots(self, table: str, keep_last: int = 1):
         return self.spark.sql(
             f"CALL {self.catalog}.system.expire_snapshots("
             f"table => '{table}', retain_last => {max(1, keep_last)})"
-        ).first()
-
-    def checkpoint_manifest(self, table: str):
-        return self.spark.sql(
-            f"CALL {self.catalog}.system.rewrite_manifests(table => '{table}')"
-        ).first()
-
-    def rollback(self, table: str, to_snapshot: int):
-        return self.spark.sql(
-            f"CALL {self.catalog}.system.rollback_to_snapshot("
-            f"table => '{table}', snapshot_id => {to_snapshot})"
         ).first()

@@ -22,10 +22,7 @@ from olympian_spark.plans.refresh import (
     apply_retention,
     refresh_tiers,
 )
-from olympian_spark.sources.catalog import (
-    IdenticalSnapshotsError,
-    ParquetManifestCatalog,
-)
+from olympian_spark.sources.catalog import ParquetManifestCatalog
 
 PARAMS = QcParams(dip_high=300.0, dip_max=1200.0)
 
@@ -300,10 +297,10 @@ def test_overwrite_touches_only_new_partitions(spark, tmp_path):
     assert got == {("2024-01-01", 1), ("2024-01-02", 99)}
 
 
-def test_time_travel_rollback_and_vacuum(spark, tmp_path):
+def test_time_travel_and_vacuum(spark, tmp_path):
     """Snapshot semantics of the copy-on-write format: as-of reads
-    reconstruct any historical state, rollback restores one by appending
-    (history intact), vacuum reclaims only unreachable files."""
+    reconstruct any historical state, and vacuum reclaims only files no
+    kept state references."""
     cat = ParquetManifestCatalog(spark, str(tmp_path / "tt"))
     mk = lambda rows: spark.createDataFrame(rows, "k string, bucket_date string, v int")
     s1 = cat.overwrite_partitions("t", mk([("a", "2024-01-01", 1), ("a", "2024-01-02", 2)]))
@@ -317,61 +314,35 @@ def test_time_travel_rollback_and_vacuum(spark, tmp_path):
     assert state(cat.read("t", as_of=s2["snapshot_id"])) == {
         ("2024-01-01", 1), ("2024-01-02", 99)}
 
-    # rollback to s1 appends a record; reads now see s1's state, and the
-    # rolled-over snapshots remain time-travel-readable
-    cat.rollback("t", s1["snapshot_id"])
-    assert state(cat.read("t")) == {("2024-01-01", 1), ("2024-01-02", 2)}
-    assert state(cat.read("t", as_of=s2["snapshot_id"])) == {
-        ("2024-01-01", 1), ("2024-01-02", 99)}
-
-    # vacuum with no history retention: s2's 01-02 files (unreferenced by
-    # the current, post-rollback state) are reclaimed; current state intact
+    # vacuum with no history retention: s1 is unreachable (its 01-01
+    # partition expired, its 01-02 partition was overwritten by s2), so its
+    # directory goes; the head state is intact
     cat.expire_snapshots("t", keep_last=0)
-    assert not os.path.isdir(os.path.join(str(tmp_path / "tt"), "t/data/s2"))
-    assert state(cat.read("t")) == {("2024-01-01", 1), ("2024-01-02", 2)}
+    assert not os.path.isdir(os.path.join(str(tmp_path / "tt"), "t/data/s1"))
+    assert state(cat.read("t")) == {("2024-01-02", 99)}
     with pytest.raises(Exception):
-        cat.read("t", as_of=s2["snapshot_id"]).collect()
+        cat.read("t", as_of=s1["snapshot_id"]).collect()
 
 
-def test_compaction_rewrites_fragmented_partitions(spark, tmp_path):
-    """A commit whose writer fanned out over many tasks leaves many small
-    files per partition; compact_partitions rewrites them into few files
-    as a new snapshot with identical content, leaving history readable."""
-    cat = ParquetManifestCatalog(spark, str(tmp_path / "cp"))
-    rows = [("k%d" % i, "2024-01-01", i) for i in range(200)]
-    df = spark.createDataFrame(rows, "k string, bucket_date string, v int").repartition(8)
-    # distribute=False simulates a writer that pre-shaped its own layout
-    # (the default hash distribution would land each partition as ONE file,
-    # leaving nothing to compact — that behavior is pinned further down)
-    s1 = cat.overwrite_partitions("t", df, distribute=False)
-
-    pdir = os.path.join(str(tmp_path / "cp"), "t/data/s1/bucket_date=2024-01-01")
-    n_before = sum(1 for f in os.listdir(pdir) if f.endswith(".parquet"))
-    assert n_before >= 2  # fragmented
-
-    snap = cat.compact_partitions("t")
-    assert snap is not None and snap["op"] == "compact"
-    live = cat.committed_partitions("t")
-    cdir = os.path.join(
-        str(tmp_path / "cp"),
-        f"t/data/s{live['2024-01-01']['snapshot_id']}/bucket_date=2024-01-01",
-    )
-    n_after = sum(1 for f in os.listdir(cdir) if f.endswith(".parquet"))
-    assert n_after < n_before and n_after == 1
-
-    state = lambda df_: sorted((r.k, str(r.bucket_date), r.v) for r in df_.collect())
-    assert state(cat.read("t")) == sorted((k, d, v) for k, d, v in rows)
-    assert state(cat.read("t", as_of=s1["snapshot_id"])) == state(cat.read("t"))
-    # already compact -> no-op
-    assert cat.compact_partitions("t") is None
+def test_fold_rejects_unknown_manifest_op(spark, tmp_path):
+    """A manifest record whose op the fold does not know (here a
+    ``compact`` record, which an older catalog version wrote) raises,
+    naming the snapshot and the op, instead of folding to a wrong live set;
+    the state before it still folds."""
+    cat = ParquetManifestCatalog(spark, str(tmp_path / "op"))
+    rec = {"rows": 1, "bytes": 1, "wall_s": 0.0, "input_watermark": None}
+    cat._append_snapshot("t", "overwrite_partitions", {"2024-01-01": rec})
+    cat._append_snapshot("t", "compact", {"2024-01-02": rec})
+    with pytest.raises(ValueError, match=r"snapshot 2: unknown manifest op 'compact'"):
+        cat.committed_partitions("t")
+    with pytest.raises(ValueError, match="'compact'"):
+        cat.expire_snapshots("t")
+    assert set(cat.committed_partitions("t", as_of=1)) == {"2024-01-01"}
 
 
-def test_schema_evolution_and_sorted_compaction(spark, tmp_path):
+def test_schema_evolution_null_fills_added_column(spark, tmp_path):
     """Add-column evolution: partitions written before a column existed
-    null-fill it on read (Iceberg semantics). Sorted compaction clusters
-    rows so parquet row-group stats support pruning."""
-    import pyarrow.parquet as pq
-
+    null-fill it on read (Iceberg semantics)."""
     cat = ParquetManifestCatalog(spark, str(tmp_path / "se"))
     cat.overwrite_partitions(
         "t",
@@ -386,61 +357,6 @@ def test_schema_evolution_and_sorted_compaction(spark, tmp_path):
     )
     got = {(r.k, r.v, r.score) for r in cat.read("t").collect()}
     assert got == {("a", 1, None), ("b", 2, 9.5)}
-
-    # sorted compaction: fragment one partition, compact with sort_by=v desc?
-    # (sortWithinPartitions ascending by default) -> file rows ordered by v
-    rows = [("k%03d" % i, "2024-01-03", 999 - i) for i in range(300)]
-    cat.overwrite_partitions(
-        "t",
-        spark.createDataFrame(rows, "k string, bucket_date string, v int").repartition(6),
-        distribute=False,
-    )
-    snap = cat.compact_partitions("t", sort_by=["v"])
-    assert snap is not None
-    live = cat.committed_partitions("t")
-    cdir = os.path.join(
-        str(tmp_path / "se"),
-        f"t/data/s{live['2024-01-03']['snapshot_id']}/bucket_date=2024-01-03",
-    )
-    fs = [f for f in os.listdir(cdir) if f.endswith(".parquet")]
-    assert len(fs) == 1
-    vals = pq.read_table(os.path.join(cdir, fs[0]), columns=["v"])["v"].to_pylist()
-    assert vals == sorted(vals)  # clustered -> row-group min/max usable
-
-
-def test_checkpoint_manifest_squashes_history(spark, tmp_path):
-    """Manifest checkpoint: history folds into one base snapshot with the
-    live partition map, preserving input watermark + retention cutoffs;
-    reads identical; unreferenced files vacuumed; later commits work."""
-    cat = ParquetManifestCatalog(spark, str(tmp_path / "cm"))
-    mk = lambda rows: spark.createDataFrame(rows, "k string, bucket_date string, v int")
-    for epoch in range(5):  # streaming-style history
-        cat.overwrite_partitions(
-            "t", mk([("a", "2024-01-%02d" % (epoch + 1), epoch)]),
-            input_watermark=f"epoch={epoch}",
-        )
-    cat.delete_where_older("t", "2024-01-02")
-    before = {(str(r.bucket_date), r.v) for r in cat.read("t").collect()}
-
-    snap = cat.checkpoint_manifest("t")
-    assert snap["op"] == "base"
-    m = cat._load_manifest("t")
-    assert len(m["snapshots"]) == 1
-    assert {(str(r.bucket_date), r.v) for r in cat.read("t").collect()} == before
-    assert cat.input_watermark("t") == "epoch=4"
-    assert cat.retention_cutoff("t") == "2024-01-02"
-    # expired day's files were vacuumed
-    assert not os.path.isdir(os.path.join(str(tmp_path / "cm"), "t/data/s1"))
-
-    # post-checkpoint commit + read still correct, ids stay monotonic
-    s_next = cat.overwrite_partitions("t", mk([("a", "2024-01-06", 99)]))
-    assert s_next["snapshot_id"] > snap["snapshot_id"]
-    got = {(str(r.bucket_date), r.v) for r in cat.read("t").collect()}
-    assert got == before | {("2024-01-06", 99)}
-    # and a second checkpoint after retention keeps the newer cutoff
-    cat.delete_where_older("t", "2024-01-03")
-    cat.checkpoint_manifest("t")
-    assert cat.retention_cutoff("t") == "2024-01-03"
 
 
 def test_vacuum_reclaims_orphans_keeps_history(spark, tmp_path):
@@ -568,123 +484,6 @@ def test_catalog_supports_coarser_partition_columns(spark, tmp_path):
     assert got == {"b", "c"}
 
 
-def test_diff_snapshots_metadata_pruned(spark, tmp_path):
-    """CDC between snapshots: changed_partitions is metadata-only and
-    diff_snapshots reads ONLY differing partitions (pruned read set),
-    returning the exact added/removed row sets."""
-    cat = ParquetManifestCatalog(spark, str(tmp_path / "diff"))
-    mk = lambda rows: spark.createDataFrame(rows, "k string, bucket_date string, v int")
-    s1 = cat.overwrite_partitions("t", mk(
-        [("a", "2024-01-01", 1), ("b", "2024-01-01", 2), ("a", "2024-01-02", 3)]
-    ))
-    s2 = cat.overwrite_partitions("t", mk([("a", "2024-01-02", 99), ("c", "2024-01-03", 4)]))
-
-    # metadata-only: 01-01 unchanged between s1 and s2
-    assert cat.changed_partitions("t", s1["snapshot_id"], s2["snapshot_id"]) == {
-        "2024-01-02", "2024-01-03",
-    }
-    got = {
-        (r.k, str(r.bucket_date), r.v, r.change)
-        for r in cat.diff_snapshots("t", s1["snapshot_id"], s2["snapshot_id"]).collect()
-    }
-    assert got == {
-        ("a", "2024-01-02", 99, "added"),
-        ("c", "2024-01-03", 4, "added"),
-        ("a", "2024-01-02", 3, "removed"),
-    }
-    # key-restricted diff: same keyspace, no value column
-    got_k = {
-        (r.k, str(r.bucket_date), r.change)
-        for r in cat.diff_snapshots(
-            "t", s1["snapshot_id"], s2["snapshot_id"], key_cols=["k", "bucket_date"]
-        ).collect()
-    }
-    assert got_k == {("c", "2024-01-03", "added")}
-    # diff against head (None) == diff against the latest snapshot id
-    got_head = {
-        (r.k, str(r.bucket_date), r.v, r.change)
-        for r in cat.diff_snapshots("t", s1["snapshot_id"]).collect()
-    }
-    assert got_head == got
-    # identical snapshots -> explicit error, not an empty scan
-    with pytest.raises(IdenticalSnapshotsError):
-        cat.diff_snapshots("t", s2["snapshot_id"], s2["snapshot_id"])
-
-
-def test_compact_zorder_bounded_boxes(spark, tmp_path):
-    """Z-ordered compaction: every output file's (x, y) min/max box is
-    bounded in BOTH dimensions, where a lexicographic x-sort would give
-    each file the full y span."""
-    import glob
-    import os as _os
-
-    cat = ParquetManifestCatalog(spark, str(tmp_path / "zo"))
-    n = 128
-    # hash-scrambled row order: the incoming layout is uncorrelated with
-    # (x, y), as post-shuffle data would be
-    grid = (
-        spark.range(n * n)
-        .selectExpr(
-            "CAST(id % 128 AS DOUBLE) AS x",
-            "CAST(CAST(id / 128 AS INT) AS DOUBLE) AS y",
-            "'2024-01-01' AS bucket_date",
-            "xxhash64(id) AS scramble",
-        )
-        .repartition(8, "scramble")
-        .drop("scramble")
-    )
-    cat.overwrite_partitions("t", grid, distribute=False)  # 8 unclustered files
-    snap = cat.compact_partitions(
-        "t", target_file_bytes=8_000, zorder_by=["x", "y"]
-    )
-    assert snap is not None and snap["op"] == "compact"
-    pdir = _os.path.join(
-        str(tmp_path / "zo"), "t", "data", f"s{snap['snapshot_id']}",
-        "bucket_date=2024-01-01",
-    )
-    files = glob.glob(_os.path.join(pdir, "*.parquet"))
-    assert len(files) >= 4
-    spans = []
-    for f in files:
-        r = (
-            spark.read.parquet(f)
-            .agg(F.min("x"), F.max("x"), F.min("y"), F.max("y"))
-            .collect()[0]
-        )
-        spans.append((r[1] - r[0], r[3] - r[2]))
-    # Morton slabs: no file spans (nearly) the full range in BOTH dims,
-    # and at least half the files are bounded in EACH dim
-    assert all(min(sx, sy) <= 80 for sx, sy in spans), spans
-    bounded = sum(1 for sx, sy in spans if sx <= 80 and sy <= 80)
-    assert bounded >= len(spans) // 2, spans
-    # content unchanged by the rewrite
-    assert cat.read("t").count() == n * n
-    with pytest.raises(ValueError):
-        cat.compact_partitions("t", sort_by=["x"], zorder_by=["x"])
-
-
-def test_diff_snapshots_across_rollback(spark, tmp_path):
-    """CDC folds rollback records: diffing from a pre-rollback snapshot to
-    head (post-rollback) reports exactly the overwrite being undone."""
-    cat = ParquetManifestCatalog(spark, str(tmp_path / "rbdiff"))
-    mk = lambda rows: spark.createDataFrame(rows, "k string, bucket_date string, v int")
-    s1 = cat.overwrite_partitions("t", mk([("a", "2024-01-01", 1), ("b", "2024-01-02", 2)]))
-    s2 = cat.overwrite_partitions("t", mk([("a", "2024-01-02", 99)]))
-    cat.rollback("t", s1["snapshot_id"])
-    # head state == s1 state, so diff s2 -> head undoes s2's overwrite
-    got = {
-        (r.k, str(r.bucket_date), r.v, r.change)
-        for r in cat.diff_snapshots("t", s2["snapshot_id"]).collect()
-    }
-    assert got == {
-        ("a", "2024-01-02", 99, "removed"),
-        ("b", "2024-01-02", 2, "added"),
-    }
-    # and s1 -> head is empty (identical states) -> explicit error
-    with pytest.raises(IdenticalSnapshotsError):
-        cat.diff_snapshots("t", s1["snapshot_id"])
-
-
 def test_manifest_column_stats_pruned_read(spark, tmp_path):
     """stats_cols at commit time record per-partition [min, max] bounds
     from parquet footers (metadata only); read_where_between scans ONLY
@@ -765,84 +564,3 @@ def test_verify_table_detects_tamper(spark, tmp_path):
     shutil.rmtree(pdir)
     rep3 = cat.verify_table("t")
     assert any("missing directory" in i for i in rep3["issues"])
-
-
-def test_snapshot_tags_pin_and_survive_vacuum(spark, tmp_path):
-    """Tags: named refs resolve across later commits, re-tagging moves the
-    ref, and a tagged state's files survive expire_snapshots(keep_last=0)
-    while untagged history is vacuumed."""
-    cat = ParquetManifestCatalog(spark, str(tmp_path / "tags"))
-    mk = lambda rows: spark.createDataFrame(rows, "k string, bucket_date string, v int")
-    s1 = cat.overwrite_partitions("t", mk([("a", "2024-01-01", 1)]))
-    cat.tag_snapshot("t", "v1.0")
-    s2 = cat.overwrite_partitions("t", mk([("a", "2024-01-01", 2)]))
-    s3 = cat.overwrite_partitions("t", mk([("a", "2024-01-01", 3)]))
-
-    assert cat.resolve_tag("t", "v1.0") == s1["snapshot_id"]
-    assert [r.v for r in cat.read_tag("t", "v1.0").collect()] == [1]
-    # re-tag moves the ref
-    cat.tag_snapshot("t", "v1.0", snapshot_id=s2["snapshot_id"])
-    assert [r.v for r in cat.read_tag("t", "v1.0").collect()] == [2]
-    cat.tag_snapshot("t", "release", snapshot_id=s1["snapshot_id"])
-
-    # vacuum: everything unreferenced goes; tagged s1/s2 states survive
-    cat.expire_snapshots("t", keep_last=0)
-    assert [r.v for r in cat.read_tag("t", "release").collect()] == [1]
-    assert [r.v for r in cat.read_tag("t", "v1.0").collect()] == [2]
-    assert [r.v for r in cat.read("t").collect()] == [3]
-    assert cat.verify_table("t")["ok"]
-    with pytest.raises(ValueError):
-        cat.resolve_tag("t", "nope")
-    with pytest.raises(ValueError):
-        cat.tag_snapshot("t", "bad", snapshot_id=99999)
-
-
-def test_optimize_table_one_call(spark, tmp_path):
-    """optimize_table: compaction + vacuum in one call; table readable and
-    audit-clean after; repeated calls are no-ops on a healthy table."""
-    cat = ParquetManifestCatalog(spark, str(tmp_path / "opt"))
-    grid = spark.range(2000).selectExpr(
-        "CAST(id AS DOUBLE) AS x", "'2024-01-01' AS bucket_date",
-        "xxhash64(id) AS scramble",
-    ).repartition(8, "scramble").drop("scramble")
-    cat.overwrite_partitions("t", grid, distribute=False)  # 8 small files
-    cat.overwrite_partitions("t", grid, distribute=False)  # + an old state
-    rep = cat.optimize_table("t", target_file_bytes=8_000, keep_last=0)
-    assert rep["compacted"]
-    assert rep["removed_dirs"] >= 1  # the superseded snapshot was vacuumed
-    assert cat.read("t").count() == 2000
-    assert cat.verify_table("t")["ok"]
-    rep2 = cat.optimize_table("t", target_file_bytes=8_000, keep_last=0)
-    assert not rep2["compacted"]  # already compacted: no rewrite
-
-
-def test_tags_survive_checkpoint_manifest_and_later_vacuum(spark, tmp_path):
-    """Manifest checkpoint must carry live tags through the squash: the tag
-    still resolves, its state still reads, its files survive BOTH the
-    checkpoint's own vacuum and a LATER expire_snapshots(keep_last=0), and
-    partitions live only in the tagged state never leak into the current
-    state (base records replace, not merge)."""
-    cat = ParquetManifestCatalog(spark, str(tmp_path / "ckpt_tags"))
-    mk = lambda rows: spark.createDataFrame(rows, "k string, bucket_date string, v int")
-    s1 = cat.overwrite_partitions(
-        "t", mk([("a", "2024-01-01", 1), ("b", "2024-01-02", 10)])
-    )
-    cat.tag_snapshot("t", "v1.0")
-    cat.delete_where_older("t", cutoff="2024-01-02")  # drop 01-01 from live
-    cat.overwrite_partitions("t", mk([("a", "2024-01-02", 2)]))
-    cat.overwrite_partitions("t", mk([("a", "2024-01-02", 3)]))
-
-    cat.checkpoint_manifest("t")
-    # tag still resolves + reads the pinned state
-    assert cat.resolve_tag("t", "v1.0") == s1["snapshot_id"]
-    assert sorted(r.v for r in cat.read_tag("t", "v1.0").collect()) == [1, 10]
-    # the expired partition lives ONLY in the tag, not the current state
-    assert sorted(r.v for r in cat.read("t").collect()) == [3]
-    # a later vacuum must still treat the tagged state as reachable
-    cat.expire_snapshots("t", keep_last=0)
-    assert sorted(r.v for r in cat.read_tag("t", "v1.0").collect()) == [1, 10]
-    assert sorted(r.v for r in cat.read("t").collect()) == [3]
-    # optimize_table's checkpoint-over path must not break tags either
-    cat.overwrite_partitions("t", mk([("a", "2024-01-02", 4)]))
-    cat.optimize_table("t", checkpoint_over=1, keep_last=0)
-    assert sorted(r.v for r in cat.read_tag("t", "v1.0").collect()) == [1, 10]

@@ -1,7 +1,8 @@
 """Local replica of the driver's correctness harness: run every queries()
 entry at sf0.001, compare against oracle_sql() via DuckDB — row count,
 column names, and an order-insensitive value hash. Also: every package
-module is reachable by imports from a contract entry point."""
+module is reachable by imports from a contract entry point, and every public
+top-level name of the package is named outside the tests."""
 
 import ast
 import glob
@@ -250,3 +251,76 @@ def test_every_module_reachable_from_a_contract():
     unreached = {_module_name(p) for p in pkg} - seen
     assert unreached - UNREACHED_ALLOWED == set(), "no contract imports these"
     assert UNREACHED_ALLOWED <= unreached, "reachable now: drop from the allowlist"
+
+
+# Public top-level names that no file outside tests/ names, each kept for a
+# reason. Every public name of an UNREACHED_ALLOWED module is exempt too.
+UNREFERENCED_ALLOWED = {
+    # window-function step/dip/flatline checks: q03, q04 and q05 are their
+    # SQL forms (COVERAGE), and the stage-1 stencil tests check against dip_flag
+    "olympian_spark.operators.qc_series.step_flag",
+    "olympian_spark.operators.qc_series.dip_flag",
+    "olympian_spark.operators.qc_series.with_flatline_flag",
+    # per-role/per-tool rollup (COVERAGE #19, q11/q12): the reference that
+    # rollup_dims_fused is tested against
+    "olympian_spark.operators.rollup.rollup_by_dimension",
+    # calendar week/month grains over tier_1d with exact p95 (COVERAGE #20)
+    "olympian_spark.operators.rollup.rollup_coarser",
+    # two-stage skew salting (COVERAGE #23); q19 is its SQL form
+    "olympian_spark.operators.rollup.salted_agg",
+    # the production storage target; its tests skip without the Iceberg jar
+    "olympian_spark.sources.catalog.IcebergCatalog",
+}
+
+
+def _public_defs():
+    """``module.name`` of every public top-level function and class in the
+    package."""
+    out = set()
+    for path in glob.glob(os.path.join(REPO, "olympian_spark", "**", "*.py"), recursive=True):
+        with open(path) as f:
+            tree = ast.parse(f.read(), path)
+        out.update(
+            f"{_module_name(path)}.{node.name}"
+            for node in tree.body
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
+            and not node.name.startswith("_")
+        )
+    return out
+
+
+def _names_outside_tests():
+    """Every identifier that a .py file outside tests/ names: ast Names,
+    Attribute attributes and import aliases. A top-level definition's
+    references to its own name (recursion) do not count."""
+    names = set()
+    for path in glob.glob(os.path.join(REPO, "**", "*.py"), recursive=True):
+        if os.path.relpath(path, REPO).split(os.sep)[0] == "tests":
+            continue
+        with open(path) as f:
+            tree = ast.parse(f.read(), path)
+        for top in tree.body:
+            own = getattr(top, "name", None)
+            for node in ast.walk(top):
+                if isinstance(node, ast.Name):
+                    name = node.id
+                elif isinstance(node, ast.Attribute):
+                    name = node.attr
+                elif isinstance(node, ast.alias):
+                    name = node.name.rsplit(".", 1)[-1]
+                else:
+                    continue
+                if name != own:
+                    names.add(name)
+    return names
+
+
+def test_every_public_name_referenced_outside_tests():
+    defs = {
+        q for q in _public_defs()
+        if q.rsplit(".", 1)[0] not in UNREACHED_ALLOWED
+    }
+    names = _names_outside_tests()
+    unreferenced = {q for q in defs if q.rsplit(".", 1)[1] not in names}
+    assert unreferenced - UNREFERENCED_ALLOWED == set(), "only tests name these"
+    assert UNREFERENCED_ALLOWED <= unreferenced, "referenced now: drop from the allowlist"

@@ -64,20 +64,6 @@ def test_negative_dod_and_large_jumps():
     _roundtrip(ts, [np.arange(8, dtype=np.float32)])
 
 
-def test_singleton_blocks_byte_identical():
-    from olympian_spark.functions.gorilla import encode_singleton_blocks
-
-    rng = np.random.default_rng(8)
-    ts = rng.integers(0, 2**60, size=500).astype(np.int64)
-    a = rng.normal(0, 100, 500).astype(np.float32)
-    b = rng.integers(0, 1000, 500).astype(np.float32)
-    a[::7] = np.nan
-    vec = encode_singleton_blocks(ts, a, b)
-    for i in range(500):
-        ref = encode_block(ts[i : i + 1], [a[i : i + 1], b[i : i + 1]])
-        assert vec[i] == ref, f"mismatch at {i}"
-
-
 def test_decode_throughput():
     """The byte-aligned OG2 layout exists so decode is numpy-vectorized:
     >=5M pts/s nominal (~10-25M measured). Assert a 3M floor so the test

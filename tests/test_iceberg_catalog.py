@@ -8,11 +8,11 @@ set before the first session in the process):
     SPARK_GRAFT_ICEBERG_JAR=/path/to/iceberg-spark-runtime-4.0_2.13.jar \
         python -m pytest tests/test_iceberg_catalog.py -x -q
 
-The production config flip from the parquet+manifest fallback is exactly
-the four lines in the `iceberg_spark` fixture below (README "Production
-storage" section): add the jar, the extension, a catalog impl and a
-warehouse path — then `IcebergCatalog(spark)` is a drop-in for
-`ParquetManifestCatalog`.
+The session needs the four settings in the `iceberg_spark` fixture below
+(README "Production storage" section): the jar, the extension, a catalog
+impl and a warehouse path. `IcebergCatalog` covers only part of the
+`ParquetManifestCatalog` surface; `refresh_tiers` cannot run on it (see its
+docstring).
 """
 
 import os
@@ -108,19 +108,6 @@ def test_maintenance_procedures_run(iceberg_spark, cat):
     cat.overwrite_partitions("t_maint", df)  # second snapshot
     snap = cat.current_snapshot("t_maint")
     assert snap is not None
-    cat.compact_partitions("t_maint")
-    cat.checkpoint_manifest("t_maint")
     cat.expire_snapshots("t_maint", keep_last=1)
     assert cat.read("t_maint").count() == 3
 
-
-def test_rollback_restores_prior_state(iceberg_spark, cat):
-    from pyspark.sql import functions as F
-
-    df = _tier_rows(iceberg_spark, ["2024-04-01"])
-    cat.overwrite_partitions("t_rb", df)
-    first = cat.current_snapshot("t_rb")["snapshot_id"]
-    cat.overwrite_partitions("t_rb", df.withColumn("n_turns", F.lit(7)))
-    assert cat.read("t_rb").filter("n_turns = 7").count() == 3
-    cat.rollback("t_rb", first)
-    assert cat.read("t_rb").filter("n_turns = 7").count() == 0
