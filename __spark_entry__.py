@@ -1033,11 +1033,13 @@ def q_gorilla_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     conversation with n_points NEGATED if the roundtrip is not bit-exact.
     That folds the engine-native pass/fail into a column DuckDB can oracle
     (count(*) per conversation), so the driver hash checks both the codec's
-    keyspace and that every conversation roundtripped."""
+    keyspace and that every conversation roundtripped. Each batch's
+    conversations are encoded by one ``encode_blocks`` call, the encoder
+    the tier kernels use."""
     import numpy as np
     import pyarrow as pa
 
-    from olympian_spark.functions.gorilla import decode_block, encode_block
+    from olympian_spark.functions.gorilla import decode_block, encode_blocks
     from pyspark.sql import functions as F
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
@@ -1070,11 +1072,12 @@ def q_gorilla_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         gap = np.empty(ts.size, np.float32)
         gap[1:] = (np.diff(ts).astype(np.float64) / 1e6).astype(np.float32)
         gap[starts[:-1]] = np.float32(np.nan)
+        blocks = encode_blocks(ts, [gap, tl], starts)
         n_out = np.empty(starts.size - 1, np.int64)
         for k in range(starts.size - 1):
             lo, hi = starts[k], starts[k + 1]
             t_, g_, l_ = ts[lo:hi], gap[lo:hi], tl[lo:hi]
-            ts2, (g2, tl2) = decode_block(encode_block(t_, [g_, l_]))
+            ts2, (g2, tl2) = decode_block(blocks[k].as_py())
             ok = (
                 bool((ts2 == t_).all())
                 and bool((g2.view(np.uint32) == g_.view(np.uint32)).all())

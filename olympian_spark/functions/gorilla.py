@@ -36,6 +36,12 @@ within ~15% (regular cadence: 2 bits/pt vs 1; full-entropy float xor:
 
 Lossless roundtrip is property-tested (hypothesis) for arbitrary
 non-decreasing int64 timestamps and arbitrary f32 payloads incl. NaN/Inf.
+
+Two encoders write the layout. :func:`encode_blocks` is the production
+one: the tier kernels and the q24 driver query encode whole Arrow batches
+with it. :func:`encode_block` packs one block point by point in plain
+Python; it shares no code with ``encode_blocks`` and is the test reference
+that ``encode_blocks`` must match byte for byte.
 """
 
 from __future__ import annotations
@@ -45,22 +51,6 @@ import struct
 import numpy as np
 
 MAGIC = b"OG2"
-_NAN_BITS = np.uint32(0x7FC00000)
-
-# below this point count, plain-Python packing beats numpy's fixed per-call
-# overhead (tiny blocks dominate sparse 1m tiers)
-_SMALL_N = 32
-
-
-def _pack_tags(cls: np.ndarray) -> bytes:
-    """2-bit class tags, 4 per byte, MSB-first."""
-    m = cls.size
-    pad = (-m) % 4
-    if pad:
-        cls = np.concatenate([cls, np.zeros(pad, np.uint8)])
-    q = cls.reshape(-1, 4)
-    b = (q[:, 0] << 6) | (q[:, 1] << 4) | (q[:, 2] << 2) | q[:, 3]
-    return b.astype(np.uint8).tobytes()
 
 
 def _unpack_tags(buf: bytes, m: int) -> np.ndarray:
@@ -79,39 +69,7 @@ def _unpack_tags(buf: bytes, m: int) -> np.ndarray:
 
 
 def _encode_ts(ts: np.ndarray) -> bytes:
-    n = ts.size
-    if n == 0:
-        return b""
-    head = struct.pack("<q", int(ts[0]))
-    if n == 1:
-        return head
-    head += struct.pack("<q", int(ts[1]) - int(ts[0]))
-    if n == 2:
-        return head
-
-    deltas = np.diff(ts)
-    dod = np.diff(deltas)
-    nz = dod != 0
-    in8 = nz & (dod >= -128) & (dod <= 127)
-    in16 = nz & ~in8 & (dod >= -32768) & (dod <= 32767)
-    big = nz & ~in8 & ~in16
-    cls = np.zeros(dod.size, np.uint8)
-    cls[in8] = 1
-    cls[in16] = 2
-    cls[big] = 3
-    return b"".join(
-        (
-            head,
-            _pack_tags(cls),
-            dod[in8].astype(np.int8).tobytes(),
-            dod[in16].astype("<i2").tobytes(),
-            dod[big].astype("<i8").tobytes(),
-        )
-    )
-
-
-def _encode_ts_small(ts: np.ndarray) -> bytes:
-    """Byte-identical small-block path in plain Python."""
+    """One block's ts section in plain Python (the reference encoder)."""
     n = ts.size
     t = ts.tolist()
     if n == 0:
@@ -187,34 +145,7 @@ def _decode_ts(buf: bytes, n: int) -> np.ndarray:
 
 
 def _encode_floats(vals: np.ndarray) -> bytes:
-    bits = vals.view(np.uint32)
-    n = bits.size
-    if n == 0:
-        return b""
-    head = struct.pack("<I", int(bits[0]))
-    if n == 1:
-        return head
-    x = bits[1:] ^ bits[:-1]
-    nz = x != 0
-    lo = nz & (x < (1 << 16))
-    hi = nz & ~lo & ((x & np.uint32(0xFFFF)) == 0)
-    full = nz & ~lo & ~hi
-    cls = np.zeros(x.size, np.uint8)
-    cls[lo] = 1
-    cls[hi] = 2
-    cls[full] = 3
-    return b"".join(
-        (
-            head,
-            _pack_tags(cls),
-            x[lo].astype("<u2").tobytes(),
-            (x[hi] >> np.uint32(16)).astype("<u2").tobytes(),
-            x[full].astype("<u4").tobytes(),
-        )
-    )
-
-
-def _encode_floats_small(vals: np.ndarray) -> bytes:
+    """One float stream section in plain Python (the reference encoder)."""
     n = vals.size
     if n == 0:
         return b""
@@ -291,9 +222,10 @@ def _seg_arange(counts: np.ndarray) -> np.ndarray:
 def encode_blocks(
     ts_us: np.ndarray, streams: list[np.ndarray], starts: np.ndarray
 ) -> "pa.Array":
-    """Vectorized multi-block encoder: one OG2 block per ``starts`` segment,
-    byte-identical to ``encode_block`` over each slice (property-tested),
-    returned as a zero-copy pyarrow binary array (one data buffer + offsets).
+    """The production encoder: one OG2 block per ``starts`` segment,
+    byte-identical to the reference ``encode_block`` over each slice
+    (property-tested), returned as a zero-copy pyarrow binary array (one
+    data buffer + offsets).
 
     This removes the dominant per-bucket Python cost of the tier kernels:
     classing, tag packing and payload scatter run once over the whole batch
@@ -494,19 +426,22 @@ def _scatter_class(buf: np.ndarray, sec_off: np.ndarray, seg_of: np.ndarray,
 
 def encode_block(ts_us: np.ndarray, streams: list[np.ndarray]) -> bytes:
     """Encode one block: int64 µs timestamps + k float32 stat streams
-    (NaN = gap). All streams must have len(ts_us)."""
+    (NaN = gap). All streams must have len(ts_us).
+
+    The test reference for :func:`encode_blocks`: a point-by-point
+    plain-Python packer, slow on long blocks, that nothing in production
+    calls."""
     ts = np.ascontiguousarray(ts_us, dtype=np.int64)
     n = ts.size
-    small = n < _SMALL_N
     parts = [MAGIC, struct.pack("<BI", len(streams), n)]
-    tsb = _encode_ts_small(ts) if small else _encode_ts(ts)
+    tsb = _encode_ts(ts)
     parts.append(struct.pack("<I", len(tsb)))
     parts.append(tsb)
     for s in streams:
         s = np.ascontiguousarray(s, dtype=np.float32)
         if s.size != n:
             raise ValueError("stream length mismatch")
-        sb = _encode_floats_small(s) if small else _encode_floats(s)
+        sb = _encode_floats(s)
         parts.append(struct.pack("<I", len(sb)))
         parts.append(sb)
     return b"".join(parts)

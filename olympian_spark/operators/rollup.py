@@ -91,8 +91,6 @@ def _restore_bucket(df: DataFrame) -> DataFrame:
     ]
     return df.select(*cols)
 
-_GRAIN = {"minute": "minute", "hour": "hour", "day": "day", "week": "week", "month": "month"}
-
 # grains with no fixed µs period (week is Monday-anchored, month is
 # irregular): rolled up from tier_1d by rollup_coarser
 _CALENDAR_GRAINS = ("week", "month")
@@ -328,16 +326,14 @@ def rollup_tiers_fused(df: DataFrame) -> DataFrame:
     return _restore_bucket(out)
 
 
-def rollup_by_dimension(
-    df: DataFrame, dim_col: str, grain: str = "hour"
-) -> DataFrame:
-    """Per-role / per-tool rollups — pure relational (JVM, codegen).
+def rollup_by_dimension(df: DataFrame, dim_col: str) -> DataFrame:
+    """Per-role / per-tool hourly rollups — pure relational (JVM, codegen).
 
-    groupBy(bucket, dim): turn counts + mean text_len (double precision,
+    groupBy(hour, dim): turn counts + mean text_len (double precision,
     SQL-oracle-checkable). Salt-free: dimension cardinality is tiny and
     map-side partial aggregation absorbs the skew.
     """
-    bucket = F.date_trunc(_GRAIN[grain], F.col("ts").cast("timestamp"))
+    bucket = F.date_trunc("hour", F.col("ts").cast("timestamp"))
     return (
         df.groupBy(bucket.alias("bucket_start"), F.col(dim_col))
         .agg(
@@ -347,12 +343,10 @@ def rollup_by_dimension(
     )
 
 
-def rollup_dims_fused(
-    df: DataFrame, dims: tuple[str, ...] = ("role", "tool"), grain: str = "hour"
-) -> DataFrame:
-    """All dimension rollups in ONE pass over the input: explode each row
-    into (dim_kind, dim_value) pairs, then a single groupBy. Split with
-    ``filter(dim_kind = ...)``.
+def rollup_dims_fused(df: DataFrame) -> DataFrame:
+    """The hourly ``role`` and ``tool`` rollups in ONE pass over the input:
+    explode each row into (dim_kind, dim_value) pairs, then a single
+    groupBy. Split with ``filter(dim_kind = ...)``.
 
     Output: (dim_kind, bucket_start, dim_value, n_turns, mean_text_len);
     per-kind slices equal :func:`rollup_by_dimension` exactly (tested).
@@ -365,11 +359,11 @@ def rollup_dims_fused(
     explode doubles the rows entering partial aggregation, while the saved
     input scan is just a cache read.
     """
-    bucket = F.date_trunc(_GRAIN[grain], F.col("ts").cast("timestamp"))
+    bucket = F.date_trunc("hour", F.col("ts").cast("timestamp"))
     pairs = F.array(
         *[
             F.struct(F.lit(d).alias("dim_kind"), F.col(d).cast("string").alias("dim_value"))
-            for d in dims
+            for d in ("role", "tool")
         ]
     )
     return (

@@ -89,7 +89,7 @@ def build_tiers(
     # Both dimensions in one pass over the un-persisted scan (one re-scan
     # and text decode instead of one per dimension); slices are exactly
     # rollup_by_dimension's schema (tested).
-    dims = rollup_dims_fused(pre, ("role", "tool"), "hour")
+    dims = rollup_dims_fused(pre)
     if persist:
         tagged, dims = tagged.persist(), dims.persist()
     return {

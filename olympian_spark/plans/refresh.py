@@ -13,13 +13,13 @@ an **input watermark** (the max ingest timestamp of the batch). A run:
    affected conversation gets re-flagged when its successor arrives; the
    day of that turn must be rewritten too. Boundary partitions also hold
    buckets of UNAFFECTED conversations, so they are rewritten as
-   (existing rows minus affected convs) UNION (recomputed rows) — a
-   broadcast anti-join, never a full-table rewrite.
+   (existing rows minus affected convs) UNION (recomputed rows) — an
+   anti-join, never a full-table rewrite.
 3. **scope** — a full refresh (no ``since_watermark``) affects every day
    and every conversation, so it recomputes the input as-is and runs no
    scoping job. An incremental one recomputes tiers over exactly the
    affected conversations' full turn history (window context), via a
-   broadcast semi-join;
+   semi-join;
 4. **write** — the three tier tables go out in ONE Spark write
    (``ParquetManifestCatalog.overwrite_grouped``): rows tagged with their
    ``_grain`` are written with ``partitionBy("_grain", "bucket_date")``
@@ -93,7 +93,6 @@ def refresh_tiers(
     watermark: str,
     since_watermark: str | None = None,
     params: QcParams = QcParams(),
-    broadcast_conv_limit: int = 1_000_000,
 ) -> dict:
     """One refresh run. Returns {table: snapshot | 'skipped'}, or {} when
     there is nothing to refresh (no new rows, or an empty input).
@@ -102,15 +101,14 @@ def refresh_tiers(
     conversation is affected, so the input is used as-is and no scoping
     job runs. Otherwise the run is incremental and scoped to the affected
     conversations. That set is read by the scoping semi-join and by the
-    boundary-day anti-join of each tier table. Broadcasting it is only safe
-    when it is small: a busy day at 10^12-turn scale has millions of
-    distinct conv_ids, and a forced broadcast OOMs. The set is persisted,
-    counted once, and broadcast only under ``broadcast_conv_limit``; above
-    the limit the joins fall back to shuffle semi/anti joins, which AQE may
-    still convert.
+    boundary-day anti-join of each tier table, so it is persisted. It is
+    not broadcast by hint: a busy day at 10^12-turn scale has millions of
+    distinct conv_ids, and a forced broadcast OOMs. AQE (on in
+    ``get_spark``) turns the joins into broadcasts at runtime when the set
+    is small, and leaves them shuffle joins when it is not.
     """
     full = not since_watermark
-    convs = convs_j = None
+    convs = None
     new_days: list[str] | None = None  # None: every day (full refresh)
     boundary_days: list[str] = []
     if not full:
@@ -123,8 +121,7 @@ def refresh_tiers(
             .distinct()
             .persist()
         )
-        convs_j = F.broadcast(convs) if convs.count() <= broadcast_conv_limit else convs
-        transcripts = transcripts.join(convs_j, "conv_id", "left_semi")
+        transcripts = transcripts.join(convs, "conv_id", "left_semi")
         boundary_days = [
             str(r[0])
             for r in transcripts.filter(
@@ -166,12 +163,12 @@ def refresh_tiers(
                 # buckets: keep those, replace the affected ones
                 merges.append(
                     catalog.read(table).filter(merge)
-                    .join(convs_j, "conv_id", "left_anti")
+                    .join(convs, "conv_id", "left_anti")
                     .withColumn("_grain", F.lit(grain).cast("tinyint"))
                 )
         written = {}
         if pending:
-            out = with_bucket_date(tiers["_tagged"], "bucket_start").filter(wanted)
+            out = with_bucket_date(tiers["_tagged"]).filter(wanted)
             for keep in merges:
                 out = out.unionByName(keep.select(*out.columns))
             written = catalog.overwrite_grouped(pending, out, input_watermark=watermark)
@@ -191,9 +188,8 @@ def refresh_tiers(
                 results[table] = "skipped"
                 continue
             results[table] = catalog.overwrite_partitions(
-                table, with_bucket_date(tiers[table], "bucket_start").filter(scope),
-                partition_col="bucket_date", input_watermark=watermark,
-                stats_cols=["bucket_start"],
+                table, with_bucket_date(tiers[table]).filter(scope),
+                input_watermark=watermark,
             )
         return results
     finally:

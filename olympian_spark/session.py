@@ -3,12 +3,15 @@
 Local mode is the test/bench proxy for a multi-executor cluster; every knob
 here is chosen so the same code scales on 1000 executors:
 
-- AQE on (runtime coalescing + skew-join splitting),
+- local mode sized to the host: ``SPARK_GRAFT_CPUS`` cores, else every CPU
+  this process may run on,
+- AQE on (runtime coalescing, skew-join splitting, runtime broadcasts),
 - Arrow on (the custom kernels are ``mapInArrow`` operators over Arrow
   record batches),
-- shuffle partitions sized to cores locally (on a real cluster this is
+- shuffle partitions ``max(2 x cores, 8)`` (on a real cluster this is
   ``max(2 x total-cores, input-partitions)`` — AQE coalesces down),
-- UTC session timezone (spine arithmetic must be tz-stable),
+- :data:`FILE_CONF`: UTC session timezone (spine arithmetic must be
+  tz-stable) and TIMESTAMP_MICROS parquet output (footer min/max bounds),
 - parquet vectorized reader + pushdown left at defaults (on),
 - Python workers forked from :mod:`olympian_spark.worker_daemon`.
 
@@ -31,19 +34,24 @@ import os
 
 from pyspark.sql import SparkSession
 
+# SQL confs that shape the files a session writes; get_spark and the
+# spark-submit job (scripts/run_refresh.py) both apply them. INT96, Spark's
+# default timestamp type, carries NO parquet min/max statistics: it would
+# blind the catalog's bucket_start bounds and row-group pruning.
+FILE_CONF = {
+    "spark.sql.session.timeZone": "UTC",
+    "spark.sql.parquet.outputTimestampType": "TIMESTAMP_MICROS",
+    "spark.sql.parquet.int96RebaseModeInRead": "CORRECTED",
+}
+
 
 def get_spark(
     app_name: str = "olympian_spark",
     cores: int | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
     if cores is None:
-        cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    if shuffle_partitions is None:
-        # local proxy: 2x cores. On a real cluster this would be sized to
-        # the stage's input (AQE coalesces the excess).
-        shuffle_partitions = max(2 * cores, 8)
+        cores = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
 
     # shuffle/spill to tmpfs when available: the sandbox's virtio disk
     # serializes concurrent shuffle writers (measured 2.5x on the QC stage);
@@ -56,7 +64,9 @@ def get_spark(
     builder = (
         SparkSession.builder.master(f"local[{cores}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        # local proxy: 2x cores. On a real cluster this would be sized to
+        # the stage's input (AQE coalesces the excess).
+        .config("spark.sql.shuffle.partitions", str(max(2 * cores, 8)))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         # Spark 4.1 AQE coalesces post-shuffle stages purely by BYTES
@@ -80,7 +90,7 @@ def get_spark(
         # pass zstd via extra_conf (worth it on real clusters where shuffle
         # crosses disks/network).
         .config("spark.io.compression.codec", "lz4")
-        .config("spark.sql.session.timeZone", "UTC")
+        .config(map=FILE_CONF)
         # columnar-cache compression is pure overhead for the engine's hot
         # cached frame (the fused tier table): its dominant bytes are
         # Gorilla blocks — already-compressed, high-entropy binary the
@@ -102,12 +112,6 @@ def get_spark(
             os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_mem(),
         )
         .config("spark.ui.enabled", "false")
-        .config("spark.sql.parquet.int96RebaseModeInRead", "CORRECTED")
-        # modern timestamp encoding: INT96 is legacy, 12 bytes/value and
-        # carries NO row-group min/max statistics — which would blind the
-        # manifest column-bounds data skipping (catalog stats_cols) and
-        # parquet row-group pruning on every tier's bucket_start
-        .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
         # fork Python workers from a daemon that skips the per-task re-read
         # of unchanged zip archives (see module docstring). The daemon starts
         # via ``python -m`` before any --py-files exist, so the package's

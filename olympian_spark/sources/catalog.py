@@ -7,12 +7,14 @@ the same table-format semantics from scratch on plain parquet, following
 the published lakehouse copy-on-write design (immutable data files + an
 atomically-swapped metadata pointer):
 
-- **layout**: every commit writes its partitions into a FRESH snapshot
-  directory ``root/<name>/data/s<id>/<part_col>=<value>/*.parquet`` —
-  data files are immutable once written, never modified in place
+- **layout**: every table is partitioned on ``bucket_date``, and every
+  commit writes its partitions into a FRESH snapshot directory
+  ``root/<name>/data/s<id>/bucket_date=<day>/*.parquet`` — data files are
+  immutable once written, never modified in place
 - **commit point**: an atomic manifest swap (`os.replace`) appends the
   snapshot record to ``root/<name>/_manifest.json`` with per-partition
-  lineage + metrics (rows, bytes, wall_s, input_watermark). A crash before
+  lineage + metrics (rows, bytes, wall_s, input_watermark) and the
+  partition's footer ``bucket_start`` bounds. A crash before
   the swap leaves an orphan directory invisible to every reader (healed by
   the idempotent rerun, reclaimed by ``expire_snapshots``; a grouped
   write's ``root/_staging`` is cleared by the next grouped write) — true
@@ -27,16 +29,20 @@ atomically-swapped metadata pointer):
   directory is moved into its fresh snapshot directory and committed
 - **time travel**: ``read(table, as_of=snapshot_id)`` reconstructs any
   historical state by folding the manifest up to that snapshot
-- **retention**: ``delete_where_older`` is metadata-only (partitions drop
-  out of the live set; files stay until vacuumed) — the Iceberg
-  ``DELETE WHERE`` partition-predicate fast path
+- **retention**: ``delete_where_older`` is metadata-only (days drop out of
+  the live set; files stay until vacuumed) — the Iceberg ``DELETE WHERE``
+  partition-predicate fast path
+- **data skipping**: ``read_where_between`` scans only the partitions
+  whose committed bounds overlap the range
 - **vacuum**: ``expire_snapshots`` physically reclaims files no reachable
   snapshot references (Iceberg ``expireSnapshots`` + orphan-file removal)
 - **incremental refresh**: callers compute only changed partitions (from
   the input watermark recorded in the last snapshot) and overwrite those.
 
 The manifest holds three ops: ``overwrite_partitions``,
-``retention_delete`` and ``expire_snapshots``.
+``retention_delete`` and ``expire_snapshots``. Records written before the
+layout was fixed also name their ``partition_col``; the fold accepts
+``bucket_date`` there and raises on any other.
 
 Single-writer-per-table is assumed (as with Iceberg's optimistic locking,
 concurrent writers need a coordinating catalog service; at 100 TB that is
@@ -53,22 +59,23 @@ import os
 import shutil
 import time
 from concurrent.futures import ThreadPoolExecutor
-from urllib.parse import unquote
 from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
+# The one layout: every table is partitioned by day, and every commit records
+# footer bounds of the bucket start (metadata-only time-range skipping).
+PARTITION_COL = "bucket_date"
+STATS_COL = "bucket_start"
+
+
 def _json_stat(v):
-    """Parquet row-group statistic -> JSON-storable, order-preserving value
-    (bytes decode to str; datetimes to ISO strings — lexicographic order
-    matches chronological for ISO timestamps)."""
-    if isinstance(v, bytes):
-        return v.decode("utf-8", "replace")
-    if hasattr(v, "isoformat"):
-        return v.isoformat()
-    return v
+    """Bound value -> JSON-storable, order-preserving value (datetimes to
+    ISO strings — lexicographic order matches chronological for ISO
+    timestamps)."""
+    return v.isoformat() if hasattr(v, "isoformat") else v
 
 
 class ParquetManifestCatalog:
@@ -120,25 +127,29 @@ class ParquetManifestCatalog:
 
     @staticmethod
     def _fold(snaps: list, as_of: int | None = None) -> dict:
-        """Partition -> lineage record at snapshot ``as_of`` (None = head).
+        """Day -> lineage record at snapshot ``as_of`` (None = head).
 
         ``expire_snapshots`` is physical-only and does not change state. Any
         other op raises ``ValueError``: an older version of this catalog
         also wrote ``compact``, ``base``, ``rollback`` and ``tag`` records,
-        and skipping one would fold to a wrong live set.
+        and skipping one would fold to a wrong live set. So does a record
+        partitioned on anything but ``bucket_date``, which an older version
+        could also write: its values are not days.
         """
         live: dict = {}
         for snap in snaps:
             if as_of is not None and snap["snapshot_id"] > as_of:
                 break
+            pcol = snap.get("partition_col", PARTITION_COL)
+            if pcol != PARTITION_COL:
+                raise ValueError(
+                    f"snapshot {snap['snapshot_id']}: partitioned on {pcol!r},"
+                    f" not {PARTITION_COL!r}"
+                )
             op = snap["op"]
             if op == "overwrite_partitions":
                 for p, rec in snap["partitions"].items():
-                    live[p] = {
-                        **rec,
-                        "snapshot_id": snap["snapshot_id"],
-                        "partition_col": snap.get("partition_col", "bucket_date"),
-                    }
+                    live[p] = {**rec, "snapshot_id": snap["snapshot_id"]}
             elif op == "retention_delete":
                 for p in snap["partitions"]:
                     live.pop(p, None)
@@ -167,13 +178,12 @@ class ParquetManifestCatalog:
         self,
         table: str,
         df: DataFrame,
-        partition_col: str = "bucket_date",
         input_watermark: str | None = None,
-        stats_cols: list | None = None,
     ) -> dict:
         """Copy-on-write partition overwrite + atomic manifest commit.
 
-        The write is hash-partitioned by ``partition_col`` (Iceberg's hash
+        ``df`` carries ``bucket_date``, the partition column of every table.
+        The write is hash-partitioned by it (Iceberg's hash
         distribution-mode): without it, EVERY task writes a file into
         EVERY partition directory it holds rows for — tasks x days files
         (measured: 14k files for 8k day-partitions at 8 cores), which
@@ -187,7 +197,8 @@ class ParquetManifestCatalog:
         (one Spark job — no defensive checkpoint: existing files are never
         touched, so a refresh that reads this table while overwriting it is
         safe by construction). Per-partition row/byte metrics come from the
-        written parquet footers (driver-side metadata read, no second scan).
+        written parquet footers (driver-side metadata read, no second scan),
+        and so are the ``bucket_start`` bounds when ``df`` has that column.
         Only partitions present in ``df`` advance to the new snapshot;
         everything else keeps its prior files (Iceberg overwritePartitions
         semantics). Returns the snapshot record.
@@ -195,12 +206,9 @@ class ParquetManifestCatalog:
         t0 = time.time()
         sdir = self._new_snap_dir(table)
         n = 2 * self.spark.sparkContext.defaultParallelism
-        df = df.repartition(n, partition_col)
-        df.write.mode("overwrite").partitionBy(partition_col).parquet(sdir)
-        return self._commit_written(
-            table, sdir, partition_col, time.time() - t0, input_watermark,
-            stats_cols=stats_cols,
-        )
+        df = df.repartition(n, PARTITION_COL)
+        df.write.mode("overwrite").partitionBy(PARTITION_COL).parquet(sdir)
+        return self._commit_written(table, sdir, time.time() - t0, input_watermark)
 
     def overwrite_grouped(
         self,
@@ -252,10 +260,7 @@ class ParquetManifestCatalog:
                 sdir = self._new_snap_dir(table)
                 os.makedirs(os.path.dirname(sdir), exist_ok=True)
                 os.replace(gdir, sdir)
-                out[table] = self._commit_written(
-                    table, sdir, "bucket_date", wall, input_watermark,
-                    stats_cols=["bucket_start"],
-                )
+                out[table] = self._commit_written(table, sdir, wall, input_watermark)
             return out
         finally:
             shutil.rmtree(stage, ignore_errors=True)
@@ -281,14 +286,13 @@ class ParquetManifestCatalog:
         self,
         table: str,
         sdir: str,
-        partition_col: str,
         wall: float,
         input_watermark: str | None,
-        stats_cols: list | None = None,
     ) -> dict:
-        """Commit the ``partition_col=<value>`` directories written under
+        """Commit the ``bucket_date=<day>`` directories written under
         ``sdir`` (the table's next snapshot directory) as one snapshot, with
-        per-partition metrics read from the parquet footers."""
+        per-partition metrics and ``bucket_start`` bounds read from the
+        parquet footers."""
         import pyarrow.parquet as pq
 
         # Per-partition metrics from parquet footers. The reads are
@@ -297,10 +301,6 @@ class ParquetManifestCatalog:
         # pool — sequential footer opens would serialize the commit on
         # object storage latency.
         def _part_metrics(d: str):
-            # Manifest partition values are stored in Spark's escaped
-            # directory-name form (consistent with every path-rebuild and
-            # the vacuum reference set); comparisons against real column
-            # values unescape at the comparison site.
             pval = d.split("=", 1)[1]
             pdir = os.path.join(sdir, d)
             files = [f for f in os.listdir(pdir) if f.endswith(".parquet")]
@@ -312,44 +312,30 @@ class ParquetManifestCatalog:
                 "wall_s": round(wall, 3),
                 "input_watermark": input_watermark,
             }
-            stats: dict = {}
+            ranges = []
             for f in files:
                 md = pq.ParquetFile(os.path.join(pdir, f)).metadata
                 rec["rows"] += md.num_rows
-                if not stats_cols:
-                    continue
                 # Iceberg-style column bounds from parquet row-group
                 # footers — metadata only, no data pages read
-                name_to_idx = {
-                    md.schema.column(i).name: i for i in range(md.num_columns)
-                }
-                for col in stats_cols:
-                    i = name_to_idx.get(col)
-                    if i is None:
-                        continue
-                    for rg in range(md.num_row_groups):
-                        st = md.row_group(rg).column(i).statistics
-                        if st is None or not st.has_min_max:
-                            continue
-                        lo, hi = _json_stat(st.min), _json_stat(st.max)
-                        if col not in stats:
-                            stats[col] = [lo, hi]
-                        else:
-                            stats[col][0] = min(stats[col][0], lo)
-                            stats[col][1] = max(stats[col][1], hi)
-            if stats:
-                rec["stats"] = stats
+                if STATS_COL in md.schema.names:
+                    i = md.schema.names.index(STATS_COL)
+                    ranges += [md.row_group(g).column(i).statistics
+                               for g in range(md.num_row_groups)]
+            ranges = [st for st in ranges if st is not None and st.has_min_max]
+            if ranges:
+                rec["stats"] = {STATS_COL: [min(_json_stat(st.min) for st in ranges),
+                                            max(_json_stat(st.max) for st in ranges)]}
             return pval, rec
 
         dirs = [
             d for d in sorted(os.listdir(sdir))
-            if d.startswith(f"{partition_col}=")
+            if d.startswith(f"{PARTITION_COL}=")
         ]
         with ThreadPoolExecutor(max_workers=16) as pool:
             parts = dict(pool.map(_part_metrics, dirs))
         return self._append_snapshot(
             table, "overwrite_partitions", parts, input_watermark=input_watermark,
-            partition_col=partition_col,
         )
 
     def read(self, table: str, as_of: int | None = None) -> DataFrame:
@@ -371,11 +357,11 @@ class ParquetManifestCatalog:
         reusable for partition-pruned reads like :meth:`read_where_between`)."""
         groups: dict[int, list] = {}
         for pval, rec in live.items():
-            groups.setdefault(rec["snapshot_id"], []).append((pval, rec["partition_col"]))
+            groups.setdefault(rec["snapshot_id"], []).append(pval)
         out = None
         for sid in sorted(groups):
             base = self._snap_dir(table, sid)
-            paths = [os.path.join(base, f"{pcol}={pval}") for pval, pcol in groups[sid]]
+            paths = [os.path.join(base, f"{PARTITION_COL}={pval}") for pval in groups[sid]]
             part = self.spark.read.option("basePath", base).parquet(*paths)
             # allowMissingColumns = schema evolution: files written before a
             # column was added null-fill it (Iceberg add-column semantics)
@@ -388,8 +374,9 @@ class ParquetManifestCatalog:
         """Live partitions whose manifest [min, max] bounds for ``col``
         overlap [lo, hi] — METADATA-ONLY data skipping (the Iceberg
         lower_bounds/upper_bounds trick at partition granularity).
-        Partitions committed without ``stats_cols`` carry no bounds and
-        are conservatively kept."""
+        Commits record bounds for ``bucket_start`` only; a partition without
+        recorded bounds for ``col`` (no such column, or only NULLs in it) is
+        conservatively kept."""
         lo, hi = _json_stat(lo), _json_stat(hi)
         out = {}
         for pval, rec in self.committed_partitions(table).items():
@@ -427,8 +414,7 @@ class ParquetManifestCatalog:
         live = self.committed_partitions(table)
         for pval, rec in sorted(live.items()):
             pdir = os.path.join(
-                self._snap_dir(table, rec["snapshot_id"]),
-                f"{rec['partition_col']}={pval}",
+                self._snap_dir(table, rec["snapshot_id"]), f"{PARTITION_COL}={pval}"
             )
             if not os.path.isdir(pdir):
                 issues.append(f"{pval}: missing directory {pdir}")
@@ -447,10 +433,8 @@ class ParquetManifestCatalog:
                 )
         return {"ok": not issues, "partitions": len(live), "issues": issues}
 
-    def delete_where_older(
-        self, table: str, cutoff: str, partition_col: str = "bucket_date"
-    ) -> dict:
-        """Retention expiry: drop whole partitions with value < cutoff.
+    def delete_where_older(self, table: str, cutoff: str) -> dict:
+        """Retention expiry: drop whole day partitions before ``cutoff``.
 
         Partition-predicate delete — METADATA-ONLY (the Iceberg
         ``DELETE WHERE`` fast path): expired partitions leave the live set
@@ -458,17 +442,12 @@ class ParquetManifestCatalog:
         ``expire_snapshots`` vacuums them, so prior snapshots stay
         time-travel-readable.
         """
-        live = self.committed_partitions(table)
-        # Manifest values are dir-escaped; compare the unescaped (real)
-        # value against the caller's cutoff. No-op for bucket_date.
         dropped = {
             pval: {"rows": 0, "bytes": 0, "wall_s": 0.0}
-            for pval, rec in sorted(live.items())
-            if rec["partition_col"] == partition_col and unquote(pval) < cutoff
+            for pval in sorted(self.committed_partitions(table))
+            if pval < cutoff
         }
-        return self._append_snapshot(
-            table, "retention_delete", dropped, cutoff=cutoff, partition_col=partition_col
-        )
+        return self._append_snapshot(table, "retention_delete", dropped, cutoff=cutoff)
 
     def expire_snapshots(self, table: str, keep_last: int = 0) -> dict:
         """Vacuum: physically delete files no reachable state references.
@@ -487,7 +466,7 @@ class ParquetManifestCatalog:
         referenced = set()
         for as_of in keep_states:
             for pval, rec in self._fold(snaps, as_of).items():
-                referenced.add((rec["snapshot_id"], rec["partition_col"], pval))
+                referenced.add((rec["snapshot_id"], pval))
         removed = 0
         data = self._data_dir(table)
         if os.path.isdir(data):
@@ -503,8 +482,7 @@ class ParquetManifestCatalog:
                 for pd_ in sorted(os.listdir(sdir)):
                     if "=" not in pd_:
                         continue
-                    pcol, pval = pd_.split("=", 1)
-                    if (sid, pcol, pval) not in referenced:
+                    if (sid, pd_.split("=", 1)[1]) not in referenced:
                         shutil.rmtree(os.path.join(sdir, pd_))
                         removed += 1
                 if not any("=" in e for e in os.listdir(sdir)):
@@ -513,17 +491,14 @@ class ParquetManifestCatalog:
             table, "expire_snapshots", {}, removed_dirs=removed, keep_last=keep_last
         )
 
-    def retention_cutoff(self, table: str, partition_col: str = "bucket_date") -> str | None:
+    def retention_cutoff(self, table: str) -> str | None:
         """Latest retention cutoff recorded for the table (max over all
         ``retention_delete`` snapshots), or None if retention never ran.
         Writers consult this to avoid re-creating expired partitions."""
-        cutoffs = []
-        for s in self._load_manifest(table)["snapshots"]:
-            if (
-                s["op"] == "retention_delete"
-                and s.get("partition_col", "bucket_date") == partition_col
-            ):
-                cutoffs.append(s["cutoff"])
+        cutoffs = [
+            s["cutoff"] for s in self._load_manifest(table)["snapshots"]
+            if s["op"] == "retention_delete"
+        ]
         return max(cutoffs) if cutoffs else None
 
     def manifest_df(self, table: str) -> DataFrame:
@@ -556,9 +531,9 @@ class ParquetManifestCatalog:
         return self.spark.createDataFrame(recs)
 
 
-def with_bucket_date(df: DataFrame, src_col: str = "bucket_start") -> DataFrame:
-    """Standard partition column: calendar date of the bucket."""
-    return df.withColumn("bucket_date", F.to_date(F.col(src_col)))
+def with_bucket_date(df: DataFrame) -> DataFrame:
+    """The partition column: calendar date of ``bucket_start``."""
+    return df.withColumn(PARTITION_COL, F.to_date(F.col(STATS_COL)))
 
 
 class IcebergCatalog:
@@ -567,6 +542,7 @@ class IcebergCatalog:
 
     Requires an Iceberg runtime jar + a configured catalog (not present in
     this sandbox — the constructor verifies and raises with instructions).
+    Tables have the fallback's one layout: partitioned on ``bucket_date``.
     The methods translate the fallback's:
 
     - overwrite_partitions -> ``df.writeTo(table).overwritePartitions()``
@@ -579,10 +555,10 @@ class IcebergCatalog:
     - expire_snapshots     -> the ``expire_snapshots`` procedure
 
     It is NOT a drop-in for ``refresh_tiers``, which also calls
-    ``overwrite_grouped``, ``retention_cutoff`` and
-    ``overwrite_partitions(stats_cols=...)``; none of these exists here.
+    ``overwrite_grouped`` and ``retention_cutoff``; neither exists here.
     Nor does it have ``read(as_of=...)``, ``committed_partitions``,
-    ``pruned_partitions``, ``read_where_between`` or ``verify_table``.
+    ``pruned_partitions``, ``read_where_between`` or ``verify_table``
+    (Iceberg keeps column bounds per data file itself).
     """
 
     def __init__(self, spark: SparkSession, catalog_name: str = "iceberg"):
@@ -598,7 +574,6 @@ class IcebergCatalog:
             )
 
     def overwrite_partitions(self, table: str, df: DataFrame,
-                             partition_col: str = "bucket_date",
                              input_watermark: str | None = None):
         full = f"{self.catalog}.{table}"
         writer = df.writeTo(full)
@@ -607,7 +582,7 @@ class IcebergCatalog:
         if not self.spark.catalog.tableExists(full):
             # first commit creates the partitioned table (overwritePartitions
             # requires an existing table)
-            writer.partitionedBy(F.col(partition_col)).create()
+            writer.partitionedBy(F.col(PARTITION_COL)).create()
         else:
             writer.overwritePartitions()
         return self.current_snapshot(table)
@@ -615,10 +590,9 @@ class IcebergCatalog:
     def read(self, table: str) -> DataFrame:
         return self.spark.table(f"{self.catalog}.{table}")
 
-    def delete_where_older(self, table: str, cutoff: str,
-                           partition_col: str = "bucket_date"):
+    def delete_where_older(self, table: str, cutoff: str):
         self.spark.sql(
-            f"DELETE FROM {self.catalog}.{table} WHERE {partition_col} < DATE '{cutoff}'"
+            f"DELETE FROM {self.catalog}.{table} WHERE {PARTITION_COL} < DATE '{cutoff}'"
         )
         return self.current_snapshot(table)
 

@@ -28,10 +28,12 @@ def main() -> None:
     args = ap.parse_args()
 
     from olympian_spark.plans.refresh import apply_retention, refresh_tiers
+    from olympian_spark.session import FILE_CONF
     from olympian_spark.sources.catalog import ParquetManifestCatalog
 
-    spark = SparkSession.builder.getOrCreate()
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    spark = SparkSession.builder.getOrCreate()  # --master decides the master
+    for k, v in FILE_CONF.items():
+        spark.conf.set(k, v)
     cat = ParquetManifestCatalog(spark, args.store)
     transcripts = spark.read.parquet(args.input)
     results = refresh_tiers(

@@ -10,6 +10,6 @@ from olympian_spark.session import get_spark  # noqa: E402
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(app_name="olympian_spark_tests", cores=8, shuffle_partitions=8)
+    s = get_spark(app_name="olympian_spark_tests")
     yield s
     s.stop()

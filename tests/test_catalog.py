@@ -89,19 +89,29 @@ def test_refresh_leaves_nothing_persisted(spark, tmp_path):
 
 
 def test_incremental_refresh_shuffle_join_path(spark, tmp_path):
-    """broadcast_conv_limit=0 forces the scale-safe shuffle semi/anti joins
-    (the path taken when a day touches more conv_ids than is broadcastable);
-    result must be identical to the broadcast path."""
+    """Both broadcast thresholds at -1 force the scale-safe shuffle semi/anti
+    joins (the path taken when a day touches more conv_ids than is
+    broadcastable); result must be identical to the broadcast path."""
     full, first, split = _split_by_day(spark, n_turns=6_000, n_convs=20)
 
     cat_sh = ParquetManifestCatalog(spark, str(tmp_path / "sh"))
-    refresh_tiers(spark, cat_sh, first, watermark="wm1", params=PARAMS,
-                  broadcast_conv_limit=0)
-    refresh_tiers(
-        spark, cat_sh, full, watermark="wm2",
-        since_watermark=f"{split} 23:59:59.999999", params=PARAMS,
-        broadcast_conv_limit=0,
-    )
+    keys = ("spark.sql.autoBroadcastJoinThreshold",
+            "spark.sql.adaptive.autoBroadcastJoinThreshold")
+    saved = {k: spark.conf.get(k, None) for k in keys}
+    try:
+        for k in keys:
+            spark.conf.set(k, "-1")
+        refresh_tiers(spark, cat_sh, first, watermark="wm1", params=PARAMS)
+        refresh_tiers(
+            spark, cat_sh, full, watermark="wm2",
+            since_watermark=f"{split} 23:59:59.999999", params=PARAMS,
+        )
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
     cat_bc = ParquetManifestCatalog(spark, str(tmp_path / "bc"))
     refresh_tiers(spark, cat_bc, full, watermark="wm2", params=PARAMS)
@@ -340,6 +350,30 @@ def test_fold_rejects_unknown_manifest_op(spark, tmp_path):
     assert set(cat.committed_partitions("t", as_of=1)) == {"2024-01-01"}
 
 
+def test_fold_rejects_foreign_partition_column(spark, tmp_path):
+    """Every table is partitioned on ``bucket_date``. An older catalog
+    version also stored a per-record ``partition_col``: a record naming
+    ``bucket_date`` still folds, and any other value raises, naming the
+    snapshot, instead of folding month values in as days."""
+    import json
+
+    cat = ParquetManifestCatalog(spark, str(tmp_path / "pc"))
+    rec = {"rows": 1, "bytes": 1, "wall_s": 0.0, "input_watermark": None}
+    snaps = [
+        {"snapshot_id": sid, "op": "overwrite_partitions", "committed_at": "",
+         "partitions": {pval: rec}, "input_watermark": None, "partition_col": pcol}
+        for sid, pval, pcol in ((1, "2024-01-01", "bucket_date"), (2, "2024-02", "bucket_month"))
+    ]
+    os.makedirs(cat._table_dir("t"))
+    with open(cat._manifest_path("t"), "w") as f:
+        json.dump({"table": "t", "snapshots": snaps}, f)
+    with pytest.raises(ValueError, match=r"snapshot 2: partitioned on 'bucket_month'"):
+        cat.committed_partitions("t")
+    with pytest.raises(ValueError, match="'bucket_month'"):
+        cat.expire_snapshots("t")
+    assert set(cat.committed_partitions("t", as_of=1)) == {"2024-01-01"}
+
+
 def test_schema_evolution_null_fills_added_column(spark, tmp_path):
     """Add-column evolution: partitions written before a column existed
     null-fill it on read (Iceberg semantics)."""
@@ -454,67 +488,50 @@ def test_default_distribution_one_file_per_partition(spark, tmp_path):
     assert cat.read("t").count() == 270
 
 
-def test_catalog_supports_coarser_partition_columns(spark, tmp_path):
-    """Sparse multi-decade histories want coarser partitions than a day —
-    the catalog's partition_col is per-commit, so a month-partitioned tier
-    table gets the same overwrite/retention semantics (the knob
-    BENCH/BASELINE.md R4.4 points to)."""
-    cat = ParquetManifestCatalog(spark, str(tmp_path / "cm"))
-    df = spark.createDataFrame(
-        [
-            ("a", "2024-01-15", 1),
-            ("b", "2024-02-03", 2),
-            ("c", "2024-03-20", 3),
-        ],
-        "k string, d string, v int",
-    ).withColumn(
-        "bucket_month",
-        F.date_format(F.date_trunc("month", F.col("d").cast("date")), "yyyy-MM"),
-    )
-    cat.overwrite_partitions("t", df, partition_col="bucket_month")
-    assert cat.read("t").count() == 3
-    # partition-isolated second commit
-    df2 = df.filter("k = 'b'").withColumn("v", F.lit(99))
-    cat.overwrite_partitions("t", df2, partition_col="bucket_month")
-    got = {(r.k, r.v) for r in cat.read("t").collect()}
-    assert got == {("a", 1), ("b", 99), ("c", 3)}
-    # metadata-only retention on the month column
-    cat.delete_where_older("t", "2024-02", partition_col="bucket_month")
-    got = {r.k for r in cat.read("t").collect()}
-    assert got == {"b", "c"}
-
-
 def test_manifest_column_stats_pruned_read(spark, tmp_path):
-    """stats_cols at commit time record per-partition [min, max] bounds
-    from parquet footers (metadata only); read_where_between scans ONLY
-    overlapping partitions and still row-filters exactly."""
+    """Every commit records per-partition [min, max] ``bucket_start``
+    bounds from parquet footers (metadata only); read_where_between scans
+    ONLY overlapping partitions and still row-filters exactly."""
+    from datetime import datetime, timedelta
+
     cat = ParquetManifestCatalog(spark, str(tmp_path / "stats"))
-    mk = lambda rows: spark.createDataFrame(rows, "k string, bucket_date string, v bigint")
-    rows = []
-    for day, base in (("2024-01-01", 0), ("2024-01-02", 1000), ("2024-01-03", 2000)):
-        rows += [(f"k{j}", day, base + j) for j in range(100)]
-    cat.overwrite_partitions("t", mk(rows), stats_cols=["v"])
+    schema = "k string, bucket_date string, bucket_start timestamp"
+    t0 = datetime(2024, 1, 1)
+    rows = [
+        (f"k{j}", f"2024-01-0{d + 1}", t0 + timedelta(days=d, minutes=j))
+        for d in range(3) for j in range(100)
+    ]
+    cat.overwrite_partitions("t", spark.createDataFrame(rows, schema))
+
+    def at(d, m):
+        return (t0 + timedelta(days=d, minutes=m)).isoformat()
 
     live = cat.committed_partitions("t")
-    assert live["2024-01-01"]["stats"]["v"] == [0, 99]
-    assert live["2024-01-03"]["stats"]["v"] == [2000, 2099]
+    assert [b[:19] for b in live["2024-01-01"]["stats"]["bucket_start"]] == [at(0, 0), at(0, 99)]
+    assert [b[:19] for b in live["2024-01-03"]["stats"]["bucket_start"]] == [at(2, 0), at(2, 99)]
 
     # metadata-only pruning: the middle partition alone overlaps
-    assert set(cat.pruned_partitions("t", "v", 1050, 1060)) == {"2024-01-02"}
-    got = cat.read_where_between("t", "v", 1050, 1060)
-    assert sorted(r.v for r in got.collect()) == list(range(1050, 1061))
+    lo, hi = at(1, 50), at(1, 60)
+    assert set(cat.pruned_partitions("t", "bucket_start", lo, hi)) == {"2024-01-02"}
+    got = cat.read_where_between("t", "bucket_start", lo, hi)
+    assert sorted(r.k for r in got.collect()) == sorted(f"k{j}" for j in range(50, 61))
     # range spanning two partitions
-    assert set(cat.pruned_partitions("t", "v", 90, 1010)) == {
+    lo, hi = at(0, 90), at(1, 10)
+    assert set(cat.pruned_partitions("t", "bucket_start", lo, hi)) == {
         "2024-01-01", "2024-01-02",
     }
-    assert cat.read_where_between("t", "v", 90, 1010).count() == 10 + 11
+    assert cat.read_where_between("t", "bucket_start", lo, hi).count() == 10 + 11
     # disjoint range -> empty frame, zero partitions scanned
-    assert set(cat.pruned_partitions("t", "v", 5000, 6000)) == set()
-    assert cat.read_where_between("t", "v", 5000, 6000).count() == 0
-    # commits without stats_cols stay conservatively unpruned
-    cat2 = ParquetManifestCatalog(spark, str(tmp_path / "nostats"))
-    cat2.overwrite_partitions("t", mk(rows))
-    assert len(cat2.pruned_partitions("t", "v", 5000, 6000)) == 3
+    lo, hi = at(5, 0), at(6, 0)
+    assert set(cat.pruned_partitions("t", "bucket_start", lo, hi)) == set()
+    assert cat.read_where_between("t", "bucket_start", lo, hi).count() == 0
+    # a partition whose record has no bounds (bucket_start all NULL) stays
+    # conservatively unpruned
+    cat.overwrite_partitions(
+        "t", spark.createDataFrame([("z", "2024-01-09", None)], schema)
+    )
+    assert "stats" not in cat.committed_partitions("t")["2024-01-09"]
+    assert set(cat.pruned_partitions("t", "bucket_start", lo, hi)) == {"2024-01-09"}
 
 
 def test_refresh_commits_bucket_start_bounds(spark, tmp_path):

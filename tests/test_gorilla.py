@@ -5,7 +5,7 @@ import numpy as np
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from olympian_spark.functions.gorilla import decode_block, encode_block
+from olympian_spark.functions.gorilla import decode_block, encode_block, encode_blocks
 
 
 def _roundtrip(ts, streams):
@@ -79,7 +79,8 @@ def test_decode_throughput():
     g = rng.normal(60, 5, n).astype(np.float32)
     g[::7] = np.nan
     tl = rng.integers(0, 500, n).astype(np.float32)
-    buf = encode_block(ts, [g, tl])
+    # the production encoder: the reference encode_block packs point by point
+    buf = encode_blocks(ts, [g, tl], np.array([0, n]))[0].as_py()
     best = float("inf")
     for _ in range(3):
         t0 = time.perf_counter()
@@ -87,43 +88,6 @@ def test_decode_throughput():
         best = min(best, time.perf_counter() - t0)
     rate = n / best
     assert rate >= 3_000_000, f"decode too slow: {rate/1e6:.2f}M pts/s"
-
-
-@given(st.data())
-@settings(max_examples=60, deadline=None)
-def test_small_path_byte_identical_across_boundary(data):
-    """The small-block encoders (_encode_*_small, plain Python) must be
-    byte-identical to the vectorized general encoders for EVERY n — pinned
-    explicitly at the _SMALL_N boundary (n in {1, 2, 31, 32, 33}) so future
-    codec edits to either path fail here instead of silently diverging.
-    encode_block dispatches on n < _SMALL_N; this checks both paths on the
-    same input regardless of which one dispatch would pick."""
-    from olympian_spark.functions.gorilla import (
-        _SMALL_N,
-        _encode_floats,
-        _encode_floats_small,
-        _encode_ts,
-        _encode_ts_small,
-    )
-
-    assert _SMALL_N == 32  # boundary set below assumes this
-    n = data.draw(st.sampled_from([1, 2, 31, 32, 33]))
-    gaps = data.draw(
-        st.lists(st.integers(min_value=0, max_value=10**7), min_size=n, max_size=n)
-    )
-    vals = data.draw(
-        st.lists(
-            st.floats(width=32, allow_nan=True, allow_infinity=True),
-            min_size=n,
-            max_size=n,
-        )
-    )
-    ts = 1_700_000_000_000_000 + np.cumsum(np.asarray(gaps, dtype=np.int64))
-    fl = np.asarray(vals, dtype=np.float32)
-    assert _encode_ts(ts) == _encode_ts_small(ts)
-    assert _encode_floats(fl) == _encode_floats_small(fl)
-    # and the dispatching public encoder still roundtrips at the boundary
-    _roundtrip(ts, [fl])
 
 
 def test_og1_blocks_rejected_with_rebuild_hint():
@@ -136,17 +100,10 @@ def test_og1_blocks_rejected_with_rebuild_hint():
 
 
 def test_encode_blocks_bit_identical_to_per_block():
-    """The vectorized multi-block encoder must produce byte-identical blocks
-    to encode_block over every segment slice — across n in {0,1,2,3,small,
-    >=_SMALL_N}, empty segments, all dod/xor payload classes, NaN/Inf."""
-    import numpy as np
-
-    from olympian_spark.functions.gorilla import (
-        decode_block,
-        encode_block,
-        encode_blocks,
-    )
-
+    """The production multi-block encoder must produce byte-identical blocks
+    to the plain-Python reference encode_block over every segment slice —
+    across n in {0,1,2,3,...,200}, empty segments, all dod/xor payload
+    classes, NaN/Inf."""
     rng = np.random.default_rng(0)
 
     def check(counts, big_dod=False):

@@ -71,7 +71,7 @@ def _tier_rows(spark, days):
     ).withColumn("bucket_start", F.col("bucket_start").cast("timestamp"))
     from olympian_spark.sources.catalog import with_bucket_date
 
-    return with_bucket_date(df, "bucket_start")
+    return with_bucket_date(df)
 
 
 def test_overwrite_read_roundtrip_and_partition_isolation(iceberg_spark, cat):

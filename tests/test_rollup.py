@@ -316,14 +316,14 @@ def test_fused_dims_equal_per_dimension_rollups(spark):
         "conv_id", "ts", "role", "tool",
         F.length(F.coalesce(F.col("text"), F.lit(""))).cast("float").alias("text_len"),
     )
-    dims = rollup_dims_fused(slim, ("role", "tool"), "hour").persist()
+    dims = rollup_dims_fused(slim).persist()
     for d in ("role", "tool"):
         a = (
             dims.filter(f"dim_kind = '{d}'").drop("dim_kind")
             .withColumnRenamed("dim_value", d)
             .orderBy("bucket_start", d).toPandas()
         )
-        b = rollup_by_dimension(slim, d, "hour").orderBy("bucket_start", d).toPandas()
+        b = rollup_by_dimension(slim, d).orderBy("bucket_start", d).toPandas()
         assert list(a.columns) == list(b.columns)
         assert a.equals(b), f"fused dims != per-dim rollup for {d}"
     dims.unpersist()

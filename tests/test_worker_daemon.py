@@ -106,7 +106,7 @@ _SMOKE = textwrap.dedent(
     sys.path.insert(0, {repo!r})
     from olympian_spark.session import get_spark
 
-    spark = get_spark(app_name="daemon_smoke", cores=2, shuffle_partitions=2)
+    spark = get_spark(app_name="daemon_smoke", cores=2)
 
     def kernel(batches):
         import os
