@@ -23,9 +23,9 @@ Architecture (Spark-first, NOT a port):
 - compression = Gorilla-style blocks (delta-of-delta timestamps, XOR floats;
   Pelkonen et al., VLDB 2015) packed with vectorized numpy inside
   applyInPandas, stored as BinaryType.
-- storage = Iceberg-shaped catalog API with a partitioned-parquet +
-  JSON-manifest fallback (snapshots, retention DELETE, incremental refresh,
-  checkpoint/resume with per-partition lineage).
+- storage = one catalog: Iceberg's copy-on-write table semantics on
+  partitioned parquet + a JSON manifest (snapshots, retention DELETE,
+  incremental refresh, checkpoint/resume with per-partition lineage).
 """
 
 __version__ = "0.1.0"

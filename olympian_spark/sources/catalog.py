@@ -1,11 +1,11 @@
-"""Storage catalog: Iceberg-shaped API with a copy-on-write parquet fallback.
+"""Storage catalog: the engine's one catalog, Iceberg's copy-on-write table
+semantics on plain parquet.
 
-The production target is Iceberg (`df.writeTo(t).overwritePartitions()`,
-`DELETE WHERE`, snapshot/time-travel, per-snapshot manifests). This sandbox
-ships no Iceberg runtime jar, so :class:`ParquetManifestCatalog` implements
-the same table-format semantics from scratch on plain parquet, following
-the published lakehouse copy-on-write design (immutable data files + an
-atomically-swapped metadata pointer):
+:class:`ParquetManifestCatalog` implements the table-format semantics the
+engine uses (Iceberg's `overwritePartitions`, metadata-only `DELETE WHERE`,
+snapshots and time travel, `expireSnapshots`) from scratch on plain parquet,
+following the published lakehouse copy-on-write design (immutable data
+files + an atomically-swapped metadata pointer):
 
 - **layout**: every table is partitioned on ``bucket_date``, and every
   commit writes its partitions into a FRESH snapshot directory
@@ -28,7 +28,8 @@ atomically-swapped metadata pointer):
   from ONE Spark write — staged under the catalog root, then each table's
   directory is moved into its fresh snapshot directory and committed
 - **time travel**: ``read(table, as_of=snapshot_id)`` reconstructs any
-  historical state by folding the manifest up to that snapshot
+  historical state by folding the manifest up to that snapshot (an unknown
+  or expired snapshot raises ``ValueError``)
 - **retention**: ``delete_where_older`` is metadata-only (days drop out of
   the live set; files stay until vacuumed) — the Iceberg ``DELETE WHERE``
   partition-predicate fast path
@@ -47,9 +48,11 @@ layout was fixed also name their ``partition_col``; the fold accepts
 Single-writer-per-table is assumed (as with Iceberg's optimistic locking,
 concurrent writers need a coordinating catalog service; at 100 TB that is
 the metastore's job). Readers are always consistent: they see whichever
-manifest version their fold started from. :class:`IcebergCatalog` is not
-a drop-in replacement: it lacks calls that ``refresh_tiers`` makes (see its
-docstring).
+manifest version their fold started from.
+
+A future backend on a real Iceberg runtime must implement every call that
+``refresh_tiers``, ``apply_retention`` and perfbench make on this class,
+and must come with a test lane that runs.
 """
 
 from __future__ import annotations
@@ -121,6 +124,9 @@ class ParquetManifestCatalog:
     def _snap_dir(self, table: str, snapshot_id: int) -> str:
         return os.path.join(self._data_dir(table), f"s{snapshot_id}")
 
+    def _part_dir(self, table: str, snapshot_id: int, pval: str) -> str:
+        return os.path.join(self._snap_dir(table, snapshot_id), f"{PARTITION_COL}={pval}")
+
     def current_snapshot(self, table: str) -> dict | None:
         snaps = self._load_manifest(table)["snapshots"]
         return snaps[-1] if snaps else None
@@ -163,8 +169,11 @@ class ParquetManifestCatalog:
         """Live partition -> lineage record, folding snapshots up to
         ``as_of`` (default: current state). A past state stays readable
         until ``expire_snapshots`` reclaims its files; ``keep_last``
-        protects the last states."""
-        return self._fold(self._load_manifest(table)["snapshots"], as_of)
+        protects the last states. An unknown ``as_of`` raises ``ValueError``."""
+        snaps = self._load_manifest(table)["snapshots"]
+        if as_of is not None and as_of not in {s["snapshot_id"] for s in snaps}:
+            raise ValueError(f"{table}: no snapshot {as_of} in the manifest")
+        return self._fold(snaps, as_of)
 
     def input_watermark(self, table: str) -> str | None:
         for snap in reversed(self._load_manifest(table)["snapshots"]):
@@ -340,7 +349,8 @@ class ParquetManifestCatalog:
 
     def read(self, table: str, as_of: int | None = None) -> DataFrame:
         """Snapshot-consistent read; ``as_of`` time-travels to a historical
-        snapshot id (files must not have been vacuumed since).
+        snapshot id; one whose files ``expire_snapshots`` reclaimed raises
+        ``ValueError`` (one directory test per live partition).
 
         The live partition set is grouped by owning snapshot directory and
         read with ``basePath`` so the partition column survives; partition
@@ -350,6 +360,10 @@ class ParquetManifestCatalog:
         if not live:
             raise ValueError(f"{table}: no committed partitions"
                              + (f" at snapshot {as_of}" if as_of else ""))
+        if as_of is not None:
+            for pval, rec in sorted(live.items()):
+                if not os.path.isdir(self._part_dir(table, rec["snapshot_id"], pval)):
+                    raise ValueError(f"{table}: snapshot {as_of} is expired ({pval} reclaimed)")
         return self._read_live(table, live)
 
     def _read_live(self, table: str, live: dict) -> DataFrame:
@@ -360,9 +374,8 @@ class ParquetManifestCatalog:
             groups.setdefault(rec["snapshot_id"], []).append(pval)
         out = None
         for sid in sorted(groups):
-            base = self._snap_dir(table, sid)
-            paths = [os.path.join(base, f"{PARTITION_COL}={pval}") for pval in groups[sid]]
-            part = self.spark.read.option("basePath", base).parquet(*paths)
+            paths = [self._part_dir(table, sid, pval) for pval in groups[sid]]
+            part = self.spark.read.option("basePath", self._snap_dir(table, sid)).parquet(*paths)
             # allowMissingColumns = schema evolution: files written before a
             # column was added null-fill it (Iceberg add-column semantics)
             out = part if out is None else out.unionByName(
@@ -413,9 +426,7 @@ class ParquetManifestCatalog:
         issues = []
         live = self.committed_partitions(table)
         for pval, rec in sorted(live.items()):
-            pdir = os.path.join(
-                self._snap_dir(table, rec["snapshot_id"]), f"{PARTITION_COL}={pval}"
-            )
+            pdir = self._part_dir(table, rec["snapshot_id"], pval)
             if not os.path.isdir(pdir):
                 issues.append(f"{pval}: missing directory {pdir}")
                 continue
@@ -534,85 +545,3 @@ class ParquetManifestCatalog:
 def with_bucket_date(df: DataFrame) -> DataFrame:
     """The partition column: calendar date of ``bucket_start``."""
     return df.withColumn(PARTITION_COL, F.to_date(F.col(STATS_COL)))
-
-
-class IcebergCatalog:
-    """Production storage backend: part of the :class:`ParquetManifestCatalog`
-    surface implemented with real Iceberg operations.
-
-    Requires an Iceberg runtime jar + a configured catalog (not present in
-    this sandbox — the constructor verifies and raises with instructions).
-    Tables have the fallback's one layout: partitioned on ``bucket_date``.
-    The methods translate the fallback's:
-
-    - overwrite_partitions -> ``df.writeTo(table).overwritePartitions()``
-      (snapshot-isolated dynamic overwrite)
-    - delete_where_older   -> ``DELETE FROM t WHERE bucket_date < cutoff``
-      (metadata-only partition drop for partition-aligned predicates)
-    - current_snapshot / manifest_df -> the ``.snapshots`` / ``.files``
-      metadata tables; input watermarks ride on snapshot summary properties
-      via write options
-    - expire_snapshots     -> the ``expire_snapshots`` procedure
-
-    It is NOT a drop-in for ``refresh_tiers``, which also calls
-    ``overwrite_grouped`` and ``retention_cutoff``; neither exists here.
-    Nor does it have ``read(as_of=...)``, ``committed_partitions``,
-    ``pruned_partitions``, ``read_where_between`` or ``verify_table``
-    (Iceberg keeps column bounds per data file itself).
-    """
-
-    def __init__(self, spark: SparkSession, catalog_name: str = "iceberg"):
-        self.spark = spark
-        self.catalog = catalog_name
-        impl = spark.conf.get(f"spark.sql.catalog.{catalog_name}", None)
-        if not impl:
-            raise RuntimeError(
-                f"No Iceberg catalog '{catalog_name}' configured "
-                "(spark.sql.catalog.* unset / runtime jar missing). Use "
-                "ParquetManifestCatalog in this sandbox; on a cluster, add "
-                "iceberg-spark-runtime and spark.sql.catalog.iceberg=..."
-            )
-
-    def overwrite_partitions(self, table: str, df: DataFrame,
-                             input_watermark: str | None = None):
-        full = f"{self.catalog}.{table}"
-        writer = df.writeTo(full)
-        if input_watermark:
-            writer = writer.option("snapshot-property.input_watermark", input_watermark)
-        if not self.spark.catalog.tableExists(full):
-            # first commit creates the partitioned table (overwritePartitions
-            # requires an existing table)
-            writer.partitionedBy(F.col(PARTITION_COL)).create()
-        else:
-            writer.overwritePartitions()
-        return self.current_snapshot(table)
-
-    def read(self, table: str) -> DataFrame:
-        return self.spark.table(f"{self.catalog}.{table}")
-
-    def delete_where_older(self, table: str, cutoff: str):
-        self.spark.sql(
-            f"DELETE FROM {self.catalog}.{table} WHERE {PARTITION_COL} < DATE '{cutoff}'"
-        )
-        return self.current_snapshot(table)
-
-    def current_snapshot(self, table: str):
-        row = (
-            self.spark.table(f"{self.catalog}.{table}.snapshots")
-            .orderBy("committed_at", ascending=False)
-            .first()
-        )
-        return row.asDict() if row else None
-
-    def input_watermark(self, table: str) -> str | None:
-        snap = self.current_snapshot(table)
-        return (snap or {}).get("summary", {}).get("input_watermark")
-
-    def manifest_df(self, table: str) -> DataFrame:
-        return self.spark.table(f"{self.catalog}.{table}.files")
-
-    def expire_snapshots(self, table: str, keep_last: int = 1):
-        return self.spark.sql(
-            f"CALL {self.catalog}.system.expire_snapshots("
-            f"table => '{table}', retain_last => {max(1, keep_last)})"
-        ).first()

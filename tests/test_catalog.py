@@ -309,8 +309,8 @@ def test_overwrite_touches_only_new_partitions(spark, tmp_path):
 
 def test_time_travel_and_vacuum(spark, tmp_path):
     """Snapshot semantics of the copy-on-write format: as-of reads
-    reconstruct any historical state, and vacuum reclaims only files no
-    kept state references."""
+    reconstruct any historical state, vacuum reclaims only files no kept
+    state references, and an expired or unknown state raises by name."""
     cat = ParquetManifestCatalog(spark, str(tmp_path / "tt"))
     mk = lambda rows: spark.createDataFrame(rows, "k string, bucket_date string, v int")
     s1 = cat.overwrite_partitions("t", mk([("a", "2024-01-01", 1), ("a", "2024-01-02", 2)]))
@@ -330,8 +330,13 @@ def test_time_travel_and_vacuum(spark, tmp_path):
     cat.expire_snapshots("t", keep_last=0)
     assert not os.path.isdir(os.path.join(str(tmp_path / "tt"), "t/data/s1"))
     assert state(cat.read("t")) == {("2024-01-02", 99)}
-    with pytest.raises(Exception):
+    with pytest.raises(ValueError, match=r"t: snapshot 1 is expired \(2024-01-01 reclaimed\)"):
         cat.read("t", as_of=s1["snapshot_id"]).collect()
+    # an id the manifest never committed raises too, not a silent head read
+    with pytest.raises(ValueError, match="t: no snapshot 999 in the manifest"):
+        cat.read("t", as_of=999)
+    with pytest.raises(ValueError, match="t: no snapshot 999 in the manifest"):
+        cat.committed_partitions("t", as_of=999)
 
 
 def test_fold_rejects_unknown_manifest_op(spark, tmp_path):

@@ -268,8 +268,6 @@ UNREFERENCED_ALLOWED = {
     "olympian_spark.operators.rollup.rollup_coarser",
     # two-stage skew salting (COVERAGE #23); q19 is its SQL form
     "olympian_spark.operators.rollup.salted_agg",
-    # the production storage target; its tests skip without the Iceberg jar
-    "olympian_spark.sources.catalog.IcebergCatalog",
     # the plain-Python reference encoder that encode_blocks (the production
     # encoder) and the tier oracle are checked against
     "olympian_spark.functions.gorilla.encode_block",
