@@ -59,15 +59,6 @@ _TIER_SCHEMA = (
 _TIER_SCHEMA_US = _TIER_SCHEMA.replace("bucket_start timestamp", "bucket_us long")
 
 
-def _tier_schema_us(df: DataFrame) -> str:
-    """Kernel output schema, honouring the caller's conv key type: string
-    conv_id by default, or the input's integer type when conversation keys
-    were dictionary-encoded upstream (fixed-width keys shuffle and sort
-    cheaper than strings at 10^12-turn scale)."""
-    ktype = dict(df.dtypes)["conv_id"]
-    return _TIER_SCHEMA_US.replace("conv_id string", f"conv_id {ktype}")
-
-
 def _kernel_input(df: DataFrame, *keys: str) -> DataFrame:
     """Explicitly hash-partition a grouped-kernel input by its keys.
 
@@ -180,8 +171,6 @@ def _tier_table(conv, buckets, starts, ts_us, gaps, tl, ok, partials=None) -> "p
 
     return pa.table(
         {
-            # conv key passes through as-is: string conv_id, or int64 when
-            # the caller dictionary-encoded conversation keys upstream
             "conv_id": conv,
             "bucket_us": pa.array(buckets),
             "n_turns": pa.array(counts),
@@ -244,7 +233,7 @@ def rollup_coarser(tier_1d: DataFrame, grain: str) -> DataFrame:
     return _restore_bucket(
         _kernel_input(base, "conv_id", "bucket_us")
         .groupBy("conv_id", "bucket_us")
-        .applyInArrow(kernel, _tier_schema_us(tier_1d))
+        .applyInArrow(kernel, _TIER_SCHEMA_US)
     )
 
 
@@ -322,7 +311,7 @@ def rollup_tiers_fused(df: DataFrame) -> DataFrame:
         for done, _ in segment_stream(batches):
             yield from _fused_process(done).to_batches()
 
-    out = base.mapInArrow(stream_kernel, _tier_schema_us(df) + ", _grain tinyint")
+    out = base.mapInArrow(stream_kernel, _TIER_SCHEMA_US + ", _grain tinyint")
     return _restore_bucket(out)
 
 

@@ -27,16 +27,18 @@ an **input watermark** (the max ingest timestamp of the batch). A run:
    table's fresh snapshot directory. A full refresh writes every partition
    present; an incremental one only (new ∪ boundary) day partitions. Each
    table commits its own manifest snapshot with per-partition
-   rows/bytes/wall_s + the watermark. The two dimension tables are one
-   ``overwrite_partitions`` each: their value columns differ (``role`` vs
-   ``tool``), so they cannot share a parquet schema.
+   rows/bytes/wall_s + the watermark. The two dimension tables go out the
+   same way in a second write, tagged ``_grain`` 0 (role) or 1 (tool).
 
 Dimension rollups (role/tool) are flag-independent counts/sums, so their
 boundary days never change — only new-day partitions are written for them.
+Their value columns differ (``role`` vs ``tool``), so their files store it
+as ``dim_value`` and each snapshot records the logical name
+(``DIM_COLUMNS``); catalog reads return ``role`` / ``tool``.
 
 Resume: every step is idempotent, and a table whose latest committed
-watermark equals the current one is skipped (a tier table is left out of
-the grouped write) — killing the job after any
+watermark equals the current one is skipped (it is left out of its
+grouped write) — killing the job after any
 step and rerunning converges to the same final state (tested).
 
 Fail filter: tiers exclude dip_check FAIL turns (``flag_dip``), whose
@@ -54,6 +56,8 @@ from olympian_spark.sources.catalog import ParquetManifestCatalog, with_bucket_d
 
 TIER_TABLES = ("tier_1m", "tier_1h", "tier_1d")
 DIM_TABLES = ("rollup_role_1h", "rollup_tool_1h")
+# both dimension tables store their value column as dim_value
+DIM_COLUMNS = {"rollup_role_1h": {"dim_value": "role"}, "rollup_tool_1h": {"dim_value": "tool"}}
 
 
 def affected_days(transcripts: DataFrame, since_watermark: str) -> list[str]:
@@ -95,7 +99,9 @@ def refresh_tiers(
     params: QcParams = QcParams(),
 ) -> dict:
     """One refresh run. Returns {table: snapshot | 'skipped'}, or {} when
-    there is nothing to refresh (no new rows, or an empty input).
+    there is nothing to refresh (no new rows, or a full refresh that commits
+    nothing: an empty input, or one whose rows all fall before the retention
+    cutoffs).
 
     ``since_watermark=None`` is a full refresh: every day and every
     conversation is affected, so the input is used as-is and no scoping
@@ -135,10 +141,8 @@ def refresh_tiers(
             if str(r[0]) not in set(new_days)
         ]
 
-    # _tagged feeds one write (all three tiers), so it is not persisted;
-    # _dims feeds the two dimension writes, so it is.
+    # _tagged and _dims each feed one write, so neither is persisted.
     tiers = build_tiers(transcripts, params, persist=False)
-    tiers["_dims"].persist()
     try:
         results = {
             t: "skipped"  # already committed for this input
@@ -146,57 +150,58 @@ def refresh_tiers(
             if catalog.input_watermark(t) == watermark
         }
         tier_days = None if full else new_days + boundary_days
-        pending, wanted, merges = {}, None, []
-        for grain, table in enumerate(TIER_TABLES):
-            if table in results:
-                continue
-            scope = _scope(catalog, table, tier_days)
-            if scope is None:
-                results[table] = "skipped"  # everything new is already expired
-                continue
-            pending[grain] = table
-            cond = (F.col("_grain") == grain) & scope
-            wanted = cond if wanted is None else wanted | cond
+        pending, wanted = _pending(catalog, TIER_TABLES, tier_days, results)
+        out = with_bucket_date(tiers["_tagged"]).filter(wanted)
+        for grain, table in pending.items():
             merge = _scope(catalog, table, boundary_days) if boundary_days else None
             if merge is not None:
                 # boundary partitions also hold UNAFFECTED conversations'
                 # buckets: keep those, replace the affected ones
-                merges.append(
+                keep = (
                     catalog.read(table).filter(merge)
                     .join(convs, "conv_id", "left_anti")
                     .withColumn("_grain", F.lit(grain).cast("tinyint"))
                 )
-        written = {}
-        if pending:
-            out = with_bucket_date(tiers["_tagged"]).filter(wanted)
-            for keep in merges:
                 out = out.unionByName(keep.select(*out.columns))
-            written = catalog.overwrite_grouped(pending, out, input_watermark=watermark)
-            for table in pending.values():
-                results[table] = written.get(table, "skipped")
-        # A full refresh that wrote no tier row may have an empty input. Only
-        # then is the one extra job spent to tell it from an input whose
-        # rows all fall before the retention cutoffs.
-        if full and not written and tiers["_dims"].isEmpty():
-            return {}
+        written = catalog.overwrite_grouped(pending, out, watermark) if pending else {}
 
-        for table in DIM_TABLES:  # flag-independent: no boundary days
-            if table in results:
-                continue
-            scope = _scope(catalog, table, new_days)
-            if scope is None:
-                results[table] = "skipped"
-                continue
-            results[table] = catalog.overwrite_partitions(
-                table, with_bucket_date(tiers[table]).filter(scope),
-                input_watermark=watermark,
+        # flag-independent: no boundary days; _grain is the DIM_TABLES index
+        pending_dims, wanted = _pending(catalog, DIM_TABLES, new_days, results)
+        if pending_dims:
+            dims = (
+                with_bucket_date(tiers["_dims"])
+                .withColumn("_grain", F.when(F.col("dim_kind") == "role", 0).otherwise(1))
+                .drop("dim_kind")
+                .filter(wanted)
             )
+            written.update(catalog.overwrite_grouped(pending_dims, dims, watermark, DIM_COLUMNS))
+        if full and (pending or pending_dims) and not written:
+            return {}  # an empty input, or one whose rows all fall before the cutoffs
+        for table in (*pending.values(), *pending_dims.values()):
+            results[table] = written.get(table, "skipped")
         return results
     finally:
-        for t in ("_dims", "_sorted"):
-            tiers[t].unpersist()
+        tiers["_sorted"].unpersist()
         if convs is not None:
             convs.unpersist()
+
+
+def _pending(catalog: ParquetManifestCatalog, tables: tuple, days, results: dict):
+    """``({_grain: table}, row filter)`` for the tables of ``tables`` (tagged
+    ``_grain`` = their index) that this run writes: each one not already in
+    ``results``, whose rows are ``_scope(days)``. A table left with no day
+    to write is marked skipped in ``results``."""
+    pending, wanted = {}, F.lit(False)
+    for grain, table in enumerate(tables):
+        if table in results:
+            continue
+        scope = _scope(catalog, table, days)
+        if scope is None:
+            results[table] = "skipped"  # everything new is already expired
+            continue
+        pending[grain] = table
+        wanted = wanted | ((F.col("_grain") == grain) & scope)
+    return pending, wanted
 
 
 def apply_retention(catalog: ParquetManifestCatalog, cutoffs: dict[str, str]) -> dict:

@@ -126,8 +126,7 @@ def get_spark(
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    if os.environ.get("SPARK_GRAFT_PREWARM", "1") != "0":
-        _prewarm_python_workers(spark)
+    _prewarm_python_workers(spark)
     return spark
 
 
@@ -164,8 +163,9 @@ def _prewarm_python_workers(spark: SparkSession) -> None:
     pipeline benchmark's first run at 32 cores). Workers are reused
     (``spark.python.worker.reuse`` default), so one thimble-sized
     mapInArrow pass at startup moves that cost to session creation — the
-    local-mode analogue of a cluster's long-lived executor pool. Disable
-    with SPARK_GRAFT_PREWARM=0.
+    local-mode analogue of a cluster's long-lived executor pool. A worker
+    setup that cannot run a kernel raises here, at session creation, not
+    at the first kernel job.
     """
     n = spark.sparkContext.defaultParallelism
 
@@ -176,11 +176,8 @@ def _prewarm_python_workers(spark: SparkSession) -> None:
 
         yield from batches
 
-    try:
-        (
-            spark.range(n, numPartitions=n)
-            .mapInArrow(_touch, "id long")
-            .write.format("noop").mode("overwrite").save()
-        )
-    except Exception:
-        pass  # prewarm is best-effort; never fail session creation
+    (
+        spark.range(n, numPartitions=n)
+        .mapInArrow(_touch, "id long")
+        .write.format("noop").mode("overwrite").save()
+    )

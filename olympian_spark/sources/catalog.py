@@ -16,17 +16,21 @@ files + an atomically-swapped metadata pointer):
   lineage + metrics (rows, bytes, wall_s, input_watermark) and the
   partition's footer ``bucket_start`` bounds. A crash before
   the swap leaves an orphan directory invisible to every reader (healed by
-  the idempotent rerun, reclaimed by ``expire_snapshots``; a grouped
-  write's ``root/_staging`` is cleared by the next grouped write) — true
-  snapshot isolation, not best-effort
-- **overwrite_partitions**: only partitions present in the incoming
-  DataFrame advance to the new snapshot; all others keep pointing at their
-  prior snapshot's files (Iceberg ``overwritePartitions`` semantics).
-  Because the write never touches existing files, read-modify-write
-  refreshes need no defensive materialization
-- **overwrite_grouped**: the same commit for several same-schema tables
-  from ONE Spark write — staged under the catalog root, then each table's
-  directory is moved into its fresh snapshot directory and committed
+  the idempotent rerun, reclaimed by ``expire_snapshots``; a write's
+  ``root/_staging`` is cleared by the next write) — true snapshot
+  isolation, not best-effort
+- **overwrite_grouped**: the one write. Several tables' partitions go out
+  in ONE Spark write, staged under the catalog root; each table's directory
+  is then moved into its fresh snapshot directory and committed. Only
+  partitions present in the incoming DataFrame advance to the new snapshot;
+  all others keep pointing at their prior snapshot's files (Iceberg
+  ``overwritePartitions`` semantics). Because the write never touches
+  existing files, read-modify-write refreshes need no defensive
+  materialization. ``overwrite_partitions`` is its one-table call
+- **column mapping**: a commit may store a column under a physical name
+  and record the physical -> logical map in its snapshot record's
+  ``columns`` field (Delta Lake / Iceberg column mapping); reads rename per
+  snapshot, so tables that store different physical names share one write
 - **time travel**: ``read(table, as_of=snapshot_id)`` reconstructs any
   historical state by folding the manifest up to that snapshot (an unknown
   or expired snapshot raises ``ValueError``)
@@ -188,63 +192,46 @@ class ParquetManifestCatalog:
         table: str,
         df: DataFrame,
         input_watermark: str | None = None,
-    ) -> dict:
-        """Copy-on-write partition overwrite + atomic manifest commit.
-
-        ``df`` carries ``bucket_date``, the partition column of every table.
-        The write is hash-partitioned by it (Iceberg's hash
-        distribution-mode): without it, EVERY task writes a file into
-        EVERY partition directory it holds rows for — tasks x days files
-        (measured: 14k files for 8k day-partitions at 8 cores), which
-        serializes commits on file-create latency and degrades later scans.
-        With it, each partition value lands in exactly one task -> one file
-        per partition. The trade: a single huge day writes through one
-        task, while day-partitioned tier tables are post-aggregation and
-        small per day.
-
-        The incoming partitions are written into a FRESH snapshot directory
-        (one Spark job — no defensive checkpoint: existing files are never
-        touched, so a refresh that reads this table while overwriting it is
-        safe by construction). Per-partition row/byte metrics come from the
-        written parquet footers (driver-side metadata read, no second scan),
-        and so are the ``bucket_start`` bounds when ``df`` has that column.
-        Only partitions present in ``df`` advance to the new snapshot;
-        everything else keeps its prior files (Iceberg overwritePartitions
-        semantics). Returns the snapshot record.
-        """
-        t0 = time.time()
-        sdir = self._new_snap_dir(table)
-        n = 2 * self.spark.sparkContext.defaultParallelism
-        df = df.repartition(n, PARTITION_COL)
-        df.write.mode("overwrite").partitionBy(PARTITION_COL).parquet(sdir)
-        return self._commit_written(table, sdir, time.time() - t0, input_watermark)
+    ) -> dict | None:
+        """:meth:`overwrite_grouped` of one table: copy-on-write overwrite of
+        the ``bucket_date`` partitions present in ``df``. Returns the
+        snapshot record, or None (nothing committed) when ``df`` is empty."""
+        return self.overwrite_grouped(
+            {0: table}, df.withColumn("_grain", F.lit(0)), input_watermark
+        ).get(table)
 
     def overwrite_grouped(
         self,
         tables: dict,
         df: DataFrame,
-        input_watermark: str,
+        input_watermark: str | None,
+        columns: dict | None = None,
     ) -> dict:
-        """:meth:`overwrite_partitions` for several same-schema tables in ONE
-        Spark write, partitioned by ``bucket_date``. ``df`` carries a
-        ``_grain`` column, and ``tables`` maps each ``_grain`` value to its
-        table.
+        """Copy-on-write overwrite of several tables' ``bucket_date``
+        partitions in ONE Spark write, then one atomic manifest commit per
+        table. ``df`` carries ``bucket_date`` and ``_grain``; ``tables`` maps
+        each ``_grain`` value to its table, and ``columns`` maps a table to
+        the physical -> logical column map its snapshots record (e.g.
+        ``{"dim_value": "role"}``; reads return the logical names).
 
-        The rows are hash-distributed on (``_grain``, ``bucket_date``), so
-        each table's partition lands in one task and one file, and written
-        with ``partitionBy("_grain", "bucket_date")`` into the staging
-        directory ``<root>/_staging``. Each ``_grain=<value>``
-        directory is then renamed (same filesystem: a metadata move) into
-        its table's fresh snapshot directory and committed in ``tables``
-        order. Each table's commit is the same footer-metrics commit as
-        :meth:`overwrite_partitions`, so a crash between two tables leaves
-        the earlier ones committed and the later ones uncommitted, exactly
-        as a sequence of per-table writes would. Every table gets
-        footer-derived ``bucket_start`` bounds (metadata-only time-range
-        skipping, :meth:`read_where_between`). The staging directory is
-        removed on success and on failure; one left by a killed process is
-        invisible to every reader and cleared before the next grouped write,
-        as :meth:`_new_snap_dir` clears a crashed snapshot directory.
+        Rows are hash-distributed on (``_grain``, ``bucket_date``) (Iceberg's
+        hash distribution-mode), so each table's partition lands in one task
+        and one file; without it every task writes a file into every
+        partition it holds rows for (measured: 14k files for 8k
+        day-partitions at 8 cores). The trade: a single huge day writes
+        through one task, while tier tables are small per day.
+
+        They are written with ``partitionBy("_grain", "bucket_date")`` into
+        ``<root>/_staging`` (no defensive checkpoint: existing files are never
+        touched, so a refresh may read a table it overwrites). Each
+        ``_grain=<value>`` directory is then renamed into its table's fresh
+        snapshot directory and committed in ``tables`` order, with footer
+        row/byte metrics and ``bucket_start`` bounds (no second scan). A crash
+        between two tables leaves the earlier ones committed, as a sequence
+        of per-table writes would. The staging directory is removed on
+        success and on failure; one left by a killed process is invisible to
+        readers and cleared by the next write, as :meth:`_new_snap_dir`
+        clears a crashed snapshot directory.
 
         Returns ``{table: snapshot}`` for the tables that received rows; a
         table with no rows in ``df`` is not committed.
@@ -269,7 +256,9 @@ class ParquetManifestCatalog:
                 sdir = self._new_snap_dir(table)
                 os.makedirs(os.path.dirname(sdir), exist_ok=True)
                 os.replace(gdir, sdir)
-                out[table] = self._commit_written(table, sdir, wall, input_watermark)
+                out[table] = self._commit_written(
+                    table, sdir, wall, input_watermark, (columns or {}).get(table)
+                )
             return out
         finally:
             shutil.rmtree(stage, ignore_errors=True)
@@ -297,11 +286,13 @@ class ParquetManifestCatalog:
         sdir: str,
         wall: float,
         input_watermark: str | None,
+        columns: dict | None,
     ) -> dict:
         """Commit the ``bucket_date=<day>`` directories written under
         ``sdir`` (the table's next snapshot directory) as one snapshot, with
         per-partition metrics and ``bucket_start`` bounds read from the
-        parquet footers."""
+        parquet footers, and the physical -> logical ``columns`` map if
+        any."""
         import pyarrow.parquet as pq
 
         # Per-partition metrics from parquet footers. The reads are
@@ -345,6 +336,7 @@ class ParquetManifestCatalog:
             parts = dict(pool.map(_part_metrics, dirs))
         return self._append_snapshot(
             table, "overwrite_partitions", parts, input_watermark=input_watermark,
+            **({"columns": columns} if columns else {}),
         )
 
     def read(self, table: str, as_of: int | None = None) -> DataFrame:
@@ -368,7 +360,13 @@ class ParquetManifestCatalog:
 
     def _read_live(self, table: str, live: dict) -> DataFrame:
         """Read an explicit live-partition map (read()'s grouping logic,
-        reusable for partition-pruned reads like :meth:`read_where_between`)."""
+        reusable for partition-pruned reads like :meth:`read_where_between`).
+        Each snapshot's files are renamed by its recorded ``columns`` map, so
+        partitions that store different physical names read as one column."""
+        mapped = {
+            s["snapshot_id"]: s["columns"]
+            for s in self._load_manifest(table)["snapshots"] if s.get("columns")
+        }
         groups: dict[int, list] = {}
         for pval, rec in live.items():
             groups.setdefault(rec["snapshot_id"], []).append(pval)
@@ -376,6 +374,8 @@ class ParquetManifestCatalog:
         for sid in sorted(groups):
             paths = [self._part_dir(table, sid, pval) for pval in groups[sid]]
             part = self.spark.read.option("basePath", self._snap_dir(table, sid)).parquet(*paths)
+            if sid in mapped:
+                part = part.withColumnsRenamed(mapped[sid])
             # allowMissingColumns = schema evolution: files written before a
             # column was added null-fill it (Iceberg add-column semantics)
             out = part if out is None else out.unionByName(

@@ -1,6 +1,7 @@
 """Catalog + incremental refresh + retention + resume (Tier E, SURVEY §5):
 
 - overwrite_partitions touches only the partitions present in the new data
+- a snapshot's physical -> logical column map renames on every read
 - retention delete drops old partitions and records a snapshot
 - incremental refresh (new day arrives) == full recompute
 - resume: kill after a partial commit, rerun, final tables identical
@@ -305,6 +306,43 @@ def test_overwrite_touches_only_new_partitions(spark, tmp_path):
     assert mtime_before == mtime_after  # 01-01 untouched (copy-on-write)
     got = {(str(r.bucket_date), r.v) for r in cat.read("t").collect()}
     assert got == {("2024-01-01", 1), ("2024-01-02", 99)}
+    # an empty frame commits nothing, as overwrite_grouped does
+    assert cat.overwrite_partitions("t", df2.limit(0)) is None
+    assert cat.current_snapshot("t")["snapshot_id"] == 2
+
+
+def test_column_map_reads_old_and_new_layouts_as_one_column(spark, tmp_path):
+    """A table whose first snapshot stores ``role`` and whose second stores
+    ``dim_value`` with the physical -> logical map reads as one ``role``
+    column: at head, as of the first snapshot, and in a range read over
+    both layouts."""
+    from datetime import datetime, timedelta
+
+    cat = ParquetManifestCatalog(spark, str(tmp_path / "cm"))
+    t0 = datetime(2024, 1, 1, 10)
+    s1 = cat.overwrite_partitions("t", spark.createDataFrame(
+        [("2024-01-01", t0, "user", 1)],
+        "bucket_date string, bucket_start timestamp, role string, n long",
+    ))
+    s2 = cat.overwrite_grouped(
+        {1: "t"},
+        spark.createDataFrame(
+            [("2024-01-02", t0 + timedelta(days=1), "assistant", 2, 1)],
+            "bucket_date string, bucket_start timestamp, dim_value string, n long, _grain int",
+        ),
+        "wm", {"t": {"dim_value": "role"}},
+    )["t"]
+    assert "columns" not in s1 and s2["columns"] == {"dim_value": "role"}
+    assert "dim_value" in spark.read.parquet(cat._snap_dir("t", s2["snapshot_id"])).columns
+
+    def rows(df):
+        assert sorted(df.columns) == ["bucket_date", "bucket_start", "n", "role"]
+        return sorted((str(r.bucket_date), r.role, r.n) for r in df.collect())
+
+    both = [("2024-01-01", "user", 1), ("2024-01-02", "assistant", 2)]
+    assert rows(cat.read("t")) == both
+    assert rows(cat.read("t", as_of=s1["snapshot_id"])) == both[:1]
+    assert rows(cat.read_where_between("t", "bucket_start", t0, t0 + timedelta(days=2))) == both
 
 
 def test_time_travel_and_vacuum(spark, tmp_path):

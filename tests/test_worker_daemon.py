@@ -131,8 +131,7 @@ def test_get_spark_workers_from_any_cwd(tmp_path, pythonpath):
     script.write_text(_SMOKE.format(repo=REPO))
     env = {k: v for k, v in os.environ.items() if not k.startswith("SPARK_GRAFT_")}
     env.pop("PYTHONPATH", None)
-    env.update(SPARK_GRAFT_DRIVER_MEM="1g", SPARK_GRAFT_PREWARM="0",
-               SPARK_GRAFT_LOCAL_DIR=str(tmp_path / "local"))
+    env.update(SPARK_GRAFT_DRIVER_MEM="1g", SPARK_GRAFT_LOCAL_DIR=str(tmp_path / "local"))
     if pythonpath:
         extra = tmp_path / "extra"
         extra.mkdir()
