@@ -27,6 +27,8 @@ series where every turn is an observation.
 
 from __future__ import annotations
 
+import itertools
+
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
@@ -163,6 +165,12 @@ class TurnOrderError(ValueError):
     contract is that turn_idx is monotone in ts)."""
 
 
+class StaleLayoutError(RuntimeError):
+    """A stage-1 partition starts or ends on a row the edge pass did not
+    record: the range sort was recomputed with other bounds after its
+    persisted copy was released, so the stitch context does not fit."""
+
+
 def segment_stream(batches, order=("_ts_us",), before=None):
     """Whole (conv_id, day) segments of a sorted Arrow batch stream.
 
@@ -218,6 +226,15 @@ def segment_stream(batches, order=("_ts_us",), before=None):
         yield pa.concat_tables(held), None
 
 
+_KEYS = ("conv_id", "_ts_us", "turn_idx")  # stencil context columns
+
+
+def _row(tbl, i: int) -> tuple:
+    """The ``_KEYS`` values of row ``i`` (negative: from the end)."""
+    i %= tbl.num_rows
+    return tuple(tbl.column(k)[i].as_py() for k in _KEYS)
+
+
 def with_gap_and_dip_parallel(
     df: DataFrame,
     dip_high: float,
@@ -235,15 +252,16 @@ def with_gap_and_dip_parallel(
     turn order — they need only each row's ±2 neighbours, not the whole
     conversation. So:
 
-    1. ``repartitionByRange(conv_id, day)`` + a local sort by (conv_id, day,
-       turn_idx, ts), the day by floor-mod (``pmod``) like the tier kernel.
+    1. ``ts`` becomes its epoch µs ``_ts_us``, then
+       ``repartitionByRange(conv_id, day)`` + a local sort by (conv_id, day,
+       turn_idx, _ts_us), the day by floor-mod (``pmod``) like the tier kernel.
        Equal range keys land in one partition, so every (conv, day) segment
        is whole within one partition and already in tier-kernel order, while
        a hot conversation still spreads across partitions by day. Persisted,
        because range boundaries are sampled per execution and both following
        passes must see identical partitions.
     2. A boundary pass collects each partition's first/last two rows
-       (bounded driver collect: 4 rows x n_part).
+       (bounded driver collect: 4 rows x n_part), keyed by first row.
     3. A whole-partition ``mapInArrow`` computes gaps and dip flags
        vectorized over each run of complete segments from
        :func:`segment_stream`: two rows of lead context from the previous
@@ -263,14 +281,16 @@ def with_gap_and_dip_parallel(
     kernels only consume ``flag_dip == FAIL`` and treat NULL/NaN gaps
     identically, so tiers are bit-identical either way.
 
-    Returns ``(flagged, sorted_handle)`` — unpersist the handle when done.
+    Returns ``(flagged, sorted_handle)``: ``flagged`` is ``df`` with ``ts``
+    replaced by ``_ts_us``, plus ``turn_gap_s`` and ``flag_dip``; read it
+    before unpersisting the handle (else :class:`StaleLayoutError`).
     """
     if n_part is None:
         n_part = 2 * df.sparkSession.sparkContext.defaultParallelism
-    keys = ("conv_id", "_ts_us", "turn_idx")  # stencil context columns
     day = F.col("_ts_us") - F.pmod(F.col("_ts_us"), F.lit(DAY_US))
+    ts_us = F.unix_micros(F.col("ts").cast("timestamp")).alias("_ts_us")
     srt = (
-        df.withColumn("_ts_us", F.unix_micros(F.col("ts").cast("timestamp")))
+        df.select(*(ts_us if c == "ts" else c for c in df.columns))
         .repartitionByRange(n_part, "conv_id", day)
         .sortWithinPartitions("conv_id", day, "turn_idx", "_ts_us")
         .persist()
@@ -296,25 +316,29 @@ def with_gap_and_dip_parallel(
                     .to_batches()
                 )
 
-    edge_in = srt.select(*keys)
+    edge_in = srt.select(*_KEYS)
     edge_schema = ", ".join(f"{k} {t}" for k, t in edge_in.dtypes) + ", pid int, is_head boolean"
     edges = edge_in.mapInArrow(edge_fn, edge_schema).toArrow()
     heads, tails = {}, {}
     for p in np.unique(edges.column("pid").to_numpy()).tolist():
         part = edges.filter(pc.equal(edges.column("pid"), p))
-        heads[p] = part.filter(part.column("is_head")).select(keys)
-        tails[p] = part.filter(pc.invert(part.column("is_head"))).select(keys)
+        heads[p] = part.filter(part.column("is_head")).select(_KEYS)
+        tails[p] = part.filter(pc.invert(part.column("is_head"))).select(_KEYS)
 
     # leading context = the 2 rows globally preceding each partition's first
     # row; trailing = the 2 rows following its last. Every listed partition
-    # holds a row, so two neighbours on each side always suffice.
-    empty = edges.select(keys).slice(0, 0)
+    # holds a row, so two neighbours on each side always suffice. Keyed by
+    # first row (distinct: equal range keys share a partition), not by task
+    # partition id, which a union numbers past the first branch's.
+    empty = edges.select(_KEYS).slice(0, 0)
     pids = sorted(heads)
-    ctx: dict[int, tuple] = {}
+    ctx: dict[tuple, tuple] = {}
     for i, p in enumerate(pids):
         lead = pa.concat_tables([empty, *(tails[q] for q in pids[max(0, i - 2) : i])])
         trail = pa.concat_tables([empty, *(heads[q] for q in pids[i + 1 : i + 3])])
-        ctx[p] = (lead.slice(max(0, lead.num_rows - 2)), trail.slice(0, 2))
+        ctx[_row(heads[p], 0)] = (
+            lead.slice(max(0, lead.num_rows - 2)), trail.slice(0, 2), _row(tails[p], -1)
+        )
 
     # ---- pass 2: vectorized stencil over the sorted partitions ------------
     high_f = F32(dip_high)
@@ -360,15 +384,19 @@ def with_gap_and_dip_parallel(
         return gap, flag
 
     def stencil_fn(batches):
-        from pyspark import TaskContext
-
-        edge = ctx.get(TaskContext.get().partitionId())
-        if edge is None:  # an empty partition
+        batches = (rb for rb in batches if rb.num_rows)
+        first = next(batches, None)
+        if first is None:  # a partition with no rows
             return
-        lead, trail = edge
-        for done, held in segment_stream(batches, keys[1:], lead[-1:]):
-            look = (trail if held is None else held.select(keys)).slice(0, 1)
-            ext = pa.concat_tables([lead, done.select(keys), look], promote_options="default")
+        key = _row(first, 0)
+        if key not in ctx:
+            raise StaleLayoutError(f"no stage-1 partition started at {key}")
+        lead, trail, last = ctx[key]
+        for done, held in segment_stream(itertools.chain([first], batches), _KEYS[1:], lead[-1:]):
+            if held is None and _row(done, -1) != last:
+                raise StaleLayoutError(f"stage-1 partition ends at {_row(done, -1)}, not {last}")
+            look = (trail if held is None else held.select(_KEYS)).slice(0, 1)
+            ext = pa.concat_tables([lead, done.select(_KEYS), look], promote_options="default")
             codes = (
                 pc.dictionary_encode(ext.column("conv_id").combine_chunks())
                 .indices.to_numpy(zero_copy_only=False)

@@ -29,17 +29,11 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from olympian_spark.operators.rollup import kernel_groups
 from olympian_spark.oracle import spatial as _oracle
 
 _OUT_SCHEMA = "slice_key string, station_idx int, flag tinyint"
 
-
-def _by_slice(df):
-    """Explicit hash-partitioning by slice_key before the grouped kernel —
-    AQE byte-based coalescing would serialize CPU-bound slices (see
-    rollup._kernel_input for the rationale)."""
-    n = 2 * df.sparkSession.sparkContext.defaultParallelism
-    return df.repartition(n, "slice_key").groupBy("slice_key")
 
 # Fail-fast guard on per-slice station count (one slice = one task). The
 # reference's practical ceiling is ~10^4 (R*-tree + num_max cap,
@@ -116,7 +110,7 @@ def buddy_check_spatial(
             }
         )
 
-    return _by_slice(df).applyInPandas(kernel, _OUT_SCHEMA)
+    return kernel_groups(df, "slice_key").applyInPandas(kernel, _OUT_SCHEMA)
 
 
 def sct_spatial(
@@ -199,4 +193,4 @@ def sct_spatial(
             }
         )
 
-    return _by_slice(df).applyInPandas(kernel, _OUT_SCHEMA)
+    return kernel_groups(df, "slice_key").applyInPandas(kernel, _OUT_SCHEMA)

@@ -25,7 +25,8 @@ Execution shape (the scale story):
   complete segment of an Arrow batch at once. A day segment is the finest
   split that keeps every output bucket whole, so a hot conversation spreads
   across partitions by day with no hot-key pre-pass, and worker memory is
-  bounded by one segment plus one batch.
+  bounded by one segment plus one batch. It reads stage 1's columns and
+  emits ``bucket_start`` itself: no JVM projection sits around it.
 - :func:`rollup_coarser` rolls tier_1d up to calendar weeks and months,
   whose periods are irregular, with one kernel group per output bucket.
 - dimension rollups are pure relational and absorb skew via map-side
@@ -37,7 +38,7 @@ from __future__ import annotations
 
 import numpy as np
 import pyarrow as pa
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, GroupedData
 from pyspark.sql import functions as F
 
 from olympian_spark.flags import Flag
@@ -53,34 +54,20 @@ _TIER_SCHEMA = (
     " p95_gap float, sum_text_len long, mean_text_len float, block binary"
 )
 
-# kernel-internal schema: bucket as int64 µs — tz-aware timestamps crossing
-# the Arrow<->pandas boundary cost ~ms per batch; a long is free. The public
-# timestamp column is restored JVM-side with timestamp_micros.
-_TIER_SCHEMA_US = _TIER_SCHEMA.replace("bucket_start timestamp", "bucket_us long")
 
-
-def _kernel_input(df: DataFrame, *keys: str) -> DataFrame:
-    """Explicitly hash-partition a grouped-kernel input by its keys.
+def kernel_groups(df: DataFrame, *keys: str) -> GroupedData:
+    """``df`` grouped by ``keys`` for a grouped Python kernel, explicitly
+    hash-partitioned by them first.
 
     AQE coalesces shuffle partitions by BYTES, which is the wrong heuristic
     for Python-kernel stages: a few MB of tier rows can carry thousands of
     CPU-bound kernel groups, and byte-coalescing serializes them onto one
     core. An explicit repartition (user-specified partition counts are
-    respected by AQE) keeps kernel parallelism ∝ cores; the subsequent
-    groupBy reuses the partitioning, so no extra exchange is added.
+    respected by AQE) keeps kernel parallelism ∝ cores; the groupBy reuses
+    the partitioning, so no extra exchange is added.
     """
     n = 2 * df.sparkSession.sparkContext.defaultParallelism
-    return df.repartition(n, *keys)
-
-
-def _restore_bucket(df: DataFrame) -> DataFrame:
-    cols = [
-        F.timestamp_micros(F.col("bucket_us")).alias("bucket_start")
-        if c == "bucket_us"
-        else F.col(c)
-        for c in df.columns
-    ]
-    return df.select(*cols)
+    return df.repartition(n, *keys).groupBy(*keys)
 
 # grains with no fixed µs period (week is Monday-anchored, month is
 # irregular): rolled up from tier_1d by rollup_coarser
@@ -104,7 +91,8 @@ def _f32col(tbl: "pa.Table", name: str) -> np.ndarray:
 def _tier_table(conv, buckets, starts, ts_us, gaps, tl, ok, partials=None) -> "pa.Table":
     """One tier row per segment ``starts[k]:starts[k+1]`` of the sorted rows.
 
-    ``conv`` (pyarrow array) and ``buckets`` hold one key per segment.
+    ``conv`` (pyarrow array) and ``buckets`` (µs; emitted as a zero-copy
+    UTC timestamp view) hold one key per segment.
     Counts, the text-length sum, the blocks and the exact p95 are vectorized
     over all segments; the loop keeps only the order-sensitive float sums.
     NaN doubles as the NULL marker for the f32 measure columns (legit values
@@ -172,7 +160,7 @@ def _tier_table(conv, buckets, starts, ts_us, gaps, tl, ok, partials=None) -> "p
     return pa.table(
         {
             "conv_id": conv,
-            "bucket_us": pa.array(buckets),
+            "bucket_start": pa.array(buckets).view(pa.timestamp("us", "UTC")),
             "n_turns": pa.array(counts),
             "n_qc_fail": pa.array(counts - n_ok),
             "n_gap_obs": pa.array(n_ok - n_valid),
@@ -230,11 +218,7 @@ def rollup_coarser(tier_1d: DataFrame, grain: str) -> DataFrame:
             out = out.set_column(out.schema.get_field_index(name), name, total)
         return out
 
-    return _restore_bucket(
-        _kernel_input(base, "conv_id", "bucket_us")
-        .groupBy("conv_id", "bucket_us")
-        .applyInArrow(kernel, _TIER_SCHEMA_US)
-    )
+    return kernel_groups(base, "conv_id", "bucket_us").applyInArrow(kernel, _TIER_SCHEMA)
 
 
 def _fused_process(tbl: "pa.Table") -> "pa.Table":
@@ -254,7 +238,7 @@ def _fused_process(tbl: "pa.Table") -> "pa.Table":
     ts_us = _npcol(tbl, "_ts_us").astype(np.int64, copy=False)
     gaps = _f32col(tbl, "turn_gap_s")
     tl = _f32col(tbl, "text_len")
-    ok = _npcol(tbl, "_is_fail") != 1
+    ok = _npcol(tbl, "flag_dip") != int(Flag.FAIL)
     day = ts_us - ts_us % DAY_US  # numpy floor-mod: pre-epoch safe
     seg_change = (codes[1:] != codes[:-1]) | (day[1:] != day[:-1])
     seg_id = np.concatenate(([0], np.cumsum(seg_change)))
@@ -289,30 +273,23 @@ def rollup_tiers_fused(df: DataFrame) -> DataFrame:
 
     ``df`` is stage 1's output (:func:`with_gap_and_dip_parallel`): every
     (conv_id, day) segment whole within one partition, rows sorted by
-    (conv_id, day, turn_idx). Rows whose ``flag_dip`` is FAIL are excluded
-    from the measures. Output is the tier schema plus a ``_grain`` tag
-    (0=minute, 1=hour, 2=day). A whole-partition ``mapInArrow`` stream
-    processes every complete segment of each Arrow batch vectorized across
-    segments, holding back only the trailing one (:func:`segment_stream`),
-    which raises :class:`TurnOrderError` when conv_id or ts goes backwards
-    within a partition — that input would otherwise split a bucket into
-    duplicate rows.
+    (conv_id, day, turn_idx), time as µs ``_ts_us``. Rows whose
+    ``flag_dip`` is FAIL are excluded from the measures. Output is the tier
+    schema plus a ``_grain`` tag (0=minute, 1=hour, 2=day). A
+    whole-partition ``mapInArrow`` stream processes every complete segment
+    of each Arrow batch vectorized across segments, holding back only the
+    trailing one (:func:`segment_stream`), which raises
+    :class:`TurnOrderError` when conv_id or _ts_us goes backwards within a
+    partition — that input would otherwise split a bucket into duplicate
+    rows.
     """
-    ts_us = F.unix_micros(F.col("ts").cast("timestamp"))
-    base = df.select(
-        "conv_id",
-        ts_us.alias("_ts_us"),
-        F.col("turn_gap_s"),
-        F.col("text_len"),
-        (F.col("flag_dip") == int(Flag.FAIL)).cast("int").alias("_is_fail"),
-    )
-
     def stream_kernel(batches):
         for done, _ in segment_stream(batches):
             yield from _fused_process(done).to_batches()
 
-    out = base.mapInArrow(stream_kernel, _TIER_SCHEMA_US + ", _grain tinyint")
-    return _restore_bucket(out)
+    return df.select("conv_id", "_ts_us", "turn_gap_s", "text_len", "flag_dip").mapInArrow(
+        stream_kernel, _TIER_SCHEMA + ", _grain tinyint"
+    )
 
 
 def rollup_by_dimension(df: DataFrame, dim_col: str) -> DataFrame:
@@ -334,11 +311,11 @@ def rollup_by_dimension(df: DataFrame, dim_col: str) -> DataFrame:
 
 def rollup_dims_fused(df: DataFrame) -> DataFrame:
     """The hourly ``role`` and ``tool`` rollups in ONE pass over the input:
-    explode each row into (dim_kind, dim_value) pairs, then a single
-    groupBy. Split with ``filter(dim_kind = ...)``.
+    explode each row into (_grain, dim_value) pairs (tinyint ``_grain``:
+    0 = role, 1 = tool, as the write reads it), then a single groupBy.
 
-    Output: (dim_kind, bucket_start, dim_value, n_turns, mean_text_len);
-    per-kind slices equal :func:`rollup_by_dimension` exactly (tested).
+    Output: (_grain, bucket_start, dim_value, n_turns, mean_text_len);
+    per-grain slices equal :func:`rollup_by_dimension` exactly (tested).
 
     ``build_tiers`` uses it on its un-persisted scan-side frame: one pass
     over the input instead of one re-scan and text decode per dimension,
@@ -351,13 +328,14 @@ def rollup_dims_fused(df: DataFrame) -> DataFrame:
     bucket = F.date_trunc("hour", F.col("ts").cast("timestamp"))
     pairs = F.array(
         *[
-            F.struct(F.lit(d).alias("dim_kind"), F.col(d).cast("string").alias("dim_value"))
-            for d in ("role", "tool")
+            F.struct(F.lit(g).cast("tinyint").alias("_grain"),
+                     F.col(d).cast("string").alias("dim_value"))
+            for g, d in enumerate(("role", "tool"))
         ]
     )
     return (
         df.select(bucket.alias("bucket_start"), F.explode(pairs).alias("p"), "text_len")
-        .groupBy("p.dim_kind", "bucket_start", "p.dim_value")
+        .groupBy("p._grain", "bucket_start", "p.dim_value")
         .agg(
             F.count(F.lit(1)).alias("n_turns"),
             F.round(F.avg(F.col("text_len").cast("double")), 6).alias("mean_text_len"),

@@ -4,10 +4,10 @@ transcripts
   -> scan-side narrow projection (not cached): text replaced by text_len;
      role/tool kept here ONLY for the dimension rollups
   -> stage 1 (range shuffle on (conv_id, day), moving just
-     conv_id/turn_idx/ts/text_len; sorted by (conv_id, day, turn_idx)):
+     conv_id/turn_idx/_ts_us/text_len; sorted by (conv_id, day, turn_idx)):
      turn_gap_s + flag_dip from a parallel sort plus a 2-row edge stitch
      (with_gap_and_dip_parallel)
-  -> fused tier Arrow kernel on stage 1's partitions, no second shuffle —
+  -> fused tier Arrow kernel on stage 1's columns, no second shuffle —
      f32 measures + exact p95 + Gorilla block for 1m/1h/1d in one pass
   -> dimension rollups (role/tool) in one fused pass over the scan-side
      projection: they need no stage-1 output, so the dimension strings
@@ -29,6 +29,12 @@ from pyspark.sql import functions as F
 from olympian_spark.operators.qc_series import with_gap_and_dip_parallel
 from olympian_spark.operators.rollup import rollup_dims_fused, rollup_tiers_fused
 
+# a row of _tagged / _dims belongs to the table at its _grain index here
+TIER_TABLES = ("tier_1m", "tier_1h", "tier_1d")
+DIM_TABLES = ("rollup_role_1h", "rollup_tool_1h")
+# both dimension tables store their value column as dim_value
+DIM_COLUMNS = {"rollup_role_1h": {"dim_value": "role"}, "rollup_tool_1h": {"dim_value": "tool"}}
+
 
 @dataclass
 class QcParams:
@@ -49,6 +55,9 @@ def build_tiers(
     caller's write barriers. ``_sorted`` is stage 1's persisted range sort
     (stage 1 runs jobs when it is built); the caller unpersists ``_tagged``,
     ``_dims`` and ``_sorted`` when done, and nothing else stays cached.
+    Read the tiers before ``_sorted`` is released: a read after that raises
+    :class:`~olympian_spark.operators.qc_series.StaleLayoutError` if the
+    recomputed range sort drew other bounds.
 
     A NULL ``ts``, or ``ts`` going backwards in ``turn_idx`` order within a
     conversation, makes the first action on a tier raise
@@ -58,7 +67,7 @@ def build_tiers(
     # downstream consumes: text replaced by its 4-byte length (the string
     # must never cross the shuffle). role/tool live here for the dimension
     # rollups, which need NO stage-1 output (ts + dim + text_len only), so
-    # the exchange moves exactly (conv_id, turn_idx, ts, text_len) per row.
+    # the exchange moves exactly (conv_id, turn_idx, _ts_us, text_len) per row.
     #
     # Not persisted: its consumers are the QC/kernel chain (exactly once)
     # and the dimension rollups, which never reference turn_idx, so they
@@ -68,16 +77,10 @@ def build_tiers(
         "conv_id", "turn_idx", "ts", "role", "tool",
         F.length(F.coalesce(F.col("text"), F.lit(""))).cast("float").alias("text_len"),
     )
-    # Stage 1: turn_gap_s + flag_dip from a RANGE-partitioned parallel sort
-    # + 2-row boundary stitch instead of per-conversation windows. Window
-    # semantics require a whole conversation per partition, so a
-    # pathologically hot conversation serializes stage 1 behind one task
-    # (measured: 146s of a 223s 64M-turn pipeline, two conversations holding
-    # 91% of rows); the range key (conv_id, day) spreads it across every
-    # partition by day. Flag/gap parity with the window path is tested
-    # directly. The explicit n_part also sidesteps AQE's byte-based
-    # coalescing (sorted narrow rows compress to ~1 byte/row, which once
-    # starved this stage to 10 partitions on 32 cores).
+    # Stage 1 spreads a hot conversation across partitions by day (see
+    # with_gap_and_dip_parallel). Its explicit n_part sidesteps AQE's
+    # byte-based coalescing (sorted narrow rows compress to ~1 byte/row,
+    # which once starved this stage to 10 partitions on 32 cores).
     slim, sorted_handle = with_gap_and_dip_parallel(
         pre.drop("role", "tool"), params.dip_high, params.dip_max
     )
@@ -92,19 +95,10 @@ def build_tiers(
     dims = rollup_dims_fused(pre)
     if persist:
         tagged, dims = tagged.persist(), dims.persist()
-    return {
-        "_tagged": tagged,
-        "_dims": dims,
-        "_sorted": sorted_handle,
-        "tier_1m": tagged.filter("_grain = 0").drop("_grain"),
-        "tier_1h": tagged.filter("_grain = 1").drop("_grain"),
-        "tier_1d": tagged.filter("_grain = 2").drop("_grain"),
-        "rollup_role_1h": (
-            dims.filter("dim_kind = 'role'").drop("dim_kind")
-            .withColumnRenamed("dim_value", "role")
-        ),
-        "rollup_tool_1h": (
-            dims.filter("dim_kind = 'tool'").drop("dim_kind")
-            .withColumnRenamed("dim_value", "tool")
-        ),
-    }
+    out = {"_tagged": tagged, "_dims": dims, "_sorted": sorted_handle}
+    for grain, table in enumerate(TIER_TABLES):
+        out[table] = tagged.filter(f"_grain = {grain}").drop("_grain")
+    for grain, table in enumerate(DIM_TABLES):
+        dim = dims.filter(f"_grain = {grain}").drop("_grain")
+        out[table] = dim.withColumnsRenamed(DIM_COLUMNS[table])
+    return out

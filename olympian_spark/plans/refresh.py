@@ -51,13 +51,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from olympian_spark.plans.pipeline import QcParams, build_tiers
+from olympian_spark.plans.pipeline import (
+    DIM_COLUMNS, DIM_TABLES, TIER_TABLES, QcParams, build_tiers,
+)
 from olympian_spark.sources.catalog import ParquetManifestCatalog, with_bucket_date
-
-TIER_TABLES = ("tier_1m", "tier_1h", "tier_1d")
-DIM_TABLES = ("rollup_role_1h", "rollup_tool_1h")
-# both dimension tables store their value column as dim_value
-DIM_COLUMNS = {"rollup_role_1h": {"dim_value": "role"}, "rollup_tool_1h": {"dim_value": "tool"}}
 
 
 def affected_days(transcripts: DataFrame, since_watermark: str) -> list[str]:
@@ -168,12 +165,7 @@ def refresh_tiers(
         # flag-independent: no boundary days; _grain is the DIM_TABLES index
         pending_dims, wanted = _pending(catalog, DIM_TABLES, new_days, results)
         if pending_dims:
-            dims = (
-                with_bucket_date(tiers["_dims"])
-                .withColumn("_grain", F.when(F.col("dim_kind") == "role", 0).otherwise(1))
-                .drop("dim_kind")
-                .filter(wanted)
-            )
+            dims = with_bucket_date(tiers["_dims"]).filter(wanted)
             written.update(catalog.overwrite_grouped(pending_dims, dims, watermark, DIM_COLUMNS))
         if full and (pending or pending_dims) and not written:
             return {}  # an empty input, or one whose rows all fall before the cutoffs

@@ -91,14 +91,14 @@ def get_spark(
         # crosses disks/network).
         .config("spark.io.compression.codec", "lz4")
         .config(map=FILE_CONF)
-        # columnar-cache compression is pure overhead for the engine's hot
-        # cached frame (the fused tier table): its dominant bytes are
-        # Gorilla blocks — already-compressed, high-entropy binary the
-        # cache codec cannot shrink (guide: compression on high-entropy
-        # payloads). Measured: cold persist+count of the 16M-turn tier
-        # frame 64s -> 43s with compression off. Narrow numeric caches
-        # lose a little memory density; memory-tight clusters flip it back
-        # to true via extra_conf.
+        # columnar-cache compression is pure overhead for the tier table
+        # build_tiers(persist=True) caches: its dominant bytes are Gorilla
+        # blocks — already-compressed, high-entropy binary the cache codec
+        # cannot shrink (guide: compression on high-entropy payloads).
+        # Measured: cold persist+count of the 16M-turn tier frame 64s ->
+        # 43s with compression off. A refresh caches only stage 1's narrow
+        # numeric sort, which loses a little memory density; memory-tight
+        # clusters flip it back to true via extra_conf.
         .config("spark.sql.inMemoryColumnarStorage.compressed", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # grouped kernels stream per-group Arrow batches. 64k rows/batch

@@ -85,6 +85,13 @@ def _json_stat(v):
     return v.isoformat() if hasattr(v, "isoformat") else v
 
 
+def _instant(v) -> datetime:
+    """An ISO string or a ``datetime`` as a UTC instant; naive values are
+    UTC, the session zone ``FILE_CONF`` fixes."""
+    t = datetime.fromisoformat(v) if isinstance(v, str) else v
+    return t if t.tzinfo else t.replace(tzinfo=timezone.utc)
+
+
 class ParquetManifestCatalog:
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
@@ -389,12 +396,13 @@ class ParquetManifestCatalog:
         lower_bounds/upper_bounds trick at partition granularity).
         Commits record bounds for ``bucket_start`` only; a partition without
         recorded bounds for ``col`` (no such column, or only NULLs in it) is
-        conservatively kept."""
-        lo, hi = _json_stat(lo), _json_stat(hi)
+        conservatively kept. Bounds (ISO strings with ``+00:00``) and
+        ``lo``/``hi`` compare as UTC instants, not as strings."""
+        lo, hi = _instant(lo), _instant(hi)
         out = {}
         for pval, rec in self.committed_partitions(table).items():
             bounds = (rec.get("stats") or {}).get(col)
-            if bounds is None or not (hi < bounds[0] or lo > bounds[1]):
+            if bounds is None or not (hi < _instant(bounds[0]) or lo > _instant(bounds[1])):
                 out[pval] = rec
         return out
 

@@ -577,6 +577,34 @@ def test_manifest_column_stats_pruned_read(spark, tmp_path):
     assert set(cat.pruned_partitions("t", "bucket_start", lo, hi)) == {"2024-01-09"}
 
 
+def test_pruning_compares_bounds_as_instants(spark, tmp_path):
+    """A range end exactly on a partition's first bucket_start keeps that
+    partition, as ``between`` includes the row: the footer bound carries
+    ``+00:00`` and a naive datetime or a string end does not, so the ends
+    and the bounds compare as UTC instants, not as ISO strings."""
+    from datetime import datetime, timedelta
+
+    cat = ParquetManifestCatalog(spark, str(tmp_path / "instants"))
+    t0 = datetime(2024, 1, 1, 10)
+    t1 = t0 + timedelta(days=1)
+    cat.overwrite_partitions("t", spark.createDataFrame(
+        [("a", "2024-01-01", t0), ("b", "2024-01-02", t1)],
+        "k string, bucket_date string, bucket_start timestamp",
+    ))
+    assert cat.committed_partitions("t")["2024-01-02"]["stats"]["bucket_start"][0].endswith("+00:00")
+    for hi in (t1, "2024-01-02T10:00:00", "2024-01-02 10:00:00"):
+        assert set(cat.pruned_partitions("t", "bucket_start", t0, hi)) == {
+            "2024-01-01", "2024-01-02",
+        }, hi
+        assert sorted(r.k for r in cat.read_where_between("t", "bucket_start", t0, hi).collect()) == [
+            "a", "b",
+        ], hi
+    # a space-separated end on a partition's own day keeps that partition
+    assert set(cat.pruned_partitions("t", "bucket_start", t0, "2024-01-01 11:00:00")) == {
+        "2024-01-01",
+    }
+
+
 def test_refresh_commits_bucket_start_bounds(spark, tmp_path):
     """Tier refresh records bucket_start bounds in the manifest, and a
     time-range read prunes to the overlapping day partitions only."""

@@ -278,7 +278,7 @@ def test_sum_text_len_exact_above_f32_integers():
         "_ts_us": pa.array([0, 1_000_000], pa.int64()),
         "turn_gap_s": pa.array([None, 1.0], pa.float32()),
         "text_len": pa.array([2.0**24, 1.0], pa.float32()),
-        "_is_fail": pa.array([0, 0], pa.int32()),
+        "flag_dip": pa.array([int(Flag.PASS)] * 2, pa.int8()),
     })
     out = _fused_process(tbl)
     assert out.column("_grain").to_pylist() == [0, 1, 2]
@@ -316,9 +316,9 @@ def test_fused_dims_equal_per_dimension_rollups(spark):
         F.length(F.coalesce(F.col("text"), F.lit(""))).cast("float").alias("text_len"),
     )
     dims = rollup_dims_fused(slim).persist()
-    for d in ("role", "tool"):
+    for grain, d in enumerate(("role", "tool")):
         a = (
-            dims.filter(f"dim_kind = '{d}'").drop("dim_kind")
+            dims.filter(f"_grain = {grain}").drop("_grain")
             .withColumnRenamed("dim_value", d)
             .orderBy("bucket_start", d).toPandas()
         )
@@ -389,7 +389,7 @@ def test_tier_kernel_rejects_unsorted_input(spark):
         spark.createDataFrame(rows, "conv_id string, turn_idx int, ts string")
         .coalesce(1)
         .select(
-            "conv_id", "turn_idx", F.to_timestamp("ts").alias("ts"),
+            "conv_id", "turn_idx", F.unix_micros(F.to_timestamp("ts")).alias("_ts_us"),
             F.lit(1.0).cast("float").alias("turn_gap_s"),
             F.lit(2.0).cast("float").alias("text_len"),
             F.lit(int(Flag.PASS)).cast("tinyint").alias("flag_dip"),
@@ -413,6 +413,11 @@ def test_build_tiers_releases_all_persisted_rdds(spark):
         tiers[k].unpersist()
     assert len(held) == 3, held
     assert set(spark.sparkContext._jsc.getPersistentRDDs().keySet()) == before
+    # one row shape through the tier path: stage 1 caches one timestamp,
+    # and both tagged frames carry the _grain the grouped write reads
+    assert tiers["_sorted"].columns == ["conv_id", "turn_idx", "_ts_us", "text_len"]
+    assert "_grain" in tiers["_tagged"].columns
+    assert "_grain" in tiers["_dims"].columns
 
 
 def test_tier_plan_exchange_budget(spark):
@@ -437,6 +442,54 @@ def test_tier_plan_exchange_budget(spark):
             assert n <= 1, f"{name}: {n} exchanges (budget 1)\n{plan[:1500]}"
     finally:
         tiers["_sorted"].unpersist()
+
+
+def _rows(df):
+    return sorted(df.collect())
+
+
+def test_union_of_unpersisted_tier_slices(spark):
+    """With persist=False every tier slice recomputes the stencil over
+    stage 1's cached sort. In a union Spark numbers the second branch's
+    tasks after the first's, so the stitch context must not be found by
+    task partition id: the union holds every row of both slices."""
+    pdf = gen_transcripts(n_turns=4000, n_convs=20, seed=3).to_pandas()
+    tiers = build_tiers(spark.createDataFrame(pdf), PARAMS, persist=False)
+    try:
+        parts = [_rows(tiers[t]) for t in TIERS]
+        union = tiers["tier_1m"].unionByName(tiers["tier_1h"]).unionByName(tiers["tier_1d"])
+        got = _rows(union)
+    finally:
+        tiers["_sorted"].unpersist()
+    assert all(parts)
+    assert got == sorted(r for p in parts for r in p)
+
+
+def test_tier_read_after_release_never_returns_other_tiers(spark):
+    """A new query over a tier slice after stage 1's sort is released plans
+    its range sort again, here with other bounds (a smaller range-exchange
+    sample). The stitch context no longer fits those partitions, so the
+    read raises StaleLayoutError; it never returns other tiers."""
+    key = "spark.sql.execution.rangeExchange.sampleSizePerPartition"
+    pdf = gen_transcripts(n_turns=4000, n_convs=20, seed=3).to_pandas()
+    tiers = build_tiers(spark.createDataFrame(pdf), PARAMS, persist=False)
+    first = {t: _rows(tiers[t]) for t in TIERS}
+    tiers["_sorted"].unpersist()
+    old = spark.conf.get(key, None)
+    spark.conf.set(key, "2")
+    try:
+        for t in TIERS:
+            try:
+                again = _rows(tiers[t].select("*"))
+            except Exception as e:  # the worker's error arrives as a PythonException
+                assert "StaleLayoutError" in str(e), str(e)[:2000]
+            else:
+                assert again == first[t], t
+    finally:
+        if old is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, old)
 
 
 def test_full_refresh_job_budget(spark, tmp_path):
