@@ -14,7 +14,9 @@ an **input watermark** (the max ingest timestamp of the batch). A run:
    day of that turn must be rewritten too. Boundary partitions also hold
    buckets of UNAFFECTED conversations, so they are rewritten as
    (existing rows minus affected convs) UNION (recomputed rows) — an
-   anti-join, never a full-table rewrite.
+   anti-join, never a full-table rewrite. The existing rows are read with
+   ``ParquetManifestCatalog.read_days``: only the boundary days are
+   planned and scanned, however long the table's history.
 3. **scope** — a full refresh (no ``since_watermark``) affects every day
    and every conversation, so it recomputes the input as-is and runs no
    scoping job. An incremental one recomputes tiers over exactly the
@@ -79,12 +81,18 @@ def _scope(catalog: ParquetManifestCatalog, table: str, days: list[str] | None):
     silently resurrect partitions that apply_retention already expired.
     Expiry wins: days before the recorded cutoff are never re-written.
     """
-    cutoff = catalog.retention_cutoff(table)
     day = F.col("bucket_date").cast("string")
     if days is None:
+        cutoff = catalog.retention_cutoff(table)
         return day >= cutoff if cutoff else F.lit(True)
-    days = [d for d in days if not cutoff or d >= cutoff]
+    days = _unexpired(catalog, table, days)
     return day.isin(days) if days else None
+
+
+def _unexpired(catalog: ParquetManifestCatalog, table: str, days: list[str]) -> list[str]:
+    """The days of ``days`` that ``table``'s retention cutoff keeps."""
+    cutoff = catalog.retention_cutoff(table)
+    return [d for d in days if not cutoff or d >= cutoff]
 
 
 def refresh_tiers(
@@ -150,12 +158,14 @@ def refresh_tiers(
         pending, wanted = _pending(catalog, TIER_TABLES, tier_days, results)
         out = with_bucket_date(tiers["_tagged"]).filter(wanted)
         for grain, table in pending.items():
-            merge = _scope(catalog, table, boundary_days) if boundary_days else None
-            if merge is not None:
+            merge = _unexpired(catalog, table, boundary_days)
+            if merge:
                 # boundary partitions also hold UNAFFECTED conversations'
-                # buckets: keep those, replace the affected ones
+                # buckets: keep those, replace the affected ones. Only the
+                # boundary days are read, so planning the merge costs the
+                # same whatever the table's history.
                 keep = (
-                    catalog.read(table).filter(merge)
+                    catalog.read_days(table, merge)
                     .join(convs, "conv_id", "left_anti")
                     .withColumn("_grain", F.lit(grain).cast("tinyint"))
                 )

@@ -116,9 +116,13 @@ def get_spark(
         # of unchanged zip archives (see module docstring). The daemon starts
         # via ``python -m`` before any --py-files exist, so the package's
         # parent directory goes on the workers' path; local mode shares the
-        # driver's filesystem.
+        # driver's filesystem. ``python -m`` would also put the working
+        # directory first on that path, and an ``olympian_spark`` there would
+        # then shadow the driver's: PYTHONSAFEPATH (CPython >= 3.11) keeps
+        # it off.
         .config("spark.python.daemon.module", "olympian_spark.worker_daemon")
         .config("spark.executorEnv.PYTHONPATH", _worker_pythonpath())
+        .config("spark.executorEnv.PYTHONSAFEPATH", "1")
     )
     if local_dir:
         builder = builder.config("spark.local.dir", local_dir)

@@ -38,7 +38,13 @@ files + an atomically-swapped metadata pointer):
   the live set; files stay until vacuumed) — the Iceberg ``DELETE WHERE``
   partition-predicate fast path
 - **data skipping**: ``read_where_between`` scans only the partitions
-  whose committed bounds overlap the range
+  whose committed bounds overlap the range; a range that overlaps none is
+  an empty frame that scans nothing
+- **metadata-planned reads**: a read loads the manifest once and takes
+  each snapshot group's schema from one of its parquet footers on the
+  driver (as Delta Lake and Iceberg plan scans from table metadata), so
+  building a ``read``, ``read_days`` or ``read_where_between`` frame runs
+  no Spark job; Spark's own schema inference would run one job per group
 - **vacuum**: ``expire_snapshots`` physically reclaims files no reachable
   snapshot references (Iceberg ``expireSnapshots`` + orphan-file removal)
 - **incremental refresh**: callers compute only changed partitions (from
@@ -70,6 +76,8 @@ from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
+from pyspark.sql.types import ArrayType, DataType, DateType, MapType, StructField, StructType
 
 
 # The one layout: every table is partitioned by day, and every commit records
@@ -90,6 +98,31 @@ def _instant(v) -> datetime:
     UTC, the session zone ``FILE_CONF`` fixes."""
     t = datetime.fromisoformat(v) if isinstance(v, str) else v
     return t if t.tzinfo else t.replace(tzinfo=timezone.utc)
+
+
+def _as_nullable(t: DataType) -> DataType:
+    """``t`` with every field, element and value nullable, as Spark reads
+    any parquet file (Scala's ``DataType.asNullable``)."""
+    if isinstance(t, StructType):
+        return StructType([StructField(f.name, _as_nullable(f.dataType)) for f in t])
+    if isinstance(t, ArrayType):
+        return ArrayType(_as_nullable(t.elementType))
+    if isinstance(t, MapType):
+        return MapType(_as_nullable(t.keyType), _as_nullable(t.valueType))
+    return t
+
+
+def _footer_schema(pdir: str) -> StructType:
+    """The schema Spark infers for a read of partition directory ``pdir``
+    with ``basePath`` at its snapshot directory, from one parquet footer
+    read on the driver: the file's columns, every one nullable, then
+    ``bucket_date`` as a date (Spark infers ``YYYY-MM-DD`` partition values
+    as dates)."""
+    import pyarrow.parquet as pq
+
+    f = next(f for f in sorted(os.listdir(pdir)) if f.endswith(".parquet"))
+    schema = _as_nullable(from_arrow_schema(pq.read_schema(os.path.join(pdir, f))))
+    return schema.add(PARTITION_COL, DateType())
 
 
 class ParquetManifestCatalog:
@@ -181,10 +214,14 @@ class ParquetManifestCatalog:
         ``as_of`` (default: current state). A past state stays readable
         until ``expire_snapshots`` reclaims its files; ``keep_last``
         protects the last states. An unknown ``as_of`` raises ``ValueError``."""
-        snaps = self._load_manifest(table)["snapshots"]
+        return self._committed(table, self._load_manifest(table)["snapshots"], as_of)
+
+    @classmethod
+    def _committed(cls, table: str, snaps: list, as_of: int | None) -> dict:
+        """:meth:`committed_partitions` of an already loaded manifest."""
         if as_of is not None and as_of not in {s["snapshot_id"] for s in snaps}:
             raise ValueError(f"{table}: no snapshot {as_of} in the manifest")
-        return self._fold(snaps, as_of)
+        return cls._fold(snaps, as_of)
 
     def input_watermark(self, table: str) -> str | None:
         for snap in reversed(self._load_manifest(table)["snapshots"]):
@@ -351,11 +388,11 @@ class ParquetManifestCatalog:
         snapshot id; one whose files ``expire_snapshots`` reclaimed raises
         ``ValueError`` (one directory test per live partition).
 
-        The live partition set is grouped by owning snapshot directory and
-        read with ``basePath`` so the partition column survives; partition
-        pruning still reaches each directory scan.
+        Planned from one manifest load and one parquet footer per snapshot
+        group (:meth:`_read_live`): building the frame runs no Spark job.
         """
-        live = self.committed_partitions(table, as_of)
+        snaps = self._load_manifest(table)["snapshots"]
+        live = self._committed(table, snaps, as_of)
         if not live:
             raise ValueError(f"{table}: no committed partitions"
                              + (f" at snapshot {as_of}" if as_of else ""))
@@ -363,24 +400,53 @@ class ParquetManifestCatalog:
             for pval, rec in sorted(live.items()):
                 if not os.path.isdir(self._part_dir(table, rec["snapshot_id"], pval)):
                     raise ValueError(f"{table}: snapshot {as_of} is expired ({pval} reclaimed)")
-        return self._read_live(table, live)
+        return self._read_live(table, snaps, live)
 
-    def _read_live(self, table: str, live: dict) -> DataFrame:
-        """Read an explicit live-partition map (read()'s grouping logic,
-        reusable for partition-pruned reads like :meth:`read_where_between`).
-        Each snapshot's files are renamed by its recorded ``columns`` map, so
-        partitions that store different physical names read as one column."""
-        mapped = {
-            s["snapshot_id"]: s["columns"]
-            for s in self._load_manifest(table)["snapshots"] if s.get("columns")
-        }
+    def read_days(self, table: str, days: list[str]) -> DataFrame:
+        """The head's live partitions among ``days`` (a day that is not
+        live is skipped), planned like :meth:`read`. With none of them live
+        it is an empty frame with the table's schema, which scans nothing."""
+        snaps = self._load_manifest(table)["snapshots"]
+        head = self._fold(snaps)
+        live = {d: head[d] for d in days if d in head}
+        return self._read_live(table, snaps, live or head, scan=bool(live))
+
+    def _read_live(self, table: str, snaps: list, live: dict, scan: bool = True) -> DataFrame:
+        """Read an explicit live-partition map of ``table``'s manifest
+        ``snaps``, grouped by owning snapshot directory.
+
+        Each group is read with ``basePath`` so the ``bucket_date``
+        partition column survives, and with the schema of ONE of its
+        parquet footers, read on the driver (a snapshot is one Spark write,
+        so all its files share it): Spark then infers nothing, and building
+        the frame runs no job — inference would run one per group. Spark
+        still lists a group of more than 32 day directories (its
+        ``parallelPartitionDiscovery.threshold``) with a job. The footer
+        schema is what Spark infers from the same file: every field
+        nullable, ``bucket_date`` a date appended last. Each group's files
+        are renamed by its snapshot's recorded ``columns`` map, so partitions
+        that store different physical names read as one column. With
+        ``scan=False`` every group is an empty frame of that schema: the
+        schema of the read, with no file listed or scanned by Spark.
+        """
+        if not live:
+            raise ValueError(f"{table}: no committed partitions")
+        mapped = {s["snapshot_id"]: s["columns"] for s in snaps if s.get("columns")}
         groups: dict[int, list] = {}
         for pval, rec in live.items():
             groups.setdefault(rec["snapshot_id"], []).append(pval)
         out = None
         for sid in sorted(groups):
             paths = [self._part_dir(table, sid, pval) for pval in groups[sid]]
-            part = self.spark.read.option("basePath", self._snap_dir(table, sid)).parquet(*paths)
+            schema = _footer_schema(paths[0])
+            if scan:
+                part = (
+                    self.spark.read.schema(schema)
+                    .option("basePath", self._snap_dir(table, sid))
+                    .parquet(*paths)
+                )
+            else:
+                part = self.spark.createDataFrame([], schema)
             if sid in mapped:
                 part = part.withColumnsRenamed(mapped[sid])
             # allowMissingColumns = schema evolution: files written before a
@@ -388,6 +454,18 @@ class ParquetManifestCatalog:
             out = part if out is None else out.unionByName(
                 part, allowMissingColumns=True
             )
+        return out
+
+    @staticmethod
+    def _overlapping(live: dict, col: str, lo, hi) -> dict:
+        """The partitions of ``live`` whose recorded ``col`` bounds overlap
+        [lo, hi], or that record no bounds for ``col``."""
+        lo, hi = _instant(lo), _instant(hi)
+        out = {}
+        for pval, rec in live.items():
+            bounds = (rec.get("stats") or {}).get(col)
+            if bounds is None or not (hi < _instant(bounds[0]) or lo > _instant(bounds[1])):
+                out[pval] = rec
         return out
 
     def pruned_partitions(self, table: str, col: str, lo, hi) -> dict:
@@ -398,24 +476,25 @@ class ParquetManifestCatalog:
         recorded bounds for ``col`` (no such column, or only NULLs in it) is
         conservatively kept. Bounds (ISO strings with ``+00:00``) and
         ``lo``/``hi`` compare as UTC instants, not as strings."""
-        lo, hi = _instant(lo), _instant(hi)
-        out = {}
-        for pval, rec in self.committed_partitions(table).items():
-            bounds = (rec.get("stats") or {}).get(col)
-            if bounds is None or not (hi < _instant(bounds[0]) or lo > _instant(bounds[1])):
-                out[pval] = rec
-        return out
+        return self._overlapping(self.committed_partitions(table), col, lo, hi)
 
     def read_where_between(self, table: str, col: str, lo, hi) -> DataFrame:
         """Range read with manifest-bounds pruning: only partitions whose
         committed ``col`` bounds overlap [lo, hi] are scanned (the residual
         row filter still applies — bounds are partition-coarse). At 100 TB
         a needle query touches the handful of overlapping partitions'
-        files instead of the table."""
-        live = self.pruned_partitions(table, col, lo, hi)
+        files instead of the table.
+
+        Planned like :meth:`read` from the same manifest load that prunes,
+        so building the frame runs no Spark job. When no partition
+        overlaps, it is an empty frame with the table's schema, which scans
+        nothing."""
+        snaps = self._load_manifest(table)["snapshots"]
+        head = self._fold(snaps)
+        live = self._overlapping(head, col, lo, hi)
         if not live:
-            return self.read(table).filter(F.lit(False))
-        return self._read_live(table, live).filter(F.col(col).between(lo, hi))
+            return self._read_live(table, snaps, head, scan=False)
+        return self._read_live(table, snaps, live).filter(F.col(col).between(lo, hi))
 
     def verify_table(self, table: str) -> dict:
         """Anti-entropy audit: reconcile the manifest's committed state

@@ -8,9 +8,14 @@
 - full refresh: no resurrection after retention, empty input commits nothing
 - grouped tier write: one file per (table, day), no staging dir left
 - manifest carries per-partition lineage + metrics
+- reads take their schema from parquet footers: the schema Spark infers,
+  0 Spark jobs to build a frame, and incremental refreshes that plan only
+  their boundary days
 """
 
+import itertools
 import os
+from contextlib import contextmanager
 
 import pytest
 from pyspark.sql import functions as F
@@ -652,3 +657,121 @@ def test_verify_table_detects_tamper(spark, tmp_path):
     shutil.rmtree(pdir)
     rep3 = cat.verify_table("t")
     assert any("missing directory" in i for i in rep3["issues"])
+
+
+_GROUPS = itertools.count()
+
+
+@contextmanager
+def _jobs(spark):
+    """Counts, in the yielded list, the Spark jobs the block runs."""
+    sc = spark.sparkContext
+    keys = ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel")
+    saved = {k: sc.getLocalProperty(k) for k in keys}
+    group = f"count-{next(_GROUPS)}"
+    sc.setJobGroup(group, group)
+    counted = []
+    try:
+        yield counted
+    finally:
+        counted.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+        for k, v in saved.items():
+            sc.setLocalProperty(k, v)
+
+
+def _inferred_schema(spark, cat, table):
+    """The schema of a head read whose snapshot groups each let Spark infer
+    their schema from their files (renamed by their ``columns`` map and
+    unioned as the catalog unions them)."""
+    snaps = {s["snapshot_id"]: s for s in cat._load_manifest(table)["snapshots"]}
+    groups = {}
+    for pval, rec in cat.committed_partitions(table).items():
+        groups.setdefault(rec["snapshot_id"], []).append(pval)
+    out = None
+    for sid in sorted(groups):
+        part = spark.read.option("basePath", cat._snap_dir(table, sid)).parquet(
+            *(cat._part_dir(table, sid, pval) for pval in groups[sid])
+        ).withColumnsRenamed(snaps[sid].get("columns") or {})
+        out = part if out is None else out.unionByName(part, allowMissingColumns=True)
+    return out.schema
+
+
+def test_read_schema_is_the_inferred_schema(spark, tmp_path):
+    """The footer schema a read plans with is the one Spark infers from the
+    files, nullability included: on the five refresh tables after a full and
+    an incremental refresh, and on a table whose older snapshot lacks a
+    column that the read null-fills."""
+    full, first, split = _split_by_day(spark, n_turns=3_000, n_convs=10)
+    cat = ParquetManifestCatalog(spark, str(tmp_path / "schema"))
+    refresh_tiers(spark, cat, first, watermark="wm1", params=PARAMS)
+    refresh_tiers(
+        spark, cat, full, watermark="wm2", since_watermark=f"{split} 23:59:59.999999",
+        params=PARAMS,
+    )
+    for table in (*TIER_TABLES, *DIM_TABLES):
+        assert len({r["snapshot_id"] for r in cat.committed_partitions(table).values()}) == 2
+        assert cat.read(table).schema == _inferred_schema(spark, cat, table), table
+
+    cat.overwrite_partitions("t", spark.createDataFrame(
+        [("a", "2024-01-01", 1)], "k string, bucket_date string, v int"))
+    cat.overwrite_partitions("t", spark.createDataFrame(
+        [("b", "2024-01-02", 2, [1.5])],
+        "k string, bucket_date string, v int, score array<double>",
+    ))
+    got = cat.read("t")
+    assert got.columns == ["k", "v", "bucket_date", "score"]
+    assert got.schema == _inferred_schema(spark, cat, "t")
+    assert {(r.k, r.score and tuple(r.score)) for r in got.collect()} == {
+        ("a", None), ("b", (1.5,))}
+
+
+def test_reads_plan_without_spark_jobs(spark, tmp_path):
+    """On a table of three snapshot groups, building a head, time-travel,
+    range or day read runs no Spark job (no per-group schema inference), and
+    collecting one runs exactly one. A range that overlaps no partition is an
+    empty frame with the table's schema."""
+    from datetime import datetime, timedelta
+
+    cat = ParquetManifestCatalog(spark, str(tmp_path / "jobs"))
+    t0 = datetime(2024, 1, 1, 10)
+    for d in range(3):
+        cat.overwrite_partitions("t", spark.createDataFrame(
+            [(f"k{d}", f"2024-01-0{d + 1}", t0 + timedelta(days=d), d)],
+            "k string, bucket_date string, bucket_start timestamp, v long",
+        ))
+    lo, hi = t0, t0 + timedelta(days=1)
+    with _jobs(spark) as built:
+        head = cat.read("t")
+        past = cat.read("t", as_of=2)
+        ranged = cat.read_where_between("t", "bucket_start", lo, hi)
+        empty = cat.read_where_between(
+            "t", "bucket_start", t0 + timedelta(days=9), t0 + timedelta(days=10))
+        days = cat.read_days("t", ["2024-01-03", "2024-01-09"])
+        none = cat.read_days("t", ["2024-01-09"])
+    assert built == [0]
+    for df, want in ((head, 3), (past, 2), (ranged, 2), (empty, 0), (days, 1), (none, 0)):
+        assert df.schema == head.schema
+        with _jobs(spark) as ran:
+            assert df.toArrow().num_rows == want
+        assert ran == [1]
+
+
+def test_incremental_refresh_jobs_do_not_grow_with_history(spark, tmp_path):
+    """Each daily incremental refresh adds a snapshot group to every table,
+    and its boundary merge reads only the boundary days: the fourth refresh
+    runs no more Spark jobs than the first (each used to add one schema
+    inference job per group and table, and scan every live partition)."""
+    df = spark.createDataFrame(gen_transcripts(n_turns=3_000, n_convs=10, seed=3).to_pandas())
+    days = sorted(str(r[0]) for r in df.select(F.to_date("ts")).distinct().collect())
+    cat = ParquetManifestCatalog(spark, str(tmp_path / "daily"))
+    refresh_tiers(spark, cat, df.filter(F.to_date("ts") <= days[-5]), watermark="wm0",
+                  params=PARAMS)
+    jobs = []
+    for i, (prev, day) in enumerate(zip(days[-5:], days[-4:])):
+        with _jobs(spark) as ran:
+            refresh_tiers(
+                spark, cat, df.filter(F.to_date("ts") <= day), watermark=f"wm{i + 1}",
+                since_watermark=f"{prev} 23:59:59.999999", params=PARAMS,
+            )
+        jobs += ran
+    assert jobs[3] <= jobs[0], jobs

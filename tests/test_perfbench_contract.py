@@ -1,10 +1,13 @@
-"""The names the benchmark harness (perfbench/) patches or reads.
+"""The names the benchmark harness (perfbench/) patches, calls or reads.
 
-perfbench wraps engine functions by name to trace each layer and checks
-build_tiers' result by table name. A simplification that drops or renames
-one of them must fail here, in the test suite, not in a benchmark run.
+perfbench wraps engine functions by name to trace each layer, checks
+build_tiers' result by table name and reads the catalog through its methods.
+A simplification that drops or renames one of them must fail here, in the
+test suite, not in a benchmark run.
 """
 
+import ast
+import glob
 import os
 import sys
 
@@ -12,9 +15,8 @@ from olympian_spark import session
 from olympian_spark.datagen import gen_transcripts
 from olympian_spark.plans.pipeline import QcParams, build_tiers
 
-sys.path.insert(
-    0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "perfbench")
-)
+PERFBENCH = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "perfbench")
+sys.path.insert(0, PERFBENCH)
 import checks  # noqa: E402
 import spans  # noqa: E402
 
@@ -40,3 +42,20 @@ def test_build_tiers_returns_tables_and_handles(spark):
     finally:
         for k in HANDLES:
             tiers[k].unpersist()
+
+
+def test_catalog_attributes_perfbench_uses_resolve(spark, tmp_path):
+    """Every ``cat.<name>`` in perfbench/*.py names an attribute of a
+    ``ParquetManifestCatalog``."""
+    from olympian_spark.sources.catalog import ParquetManifestCatalog
+
+    used = set()
+    for path in glob.glob(os.path.join(PERFBENCH, "*.py")):
+        with open(path) as f:
+            for node in ast.walk(ast.parse(f.read(), path)):
+                if (isinstance(node, ast.Attribute) and isinstance(node.value, ast.Name)
+                        and node.value.id == "cat"):
+                    used.add(node.attr)
+    assert {"read", "read_where_between", "pruned_partitions", "verify_table"} <= used
+    cat = ParquetManifestCatalog(spark, str(tmp_path / "cat"))
+    assert [name for name in sorted(used) if not hasattr(cat, name)] == []

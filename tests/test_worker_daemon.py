@@ -1,5 +1,6 @@
 """The Python worker daemon: zip archives are re-read only when they change,
-and ``get_spark`` sessions find the daemon from any working directory."""
+and ``get_spark`` sessions find the daemon from any working directory, and
+import the driver's ``olympian_spark``, not one in that directory."""
 
 import os
 import subprocess
@@ -143,3 +144,47 @@ def test_get_spark_workers_from_any_cwd(tmp_path, pythonpath):
     )
     assert out.returncode == 0, out.stderr[-3000:]
     assert "rows 100" in out.stdout
+
+
+_WHICH = textwrap.dedent(
+    """
+    import sys
+    sys.path.insert(0, {repo!r})
+    from olympian_spark.session import get_spark
+
+    spark = get_spark(app_name="daemon_which", cores=1)
+
+    def kernel(batches):
+        import olympian_spark
+        import pyarrow as pa
+        for _ in batches:
+            yield pa.RecordBatch.from_pydict({{"f": [olympian_spark.__file__]}})
+
+    got = spark.range(1, numPartitions=1).mapInArrow(kernel, "f string").collect()
+    spark.stop()
+    print("worker", got[0].f)
+    """
+)
+
+
+def test_workers_import_the_drivers_package_not_the_cwds(tmp_path):
+    """A driver started from a directory that holds another ``olympian_spark``
+    (say, another checkout) runs its tasks with the package it imported:
+    ``python -m`` would put that directory first on the workers' path."""
+    stub = tmp_path / "olympian_spark"
+    stub.mkdir()
+    (stub / "__init__.py").write_text("")
+    (stub / "worker_daemon.py").write_text(
+        "import pyspark.daemon\n\nif __name__ == '__main__':\n    pyspark.daemon.manager()\n"
+    )
+    script = tmp_path / "which.py"
+    script.write_text(_WHICH.format(repo=REPO))
+    env = {k: v for k, v in os.environ.items() if not k.startswith("SPARK_GRAFT_")}
+    env.pop("PYTHONPATH", None)
+    env.update(SPARK_GRAFT_DRIVER_MEM="1g", SPARK_GRAFT_LOCAL_DIR=str(tmp_path / "local"))
+    out = subprocess.run(
+        [sys.executable, str(script)], cwd=tmp_path, env=env,
+        capture_output=True, text=True, timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    assert f"worker {os.path.join(REPO, 'olympian_spark', '__init__.py')}" in out.stdout
