@@ -22,15 +22,17 @@ an **input watermark** (the max ingest timestamp of the batch). A run:
    scoping job. An incremental one recomputes tiers over exactly the
    affected conversations' full turn history (window context), via a
    semi-join;
-4. **write** — the three tier tables go out in ONE Spark write
+4. **write** — the three tier tables go out in ONE Spark job
    (``ParquetManifestCatalog.overwrite_grouped``): rows tagged with their
-   ``_grain`` are written with ``partitionBy("_grain", "bucket_date")``
-   into a staging directory, then each grain's directory moves into its
-   table's fresh snapshot directory. A full refresh writes every partition
-   present; an incremental one only (new ∪ boundary) day partitions. Each
-   table commits its own manifest snapshot with per-partition
-   rows/bytes/wall_s + the watermark. The two dimension tables go out the
-   same way in a second write, tagged ``_grain`` 0 (role) or 1 (tool).
+   ``_grain`` are hash-distributed and sorted on (``_grain``,
+   ``bucket_date``), and each task writes one pyarrow parquet file per
+   (grain, day) into a staging directory; then each grain's directory
+   moves into its table's fresh snapshot directory. A full refresh writes
+   every partition present; an incremental one only (new ∪ boundary) day
+   partitions. Each table commits its own manifest snapshot with
+   per-partition rows/bytes/wall_s + the watermark. The two dimension
+   tables go out the same way in a second write, tagged ``_grain`` 0
+   (role) or 1 (tool).
 
 Dimension rollups (role/tool) are flag-independent counts/sums, so their
 boundary days never change — only new-day partitions are written for them.

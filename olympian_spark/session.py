@@ -10,8 +10,8 @@ here is chosen so the same code scales on 1000 executors:
   record batches),
 - shuffle partitions ``max(2 x cores, 8)`` (on a real cluster this is
   ``max(2 x total-cores, input-partitions)`` — AQE coalesces down),
-- :data:`FILE_CONF`: UTC session timezone (spine arithmetic must be
-  tz-stable) and TIMESTAMP_MICROS parquet output (footer min/max bounds),
+- :data:`FILE_CONF`: UTC session timezone (spine arithmetic and the
+  catalog's ``bucket_date`` days must be tz-stable),
 - parquet vectorized reader + pushdown left at defaults (on),
 - Python workers forked from :mod:`olympian_spark.worker_daemon`.
 
@@ -34,13 +34,14 @@ import os
 
 from pyspark.sql import SparkSession
 
-# SQL confs that shape the files a session writes; get_spark and the
-# spark-submit job (scripts/run_refresh.py) both apply them. INT96, Spark's
-# default timestamp type, carries NO parquet min/max statistics: it would
-# blind the catalog's bucket_start bounds and row-group pruning.
+# SQL confs that shape the days and timestamps a session derives and reads;
+# get_spark and the spark-submit job (scripts/run_refresh.py) both apply
+# them. The catalog's write tasks create its parquet files with pyarrow, not
+# through Spark's parquet writer, so no writer conf is needed here: they
+# store ``bucket_start`` as the UTC INT64 microseconds Arrow hands them, with
+# footer min/max statistics.
 FILE_CONF = {
     "spark.sql.session.timeZone": "UTC",
-    "spark.sql.parquet.outputTimestampType": "TIMESTAMP_MICROS",
     "spark.sql.parquet.int96RebaseModeInRead": "CORRECTED",
 }
 

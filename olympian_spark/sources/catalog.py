@@ -20,13 +20,18 @@ files + an atomically-swapped metadata pointer):
   ``root/_staging`` is cleared by the next write) — true snapshot
   isolation, not best-effort
 - **overwrite_grouped**: the one write. Several tables' partitions go out
-  in ONE Spark write, staged under the catalog root; each table's directory
-  is then moved into its fresh snapshot directory and committed. Only
-  partitions present in the incoming DataFrame advance to the new snapshot;
-  all others keep pointing at their prior snapshot's files (Iceberg
-  ``overwritePartitions`` semantics). Because the write never touches
-  existing files, read-modify-write refreshes need no defensive
-  materialization. ``overwrite_partitions`` is its one-table call
+  in ONE Spark job whose tasks create the parquet files themselves with
+  pyarrow, one per (table, day), staged under the catalog root; each
+  table's directory is then moved into its fresh snapshot directory and
+  committed. As in Delta Lake and Iceberg, tasks write plain data files and
+  the commit is metadata: Spark's parquet writer would add its
+  ``_temporary`` commit protocol, ``.crc`` and ``_SUCCESS`` files and, on a
+  host without native libhadoop, a forked ``chmod`` per file and
+  directory. Only partitions present in the incoming DataFrame advance to
+  the new snapshot; all others keep pointing at their prior snapshot's
+  files (Iceberg ``overwritePartitions`` semantics). Because the write
+  never touches existing files, read-modify-write refreshes need no
+  defensive materialization. ``overwrite_partitions`` is its one-table call
 - **column mapping**: a commit may store a column under a physical name
   and record the physical -> logical map in its snapshot record's
   ``columns`` field (Delta Lake / Iceberg column mapping); reads rename per
@@ -72,8 +77,9 @@ import os
 import shutil
 import time
 from concurrent.futures import ThreadPoolExecutor
-from datetime import datetime, timezone
+from datetime import date, datetime, timezone
 
+from pyspark import TaskContext
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import from_arrow_schema
@@ -123,6 +129,84 @@ def _footer_schema(pdir: str) -> StructType:
     f = next(f for f in sorted(os.listdir(pdir)) if f.endswith(".parquet"))
     schema = _as_nullable(from_arrow_schema(pq.read_schema(os.path.join(pdir, f))))
     return schema.add(PARTITION_COL, DateType())
+
+
+def _key_dir(stage: str, grain, day) -> str:
+    """``<stage>/_grain=<grain>/bucket_date=<day>``. A NULL ``_grain``, or a
+    ``bucket_date`` that is not a date or a ``YYYY-MM-DD`` string, raises
+    ``ValueError``: its rows belong to no table, or to a partition no
+    retention cutoff ever removes."""
+    if grain is None:
+        raise ValueError("_grain is NULL: the rows belong to no table")
+    pval = day.isoformat() if isinstance(day, date) else day
+    try:
+        valid = date.fromisoformat(pval).isoformat() == pval
+    except (TypeError, ValueError):
+        valid = False
+    if not valid:
+        raise ValueError(f"{PARTITION_COL} {day!r} is not a YYYY-MM-DD day")
+    return os.path.join(stage, f"_grain={grain}", f"{PARTITION_COL}={pval}")
+
+
+def _write_files(batches, stage: str, partition_id: int, attempt: int):
+    """The write task of :meth:`ParquetManifestCatalog.overwrite_grouped`.
+
+    ``batches`` are one task's Arrow batches, sorted on (``_grain``,
+    ``bucket_date``). Each run of one key streams into ONE parquet file,
+    ``<stage>/_grain=<g>/bucket_date=<day>/part-<partition_id>.parquet``:
+    the data columns only (the key names the directories), snappy
+    compression, the Arrow types as Spark hands them over, one row group per
+    batch the run spans. A file is written under a hidden temporary name and
+    renamed when it is closed, so a failed attempt leaves no ``*.parquet``
+    file for the commit to pick up. Yields one row: the number of files
+    written.
+    """
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    name = f"part-{partition_id:05d}.parquet"
+    files, key, writer, tmp, path = 0, None, None, None, None
+
+    def close():
+        nonlocal writer, files
+        writer.close()
+        writer = None
+        os.replace(tmp, path)
+        files += 1
+
+    try:
+        for batch in batches:
+            if not len(batch):
+                continue
+            grains, days = batch.column("_grain"), batch.column(PARTITION_COL)
+            nulls = pc.or_(pc.is_null(grains), pc.is_null(days))
+            if pc.any(nulls).as_py():
+                i = pc.index(nulls, True).as_py()
+                _key_dir(stage, grains[i].as_py(), days[i].as_py())  # raises
+            change = pc.or_(
+                pc.not_equal(grains[1:], grains[:-1]), pc.not_equal(days[1:], days[:-1])
+            )
+            cuts = [i + 1 for i in pc.indices_nonzero(change).to_pylist()]
+            data = batch.drop_columns(["_grain", PARTITION_COL])
+            for s, e in zip([0, *cuts], [*cuts, len(batch)]):
+                k = (grains[s].as_py(), days[s].as_py())
+                if k != key:
+                    if writer is not None:
+                        close()
+                    key, kdir = k, _key_dir(stage, *k)
+                    os.makedirs(kdir, exist_ok=True)
+                    path = os.path.join(kdir, name)
+                    tmp = os.path.join(kdir, f".{name}.{attempt}.tmp")
+                    writer = pq.ParquetWriter(tmp, data.schema, compression="snappy")
+                writer.write_batch(data.slice(s, e - s))
+        if writer is not None:
+            close()
+    finally:
+        if writer is not None:  # failed mid-file
+            writer.close()
+            os.remove(tmp)
+    yield pa.RecordBatch.from_pydict({"files": pa.array([files], pa.int64())})
 
 
 class ParquetManifestCatalog:
@@ -252,7 +336,7 @@ class ParquetManifestCatalog:
         columns: dict | None = None,
     ) -> dict:
         """Copy-on-write overwrite of several tables' ``bucket_date``
-        partitions in ONE Spark write, then one atomic manifest commit per
+        partitions in ONE Spark job, then one atomic manifest commit per
         table. ``df`` carries ``bucket_date`` and ``_grain``; ``tables`` maps
         each ``_grain`` value to its table, and ``columns`` maps a table to
         the physical -> logical column map its snapshots record (e.g.
@@ -265,9 +349,21 @@ class ParquetManifestCatalog:
         day-partitions at 8 cores). The trade: a single huge day writes
         through one task, while tier tables are small per day.
 
-        They are written with ``partitionBy("_grain", "bucket_date")`` into
-        ``<root>/_staging`` (no defensive checkpoint: existing files are never
-        touched, so a refresh may read a table it overwrites). Each
+        Each task sorts its rows on the same key, as Spark's own writer
+        does, and :func:`_write_files` streams every (grain, day) run into
+        ONE pyarrow parquet file under
+        ``<root>/_staging/_grain=<g>/bucket_date=<day>`` (no defensive
+        checkpoint: existing files are never touched, so a refresh may read
+        a table it overwrites). A NULL or non-day ``bucket_date``, or a NULL
+        ``_grain``, fails the job, so nothing is committed. The tasks write
+        the files because Spark's parquet writer goes through Hadoop's
+        ``RawLocalFileSystem``, which without native libhadoop forks a
+        ``chmod`` subprocess from the JVM for every file and directory it
+        creates. Measured on a 4-CPU VM (local[4], a warm full refresh of
+        300k turns over 30 days), the tier write job (90 files) took
+        1.03-1.19 s wall and 3.5-3.9 task-s that way, 0.27-0.39 s and
+        0.9-1.35 task-s here; the dims write job (60 files) 0.57-0.70 s and
+        1.8-2.3 task-s, 0.23-0.30 s and 0.5-0.9 task-s here. Each
         ``_grain=<value>`` directory is then renamed into its table's fresh
         snapshot directory and committed in ``tables`` order, with footer
         row/byte metrics and ``bucket_start`` bounds (no second scan). A crash
@@ -283,13 +379,18 @@ class ParquetManifestCatalog:
         t0 = time.time()
         stage = os.path.join(self.root, "_staging")
         shutil.rmtree(stage, ignore_errors=True)
+
+        def write_task(batches):
+            ctx = TaskContext.get()
+            return _write_files(batches, stage, ctx.partitionId(), ctx.attemptNumber())
+
         try:
             n = 2 * self.spark.sparkContext.defaultParallelism
             (
-                df.repartition(n, "_grain", "bucket_date")
-                .write.mode("overwrite")
-                .partitionBy("_grain", "bucket_date")
-                .parquet(stage)
+                df.repartition(n, "_grain", PARTITION_COL)
+                .sortWithinPartitions("_grain", PARTITION_COL)
+                .mapInArrow(write_task, "files long")
+                .collect()
             )
             wall = time.time() - t0
             out = {}
@@ -311,11 +412,9 @@ class ParquetManifestCatalog:
         """Directory of the table's next snapshot, emptied.
 
         A crashed (uncommitted) attempt may have left files at this same
-        snapshot id. mode=overwrite alone is not enough to clear them when
-        the session runs with partitionOverwriteMode=dynamic (only the
-        partitions present in the new data would be replaced, and the footer
-        scan of the commit would then commit the stale leftovers) — remove
-        the whole uncommitted dir first.
+        snapshot id. A staged directory cannot be renamed onto them, and
+        merged with them the footer scan of the commit would commit the
+        stale leftovers — remove the whole uncommitted dir first.
         """
         m = self._load_manifest(table)
         sid = (m["snapshots"][-1]["snapshot_id"] + 1) if m["snapshots"] else 1
@@ -417,7 +516,7 @@ class ParquetManifestCatalog:
 
         Each group is read with ``basePath`` so the ``bucket_date``
         partition column survives, and with the schema of ONE of its
-        parquet footers, read on the driver (a snapshot is one Spark write,
+        parquet footers, read on the driver (a snapshot is one write,
         so all its files share it): Spark then infers nothing, and building
         the frame runs no job — inference would run one per group. Spark
         still lists a group of more than 32 day directories (its

@@ -273,6 +273,11 @@ def test_grouped_write_one_file_per_table_day_and_no_staging_left(spark, tmp_pat
         base = cat._snap_dir(table, snap["snapshot_id"])
         parts = sorted(d for d in os.listdir(base) if d.startswith("bucket_date="))
         assert len(parts) == 9, table
+        # only data files: no .crc, _SUCCESS, _temporary or temporary file
+        assert sorted(os.listdir(base)) == parts, table
+        for d in parts:
+            names = os.listdir(os.path.join(base, d))
+            assert all(f.startswith("part-") and f.endswith(".parquet") for f in names), names
         for d in parts:
             n = sum(1 for f in os.listdir(os.path.join(base, d)) if f.endswith(".parquet"))
             assert n == 1, f"{table}/{d}: {n} files"
@@ -294,6 +299,74 @@ def test_grouped_write_removes_staging_when_it_raises(spark, tmp_path):
         cat.overwrite_grouped({0: "a"}, boom, input_watermark="wm")
     assert _staging_dirs(cat) == []
     assert cat.current_snapshot("a") is None
+
+
+def test_write_rejects_null_or_non_day_partition_values(spark, tmp_path):
+    """A NULL or non-day ``bucket_date``, or a NULL ``_grain``, fails the
+    write: nothing is committed and no staging directory is left. Committed,
+    a NULL day would be a partition that no retention cutoff removes."""
+    cat = ParquetManifestCatalog(spark, str(tmp_path / "badday"))
+    schema = "k string, bucket_date string, v int"
+    for day, message in ((None, "bucket_date None is not"), ("2024-1-5", "'2024-1-5' is not")):
+        df = spark.createDataFrame([("a", "2024-01-01", 1), ("b", day, 2)], schema)
+        with pytest.raises(Exception, match=message):
+            cat.overwrite_partitions("t", df)
+        assert cat.current_snapshot("t") is None
+        assert _staging_dirs(cat) == []
+    df = spark.createDataFrame([("a", "2024-01-01", None, 1)], "k string, bucket_date string, _grain int, v int")
+    with pytest.raises(Exception, match="_grain is NULL"):
+        cat.overwrite_grouped({0: "t"}, df, input_watermark="wm")
+    assert cat.current_snapshot("t") is None
+    assert _staging_dirs(cat) == []
+
+
+def test_write_task_one_file_per_key_in_row_order(tmp_path):
+    """The write task on Arrow batches, without Spark: one key spanning a
+    batch seam, several keys in one batch, one file per key holding the data
+    columns of its rows in order, and no file but ``part-*.parquet`` left."""
+    from datetime import date
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from olympian_spark.sources.catalog import _write_files
+
+    def batch(keys, vs):
+        return pa.RecordBatch.from_pydict({
+            "k": [f"k{v}" for v in vs],
+            "_grain": pa.array([g for g, _ in keys], pa.int8()),
+            "bucket_date": [date(2024, 1, d) for _, d in keys],
+            "v": vs,
+        })
+
+    batches = [
+        batch([(0, 1)] * 3 + [(0, 2)] * 2 + [(1, 1)], [0, 1, 2, 3, 4, 5]),
+        batch([(1, 1)] * 2 + [(1, 3)], [6, 7, 8]),
+    ]
+    stage = str(tmp_path / "stage")
+    out = list(_write_files(iter(batches), stage, 3, 0))
+    assert [b.to_pydict() for b in out] == [{"files": [4]}]
+    written = {
+        os.path.relpath(os.path.join(d, f), stage): pq.read_table(os.path.join(d, f))
+        for d, _, fs in os.walk(stage) for f in fs
+    }
+    key = "_grain={}/bucket_date=2024-01-0{}/part-00003.parquet".format
+    assert set(written) == {key(0, 1), key(0, 2), key(1, 1), key(1, 3)}
+    for t in written.values():
+        assert t.column_names == ["k", "v"]
+    assert written[key(0, 1)].column("v").to_pylist() == [0, 1, 2]
+    assert written[key(1, 1)].column("v").to_pylist() == [5, 6, 7]
+    assert written[key(1, 3)].column("k").to_pylist() == ["k8"]
+
+    def failing():
+        yield batches[0]
+        raise RuntimeError("task killed")
+
+    stage = str(tmp_path / "failed")
+    with pytest.raises(RuntimeError, match="task killed"):
+        list(_write_files(failing(), stage, 3, 1))
+    left = [f for _, _, fs in os.walk(stage) for f in fs]
+    assert left == ["part-00003.parquet"] * 2  # the keys closed before the failure
 
 
 def test_overwrite_touches_only_new_partitions(spark, tmp_path):
@@ -623,6 +696,25 @@ def test_refresh_commits_bucket_start_bounds(spark, tmp_path):
     some_day = sorted(live)[1]
     lo, hi = f"{some_day}T06:00:00", f"{some_day}T07:00:00"
     assert set(cat.pruned_partitions("tier_1h", "bucket_start", lo, hi)) == {some_day}
+    # every committed file stores bucket_start as UTC INT64 microseconds
+    # with footer min/max statistics
+    import json
+
+    import pyarrow.parquet as pq
+
+    for t in (*TIER_TABLES, *DIM_TABLES):
+        for pval, rec in cat.committed_partitions(t).items():
+            pdir = cat._part_dir(t, rec["snapshot_id"], pval)
+            for f in (f for f in os.listdir(pdir) if f.endswith(".parquet")):
+                md = pq.ParquetFile(os.path.join(pdir, f)).metadata
+                i = md.schema.names.index("bucket_start")
+                col = md.schema.column(i)
+                assert col.physical_type == "INT64", (t, f)
+                logical = json.loads(col.logical_type.to_json())
+                assert logical["Type"] == "Timestamp", (t, f)
+                assert (logical["timeUnit"], logical["isAdjustedToUTC"]) == ("microseconds", True)
+                assert all(md.row_group(g).column(i).statistics.has_min_max
+                           for g in range(md.num_row_groups)), (t, f)
 
 
 def test_verify_table_detects_tamper(spark, tmp_path):

@@ -1,8 +1,9 @@
 """Local replica of the driver's correctness harness: run every queries()
 entry at sf0.001, compare against oracle_sql() via DuckDB — row count,
 column names, and an order-insensitive value hash. Also: every package
-module is reachable by imports from a contract entry point, and every public
-top-level name of the package is named outside the tests."""
+module is reachable by imports from a contract entry point, every public
+top-level name of the package is named outside the tests, and the package
+writes no parquet through Spark's DataFrameWriter."""
 
 import ast
 import glob
@@ -325,3 +326,39 @@ def test_every_public_name_referenced_outside_tests():
     unreferenced = {q for q in defs if q.rsplit(".", 1)[1] not in names}
     assert unreferenced - UNREFERENCED_ALLOWED == set(), "only tests name these"
     assert UNREFERENCED_ALLOWED <= unreferenced, "referenced now: drop from the allowlist"
+
+
+def _attr_chain(node):
+    """Attribute names along a call chain's receivers, innermost last:
+    ``df.write.mode("x").parquet`` -> ``["parquet", "mode", "write"]``."""
+    names = []
+    while isinstance(node, (ast.Attribute, ast.Call)):
+        if isinstance(node, ast.Attribute):
+            names.append(node.attr)
+            node = node.value
+        else:
+            node = node.func
+    return names
+
+
+def test_no_dataframe_writer_in_the_package():
+    """The catalog's write tasks create its parquet files with pyarrow
+    (``catalog._write_files``). Spark's parquet writer goes through Hadoop's
+    ``RawLocalFileSystem``, which without native libhadoop forks a ``chmod``
+    per file and per directory it creates. The session's ``noop`` prewarm is
+    the one ``<df>.write`` allowed; a bit writer's ``w.write(...)`` call is
+    not a DataFrameWriter."""
+    writers, parquet_writes = [], []
+    for path in sorted(glob.glob(os.path.join(REPO, "olympian_spark", "**", "*.py"), recursive=True)):
+        with open(path) as f:
+            tree = ast.parse(f.read(), path)
+        rel = os.path.relpath(path, REPO)
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Attribute) and isinstance(node.value, ast.Attribute) \
+                    and node.value.attr == "write":
+                writers.append((rel, node.attr))
+            if isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute) \
+                    and node.func.attr == "parquet" and "write" in _attr_chain(node.func):
+                parquet_writes.append(f"{rel}:{node.lineno}")
+    assert parquet_writes == []
+    assert writers == [(os.path.join("olympian_spark", "session.py"), "format")]
